@@ -50,10 +50,18 @@ object Bench {
       finally src.close()
     } catch { case _: Exception => "" }
 
+  /** `SPARK_GRAFT_CPUS` as the `local[N]` worker count (4 when unset).
+    * It lands in the master URL and as a bare number in the headline
+    * JSON, so anything but a positive integer is refused up front. */
+  private[graft] def cpusOf(raw: Option[String]): Int = raw.fold(4) { s =>
+    s.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+      s"SPARK_GRAFT_CPUS must be a positive integer, got '$s'"))
+  }
+
   def main(args: Array[String]): Unit = {
     val loadAtStart = loadavg()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = cpusOf(sys.env.get("SPARK_GRAFT_CPUS"))
     // SPARK_GRAFT_ONLY: comma-separated query-name prefixes — targeted
     // scale probes (e.g. "d,c5,s" benches just the dedup/editdist/
     // similarity families at sf10 without paying the full suite).
@@ -68,7 +76,7 @@ object Bench {
     // join's 32-partition shuffle put ~0.5 GB single allocations in 32
     // concurrent tasks and OOM'd a 32 GB heap. On a real cluster this is
     // the spark.sql.shuffle.partitions sizing every deployment tunes.
-    val shufParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
+    val shufParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", shufParts)

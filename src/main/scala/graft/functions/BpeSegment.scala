@@ -23,6 +23,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * building until the final slice emit. Symbols compare by raw UTF-8
   * bytes, which equals Spark's string equality (both are exact byte
   * comparisons of code-point sequences).
+  *
+  * An empty word has no symbols and segments to an EMPTY array, not to
+  * `[""]` (the corpus path drops empty words before segmenting).
   */
 case class BpeSegment(child: Expression, merges: Seq[(String, String)])
     extends UnaryExpression {

@@ -309,24 +309,6 @@ object ChunkCodec {
   }
 
   /** Comparison view of a typed array (filter matching + statistics). */
-  /** Is `v` (an element from [[elementAt]]) the array's fill value?
-    * Used by the `fillValueAsNull` read option (reference roadmap
-    * "fill_value→null", README.md:289-337) to surface absent cells as
-    * SQL NULL instead of the sentinel. */
-  def isFill(fv: Double, v: Any): Boolean = v match {
-    // integral cells compare in the INTEGER domain: `l.toDouble == fv`
-    // would collide distinct longs past 2^53 with the fill value and
-    // null out real data
-    case l: Long => fv == fv.toLong.toDouble && l == fv.toLong
-    case i: Int => i.toDouble == fv
-    case s: Short => s.toDouble == fv
-    case b: Byte => b.toDouble == fv
-    case d: Double => d == fv || (java.lang.Double.isNaN(d) && java.lang.Double.isNaN(fv))
-    case f: Float => f.toDouble == fv || (java.lang.Float.isNaN(f) && java.lang.Double.isNaN(fv))
-    case b: Boolean => (if (b) 1.0 else 0.0) == fv
-    case _ => false
-  }
-
   def toDoubles(typed: AnyRef): Array[Double] = typed match {
     // string coordinates live in INDEX space for grid arithmetic:
     // pushed string equality is translated to its index driver-side

@@ -1,35 +1,45 @@
 package graft.sources.zarr
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import org.apache.spark.sql.connector.metric.CustomTaskMetric
 import org.apache.spark.sql.connector.read.PartitionReader
-import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.execution.vectorized.{OnHeapColumnVector, WritableColumnVector}
 import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
 
-/** Columnar reader for a Zarr partition slice: fills
-  * `OnHeapColumnVector`s in 4K-row batches with an odometer walk over
-  * the filtered grid — no per-row division, no boxing, and the
-  * emitted `ColumnarBatch` feeds Spark's vectorized pipeline exactly
-  * like the parquet reader does (the Spark-native analog of the
-  * reference's single Arrow RecordBatch,
+/** The connector's one partition reader: fills `OnHeapColumnVector`s in
+  * `batchSize`-row batches from the slice `[rowStart, rowEnd)` of the
+  * filtered grid, and the emitted `ColumnarBatch` feeds Spark's
+  * vectorized pipeline exactly like the parquet reader does (the
+  * Spark-native analog of the reference's single Arrow RecordBatch,
   * /root/reference/src/reader/zarr_reader.rs:417-432 — but batched and
   * parallel).
   *
-  * Per data variable the reader tracks the current chunk and the flat
-  * in-chunk offset incrementally: advancing the last dimension inside
-  * one chunk is `offset += 1`; crossing any boundary recomputes from
-  * the odometer (rare: once per chunk edge).
+  * The slice is walked one RUN at a time: the longest stretch of the
+  * last dimension that stays inside one chunk of every projected
+  * variable and inside the current batch. Each run costs one bulk put
+  * per column — a typed array copy for variables and the last-dimension
+  * coordinate, a constant fill for outer coordinates — so chunk
+  * location, the band LRU and the prefetch run once per run, never per
+  * cell. An empty projection (bare counts) emits zero-column batches
+  * carrying only `numRows`, as Spark's vectorized parquet reader does.
+  * The vectors are allocated once and `reset()` per batch.
   */
 class ZarrColumnarReader(p: ZarrInputPartition, batchSize: Int = 4096)
     extends PartitionReader[ColumnarBatch] {
 
   private val store = ZarrStore.open(p.storePath)
   private val nDims = p.ranges.length
+  private val last = nDims - 1
   private val fields = p.projection.toArray
-  private val types: Array[DataType] = fields.map {
-    case CoordField(d) => p.coords(d).meta.dtype.sparkType
-    case VarField(m) => m.dtype.sparkType
+  private val vectors: Array[OnHeapColumnVector] = {
+    val cap = math.max(1L, math.min(batchSize.toLong, p.rowEnd - p.rowStart)).toInt
+    fields.map {
+      case CoordField(d) => new OnHeapColumnVector(cap, p.coords(d).meta.dtype.sparkType)
+      case VarField(m) => new OnHeapColumnVector(cap, m.dtype.sparkType)
+    }
   }
+  private val batch = new ColumnarBatch(vectors.map(v => v: ColumnVector))
 
   // odometer state: global indices per dimension for the current row
   private val idx = new Array[Int](nDims)
@@ -38,10 +48,11 @@ class ZarrColumnarReader(p: ZarrInputPartition, batchSize: Int = 4096)
 
   // per-var-field chunk state
   private final class VarState(val meta: ZarrArrayMeta) {
-    val chunkIdx = new Array[Long](nDims)
+    private val chunkIdx = new Array[Long](nDims)
     var chunk: AnyRef = _
-    var offset: Long = -1
-    var valid = false
+    /** Flat in-chunk offset of the odometer's cell, set by [[locate]]. */
+    var offset = 0
+    private var valid = false
     var bytesRead = 0L
     var chunksDecoded = 0L
     /** Payload size of the in-flight prefetch (pool thread writes,
@@ -110,17 +121,17 @@ class ZarrColumnarReader(p: ZarrInputPartition, batchSize: Int = 4096)
       if (prefetchBytes != null) { bytesRead += prefetchBytes.get(); prefetchBytes = null }
     }
 
-    def locate(): Unit = {
+    /** Point [[chunk]] and [[offset]] at the odometer's cell and return
+      * how many cells remain in this chunk along the last dimension. */
+    def locate(): Int = {
       var changed = !valid
       var d = 0
       while (d < nDims) {
         val c = idx(d) / meta.chunks(d)
-        if (!valid || c != chunkIdx(d)) { changed = true }
+        if (c != chunkIdx(d)) { chunkIdx(d) = c; changed = true }
         d += 1
       }
       if (changed) {
-        d = 0
-        while (d < nDims) { chunkIdx(d) = idx(d) / meta.chunks(d); d += 1 }
         val key = chunkIdx.toSeq
         val hit = band.get(key)
         if (hit != null) chunk = hit
@@ -148,80 +159,57 @@ class ZarrColumnarReader(p: ZarrInputPartition, batchSize: Int = 4096)
         }
         valid = true
       }
-      var off = 0L
+      var off = 0
       d = 0
-      while (d < nDims) { off = off * meta.chunks(d) + (idx(d) % meta.chunks(d)); d += 1 }
+      while (d < nDims) { off = off * meta.chunks(d) + idx(d) % meta.chunks(d); d += 1 }
       offset = off
-    }
-
-    /** Fast path: the last dimension advanced by one and stayed inside
-      * the same chunk. */
-    def advanceWithinRow(): Boolean = {
-      val last = nDims - 1
-      if (idx(last) / meta.chunks(last) == chunkIdx(last)) { offset += 1; true }
-      else false
+      if (nDims == 0) Int.MaxValue else meta.chunks(last) - idx(last) % meta.chunks(last)
     }
   }
 
   private val varStates: Array[VarState] = fields.collect { case VarField(m) => new VarState(m) }
-  private var batch: ColumnarBatch = _
 
   override def next(): Boolean = {
     if (row >= p.rowEnd) return false
     val n = math.min(batchSize.toLong, p.rowEnd - row).toInt
-    val vectors = types.map(t => new OnHeapColumnVector(n, t))
+    vectors.foreach(_.reset())
     var r = 0
-    while (r < n) {
-      // locate all var fields for this row
+    while (fields.nonEmpty && r < n) {
+      var len = n - r
+      if (nDims > 0) len = math.min(len, p.ranges(last)._2 - idx(last))
       var vs = 0
+      while (vs < varStates.length) { len = math.min(len, varStates(vs).locate()); vs += 1 }
+      vs = 0
       var f = 0
       while (f < fields.length) {
         fields(f) match {
-          case CoordField(d) => putValue(vectors(f), r, types(f), p.coords(d).raw, idx(d))
-          case VarField(_) =>
+          case CoordField(d) if d == last => copyRun(vectors(f), r, p.coords(d).raw, idx(d), len)
+          case CoordField(d) => putConstRun(vectors(f), r, len, p.coords(d).raw, idx(d))
+          case VarField(m) =>
             val st = varStates(vs)
-            if (st.offset < 0 || !st.valid) st.locate()
-            if (p.fillAsNull &&
-                ChunkCodec.isFill(st.meta.fillValue,
-                  ChunkCodec.elementAt(st.chunk, st.offset.toInt)))
-              vectors(f).putNull(r)
-            else putValue(vectors(f), r, types(f), st.chunk, st.offset.toInt)
+            copyRun(vectors(f), r, st.chunk, st.offset, len)
+            if (p.fillAsNull) nullFills(vectors(f), r, st.chunk, st.offset, len, m.fillValue)
             vs += 1
         }
         f += 1
       }
-      r += 1
-      row += 1
-      if (r < n) advanceOdometer()
+      r += len
+      advanceOdometer(len)
     }
-    if (row < p.rowEnd) advanceOdometer()
-    batch = new ColumnarBatch(vectors.map(_.asInstanceOf[ColumnVector]), n)
+    row += n
+    batch.setNumRows(n)
     true
   }
 
-  /** Increment the odometer to the next row; maintain var-field chunk
-    * state incrementally. `lastOnly` = only the last dimension moved
-    * (the overwhelmingly common case), which enables the offset++
-    * fast path. */
-  private def advanceOdometer(): Unit = {
-    val last = nDims - 1
-    idx(last) += 1
-    val lastOnly = idx(last) < p.ranges(last)._2
-    if (!lastOnly) {
-      idx(last) = p.ranges(last)._1
-      var d = last - 1
-      var carry = true
-      while (d >= 0 && carry) {
-        idx(d) += 1
-        if (idx(d) >= p.ranges(d)._2) idx(d) = p.ranges(d)._1 else carry = false
-        d -= 1
-      }
-    }
-    var vs = 0
-    while (vs < varStates.length) {
-      val st = varStates(vs)
-      if (!(lastOnly && st.valid && st.advanceWithinRow())) st.locate()
-      vs += 1
+  /** Move the odometer `len` cells along the last dimension, carrying
+    * into the outer dimensions at the end of each grid row. */
+  private def advanceOdometer(len: Int): Unit = if (nDims > 0) {
+    idx(last) += len
+    var d = last
+    while (d > 0 && idx(d) >= p.ranges(d)._2) {
+      idx(d) = p.ranges(d)._1
+      idx(d - 1) += 1
+      d -= 1
     }
   }
 
@@ -231,7 +219,7 @@ class ZarrColumnarReader(p: ZarrInputPartition, batchSize: Int = 4096)
     // a partition can end (or be limit-cut) with a prefetch in flight;
     // its bytes must land in the metric before the task reports it
     varStates.foreach(_.drainPending())
-    if (batch != null) batch.close()
+    batch.close()
   }
 
   override def currentMetricsValues(): Array[CustomTaskMetric] = {
@@ -249,19 +237,77 @@ class ZarrColumnarReader(p: ZarrInputPartition, batchSize: Int = 4096)
       m(s"zarrChunksDecoded.m${p.memberIdx}", chunks))
   }
 
-  private def putValue(v: OnHeapColumnVector, r: Int, t: DataType, arr: AnyRef, i: Int): Unit =
-    t match {
-      case LongType | TimestampType => v.putLong(r, arr.asInstanceOf[Array[Long]](i))
-      case IntegerType => v.putInt(r, arr.asInstanceOf[Array[Int]](i))
-      case DoubleType => v.putDouble(r, arr.asInstanceOf[Array[Double]](i))
-      case FloatType => v.putFloat(r, arr.asInstanceOf[Array[Float]](i))
-      case ShortType => v.putShort(r, arr.asInstanceOf[Array[Short]](i))
-      case ByteType => v.putByte(r, arr.asInstanceOf[Array[Byte]](i))
-      case BooleanType => v.putBoolean(r, arr.asInstanceOf[Array[Boolean]](i))
-      case StringType =>
-        val b = arr.asInstanceOf[Array[String]](i)
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        v.putByteArray(r, b)
-      case other => throw new IllegalStateException(s"Unsupported columnar type $other")
+  /** Copy `arr[off, off + len)` into rows `[rowId, rowId + len)`.
+    * Spark has no bulk put for booleans or strings, so those loop. */
+  private def copyRun(v: WritableColumnVector, rowId: Int, arr: AnyRef, off: Int, len: Int): Unit =
+    arr match {
+      case a: Array[Float] => v.putFloats(rowId, len, a, off)
+      case a: Array[Double] => v.putDoubles(rowId, len, a, off)
+      case a: Array[Long] => v.putLongs(rowId, len, a, off)
+      case a: Array[Int] => v.putInts(rowId, len, a, off)
+      case a: Array[Short] => v.putShorts(rowId, len, a, off)
+      case a: Array[Byte] => v.putBytes(rowId, len, a, off)
+      case a: Array[Boolean] =>
+        var i = 0
+        while (i < len) { v.putBoolean(rowId + i, a(off + i)); i += 1 }
+      case a: Array[String] =>
+        var i = 0
+        while (i < len) { v.putByteArray(rowId + i, a(off + i).getBytes(UTF_8)); i += 1 }
+      case other => throw new IllegalStateException(s"Unsupported columnar array ${other.getClass}")
     }
+
+  /** Write `arr(i)` into rows `[rowId, rowId + len)`. A string is
+    * encoded and stored once; every row of the run points at it. */
+  private def putConstRun(v: WritableColumnVector, rowId: Int, len: Int, arr: AnyRef, i: Int): Unit =
+    arr match {
+      case a: Array[Float] => v.putFloats(rowId, len, a(i))
+      case a: Array[Double] => v.putDoubles(rowId, len, a(i))
+      case a: Array[Long] => v.putLongs(rowId, len, a(i))
+      case a: Array[Int] => v.putInts(rowId, len, a(i))
+      case a: Array[Short] => v.putShorts(rowId, len, a(i))
+      case a: Array[Byte] => v.putBytes(rowId, len, a(i))
+      case a: Array[Boolean] => v.putBooleans(rowId, len, a(i))
+      case a: Array[String] =>
+        val b = a(i).getBytes(UTF_8)
+        val at = v.arrayData().appendBytes(b.length, b, 0)
+        var j = 0
+        while (j < len) { v.putArray(rowId + j, at, b.length); j += 1 }
+      case other => throw new IllegalStateException(s"Unsupported columnar array ${other.getClass}")
+    }
+
+  /** `fillValueAsNull` (reference roadmap "fill_value→null",
+    * README.md:289-337): null out the cells of `arr[off, off + len)`
+    * equal to the fill value `fv`. Integral cells compare in the
+    * INTEGER domain — `l.toDouble == fv` would collide distinct longs
+    * past 2^53 with the fill value and null out real data — and a NaN
+    * fill matches NaN cells. Strings never match. */
+  private def nullFills(v: WritableColumnVector, rowId: Int, arr: AnyRef, off: Int, len: Int,
+      fv: Double): Unit = {
+    var i = 0
+    arr match {
+      case a: Array[Float] =>
+        val nan = fv.isNaN
+        while (i < len) { val x = a(off + i); if (x == fv || nan && x.isNaN) v.putNull(rowId + i); i += 1 }
+      case a: Array[Double] =>
+        val nan = fv.isNaN
+        while (i < len) { val x = a(off + i); if (x == fv || nan && x.isNaN) v.putNull(rowId + i); i += 1 }
+      case a: Array[Long] =>
+        if (fv == fv.toLong.toDouble) {
+          val f = fv.toLong
+          while (i < len) { if (a(off + i) == f) v.putNull(rowId + i); i += 1 }
+        }
+      case a: Array[Int] =>
+        while (i < len) { if (a(off + i) == fv) v.putNull(rowId + i); i += 1 }
+      case a: Array[Short] =>
+        while (i < len) { if (a(off + i) == fv) v.putNull(rowId + i); i += 1 }
+      case a: Array[Byte] =>
+        while (i < len) { if (a(off + i) == fv) v.putNull(rowId + i); i += 1 }
+      case a: Array[Boolean] =>
+        if (fv == 0.0 || fv == 1.0) {
+          val f = fv == 1.0
+          while (i < len) { if (a(off + i) == f) v.putNull(rowId + i); i += 1 }
+        }
+      case _ =>
+    }
+  }
 }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, Transform, SortOrder => SortOrderV2}
 import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Aggregation, Avg, Count, CountStar, Max, Min, Sum}
-import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.execution.streaming.Sink
 import org.apache.spark.sql.connector.read.colstats.ColumnStatistics
@@ -1735,105 +1735,14 @@ class ZarrReaderFactory extends PartitionReaderFactory {
     case p: ZarrInputPartition => p
   }
 
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new ZarrPartitionReader(unwrap(partition))
+  /** Every partition reads columnar: an empty projection (bare
+    * counts) emits zero-column batches carrying `numRows`. */
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
 
-  /** Columnar path (OnHeapColumnVector batches) whenever there are
-    * projected columns; the empty projection (bare counts) stays on
-    * the row reader. */
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    unwrap(partition).projection.nonEmpty
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    throw new UnsupportedOperationException("zarr partitions are read columnar only")
 
   override def createColumnarReader(
       partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
     new ZarrColumnarReader(unwrap(partition))
-}
-
-/** Row-major reader over one partition slice. Per data variable keeps
-  * a small LRU of decoded chunks — row-major traversal makes chunk
-  * access contiguous along the inner dimensions, so the working set is
-  * the chunks covering one inner row-slab. */
-class ZarrPartitionReader(p: ZarrInputPartition) extends PartitionReader[InternalRow] {
-
-  private val store = ZarrStore.open(p.storePath)
-  private val nDims = p.ranges.length
-  private val idx = new Array[Int](nDims)
-  private var row = p.rowStart
-  private var current: InternalRow = _
-  private var bytesRead = 0L
-  private var chunksDecoded = 0L
-
-  // band-sized per-variable LRUs (see ChunkIO.bandCacheCap): inner
-  // chunks revisit once per grid row, and a too-small cache would
-  // re-decode them chunk-extent× times
-  private val chunkCaches: Map[String, (mutable.LinkedHashMap[Seq[Long], AnyRef], Int)] =
-    p.projection.collect { case VarField(m) =>
-      m.name -> (new mutable.LinkedHashMap[Seq[Long], AnyRef],
-        ChunkIO.bandCacheCap(m, p.ranges))
-    }.toMap
-
-  private def chunkFor(meta: ZarrArrayMeta, chunkIdx: Seq[Long]): AnyRef = {
-    val (cache, cap) = chunkCaches(meta.name)
-    cache.get(chunkIdx) match {
-      case Some(a) => a
-      case None =>
-        // bytesRead reported by the read itself — a sizeOf here would
-        // cost one extra object-store round trip per chunk
-        val a = ChunkIO.readChunkCached(store, meta, chunkIdx, p.chunkCacheEntries,
-          bytesRead += _)
-        chunksDecoded += 1
-        if (cache.size >= cap) cache.remove(cache.head._1)
-        cache.put(chunkIdx, a)
-        a
-    }
-  }
-
-  override def next(): Boolean = {
-    if (row >= p.rowEnd) return false
-    GridMath.rowToIndices(row, p.ranges, idx)
-    val values = new Array[Any](p.projection.length)
-    var f = 0
-    while (f < p.projection.length) {
-      values(f) = p.projection(f) match {
-        case CoordField(d) => ChunkCodec.elementAt(p.coords(d).raw, idx(d))
-        case VarField(m) =>
-          val chunkIdx = new Array[Long](nDims)
-          var d = 0
-          while (d < nDims) { chunkIdx(d) = idx(d) / m.chunks(d); d += 1 }
-          val chunk = chunkFor(m, chunkIdx.toSeq)
-          var off = 0L
-          d = 0
-          while (d < nDims) {
-            off = off * m.chunks(d) + (idx(d) % m.chunks(d))
-            d += 1
-          }
-          val v = ChunkCodec.elementAt(chunk, off.toInt)
-          if (p.fillAsNull && ChunkCodec.isFill(m.fillValue, v)) null else v
-      }
-      values(f) match {
-        case str: String =>
-          values(f) = org.apache.spark.unsafe.types.UTF8String.fromString(str)
-        case _ =>
-      }
-      f += 1
-    }
-    current = new GenericInternalRow(values)
-    row += 1
-    true
-  }
-
-  override def get(): InternalRow = current
-  override def close(): Unit = {}
-
-  override def currentMetricsValues(): Array[CustomTaskMetric] = {
-    def m(n: String, v: Long): CustomTaskMetric = new CustomTaskMetric {
-      override def name(): String = n
-      override def value(): Long = v
-    }
-    val base = Array(m("zarrBytesRead", bytesRead),
-      m("zarrChunksDecoded", chunksDecoded))
-    if (p.memberIdx < 0) base
-    else base ++ Array(m(s"zarrBytesRead.m${p.memberIdx}", bytesRead),
-      m(s"zarrChunksDecoded.m${p.memberIdx}", chunksDecoded))
-  }
 }

@@ -73,16 +73,22 @@ object EventsStreaming {
     * file stream, then `Tables.normalizeTs` applies the same ts
     * normalization (nanos-as-long → micros, or NTZ → LTZ) as the
     * batch loader, so stream and batch plans see identical types.
-    * Memoized per directory — schema inference is a driver footer
-    * read, and the two-source queries (st4/st7) paid it twice per
+    * Memoized per events file — schema inference reads the parquet
+    * footer, and the two-source queries (st4/st7) paid it twice per
     * invocation (metadata memo, same posture as the zarr store-meta
-    * cache; never caches results). */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
-  private def schemaOf(s: SparkSession, dir: String) =
-    schemaCache.computeIfAbsent(dir, d => s.read.parquet(s"$d/events.parquet").schema)
+    * cache; never caches results). Each entry carries the file's size
+    * and mtime stamp ([[graft.pipeline.Dedup.corpusStamp]]), so a
+    * rewritten file is re-inferred, and holds one schema per path. */
+  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
+    String, (String, org.apache.spark.sql.types.StructType)]()
+  private def schemaOf(s: SparkSession, dir: String) = {
+    val path = s"$dir/events.parquet"
+    val stamp = graft.pipeline.Dedup.corpusStamp(s, dir, "events")
+    schemaCache.compute(path, (_, old) =>
+      if (old != null && old._1 == stamp) old else (stamp, s.read.parquet(path).schema))._2
+  }
 
-  private def eventsStream(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def eventsStream(s: SparkSession, dir: String): DataFrame = {
     // FileStreamSource requires a directory; the corpus ships events as
     // a single parquet file — expose it through a symlinked stream dir.
     graft.operators.Tables.normalizeTs(

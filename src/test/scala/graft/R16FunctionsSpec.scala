@@ -124,4 +124,20 @@ class R16FunctionsSpec extends AnyFunSuite {
       .collect().map(_.getSeq[String](0))
     assert(none.exists(_ == Seq("日", "本", "語")))
   }
+
+  test("BpeSegment on an empty word yields an empty array") {
+    import spark.implicits._
+    val merges = Seq(("a", "b"))
+    // the static kernel generated code calls, and the interpreted eval
+    val kernel = BpeSegment.segment(org.apache.spark.unsafe.types.UTF8String.fromString(""),
+      Array("a".getBytes("UTF-8"), "b".getBytes("UTF-8")))
+    assert(kernel.numElements() == 0)
+    val interpreted = BpeSegment(
+      org.apache.spark.sql.catalyst.expressions.Literal(""), merges).eval()
+    assert(interpreted.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].numElements() == 0)
+    val segs = Seq("", "ab").toDF("word")
+      .select(col("word"), BpeSegment(col("word"), merges).as("syms"))
+      .collect().map(r => r.getString(0) -> r.getSeq[String](1)).toMap
+    assert(segs == Map("" -> Seq.empty[String], "ab" -> Seq("ab")))
+  }
 }

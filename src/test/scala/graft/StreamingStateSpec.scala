@@ -118,4 +118,26 @@ class StreamingStateSpec extends AnyFunSuite {
     val n = SparkEntry.queries("st1_stream_window_agg")(spark, rel).count()
     assert(n > 0, s"st1 over relative dir '$rel' returned no rows")
   }
+
+  test("a rewritten events.parquet is streamed with its new schema") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("events_rewrite")
+    def put(df: org.apache.spark.sql.DataFrame): Unit = {
+      val tmp = Files.createTempDirectory("events_rewrite_out").resolve("out")
+      df.coalesce(1).write.parquet(tmp.toString)
+      val part = Files.list(tmp).filter(_.getFileName.toString.endsWith(".parquet")).findFirst().get()
+      Files.copy(part, dir.resolve("events.parquet"), StandardCopyOption.REPLACE_EXISTING)
+    }
+    put(Seq((1L, 10L)).toDF("event_id", "user_id"))
+    assert(EventsStreaming.eventsStream(spark, dir.toString).columns.toSeq ==
+      Seq("event_id", "user_id"))
+    // same JVM, same directory: the memo must not serve the old schema
+    put(Seq((2L, 20L, "x")).toDF("event_id", "user_id", "extra"))
+    val stream = EventsStreaming.eventsStream(spark, dir.toString)
+    assert(stream.columns.toSeq == Seq("event_id", "user_id", "extra"))
+    val q = stream.writeStream.format("memory").queryName("events_rewrite").start()
+    try q.processAllAvailable() finally q.stop()
+    assert(spark.table("events_rewrite").collect().map(r => (r.getLong(0), r.getString(2))).toSeq ==
+      Seq((2L, "x")))
+  }
 }
