@@ -43,9 +43,12 @@ case class FloatPlaneDot(child: Expression, plane: Seq[Double])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("plane", planeArr, "double[]")
+    // a non-nullable child gets this code with no enclosing block, so
+    // a fixed local name would collide between two calls in one stage
+    val r = ctx.freshName("dot")
     nullSafeCodeGen(ctx, ev, c => s"""
-      |java.lang.Double r = graft.functions.FloatPlaneDot.dot($c, $ref);
-      |if (r == null) { ${ev.isNull} = true; } else { ${ev.value} = r.doubleValue(); }
+      |java.lang.Double $r = graft.functions.FloatPlaneDot.dot($c, $ref);
+      |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r.doubleValue(); }
      """.stripMargin)
   }
 

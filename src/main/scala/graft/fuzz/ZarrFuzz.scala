@@ -145,11 +145,14 @@ object ZarrFuzz {
     // 2-deep inner chunks inside each 4-slab outer chunk, zstd inner
     // compression) — random pushdown composition over the shard read
     // path. Oracle: the source DataFrame (sharding must be invisible).
+    // One time step (180 rows) per partition, so partitions cut every
+    // shard and random pushdowns cross shard splits.
     val pe = writeZarr("grid_e", gridA(s), "time,lat,lon",
       Map("zarrVersion" -> "3", "chunkOuter" -> "4", "compressor" -> "none",
         "shardInner" -> "2", "shardCompress" -> "zstd"))
     exportParquet("grid_e", gridA(s))
-    s.read.format("zarr").load(pe).createOrReplaceTempView("grid_e")
+    s.read.format("zarr").option("minRowsPerPartition", "1").option("maxRowsPerPartition", "180")
+      .load(pe).createOrReplaceTempView("grid_e")
     // grid_f: grid_a through a two-store multi-load UNION
     // (ZarrUnionTable over the same time-split stores grid_d stitches)
     // — random SQL over per-member pruning and the executor-merged

@@ -346,7 +346,8 @@ object ChunkIO {
     * in this JVM — the reference's roadmap "prefetching/LRU cache"
     * (README.md:289-337). Off unless a scan requests it
     * (`chunkCacheEntries` read option); entries are whole decoded
-    * chunks, so capacity × chunk size bounds the memory. Hot use case:
+    * decode units — chunks, or for a sharded array its inner chunks —
+    * so capacity × unit size bounds the memory. Hot use case:
     * repeated interactive queries (REPL) and remote stores, where a
     * chunk re-fetch costs an object-store round trip. */
   private val chunkCache =
@@ -367,23 +368,27 @@ object ChunkIO {
     chunkCache.keySet().removeIf(_._1 == path)
   }
 
-  def readChunkCached(store: ZarrStore, meta: ZarrArrayMeta, chunkIdx: Seq[Long],
-      cacheEntries: Int, onBytes: Long => Unit = _ => ()): AnyRef =
-    if (cacheEntries <= 0) readChunk(store, meta, chunkIdx, onBytes)
+  /** The decode unit `unitIdx` of `meta` through [[chunkCache]]:
+    * `load` runs only on a miss (or when the cache is off). */
+  def cached(store: ZarrStore, meta: ZarrArrayMeta, unitIdx: Seq[Long],
+      cacheEntries: Int)(load: => AnyRef): AnyRef =
+    if (cacheEntries <= 0) load
     else {
-      val key = (store.path, meta.name, chunkIdx)
+      val key = (store.path, meta.name, unitIdx)
       chunkCache.synchronized {
         if (chunkCache.cap < cacheEntries) chunkCache.cap = cacheEntries
         val hit = chunkCache.get(key)
         if (hit != null) return hit
       }
-      val a = readChunk(store, meta, chunkIdx, onBytes)
+      val a = load
       chunkCache.synchronized { chunkCache.put(key, a) }
       a
     }
 
-  /** Chunk decodes in this JVM — a test/diagnostic hook for asserting
-    * IO-efficiency properties (e.g. band caching bounds re-decodes). */
+  /** Decode units (chunks; inner chunks of a sharded array) produced in
+    * this JVM, absent ones read as fill included — a test/diagnostic
+    * hook for asserting IO-efficiency properties (e.g. band caching
+    * bounds re-decodes). */
   val decodeCount = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** Shared executor for read-ahead chunk fetches (reference roadmap
@@ -397,53 +402,62 @@ object ChunkIO {
       t
     })
 
-  /** Per-variable LRU capacity sized so one "row band" of chunks —
-    * every chunk the row-major odometer revisits while sweeping the
-    * inner dimensions of one outer position — stays decoded. Without
-    * this a store with multi-chunk INNER dimensions re-decodes each
-    * inner chunk once per grid row (chunk-extent× amplification; the
-    * ERA5 chunking (1, lat-block, lon-block) is the canonical case).
-    * Bounded by a 64 MiB per-variable budget so task memory stays
-    * predictable when chunks are large; dim 0 is excluded because the
-    * outer walk never returns to a finished outer chunk. */
-  def bandCacheCap(meta: ZarrArrayMeta, ranges: Array[(Int, Int)]): Int = {
+  /** Per-variable LRU capacity sized so one "row band" of `unit`-shaped
+    * blocks — every block the row-major odometer revisits while
+    * sweeping the inner dimensions of one outer position — stays
+    * held. Without this a store with multi-chunk INNER dimensions
+    * re-decodes each inner chunk once per grid row (chunk-extent×
+    * amplification; the ERA5 chunking (1, lat-block, lon-block) is the
+    * canonical case). Bounded by a 64 MiB per-variable budget so task
+    * memory stays predictable when blocks are large; dim 0 is excluded
+    * because the outer walk never returns to a finished outer block.
+    * The reader sizes its decoded band with the decode unit and, for a
+    * sharded array, its encoded-shard band with the shard shape. */
+  def bandCacheCap(unit: Seq[Int], elemSize: Int, ranges: Array[(Int, Int)]): Int = {
     var inner = 1L
     var d = 1
     while (d < ranges.length) {
-      val lo = ranges(d)._1 / meta.chunks(d)
-      val hi = math.max(ranges(d)._1, ranges(d)._2 - 1) / meta.chunks(d)
+      val lo = ranges(d)._1 / unit(d)
+      val hi = math.max(ranges(d)._1, ranges(d)._2 - 1) / unit(d)
       inner = math.min(inner * (hi - lo + 1), 1L << 20)
       d += 1
     }
-    val chunkBytes = meta.chunks.foldLeft(math.max(1, meta.dtype.size).toLong)(_ * _)
-    val budgetEntries = math.max(1L, (64L << 20) / math.max(1L, chunkBytes))
+    val unitBytes = unit.foldLeft(math.max(1, elemSize).toLong)(_ * _)
+    val budgetEntries = math.max(1L, (64L << 20) / math.max(1L, unitBytes))
     math.max(1L, math.min(inner, budgetEntries)).toInt
   }
 
   /** Read + decode one chunk file; absent chunk files yield the
-    * fill_value (Zarr semantics). Sharded arrays decode the whole
-    * shard (inner chunks assembled in place). */
-  /** Read + decode one chunk. `onBytes` receives the PAYLOAD size
-    * actually fetched (0 for absent chunks) — the readers' bytesRead
-    * metric, reported from the read itself rather than a separate
-    * `sizeOf` round trip (which doubles object-store requests). */
+    * fill_value (Zarr semantics). `chunkIdx` indexes the array's chunk
+    * grid — for a sharded array that is a SHARD, decoded whole (inner
+    * chunks assembled in place); the columnar reader instead decodes
+    * one inner chunk at a time ([[readShard]] + [[decodeInner]]).
+    * `onBytes` receives the PAYLOAD size actually fetched (0 for
+    * absent chunks) — the readers' bytesRead metric, reported from the
+    * read itself rather than a separate `sizeOf` round trip (which
+    * doubles object-store requests). */
   def readChunk(store: ZarrStore, meta: ZarrArrayMeta, chunkIdx: Seq[Long],
       onBytes: Long => Unit = _ => (), requirePresent: Boolean = false): AnyRef =
-    try readChunkImpl(store, meta, chunkIdx, onBytes, requirePresent)
+    named(store, meta, chunkIdx) {
+      readChunkImpl(store, meta, chunkIdx, onBytes, requirePresent)
+    }
+
+  /** Runs `body`, naming the chunk in any failure: decode failures on
+    * corrupt objects surface as bare buffer/codec exceptions with no
+    * message — name the chunk so a 1000-executor job's stack points at
+    * the bad object, not just "a BufferUnderflowException somewhere". */
+  private def named[T](store: ZarrStore, meta: ZarrArrayMeta, chunkIdx: Seq[Long],
+      inner: String = "")(body: => T): T =
+    try body
     catch {
-      // decode failures on corrupt objects surface as bare buffer/
-      // codec exceptions with no message — name the chunk so a 1000-
-      // executor job's stack points at the bad object, not just "a
-      // BufferUnderflowException somewhere"
       case e: Exception => throw new java.io.IOException(
-        s"corrupt or unreadable chunk '${meta.name}/${meta.chunkKey(chunkIdx)}' " +
+        s"corrupt or unreadable chunk '${meta.name}/${meta.chunkKey(chunkIdx)}'$inner " +
           s"in ${store.path} (${e.getClass.getSimpleName}" +
           s"${Option(e.getMessage).filter(_.nonEmpty).map(": " + _).getOrElse("")})", e)
     }
 
   private def readChunkImpl(store: ZarrStore, meta: ZarrArrayMeta, chunkIdx: Seq[Long],
-      onBytes: Long => Unit, requirePresent: Boolean = false): AnyRef = {
-    decodeCount.incrementAndGet()
+      onBytes: Long => Unit, requirePresent: Boolean): AnyRef = {
     val nElems = meta.chunks.product
     val key = s"${meta.name}/${meta.chunkKey(chunkIdx)}"
     // requirePresent (coordinate reads): an absent chunk is metadata
@@ -456,9 +470,15 @@ object ChunkIO {
         s"array '${meta.name}' in ${store.path} declares more data than the " +
           s"store holds: required chunk '$key' is absent — refusing to " +
           s"fabricate fill values")
+    // a sharded array counts its inner chunks, in decodeInnerImpl
+    if (meta.sharding.nonEmpty) {
+      val shard = parseShard(store, meta, chunkIdx, onBytes)
+      return if (shard == null && requirePresent) absent() else decodeShard(shard, meta)
+    }
+    decodeCount.incrementAndGet()
     // uncompressed, unfiltered chunks decode straight from a
     // memory-mapped (or wrapped) buffer — no intermediate heap copy
-    if (meta.sharding.isEmpty && meta.compressor.id == "none" && !meta.deltaFilter)
+    if (meta.compressor.id == "none" && !meta.deltaFilter)
       return store.mapBytes(key) match {
         case None => absent()
         case Some(buf) =>
@@ -469,81 +489,125 @@ object ChunkIO {
       case None => absent()
       case Some(bytes) =>
         onBytes(bytes.length.toLong)
-        meta.sharding match {
-          case Some(spec) => decodeShard(bytes, meta, spec)
-          case None =>
-            val raw = ChunkCodec.decompress(bytes, meta.compressor, nElems * meta.dtype.size)
-            val typed = ChunkCodec.decodeTyped(raw, meta.dtype, nElems)
-            if (meta.deltaFilter) ChunkCodec.deltaDecode(typed, meta.dtype) else typed
-        }
+        val raw = ChunkCodec.decompress(bytes, meta.compressor, nElems * meta.dtype.size)
+        val typed = ChunkCodec.decodeTyped(raw, meta.dtype, nElems)
+        if (meta.deltaFilter) ChunkCodec.deltaDecode(typed, meta.dtype) else typed
     }
   }
 
-  /** Decode a v3 shard: parse the `(offset, nbytes) uint64` index
-    * (C-order over the inner-chunk grid, 2^64-1 ⇒ missing), decode
-    * each present inner chunk with the inner codec chain, and place
-    * its elements into a fill-initialized shard-shaped array. Copies
-    * are whole innermost-dimension runs (`System.arraycopy`). */
-  private def decodeShard(bytes: Array[Byte], meta: ZarrArrayMeta, spec: ShardingSpec): AnyRef = {
-    val innerGrid: Array[Int] =
-      meta.chunks.zip(spec.innerChunks).map { case (c, i) => c / i }.toArray
-    val nInner = innerGrid.product
+  /** A fetched v3 shard: its encoded bytes and its checked
+    * `(offset, nbytes)` index, C-order over the shard's inner-chunk
+    * grid (2^64-1 twice ⇒ absent). Immutable once parsed, so a
+    * prefetch thread may decode from it. */
+  final class Shard private[ChunkIO] (val shardIdx: Seq[Long], val bytes: Array[Byte],
+      index: Array[Long]) {
+    def offset(i: Int): Long = index(2 * i)
+    def nbytes(i: Int): Long = index(2 * i + 1)
+  }
+
+  /** Inner chunks per shard, per dimension. */
+  def innerGrid(meta: ZarrArrayMeta): Array[Int] =
+    meta.chunks.zip(meta.sharding.get.innerChunks).map { case (c, i) => c / i }.toArray
+
+  /** Fetch shard `shardIdx` and check its index: size, crc32c. `null`
+    * when the shard object is absent; [[decodeInner]] reads that as
+    * fill. `onBytes` receives the fetched size. */
+  def readShard(store: ZarrStore, meta: ZarrArrayMeta, shardIdx: Seq[Long],
+      onBytes: Long => Unit): Shard =
+    named(store, meta, shardIdx)(parseShard(store, meta, shardIdx, onBytes))
+
+  private def parseShard(store: ZarrStore, meta: ZarrArrayMeta, shardIdx: Seq[Long],
+      onBytes: Long => Unit): Shard = {
+    val bytes = store.readBytes(s"${meta.name}/${meta.chunkKey(shardIdx)}") match {
+      case None => return null
+      case Some(b) => onBytes(b.length.toLong); b
+    }
+    val spec = meta.sharding.get
+    val nInner = innerGrid(meta).product
     val idxLen = nInner * 16 + (if (spec.indexChecksum) 4 else 0)
     require(bytes.length >= idxLen, s"${meta.name}: shard smaller than its index")
     val idxOff = if (spec.indexAtEnd) bytes.length - idxLen else 0
     if (spec.indexChecksum) {
       val crc = new java.util.zip.CRC32C
       crc.update(bytes, idxOff, nInner * 16)
-      val stored = java.nio.ByteBuffer.wrap(bytes, idxOff + nInner * 16, 4)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt
+      val stored = ByteBuffer.wrap(bytes, idxOff + nInner * 16, 4)
+        .order(ByteOrder.LITTLE_ENDIAN).getInt
       require(crc.getValue.toInt == stored,
         s"${meta.name}: shard index crc32c mismatch")
     }
-    val idxBuf = java.nio.ByteBuffer.wrap(bytes, idxOff, nInner * 16)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    val index = new Array[Long](2 * nInner)
+    ByteBuffer.wrap(bytes, idxOff, nInner * 16).order(ByteOrder.LITTLE_ENDIAN)
+      .asLongBuffer().get(index)
+    new Shard(shardIdx, bytes, index)
+  }
 
-    val out = fillArray(meta, meta.chunks.product)
+  /** Decode inner chunk `inner` (C-order over the shard's inner-chunk
+    * grid) of a fetched shard with the inner codec chain: one decode
+    * unit, counted in [[decodeCount]]. A `null` shard (absent object)
+    * or an absent index entry reads as fill; an entry outside the
+    * shard's bytes fails loudly. */
+  def decodeInner(store: ZarrStore, meta: ZarrArrayMeta, shard: Shard, inner: Int): AnyRef =
+    if (shard == null) decodeInnerImpl(meta, null, inner)
+    else named(store, meta, shard.shardIdx, s" (inner chunk $inner)")(decodeInnerImpl(meta, shard, inner))
+
+  private def decodeInnerImpl(meta: ZarrArrayMeta, shard: Shard, inner: Int): AnyRef = {
+    decodeCount.incrementAndGet()
+    val spec = meta.sharding.get
     val innerElems = spec.innerChunks.product
-    val innerLast = spec.innerChunks.last
+    if (shard == null) return fillArray(meta, innerElems)
+    val (off, nb) = (shard.offset(inner), shard.nbytes(inner))
+    if (off == -1L && nb == -1L) return fillArray(meta, innerElems)
+    require(off >= 0 && nb >= 0 && off + nb <= shard.bytes.length,
+      s"${meta.name}: inner chunk $inner out of shard bounds")
+    if (spec.innerComp.id == "none")
+      ChunkCodec.decodeTypedBuf(ByteBuffer.wrap(shard.bytes, off.toInt, nb.toInt).slice(),
+        meta.dtype, innerElems)
+    else {
+      val enc = java.util.Arrays.copyOfRange(shard.bytes, off.toInt, (off + nb).toInt)
+      val raw = ChunkCodec.decompress(enc, spec.innerComp, innerElems * meta.dtype.size)
+      ChunkCodec.decodeTyped(raw, meta.dtype, innerElems)
+    }
+  }
+
+  /** Decode a whole v3 shard: [[decodeInner]] on each inner chunk,
+    * placed into a shard-shaped array. Copies are whole
+    * innermost-dimension runs (`System.arraycopy`). */
+  private def decodeShard(shard: Shard, meta: ZarrArrayMeta): AnyRef = {
+    val inner = meta.sharding.get.innerChunks
+    val grid = innerGrid(meta)
+    val nInner = grid.product
+    val innerLast = inner.last
     // rows (innermost-dim runs) per inner chunk
-    val rowsPerInner = innerElems / innerLast
+    val rowsPerInner = inner.product / innerLast
     val nDims = meta.chunks.length
     val gridIdx = new Array[Int](nDims)
+    var out: AnyRef = null
     var ci = 0
     while (ci < nInner) {
-      val off = idxBuf.getLong(idxOff + ci * 16)
-      val nb = idxBuf.getLong(idxOff + ci * 16 + 8)
-      if (off != -1L || nb != -1L) {
-        require(off >= 0 && nb >= 0 && off + nb <= bytes.length,
-          s"${meta.name}: inner chunk $ci out of shard bounds")
-        val enc = java.util.Arrays.copyOfRange(bytes, off.toInt, (off + nb).toInt)
-        val raw = ChunkCodec.decompress(enc, spec.innerComp, innerElems * meta.dtype.size)
-        val typed = ChunkCodec.decodeTyped(raw, meta.dtype, innerElems)
-        // inner-grid coords of this chunk (C-order decode of ci)
-        var rem = ci; var d = nDims - 1
-        while (d >= 0) { gridIdx(d) = rem % innerGrid(d); rem /= innerGrid(d); d -= 1 }
-        // copy each innermost run to its position in the shard array
-        var r = 0
-        while (r < rowsPerInner) {
-          // decompose r into inner-chunk coords of dims [0, nDims-1)
-          var srcOff = 0L; var dstOff = 0L; var rr = r
-          d = nDims - 2
-          var mul = 1L; var dmul = 1L
-          // build offsets from innermost outward
-          dstOff = gridIdx(nDims - 1).toLong * innerLast
-          dmul = meta.chunks(nDims - 1).toLong
-          srcOff = 0L; mul = innerLast.toLong
-          d = nDims - 2
-          while (d >= 0) {
-            val within = rr % spec.innerChunks(d); rr /= spec.innerChunks(d)
-            srcOff += within * mul; mul *= spec.innerChunks(d)
-            dstOff += (gridIdx(d).toLong * spec.innerChunks(d) + within) * dmul
-            dmul *= meta.chunks(d)
-            d -= 1
-          }
-          System.arraycopy(typed, srcOff.toInt, out, dstOff.toInt, innerLast)
-          r += 1
+      val typed = decodeInnerImpl(meta, shard, ci)
+      if (out == null) out = java.lang.reflect.Array.newInstance(
+        typed.getClass.getComponentType, meta.chunks.product).asInstanceOf[AnyRef]
+      // inner-grid coords of this chunk (C-order decode of ci)
+      var rem = ci; var d = nDims - 1
+      while (d >= 0) { gridIdx(d) = rem % grid(d); rem /= grid(d); d -= 1 }
+      // copy each innermost run to its position in the shard array,
+      // building offsets from innermost outward
+      var r = 0
+      while (r < rowsPerInner) {
+        var rr = r
+        var srcOff = 0L; var mul = innerLast.toLong
+        var dstOff = gridIdx(nDims - 1).toLong * innerLast
+        var dmul = meta.chunks(nDims - 1).toLong
+        d = nDims - 2
+        while (d >= 0) {
+          val within = rr % inner(d); rr /= inner(d)
+          srcOff += within * mul; mul *= inner(d)
+          dstOff += (gridIdx(d).toLong * inner(d) + within) * dmul
+          dmul *= meta.chunks(d)
+          d -= 1
         }
+        System.arraycopy(typed, srcOff.toInt, out, dstOff.toInt, innerLast)
+        r += 1
       }
       ci += 1
     }

@@ -46,11 +46,14 @@ class ZarrColumnarReader(p: ZarrInputPartition, batchSize: Int = 4096)
   private var row = p.rowStart
   GridMath.rowToIndices(row, p.ranges, idx)
 
-  // per-var-field chunk state
+  // per-var-field chunk state. The walk is over the array's decode
+  // units: chunks, or for a sharded array its INNER chunks, so a
+  // partition decodes only the inner chunks it covers.
   private final class VarState(val meta: ZarrArrayMeta) {
+    private val unit: Array[Int] = meta.sharding.fold(meta.chunks)(_.innerChunks).toArray
     private val chunkIdx = new Array[Long](nDims)
     var chunk: AnyRef = _
-    /** Flat in-chunk offset of the odometer's cell, set by [[locate]]. */
+    /** Flat in-unit offset of the odometer's cell, set by [[locate]]. */
     var offset = 0
     private var valid = false
     var bytesRead = 0L
@@ -59,36 +62,70 @@ class ZarrColumnarReader(p: ZarrInputPartition, batchSize: Int = 4096)
       * consumer drains on pickup). */
     var prefetchBytes: java.util.concurrent.atomic.AtomicLong = _
 
-    // Row-band LRU: the odometer revisits inner-dimension chunks once
-    // per grid row; holding one band avoids chunk-extent× re-decodes
+    // Row-band LRU: the odometer revisits inner-dimension units once
+    // per grid row; holding one band avoids unit-extent× re-decodes
     // (see ChunkIO.bandCacheCap).
-    private val bandCap = ChunkIO.bandCacheCap(meta, p.ranges)
-    private val band =
-      new java.util.LinkedHashMap[Seq[Long], AnyRef](8, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[Seq[Long], AnyRef]): Boolean = size() > bandCap
+    private val band = lru[AnyRef](ChunkIO.bandCacheCap(unit, meta.dtype.size, p.ranges))
+
+    // Sharded arrays: the encoded shards the band spans (null = absent
+    // shard object), so each shard is fetched at most once per
+    // partition while its inner chunks are decoded one by one. Only
+    // `load` touches it, and loads never overlap: the consumer waits
+    // for an in-flight prefetch before loading, and submits the next
+    // prefetch after.
+    private val shards =
+      if (meta.sharding.isEmpty) null
+      else lru[ChunkIO.Shard](ChunkIO.bandCacheCap(meta.chunks, meta.dtype.size, p.ranges))
+    private val innerGrid = if (meta.sharding.isEmpty) null else ChunkIO.innerGrid(meta)
+
+    private def load(key: Seq[Long], onBytes: Long => Unit): AnyRef =
+      if (shards == null) ChunkIO.readChunk(store, meta, key, onBytes)
+      else {
+        // the shard holding this inner chunk, and the inner chunk's
+        // C-order position in it
+        val shardIdx = new Array[Long](nDims)
+        var inner = 0
+        var d = 0
+        while (d < nDims) {
+          shardIdx(d) = key(d) / innerGrid(d)
+          inner = inner * innerGrid(d) + (key(d) % innerGrid(d)).toInt
+          d += 1
+        }
+        val sk = shardIdx.toSeq
+        val shard =
+          if (shards.containsKey(sk)) shards.get(sk)
+          else { val s = ChunkIO.readShard(store, meta, sk, onBytes); shards.put(sk, s); s }
+        ChunkIO.decodeInner(store, meta, shard, inner)
       }
 
     // With the band cache in place, cache MISSES occur in exact
-    // C-order over the chunk grid restricted to this partition's
+    // C-order over the unit grid restricted to this partition's
     // ranges — so a one-ahead prediction is precise, and prefetching
-    // the predicted chunk overlaps its store latency (one object-store
+    // the predicted unit overlaps its store latency (one object-store
     // round trip per chunk on remote backends) with the current
-    // chunk's decode/emit.
-    private val chunkLo = Array.tabulate(nDims)(d => p.ranges(d)._1 / meta.chunks(d))
+    // unit's decode/emit.
+    private val chunkLo = Array.tabulate(nDims)(d => p.ranges(d)._1 / unit(d))
     private val chunkHi = Array.tabulate(nDims)(d =>
-      math.max(p.ranges(d)._1, p.ranges(d)._2 - 1) / meta.chunks(d))
+      math.max(p.ranges(d)._1, p.ranges(d)._2 - 1) / unit(d))
     private var pending: (Seq[Long], java.util.concurrent.Future[AnyRef]) = null
 
+    /** The unit after `cur` in that C-order, or null when this
+      * partition's rows end before it (its first cell lies at or past
+      * `rowEnd`: the slice may stop inside `p.ranges`). */
     private def nextChunkKey(cur: Seq[Long]): Seq[Long] = {
       val n = cur.toArray
       var d = nDims - 1
-      while (d >= 0) {
-        if (n(d) < chunkHi(d)) { n(d) += 1; return n.toSeq }
-        n(d) = chunkLo(d)
-        d -= 1
+      while (d >= 0 && n(d) == chunkHi(d)) { n(d) = chunkLo(d); d -= 1 }
+      if (d < 0) return null
+      n(d) += 1
+      var firstRow = 0L
+      d = 0
+      while (d < nDims) {
+        val (lo, hi) = p.ranges(d)
+        firstRow = firstRow * (hi - lo) + math.max(lo.toLong, n(d) * unit(d)) - lo
+        d += 1
       }
-      null
+      if (firstRow < p.rowEnd) n.toSeq else null
     }
 
     private def fetch(key: Seq[Long]): AnyRef = {
@@ -101,10 +138,9 @@ class ZarrColumnarReader(p: ZarrInputPartition, batchSize: Int = 4096)
         a
       } else {
         // mispredicted prefetch: its bytes were still fetched — drain
-        // them into the metric before reading the chunk actually needed
+        // them into the metric before reading the unit actually needed
         drainPending()
-        ChunkIO.readChunkCached(store, meta, key, p.chunkCacheEntries,
-          bytesRead += _)
+        ChunkIO.cached(store, meta, key, p.chunkCacheEntries)(load(key, bytesRead += _))
       }
     }
 
@@ -122,12 +158,12 @@ class ZarrColumnarReader(p: ZarrInputPartition, batchSize: Int = 4096)
     }
 
     /** Point [[chunk]] and [[offset]] at the odometer's cell and return
-      * how many cells remain in this chunk along the last dimension. */
+      * how many cells remain in this decode unit along the last dimension. */
     def locate(): Int = {
       var changed = !valid
       var d = 0
       while (d < nDims) {
-        val c = idx(d) / meta.chunks(d)
+        val c = idx(d) / unit(d)
         if (c != chunkIdx(d)) { chunkIdx(d) = c; changed = true }
         d += 1
       }
@@ -151,8 +187,7 @@ class ZarrColumnarReader(p: ZarrInputPartition, batchSize: Int = 4096)
               pending = (nk, ChunkIO.prefetchPool.submit(
                 new java.util.concurrent.Callable[AnyRef] {
                   override def call(): AnyRef =
-                    ChunkIO.readChunkCached(store, meta, nk, p.chunkCacheEntries,
-                      sz.addAndGet(_))
+                    ChunkIO.cached(store, meta, nk, p.chunkCacheEntries)(load(nk, sz.addAndGet(_)))
                 }))
             }
           }
@@ -161,11 +196,17 @@ class ZarrColumnarReader(p: ZarrInputPartition, batchSize: Int = 4096)
       }
       var off = 0
       d = 0
-      while (d < nDims) { off = off * meta.chunks(d) + idx(d) % meta.chunks(d); d += 1 }
+      while (d < nDims) { off = off * unit(d) + idx(d) % unit(d); d += 1 }
       offset = off
-      if (nDims == 0) Int.MaxValue else meta.chunks(last) - idx(last) % meta.chunks(last)
+      if (nDims == 0) Int.MaxValue else unit(last) - idx(last) % unit(last)
     }
   }
+
+  /** An access-ordered map keeping its `cap` most recently used entries. */
+  private def lru[V](cap: Int): java.util.LinkedHashMap[Seq[Long], V] =
+    new java.util.LinkedHashMap[Seq[Long], V](8, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[Seq[Long], V]): Boolean = size() > cap
+    }
 
   private val varStates: Array[VarState] = fields.collect { case VarField(m) => new VarState(m) }
 

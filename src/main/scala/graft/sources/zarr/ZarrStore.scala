@@ -33,7 +33,8 @@ sealed trait ZarrStore extends Serializable {
   def readBytes(rel: String): Option[Array[Byte]]
   /** A read-only buffer over `rel` — backends that can memory-map
     * override this to avoid the heap copy; the default is a plain
-    * read. Callers must not mutate position-independent reads only. */
+    * read. Each call returns a fresh buffer, so callers may move its
+    * position, but must never write to it: it may map the file. */
   def mapBytes(rel: String): Option[java.nio.ByteBuffer] =
     readBytes(rel).map(java.nio.ByteBuffer.wrap)
   /** Size in bytes of `rel` if it exists (IO accounting). */

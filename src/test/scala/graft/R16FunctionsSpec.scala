@@ -109,6 +109,38 @@ class R16FunctionsSpec extends AnyFunSuite {
     assert(ref.exceptAll(fast).count() == 0 && fast.exceptAll(ref).count() == 0)
   }
 
+  test("two FloatPlaneDot calls over a non-nullable column compile in one stage") {
+    // array(...) of non-null floats is a non-nullable child: its code is
+    // emitted with no enclosing block, so both calls share one scope
+    val emb = array((0 until 4).map(k => (col("id") * (k + 1) - 7).cast("float")): _*)
+    val (p1, p2) = (Seq(0.5, -0.25, 0.125, 1.0), Seq(-1.0, 0.75, 0.0, 0.5))
+    val q = spark.range(0, 200).select(col("id"),
+      graft.functions.FloatPlaneDot(emb, p1).as("a"),
+      graft.functions.FloatPlaneDot(emb, p2).as("b"))
+    assert(!spark.range(1).select(emb).schema.head.nullable)
+    def run(settings: (String, String)*): Seq[org.apache.spark.sql.Row] = {
+      val saved = settings.map { case (k, _) => k -> spark.conf.getOption(k) }
+      settings.foreach { case (k, v) => spark.conf.set(k, v) }
+      try q.orderBy("id").collect().toSeq
+      finally saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+    // fallback off: a compile error fails the query instead of silently
+    // dropping to interpreted evaluation
+    val codegen = run("spark.sql.codegen.fallback" -> "false",
+      "spark.sql.codegen.wholeStage" -> "true", "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")
+    val interpreted = run("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    assert(codegen.length == 200)
+    assert(codegen == interpreted)
+    val r = codegen(3)
+    val v = (0 until 4).map(k => (3L * (k + 1) - 7).toFloat.toDouble)
+    assert(r.getDouble(1) == v.zip(p1).foldLeft(0.0) { case (acc, (x, y)) => acc + x * y })
+    assert(r.getDouble(2) == v.zip(p2).foldLeft(0.0) { case (acc, (x, y)) => acc + x * y })
+  }
+
   test("BpeSegment handles multi-byte words and empty merge tables") {
     import spark.implicits._
     val wc = Seq(("héllo", 1L), ("日本語", 1L), ("aaa", 1L), ("x", 1L))
