@@ -377,7 +377,8 @@ object SqlRepl {
   /** `\analyze <sql>` — the runtime-metrics counterpart of EXPLAIN
     * ANALYZE in the reference CLI (docs/CLI_REFERENCE.md:455-472):
     * execute the query, then report each scan's post-run SQL metrics —
-    * the DSv2 custom metrics (zarrBytesRead / zarrChunksDecoded) plus
+    * the DSv2 custom metrics (zarrBytesRead / zarrChunksDecoded /
+    * zarrRowsOut, the rows the scan handed Spark after its folds) plus
     * output rows — so "did that filter prune chunk IO?" is answerable
     * from the shell. */
   private def runAnalyze(spark: SparkSession, sql: String,
@@ -407,7 +408,7 @@ object SqlRepl {
       val scans = scansOf(df.queryExecution.executedPlan)
       if (scans.isEmpty) out("no v2 scans in plan")
       scans.foreach { b =>
-        val top = Seq("numOutputRows", "zarrBytesRead", "zarrChunksDecoded")
+        val top = Seq("numOutputRows", "zarrBytesRead", "zarrChunksDecoded", "zarrRowsOut")
           .flatMap(k => b.metrics.get(k).map(m => s"$k=${m.value}"))
         // metadata-answered scans (COUNT/MIN/MAX/SUM/grouped variants,
         // single-store or union) declare no IO metrics because they DO

@@ -10,7 +10,8 @@ import scala.util.Random
   * DuckDB. This composes every scan-level pushdown the connector has —
   * coordinate-range planning, column pruning, LIMIT/OFFSET, `.zstats`
   * TopN, COUNT/MIN/MAX metadata aggregates, grouped metadata
-  * aggregates, runtime join filtering — under random query shapes, the
+  * aggregates, exact filters with partial aggregates and top-N folded
+  * in the scan, runtime join filtering — under random query shapes, the
   * one adversarial surface the fixed gate (z1-z15) and the property
   * fuzz (pruning soundness, corruption) don't reach: random
   * COMPOSITION of pushdowns.
@@ -23,7 +24,8 @@ import scala.util.Random
   *
   * Cross-engine exactness rules are inherited from [[SqlFuzz]] (decimal-
   * cast double sums, total ORDER BY under LIMIT, explicit null
-  * ordering, no division).
+  * ordering, no division — except AVG over doubles whose sums are
+  * exact, where both engines divide the same sum by the same count).
   */
 object ZarrFuzz {
 
@@ -39,7 +41,9 @@ object ZarrFuzz {
   // executor-merged union agg pushdowns compose with random SQL);
   // metaQ biases toward grid_f so the union agg-merge families are
   // reliably exercised within a 250-seed run.
-  val grammarVersion = 3
+  // v4: in-scan folds — grouped COUNT/MIN/MAX/AVG and a
+  // single-key ORDER BY ... LIMIT under data-variable predicates.
+  val grammarVersion = 4
 
   // ------------------------------------------------------------ fixtures
 
@@ -228,7 +232,8 @@ object ZarrFuzz {
     }
   }
 
-  /** One predicate on a data variable (evaluated post-scan). */
+  /** One predicate on a data variable (a comparison is evaluated by
+    * the scan, an IN post-scan). */
   private def varAtom(r: Random, g: Grid, v: Var): String = {
     val col = s"${g.name}.${v.name}"
     if (v.isDbl) {
@@ -379,6 +384,37 @@ object ZarrFuzz {
     }
   }
 
+  /** Shapes the scan folds itself under data-variable predicates (which
+    * it evaluates exactly): a grouped COUNT/MIN/MAX/AVG keyed by
+    * coordinates, or a single-key ORDER BY the grid's injective double
+    * variable with LIMIT. AVG only over doubles whose sums stay exact,
+    * so both engines divide the same sum. */
+  private def foldQ(r: Random): String = {
+    val g = pick(r, Seq(gridACat, gridCCat, gridDCat, gridECat, gridFCat))
+    val preds = Seq.fill(1 + r.nextInt(2))(varAtom(r, g, pick(r, g.vars))) ++
+      (if (r.nextInt(3) == 0) Seq(coordAtom(r, g, pick(r, g.coords))) else Nil)
+    val v = g.vars.head // injective double
+    if (r.nextBoolean()) {
+      val keys = r.shuffle(g.coords).take(1 + r.nextInt(g.coords.size.min(2)))
+        .map(c => s"${g.name}.${c.name}")
+      val keyItems = keys.zipWithIndex.map { case (k, i) => s"$k AS k$i" }
+      val other = s"${g.name}.${pick(r, g.vars).name}"
+      s"""SELECT ${keyItems.mkString(", ")}, count(*) AS c0, min($other) AS c1,
+         |  max(${g.name}.${v.name}) AS c2, avg(${g.name}.${v.name}) AS c3
+         |FROM ${g.name}
+         |WHERE ${preds.mkString(" AND ")}
+         |GROUP BY ${keys.mkString(", ")}""".stripMargin
+    } else {
+      val cols = g.coords.map(c => s"${g.name}.${c.name}") :+ s"${g.name}.${v.name}"
+      val items = cols.zipWithIndex.map { case (c, i) => s"$c AS c$i" }
+      s"""SELECT ${items.mkString(", ")}
+         |FROM ${g.name}
+         |WHERE ${preds.mkString(" AND ")}
+         |ORDER BY c${cols.size - 1} ${pick(r, Seq("ASC NULLS FIRST", "DESC NULLS LAST"))}
+         |LIMIT ${1 + r.nextInt(40)}""".stripMargin
+    }
+  }
+
   /** Join shapes: grid ⋈ parquet dimension (runtime-filter surface),
     * grid ⋈ grid on a shared integer coordinate domain. Aggregated
     * output keeps results small and order-free. */
@@ -432,10 +468,11 @@ object ZarrFuzz {
   def gen(seed: Long): String = {
     val r = new Random(seed ^ 0x5a77L)
     r.nextInt(100) match {
-      case x if x < 28 => scanQ(r)
-      case x if x < 50 => aggQ(r)
-      case x if x < 62 => metaQ(r)
-      case x if x < 74 => topNQ(r)
+      case x if x < 24 => scanQ(r)
+      case x if x < 42 => aggQ(r)
+      case x if x < 52 => metaQ(r)
+      case x if x < 62 => topNQ(r)
+      case x if x < 76 => foldQ(r)
       case x if x < 88 => joinQ(r)
       case _           => setQ(r)
     }

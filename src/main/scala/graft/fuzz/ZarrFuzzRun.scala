@@ -17,13 +17,17 @@ import java.nio.file.{Files, Paths}
   *
   * Beyond pass/fail, the runner counts which seeds' physical plans
   * actually exercised each connector pushdown (coordinate ranges, TopN,
-  * limit, whole-grid and grouped metadata aggregates) and FAILS if any
-  * family went unexercised — a fuzz run that never pushes anything
-  * would silently test only the post-scan engine.
+  * limit, whole-grid and grouped metadata aggregates, folds in the
+  * scan) and FAILS if any family went unexercised — a fuzz run that
+  * never pushes anything would silently test only the post-scan engine.
   *
   * Usage: graft.fuzz.ZarrFuzzRun <sfDir> <outDir> [nSeeds] [seed0]
   */
 object ZarrFuzzRun {
+
+  /** A scan description naming filters Spark pushed (exact or not). */
+  private[graft] def filtersPushed(desc: String): Boolean =
+    desc.contains("exactFilters=[") && !desc.contains("exactFilters=[] postScan=[]")
 
   /** All DSv2 scan descriptions in the plan, descending through AQE. */
   private[graft] def scanDescs(plan: SparkPlan): Seq[String] = {
@@ -73,7 +77,9 @@ object ZarrFuzzRun {
       "agg_meta" -> 0, "group_agg_meta" -> 0,
       // grammar v3: pushdown composition over the sharded-v3 fixture
       // and the multi-store union's executor-merged aggregates
-      "shard_range" -> 0, "union_agg" -> 0, "union_group_agg" -> 0)
+      "shard_range" -> 0, "union_agg" -> 0, "union_group_agg" -> 0,
+      // grammar v4: partial aggregates and top-N folded in the scan
+      "scan_fold" -> 0)
       .withDefaultValue(0)
     var failed = 0
     val sqls = (seed0 until seed0 + nSeeds).map { seed =>
@@ -83,9 +89,10 @@ object ZarrFuzzRun {
         val df = spark.sql(sql)
         df.write.mode("overwrite").parquet(s"$outDir/$name")
         val descs = scanDescs(df.queryExecution.executedPlan)
-        if (descs.exists(d => d.contains("pushedFilters=[") && !d.contains("pushedFilters=[]")))
-          markers("coord_range") += 1
+        if (descs.exists(filtersPushed)) markers("coord_range") += 1
         if (descs.exists(_.contains(" topN="))) markers("topn") += 1
+        // a partial aggregate or top-N folded inside the scan
+        if (descs.exists(d => d.contains(" partialAgg=") || d.contains(" topN="))) markers("scan_fold") += 1
         // coordinate-prefix TopN pushes as either limit (ASC) or
         // offset (DESC) — both count as the limit-subset family
         val off = "offset=(\\d+)".r
@@ -97,8 +104,7 @@ object ZarrFuzzRun {
         if (descs.exists(_.contains("ZarrUnionGroupAggScan"))) markers("union_group_agg") += 1
         else if (descs.exists(_.contains("ZarrUnionAggScan"))) markers("union_agg") += 1
         // coordinate pushdown composed over the sharded-v3 read path
-        if (sql.contains("grid_e") &&
-            descs.exists(d => d.contains("pushedFilters=[") && !d.contains("pushedFilters=[]")))
+        if (sql.contains("grid_e") && descs.exists(filtersPushed))
           markers("shard_range") += 1
       } catch { case e: Exception =>
         failed += 1

@@ -55,7 +55,9 @@ object GridMath {
     * epsilon-widened (superset semantics): the scan may return extra
     * rows near the boundary, and Spark re-applies the exact filter
     * post-scan (the Inexact contract) — so widening is always safe,
-    * while a float-noise *miss* would silently drop data. */
+    * while a float-noise *miss* would silently drop data. A dim whose
+    * filters are exact is narrowed further to its exact match interval
+    * (`ZarrScan`). */
   sealed trait CoordPred extends Serializable
   object CoordPred {
     final case class Eq(v: Double) extends CoordPred

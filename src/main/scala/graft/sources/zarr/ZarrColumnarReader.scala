@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.spark.sql.connector.metric.CustomTaskMetric
 import org.apache.spark.sql.connector.read.PartitionReader
 import org.apache.spark.sql.execution.vectorized.{OnHeapColumnVector, WritableColumnVector}
+import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
 
 /** The connector's one partition reader: fills `OnHeapColumnVector`s in
@@ -24,6 +25,14 @@ import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
   * cell. An empty projection (bare counts) emits zero-column batches
   * carrying only `numRows`, as Spark's vectorized parquet reader does.
   * The vectors are allocated once and `reset()` per batch.
+  *
+  * What Spark pushed runs inside the same run loop. Pushed predicates
+  * ([[CellPred]]) select the run's passing cells once per run, and the
+  * plain path compacts the others away (a row limit then counts
+  * emitted rows). A [[ScanFold]] consumes the whole slice before the
+  * first batch, in row-major order, and the reader emits the fold's
+  * rows instead of cells: per-group partial aggregates over dense
+  * slots spanning the partition's index box, or the `n` best rows.
   */
 class ZarrColumnarReader(p: ZarrInputPartition, batchSize: Int = 4096)
     extends PartitionReader[ColumnarBatch] {
@@ -32,19 +41,48 @@ class ZarrColumnarReader(p: ZarrInputPartition, batchSize: Int = 4096)
   private val nDims = p.ranges.length
   private val last = nDims - 1
   private val fields = p.projection.toArray
-  private val vectors: Array[OnHeapColumnVector] = {
-    val cap = math.max(1L, math.min(batchSize.toLong, p.rowEnd - p.rowStart)).toInt
-    fields.map {
-      case CoordField(d) => new OnHeapColumnVector(cap, p.coords(d).meta.dtype.sparkType)
-      case VarField(m) => new OnHeapColumnVector(cap, m.dtype.sparkType)
-    }
+  /** Leading projection fields the plain and top-N paths emit; the
+    * rest are read only for predicates and folds. */
+  private val nOut = if (p.outCols < 0) fields.length else p.outCols
+  private val preds = p.preds.toArray
+
+  private def typeOf(f: ProjField): DataType = f match {
+    case CoordField(d) => p.coords(d).meta.dtype.sparkType
+    case VarField(m) => m.dtype.sparkType
   }
+
+  private val outTypes: Array[DataType] = p.fold match {
+    case Some(AggFold(g, aggs)) =>
+      (g.map(d => p.coords(d).meta.dtype.sparkType) ++ aggs.map {
+        case FoldCount => LongType
+        case FoldSum(_) => DoubleType
+        case FoldMin(f) => typeOf(fields(f))
+        case FoldMax(f) => typeOf(fields(f))
+      }).toArray
+    case _ => fields.take(nOut).map(typeOf)
+  }
+  private val capacity: Int = {
+    val rows = p.fold match {
+      case Some(TopNFold(_, _, n)) => n.toLong
+      case Some(_: AggFold) => batchSize.toLong
+      case None => p.rowEnd - p.rowStart
+    }
+    math.max(1L, math.min(batchSize.toLong, rows)).toInt
+  }
+  private val vectors: Array[OnHeapColumnVector] = outTypes.map(new OnHeapColumnVector(capacity, _))
   private val batch = new ColumnarBatch(vectors.map(v => v: ColumnVector))
 
   // odometer state: global indices per dimension for the current row
   private val idx = new Array[Int](nDims)
   private var row = p.rowStart
-  GridMath.rowToIndices(row, p.ranges, idx)
+  if (row < p.rowEnd) GridMath.rowToIndices(row, p.ranges, idx)
+
+  /** Walk runs through the odometer. A bare count over no columns and
+    * no groups needs no cell positions: its runs span whole batches. */
+  private val walk = fields.nonEmpty || p.fold.exists {
+    case AggFold(g, _) => g.nonEmpty
+    case _ => true
+  }
 
   // per-var-field chunk state. The walk is over the array's decode
   // units: chunks, or for a sharded array its INNER chunks, so a
@@ -209,37 +247,153 @@ class ZarrColumnarReader(p: ZarrInputPartition, batchSize: Int = 4096)
     }
 
   private val varStates: Array[VarState] = fields.collect { case VarField(m) => new VarState(m) }
+  /** Field index → its VarState, or −1 for a coordinate. */
+  private val varOf: Array[Int] = {
+    var v = 0
+    fields.map { case VarField(_) => v += 1; v - 1; case _ => -1 }
+  }
 
-  override def next(): Boolean = {
-    if (row >= p.rowEnd) return false
-    val n = math.min(batchSize.toLong, p.rowEnd - row).toInt
-    vectors.foreach(_.reset())
-    var r = 0
-    while (fields.nonEmpty && r < n) {
-      var len = n - r
+  // ------------------------------------------------------------- runs
+
+  private var runLen = 0
+  /** Run positions passing every predicate: `sel(0 until nSel)`, or
+    * `0 until nSel` itself while `selAll`. */
+  private val sel = new Array[Int](batchSize)
+  private var nSel = 0
+  private var selAll = true
+
+  /** Locate the next run of at most `budget` cells and select its
+    * passing cells. */
+  private def nextRun(budget: Int): Unit = {
+    var len = math.min(budget.toLong, p.rowEnd - row).toInt
+    if (walk) {
       if (nDims > 0) len = math.min(len, p.ranges(last)._2 - idx(last))
       var vs = 0
       while (vs < varStates.length) { len = math.min(len, varStates(vs).locate()); vs += 1 }
-      vs = 0
-      var f = 0
-      while (f < fields.length) {
-        fields(f) match {
-          case CoordField(d) if d == last => copyRun(vectors(f), r, p.coords(d).raw, idx(d), len)
-          case CoordField(d) => putConstRun(vectors(f), r, len, p.coords(d).raw, idx(d))
-          case VarField(m) =>
-            val st = varStates(vs)
-            copyRun(vectors(f), r, st.chunk, st.offset, len)
-            if (p.fillAsNull) nullFills(vectors(f), r, st.chunk, st.offset, len, m.fillValue)
-            vs += 1
+    }
+    runLen = len
+    nSel = len
+    selAll = true
+    var k = 0
+    while (k < preds.length && nSel > 0) {
+      bind(preds(k).field)
+      applyPred(preds(k).range)
+      k += 1
+    }
+  }
+
+  private def endRun(): Unit = {
+    if (walk) advanceOdometer(runLen)
+    row += runLen
+  }
+
+  // the bound source of the current run: cell i is sArr(sOff + i * sStep)
+  private var sArr: AnyRef = _
+  private var sOff = 0
+  private var sStep = 1
+
+  private def bind(f: Int): Unit = fields(f) match {
+    case CoordField(d) => sArr = p.coords(d).raw; sOff = idx(d); sStep = if (d == last) 1 else 0
+    case VarField(_) =>
+      val st = varStates(varOf(f)); sArr = st.chunk; sOff = st.offset; sStep = 1
+  }
+
+  /** Keep the selected cells of the bound source that lie in `r`. */
+  private def applyPred(r: CellRange): Unit = {
+    if (sStep == 0) { if (!r.passes(sArr, sOff)) nSel = 0; return }
+    val all = selAll
+    val n = nSel
+    val off = sOff
+    var m = 0
+    var k = 0
+    sArr match {
+      case a: Array[Float] =>
+        val (lo, hi, nan) = (r.dlo, r.dhi, r.nan)
+        while (k < n) {
+          val i = if (all) k else sel(k); val x = a(off + i)
+          if (x >= lo && x <= hi || nan && x != x) { sel(m) = i; m += 1 }
+          k += 1
         }
+      case a: Array[Double] =>
+        val (lo, hi, nan) = (r.dlo, r.dhi, r.nan)
+        while (k < n) {
+          val i = if (all) k else sel(k); val x = a(off + i)
+          if (x >= lo && x <= hi || nan && x != x) { sel(m) = i; m += 1 }
+          k += 1
+        }
+      case a: Array[Long] =>
+        val (lo, hi) = (r.lo, r.hi)
+        while (k < n) {
+          val i = if (all) k else sel(k); val x = a(off + i)
+          if (x >= lo && x <= hi) { sel(m) = i; m += 1 }
+          k += 1
+        }
+      case a: Array[Int] =>
+        val (lo, hi) = (r.lo, r.hi)
+        while (k < n) {
+          val i = if (all) k else sel(k); val x = a(off + i)
+          if (x >= lo && x <= hi) { sel(m) = i; m += 1 }
+          k += 1
+        }
+      case _ =>
+        while (k < n) {
+          val i = if (all) k else sel(k)
+          if (r.passes(sArr, off + i)) { sel(m) = i; m += 1 }
+          k += 1
+        }
+    }
+    selAll = all && m == n
+    nSel = m
+  }
+
+  @inline private def cell(k: Int): Int = if (selAll) k else sel(k)
+
+  // ------------------------------------------------------- plain path
+
+  private var emitted = 0L
+  private var rowsOut = 0L
+
+  override def next(): Boolean = p.fold match {
+    case None => nextPlain()
+    case Some(f) =>
+      if (foldOut == null) foldOut = runFold(f)
+      val n = math.min(capacity, foldOut.rows - foldNext)
+      if (n <= 0) return false
+      vectors.foreach(_.reset())
+      foldOut.emit(foldNext, n)
+      foldNext += n
+      finish(n)
+  }
+
+  private def finish(n: Int): Boolean = {
+    batch.setNumRows(n)
+    rowsOut += n
+    true
+  }
+
+  private def nextPlain(): Boolean = {
+    vectors.foreach(_.reset())
+    var out = 0
+    while (out < capacity && row < p.rowEnd && (p.rowLimit < 0 || emitted < p.rowLimit)) {
+      nextRun(capacity - out)
+      val n = if (p.rowLimit < 0) nSel else math.min(nSel.toLong, p.rowLimit - emitted).toInt
+      var f = 0
+      while (f < nOut) {
+        bind(f)
+        val v = vectors(f)
+        if (sStep == 0) putConstRun(v, out, n, sArr, sOff)
+        else if (selAll) {
+          copyRun(v, out, sArr, sOff, n)
+          if (p.fillAsNull && varOf(f) >= 0)
+            nullFills(v, out, sArr, sOff, n, fields(f).asInstanceOf[VarField].meta.fillValue)
+        } else gatherRun(v, out, sArr, sOff, n)
         f += 1
       }
-      r += len
-      advanceOdometer(len)
+      out += n
+      emitted += n
+      endRun()
     }
-    row += n
-    batch.setNumRows(n)
-    true
+    if (out == 0) false else finish(out)
   }
 
   /** Move the odometer `len` cells along the last dimension, carrying
@@ -252,6 +406,339 @@ class ZarrColumnarReader(p: ZarrInputPartition, batchSize: Int = 4096)
       idx(d - 1) += 1
       d -= 1
     }
+  }
+
+  // ------------------------------------------------------------ folds
+
+  /** A fold: consumes runs, then hands out its rows, written into the
+    * vectors a batch at a time. */
+  private abstract class Acc {
+    def add(): Unit
+    def rows: Int
+    def emit(from: Int, n: Int): Unit
+  }
+  private var foldOut: Acc = _
+  private var foldNext = 0
+
+  /** Consume the whole slice into `f`. */
+  private def runFold(f: ScanFold): Acc = {
+    val acc = f match {
+      case a: AggFold => new AggAcc(a)
+      case t: TopNFold => new TopNAcc(t)
+    }
+    while (row < p.rowEnd) {
+      nextRun(batchSize)
+      if (nSel > 0) acc.add()
+      endRun()
+    }
+    acc
+  }
+
+  /** Dense per-group slots over the partition's index box: along each
+    * grouped dim, the indices its rows can reach (one index while the
+    * slice stays inside one value of every outer dim). */
+  private final class AggAcc(spec: AggFold) extends Acc {
+    private val g = spec.groupDims.toArray
+    private val (boxLo, boxLen) = {
+      val first = new Array[Int](nDims)
+      val lastIdx = new Array[Int](nDims)
+      if (p.rowStart < p.rowEnd) {
+        GridMath.rowToIndices(p.rowStart, p.ranges, first)
+        GridMath.rowToIndices(p.rowEnd - 1, p.ranges, lastIdx)
+      }
+      val lo = new Array[Int](nDims)
+      val len = new Array[Int](nDims)
+      var samePrefix = true
+      var d = 0
+      while (d < nDims) {
+        if (samePrefix) { lo(d) = first(d); len(d) = lastIdx(d) - first(d) + 1 }
+        else { lo(d) = p.ranges(d)._1; len(d) = p.ranges(d)._2 - p.ranges(d)._1 }
+        samePrefix = samePrefix && first(d) == lastIdx(d)
+        d += 1
+      }
+      (g.map(lo(_)), g.map(len(_)))
+    }
+    private val stride: Array[Int] = {
+      val s = new Array[Int](g.length)
+      var acc = 1L
+      var j = g.length - 1
+      while (j >= 0) {
+        s(j) = acc.toInt
+        acc *= boxLen(j)
+        if (acc > Int.MaxValue) throw new IllegalStateException(s"Too many groups in one partition: $acc")
+        j -= 1
+      }
+      s
+    }
+    private val nSlots = if (p.rowStart < p.rowEnd) boxLen.product else 1
+    private val lastG = g.indexOf(last)
+    private val counts = new Array[Long](nSlots)
+    private val aggs = spec.aggs.toArray
+    /** Per aggregate: double slots (sums; min/max of float columns) or
+      * long slots (min/max of integral columns). */
+    private val dSlots: Array[Array[Double]] = aggs.map {
+      case FoldSum(_) => new Array[Double](nSlots)
+      case FoldMin(f) if floating(f) => Array.fill(nSlots)(Double.NaN)
+      case FoldMax(f) if floating(f) => Array.fill(nSlots)(Double.NegativeInfinity)
+      case _ => null
+    }
+    private val lSlots: Array[Array[Long]] = aggs.map {
+      case FoldMin(f) if !floating(f) => Array.fill(nSlots)(Long.MaxValue)
+      case FoldMax(f) if !floating(f) => Array.fill(nSlots)(Long.MinValue)
+      case _ => null
+    }
+
+    private def floating(f: Int): Boolean = typeOf(fields(f)) match {
+      case FloatType | DoubleType => true
+      case _ => false
+    }
+
+    override def add(): Unit = {
+      var base = 0
+      var j = 0
+      while (j < g.length) { base += (idx(g(j)) - boxLo(j)) * stride(j); j += 1 }
+      // cells of the run move along the last dim: a grouped last dim
+      // moves the slot with them
+      val step = if (lastG >= 0) stride(lastG) else 0
+      val n = nSel
+      if (step == 0) counts(base) += n
+      else { var k = 0; while (k < n) { counts(base + cell(k) * step) += 1; k += 1 } }
+      var a = 0
+      while (a < aggs.length) {
+        aggs(a) match {
+          case FoldCount =>
+          case FoldSum(f) => bind(f); sum(dSlots(a), base, step)
+          case FoldMin(f) => bind(f); if (dSlots(a) != null) minD(dSlots(a), base, step) else minL(lSlots(a), base, step)
+          case FoldMax(f) => bind(f); if (dSlots(a) != null) maxD(dSlots(a), base, step) else maxL(lSlots(a), base, step)
+        }
+        a += 1
+      }
+    }
+
+    /** Cell `k` of the selection as a double / long of the bound source. */
+    @inline private def dAt(k: Int): Double = {
+      val i = sOff + cell(k) * sStep
+      sArr match {
+        case a: Array[Float] => a(i)
+        case a: Array[Double] => a(i)
+        case other => throw new IllegalStateException(s"Not a float column: ${other.getClass}")
+      }
+    }
+    @inline private def lAt(k: Int): Long = {
+      val i = sOff + cell(k) * sStep
+      sArr match {
+        case a: Array[Long] => a(i)
+        case a: Array[Int] => a(i)
+        case a: Array[Short] => a(i)
+        case a: Array[Byte] => a(i)
+        case other => throw new IllegalStateException(s"Not an integral column: ${other.getClass}")
+      }
+    }
+
+    // Spark's partial SUM adds each cell, widened to double, to 0.0 in
+    // row order; so does this, slot by slot
+    private def sum(s: Array[Double], base: Int, step: Int): Unit = {
+      val n = nSel
+      var k = 0
+      if (step == 0) {
+        var acc = s(base)
+        sArr match {
+          case a: Array[Float] if sStep == 1 && selAll =>
+            val off = sOff
+            while (k < n) { acc += a(off + k); k += 1 }
+          case a: Array[Float] if sStep == 1 =>
+            val off = sOff
+            while (k < n) { acc += a(off + sel(k)); k += 1 }
+          case a: Array[Double] if sStep == 1 && selAll =>
+            val off = sOff
+            while (k < n) { acc += a(off + k); k += 1 }
+          case a: Array[Double] if sStep == 1 =>
+            val off = sOff
+            while (k < n) { acc += a(off + sel(k)); k += 1 }
+          case _ => while (k < n) { acc += dAt(k); k += 1 }
+        }
+        s(base) = acc
+      } else while (k < n) { s(base + cell(k) * step) += dAt(k); k += 1 }
+    }
+
+    // MIN/MAX in Spark's float ordering (NaN above all, −0.0 = 0.0); a
+    // tie keeps the value seen first, as Spark's partial aggregate does.
+    // Empty slots are never emitted, so the seeds only need to lose.
+    private def minD(s: Array[Double], base: Int, step: Int): Unit = {
+      var k = 0
+      while (k < nSel) {
+        val x = dAt(k); val j = base + cell(k) * step; val c = s(j)
+        if (x < c || c != c && x == x) s(j) = x
+        k += 1
+      }
+    }
+    private def maxD(s: Array[Double], base: Int, step: Int): Unit = {
+      var k = 0
+      while (k < nSel) {
+        val x = dAt(k); val j = base + cell(k) * step; val c = s(j)
+        if (x > c || x != x && c == c) s(j) = x
+        k += 1
+      }
+    }
+    private def minL(s: Array[Long], base: Int, step: Int): Unit = {
+      var k = 0
+      while (k < nSel) { val x = lAt(k); val j = base + cell(k) * step; if (x < s(j)) s(j) = x; k += 1 }
+    }
+    private def maxL(s: Array[Long], base: Int, step: Int): Unit = {
+      var k = 0
+      while (k < nSel) { val x = lAt(k); val j = base + cell(k) * step; if (x > s(j)) s(j) = x; k += 1 }
+    }
+
+    /** Non-empty slots, in slot (row-major group) order; an ungrouped
+      * fold always has its one row. */
+    private lazy val out: Array[Int] =
+      if (g.isEmpty) Array(0) else (0 until nSlots).filter(counts(_) > 0).toArray
+
+    override def rows: Int = out.length
+
+    override def emit(from: Int, n: Int): Unit = {
+      var r = 0
+      while (r < n) {
+        val s = out(from + r)
+        var j = 0
+        while (j < g.length) {
+          val i = boxLo(j) + (s / stride(j)) % boxLen(j)
+          putValue(vectors(j), r, ChunkCodec.elementAt(p.coords(g(j)).raw, i))
+          j += 1
+        }
+        var a = 0
+        while (a < aggs.length) {
+          val v = vectors(g.length + a)
+          aggs(a) match {
+            case FoldCount => v.putLong(r, counts(s))
+            case _ if counts(s) == 0 => v.putNull(r) // the ungrouped row of an empty slice
+            case FoldSum(_) => v.putDouble(r, dSlots(a)(s))
+            case _ if dSlots(a) != null =>
+              if (v.dataType == FloatType) v.putFloat(r, dSlots(a)(s).toFloat) else v.putDouble(r, dSlots(a)(s))
+            case _ => putValue(v, r, narrow(lSlots(a)(s), v.dataType))
+          }
+          a += 1
+        }
+        r += 1
+      }
+    }
+
+    private def narrow(x: Long, t: DataType): Any = t match {
+      case ByteType => x.toByte
+      case ShortType => x.toShort
+      case IntegerType => x.toInt
+      case _ => x
+    }
+  }
+
+  /** The `n` best cells by the key field, kept in a heap whose root is
+    * the worst kept cell. Keys are longs ordered like Spark orders the
+    * column (floats: NaN above all, −0.0 = 0.0), flipped for ASC so
+    * that a larger rank is always better; a tie keeps the cell seen
+    * first. */
+  private final class TopNAcc(spec: TopNFold) extends Acc {
+    private val cap = spec.n
+    private val ranks = new Array[Long](cap)
+    private val seqs = new Array[Long](cap)
+    private val vals = new Array[Array[Any]](cap)
+    private var size = 0
+
+    private def rank(key: Long): Long = if (spec.desc) key else ~key
+
+    /** Is entry a worse than entry b (lower rank, or equal and later)? */
+    private def worse(a: Int, b: Int): Boolean =
+      ranks(a) < ranks(b) || ranks(a) == ranks(b) && seqs(a) > seqs(b)
+
+    override def add(): Unit = {
+      bind(spec.field)
+      val n = nSel
+      var k = 0
+      while (k < n) {
+        val i = sOff + cell(k) * sStep
+        val r = rank(sArr match {
+          case a: Array[Float] => floatKey(a(i))
+          case a: Array[Double] => floatKey(a(i))
+          case a: Array[Long] => a(i)
+          case a: Array[Int] => a(i).toLong
+          case a: Array[Short] => a(i).toLong
+          case a: Array[Byte] => a(i).toLong
+          case other => throw new IllegalStateException(s"Unsupported top-N key ${other.getClass}")
+        })
+        if (size < cap || r > ranks(0)) keep(r, cell(k))
+        k += 1
+      }
+    }
+
+    private def floatKey(x: Double): Long = {
+      val b = java.lang.Double.doubleToLongBits(if (x == 0.0) 0.0 else x) // one NaN, one zero
+      b ^ ((b >> 63) & Long.MaxValue)
+    }
+
+    /** Insert run cell `i` (the root's replacement when full). */
+    private def keep(r: Long, i: Int): Unit = {
+      val v = new Array[Any](nOut)
+      var f = 0
+      while (f < nOut) { v(f) = valueAt(f, i); f += 1 }
+      val at = if (size < cap) { size += 1; size - 1 } else 0
+      ranks(at) = r; seqs(at) = row + i; vals(at) = v
+      if (at > 0) siftUp(at) else siftDown(0)
+    }
+
+    private def swap(a: Int, b: Int): Unit = {
+      val r = ranks(a); ranks(a) = ranks(b); ranks(b) = r
+      val s = seqs(a); seqs(a) = seqs(b); seqs(b) = s
+      val v = vals(a); vals(a) = vals(b); vals(b) = v
+    }
+    private def siftUp(i0: Int): Unit = {
+      var i = i0
+      while (i > 0 && worse(i, (i - 1) / 2)) { swap(i, (i - 1) / 2); i = (i - 1) / 2 }
+    }
+    private def siftDown(i0: Int): Unit = {
+      var i = i0
+      var done = false
+      while (!done) {
+        val l = 2 * i + 1
+        var w = i
+        if (l < size && worse(l, w)) w = l
+        if (l + 1 < size && worse(l + 1, w)) w = l + 1
+        if (w == i) done = true else { swap(i, w); i = w }
+      }
+    }
+
+    /** Best first. */
+    private lazy val order: Array[Int] =
+      (0 until size).sortWith((a, b) => worse(b, a)).toArray
+
+    override def rows: Int = size
+
+    override def emit(from: Int, n: Int): Unit = {
+      var r = 0
+      while (r < n) {
+        val v = vals(order(from + r))
+        var f = 0
+        while (f < nOut) { putValue(vectors(f), r, v(f)); f += 1 }
+        r += 1
+      }
+    }
+  }
+
+  /** Field `f`'s value at run position `i`. */
+  private def valueAt(f: Int, i: Int): Any = fields(f) match {
+    case CoordField(d) => ChunkCodec.elementAt(p.coords(d).raw, if (d == last) idx(d) + i else idx(d))
+    case VarField(_) => val st = varStates(varOf(f)); ChunkCodec.elementAt(st.chunk, st.offset + i)
+  }
+
+  private def putValue(v: WritableColumnVector, rowId: Int, x: Any): Unit = x match {
+    case null => v.putNull(rowId)
+    case a: Float => v.putFloat(rowId, a)
+    case a: Double => v.putDouble(rowId, a)
+    case a: Long => v.putLong(rowId, a)
+    case a: Int => v.putInt(rowId, a)
+    case a: Short => v.putShort(rowId, a)
+    case a: Byte => v.putByte(rowId, a)
+    case a: Boolean => v.putBoolean(rowId, a)
+    case a: String => v.putByteArray(rowId, a.getBytes(UTF_8))
+    case other => throw new IllegalStateException(s"Unsupported value ${other.getClass}")
   }
 
   override def get(): ColumnarBatch = batch
@@ -270,12 +757,30 @@ class ZarrColumnarReader(p: ZarrInputPartition, batchSize: Int = 4096)
     }
     val bytes = varStates.map(_.bytesRead).sum
     val chunks = varStates.map(_.chunksDecoded).sum
-    val base = Array(m("zarrBytesRead", bytes), m("zarrChunksDecoded", chunks))
+    val base = Array(m("zarrBytesRead", bytes), m("zarrChunksDecoded", chunks), m("zarrRowsOut", rowsOut))
     // union-member partitions double-report under the member-ordinal
     // metric so the union scan can attribute IO per store
     if (p.memberIdx < 0) base
     else base ++ Array(m(s"zarrBytesRead.m${p.memberIdx}", bytes),
       m(s"zarrChunksDecoded.m${p.memberIdx}", chunks))
+  }
+
+  /** Copy the selected cells `arr(off + sel(k))` into rows
+    * `[rowId, rowId + n)`. */
+  private def gatherRun(v: WritableColumnVector, rowId: Int, arr: AnyRef, off: Int, n: Int): Unit = {
+    var k = 0
+    arr match {
+      case a: Array[Float] => while (k < n) { v.putFloat(rowId + k, a(off + sel(k))); k += 1 }
+      case a: Array[Double] => while (k < n) { v.putDouble(rowId + k, a(off + sel(k))); k += 1 }
+      case a: Array[Long] => while (k < n) { v.putLong(rowId + k, a(off + sel(k))); k += 1 }
+      case a: Array[Int] => while (k < n) { v.putInt(rowId + k, a(off + sel(k))); k += 1 }
+      case a: Array[Short] => while (k < n) { v.putShort(rowId + k, a(off + sel(k))); k += 1 }
+      case a: Array[Byte] => while (k < n) { v.putByte(rowId + k, a(off + sel(k))); k += 1 }
+      case a: Array[Boolean] => while (k < n) { v.putBoolean(rowId + k, a(off + sel(k))); k += 1 }
+      case a: Array[String] =>
+        while (k < n) { v.putByteArray(rowId + k, a(off + sel(k)).getBytes(UTF_8)); k += 1 }
+      case other => throw new IllegalStateException(s"Unsupported columnar array ${other.getClass}")
+    }
   }
 
   /** Copy `arr[off, off + len)` into rows `[rowId, rowId + len)`.

@@ -14,7 +14,7 @@ import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.execution.streaming.Sink
 import org.apache.spark.sql.connector.read.colstats.ColumnStatistics
-import org.apache.spark.sql.sources.{EqualNullSafe, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual}
+import org.apache.spark.sql.sources.{EqualNullSafe, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, IsNotNull, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -26,10 +26,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *
   *   - `spark.read.format("zarr").load(path)` and
   *     `CREATE TABLE t USING zarr OPTIONS (path '…')`
-  *   - projection / limit / coordinate-equality-filter pushdown with
-  *     the reference's *inexact* posture: every filter is also
-  *     returned for post-scan evaluation
+  *   - projection / limit / filter pushdown: numeric comparisons the
+  *     scan evaluates exactly (see [[ZarrScanBuilder]]), every other
+  *     filter with the reference's *inexact* posture — also returned
+  *     for post-scan evaluation
   *     (/root/reference/src/datasource/zarr.rs:100-113)
+  *   - partial aggregates and ORDER BY … LIMIT folded per partition
   *   - table statistics (exact row count, per-coordinate min/max/
   *     distinct/null) feeding Spark CBO
   *   - COUNT(*)/COUNT(col)/COUNT(DISTINCT coord)/MIN(coord)/MAX(coord)
@@ -647,7 +649,7 @@ class ZarrUnionScan(val scans: Seq[ZarrScan]) extends Scan with Batch
     }
   }
   override def supportedCustomMetrics(): Array[CustomMetric] =
-    Array[CustomMetric](new ZarrBytesReadMetric, new ZarrChunksDecodedMetric) ++
+    Array[CustomMetric](new ZarrBytesReadMetric, new ZarrChunksDecodedMetric, new ZarrRowsOutMetric) ++
       scans.indices.flatMap(i => Seq(
         new ZarrMemberMetric("zarrBytesRead", i),
         new ZarrMemberMetric("zarrChunksDecoded", i)))
@@ -666,20 +668,25 @@ class ZarrScanBuilder(meta: ZarrStoreMeta, options: CaseInsensitiveStringMap)
   private var accepted: Array[Filter] = Array.empty
   private var coordPreds: Map[Int, Seq[GridMath.CoordPred]] = Map.empty
   private var varPreds: Map[String, Seq[GridMath.CoordPred]] = Map.empty
+  private var pushdown = ScanPushdown()
   private var limit: Option[Long] = None
   private var offset: Long = 0L
   private var aggPushed: Option[Aggregation] = None
   /** ORDER BY <data var> [DESC] LIMIT n accepted for stats pruning. */
   private var topNVar: Option[(String, Boolean, Int)] = None
 
+  private val fillAsNull = options.getBoolean("fillValueAsNull", false)
+  private val types = meta.schema.fields.map(f => f.name -> f.dataType).toMap
+
   override def pruneColumns(required: StructType): Unit = requiredSchema = required
 
   /** Accept equality, range (`>`, `>=`, `<`, `<=`, and thus BETWEEN —
     * Catalyst splits it into two conjuncts) and IN conjuncts on
-    * coordinate columns for index-range pruning; return ALL filters as
-    * post-scan (= the reference's Inexact contract), so Spark
-    * re-applies them for correctness. Extends the reference's
-    * equality-only pushdown to its roadmap range/IN pruning. */
+    * coordinate columns for index-range pruning, and data-variable
+    * comparisons for `.zstats` pruning. Return as post-scan only what
+    * the scan cannot evaluate exactly ([[classify]]); outside that
+    * exact set the reference's Inexact contract still holds and Spark
+    * re-applies the filter. */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     import GridMath.CoordPred
     val coordIdx = meta.coordNames.zipWithIndex.toMap
@@ -707,12 +714,18 @@ class ZarrScanBuilder(meta: ZarrStoreMeta, options: CaseInsensitiveStringMap)
     // Data-variable predicates prune whole partitions via the
     // `.zstats` per-chunk min/max sidecars (reference roadmap
     // "data-variable filter pushdown" / "statistics-based chunk
-    // pruning") — only for variables that carry stats, and always
-    // Inexact (Spark re-filters rows post-scan).
+    // pruning") — only for variables that carry stats; pruning only
+    // skips partitions, the rows are filtered per cell by the reader
+    // (exact set) or by Spark (post-scan).
     val statVars = meta.dataVars.filter(_.chunkStats.nonEmpty).map(_.name).toSet
     val vps = mutable.Map.empty[String, List[CoordPred]]
-    def addVar(f: Filter, attr: String, p: CoordPred): Unit =
-      if (statVars(attr)) { acc += f; vps(attr) = p :: vps.getOrElse(attr, Nil) }
+    def addVar(f: Filter, attr: String, p: CoordPred): Unit = p match {
+      // a NaN threshold is not a [min,max] bound (`v <= NaN` holds everywhere)
+      case CoordPred.Eq(t) if t.isNaN =>
+      case CoordPred.Gt(t, _) if t.isNaN =>
+      case CoordPred.Lt(t, _) if t.isNaN =>
+      case _ => if (statVars(attr)) { acc += f; vps(attr) = p :: vps.getOrElse(attr, Nil) }
+    }
     filters.foreach {
       case f @ EqualTo(attr, v: String) => addStr(f, attr, v)
       case f @ EqualNullSafe(attr, v: String) => addStr(f, attr, v)
@@ -744,8 +757,69 @@ class ZarrScanBuilder(meta: ZarrStoreMeta, options: CaseInsensitiveStringMap)
     accepted = acc.toArray
     coordPreds = preds.toMap
     varPreds = vps.toMap.map { case (k, v) => k -> v.toSeq }
-    filters // everything evaluated post-scan too
+    pushdown = classify(filters)
+    pushdown.postScan.toArray
   }
+
+  /** The exact set: `=`, `<`, `<=`, `>`, `>=` against a numeric literal
+    * and IsNotNull, on numeric data variables and coordinates, compared
+    * in the column's own type ([[CellRange.of]]). A coordinate's
+    * conjunction is exact only when its matches form one contiguous
+    * index interval, which becomes the scan's range on that dim; a
+    * data variable's is evaluated per cell by the reader. Everything
+    * under `fillValueAsNull` stays post-scan. */
+  private def classify(filters: Array[Filter]): ScanPushdown = {
+    def numericCol(a: String): Boolean = !fillAsNull && types.get(a).exists(CellRange.numeric)
+    val byCol = mutable.LinkedHashMap.empty[String, (CellRange, List[Filter])]
+    val exact = mutable.ArrayBuffer.empty[Filter]
+    filters.foreach {
+      case f @ IsNotNull(a) if numericCol(a) => exact += f // no exact shape has null cells
+      case f => attrOf(f).filter(numericCol).foreach { a =>
+        CellRange.of(f, types(a)).foreach { r =>
+          val (r0, fs) = byCol.getOrElse(a, (CellRange.all, Nil))
+          byCol(a) = (r0.and(r), f :: fs)
+        }
+      }
+    }
+    val intervals = mutable.Map.empty[Int, (Int, Int)]
+    val preds = byCol.toSeq.filter { case (a, (r, fs)) =>
+      val d = meta.coordNames.indexOf(a)
+      val ok = d < 0 || matchInterval(meta.coords(d), r).map(iv => intervals(d) = iv).isDefined
+      if (ok) exact ++= fs
+      ok
+    }.map { case (a, (r, _)) => a -> r }
+    ScanPushdown(exact.toSeq, filters.toSeq.filterNot(exact.contains), preds, intervals.toMap)
+  }
+
+  private def attrOf(f: Filter): Option[String] = f match {
+    case EqualTo(a, _) => Some(a)
+    case GreaterThan(a, _) => Some(a)
+    case GreaterThanOrEqual(a, _) => Some(a)
+    case LessThan(a, _) => Some(a)
+    case LessThanOrEqual(a, _) => Some(a)
+    case _ => None
+  }
+
+  /** The index interval of `c`'s values in `r`, if they form one
+    * (`(0, 0)` when none do). */
+  private def matchInterval(c: CoordData, r: CellRange): Option[(Int, Int)] = {
+    var first = -1
+    var lastHit = -1
+    var i = 0
+    while (i < c.length) {
+      if (r.passes(c.raw, i)) {
+        if (first < 0) first = i else if (lastHit != i - 1) return None
+        lastHit = i
+      }
+      i += 1
+    }
+    Some(if (first < 0) (0, 0) else (first, lastHit + 1))
+  }
+
+  /** A pushed data-variable predicate: the reader compacts cells away,
+    * so the row space no longer maps onto output rows. */
+  private def cellFiltered: Boolean =
+    pushdown.preds.exists { case (n, _) => !meta.coordNames.contains(n) }
 
   private def numeric(v: Any): Option[Double] = v match {
     case n: java.lang.Number => Some(n.doubleValue())
@@ -758,7 +832,7 @@ class ZarrScanBuilder(meta: ZarrStoreMeta, options: CaseInsensitiveStringMap)
     case _ => None
   }
 
-  override def pushedFilters(): Array[Filter] = accepted
+  override def pushedFilters(): Array[Filter] = (accepted ++ pushdown.exact).distinct
 
   override def pushLimit(n: Int): Boolean = { limit = Some(n.toLong); true }
   override def isPartiallyPushed: Boolean = true
@@ -767,53 +841,59 @@ class ZarrScanBuilder(meta: ZarrStoreMeta, options: CaseInsensitiveStringMap)
     * flattened grid enumerates rows in deterministic row-major order,
     * so skipping the first n row ids is precisely SQL's offset over
     * this scan. Spark pushes LIMIT as limit+offset first, so the
-    * planned row window is [offset, pushedLimit). */
-  override def pushOffset(n: Int): Boolean = { offset = n.toLong; true }
+    * planned row window is [offset, pushedLimit). Refused under a
+    * pushed data-variable predicate or a fold: row ids then no longer
+    * count output rows. */
+  override def pushOffset(n: Int): Boolean =
+    if (cellFiltered || pushdown.fold.nonEmpty) false else { offset = n.toLong; true }
 
-  /** ORDER BY a coordinate prefix + LIMIT: the row-major row space IS
-    * sorted by the coordinate columns in dimension order, so an
-    * all-ascending prefix's top-n is the FIRST n grid rows (push as
+  /** Largest LIMIT a partition keeps in its top-N fold. */
+  private val maxTopN = 65536
+
+  /** ORDER BY + LIMIT. Partial semantics: Spark keeps its Sort+Limit
+    * above; the scan only shrinks what reaches it.
+    *
+    * A coordinate prefix on an unfiltered scan: the row-major row
+    * space IS sorted by the coordinate columns in dimension order, so
+    * an all-ascending prefix's top-n is the FIRST n grid rows (push as
     * limit) and an all-descending prefix's top-n is the LAST n (push
     * as offset) — "latest k time steps" reads k slabs, not the
-    * archive. Spark never pushes TopN past a post-scan filter and
-    * every filter here stays post-scan, so the row space is the whole
-    * grid. Partial semantics: Spark keeps the Sort+Limit above, we
-    * only shrink what the scan reads. */
+    * archive.
+    *
+    * Otherwise ORDER BY one numeric variable or coordinate: each
+    * partition folds its passing cells into its n best rows. On an
+    * unfiltered scan a variable with `.zstats` also prunes partitions
+    * whose chunks provably cannot reach the global top-n by their
+    * [min,max]: chunk C is droppable when the cells of chunks wholly ≥
+    * max(C) (DESC; symmetric for ASC) already number ≥ n — the
+    * statistics extension of the reference's "Top-K optimization"
+    * roadmap row. */
   override def pushTopN(orders: Array[SortOrderV2], n: Int): Boolean = {
-    if (coordPreds.nonEmpty || varPreds.nonEmpty || accepted.nonEmpty ||
-      limit.nonEmpty || offset != 0L || orders.isEmpty ||
-      orders.length > meta.coords.length) return false
+    if (limit.nonEmpty || offset != 0L || orders.isEmpty) return false
     def colOf(o: SortOrderV2): Option[String] = o.expression() match {
       case r: NamedReference if r.fieldNames().length == 1 => Some(r.fieldNames().head)
       case _ => None
     }
-    // ORDER BY <data variable> LIMIT n — prune partitions whose
-    // chunks provably cannot reach the global top-n by their `.zstats`
-    // [min,max]: chunk C is droppable when the cells of chunks wholly
-    // ≥ max(C) (DESC; symmetric for ASC) already number ≥ n. The
-    // statistics extension of the reference's "Top-K optimization"
-    // roadmap row — exactness is Spark's (partial semantics, the
-    // Sort+Limit stays above; pruning only shrinks what is read).
-    if (orders.length == 1) {
-      colOf(orders.head).foreach { name =>
-        val ok = meta.dataVars.exists(v => v.name == name &&
-          v.chunkStats.nonEmpty && v.dtype.kind != 'S' && v.dtype.kind != 'M') &&
-          // fill→null breaks the numeric threshold: under NULLS FIRST
-          // the true top-n can be the all-fill chunks the pruning
-          // would drop — take the real scan
-          !options.getBoolean("fillValueAsNull", false)
-        if (ok) {
-          topNVar = Some((name,
-            orders.head.direction() ==
-              org.apache.spark.sql.connector.expressions.SortDirection.DESCENDING, n))
-          return true
-        }
-      }
+    val unfiltered = coordPreds.isEmpty && varPreds.isEmpty && accepted.isEmpty &&
+      pushdown.exact.isEmpty
+    if (unfiltered && orders.length <= meta.coords.length && prefixTopN(orders, n, colOf)) return true
+    if (orders.length != 1 || fillAsNull || n <= 0 || n > maxTopN) return false
+    colOf(orders.head).filter(c => types.get(c).exists(CellRange.numeric)).exists { name =>
+      val desc = orders.head.direction() ==
+        org.apache.spark.sql.connector.expressions.SortDirection.DESCENDING
+      pushdown = pushdown.copy(fold = Some(PushedTopN(name, desc, n)))
+      if (unfiltered && meta.dataVars.exists(v => v.name == name && v.chunkStats.nonEmpty))
+        topNVar = Some((name, desc, n))
+      true
     }
-    // index order = value order. Every key except the LAST must be
-    // STRICTLY increasing: a duplicate value in a non-last key makes
-    // the row-major tuple sequence unsorted by these columns, and the
-    // clipped window could miss true top-n rows.
+  }
+
+  /** index order = value order. Every key except the LAST must be
+    * STRICTLY increasing: a duplicate value in a non-last key makes
+    * the row-major tuple sequence unsorted by these columns, and the
+    * clipped window could miss true top-n rows. */
+  private def prefixTopN(orders: Array[SortOrderV2], n: Int,
+      colOf: SortOrderV2 => Option[String]): Boolean = {
     val prefixOk = orders.zip(meta.coords).zipWithIndex.forall { case ((o, c), i) =>
       colOf(o).contains(c.meta.name) && c.meta.dtype.kind != 'S' && {
         val d = c.doubles
@@ -822,10 +902,9 @@ class ZarrScanBuilder(meta: ZarrStoreMeta, options: CaseInsensitiveStringMap)
           if (strict) d(j - 1) < d(j) else d(j - 1) <= d(j))
       }
     }
-    if (!prefixOk) return false
     val dirs = orders.map(_.direction()).distinct
-    if (dirs.length != 1) return false
-    if (dirs.head == org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING) {
+    if (!prefixOk || dirs.length != 1) false
+    else if (dirs.head == org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING) {
       limit = Some(n.toLong); true
     } else {
       offset = math.max(0L, meta.totalRows - n); true
@@ -847,7 +926,7 @@ class ZarrScanBuilder(meta: ZarrStoreMeta, options: CaseInsensitiveStringMap)
     val groupCols = groups.flatMap(colName(_))
     groups.length == groupCols.length &&
       groupCols.forall(n => meta.coordNames.contains(n) && uniqueCoord(n)) &&
-      coordPreds.isEmpty &&
+      coordPreds.isEmpty && pushdown.exact.isEmpty &&
       accepted.isEmpty && limit.isEmpty && offset == 0L &&
       // an empty grid (zero-length coordinate — the streaming sink's
       // pre-first-append state) has no metadata bounds to answer
@@ -855,14 +934,44 @@ class ZarrScanBuilder(meta: ZarrStoreMeta, options: CaseInsensitiveStringMap)
       meta.totalRows > 0 &&
       // fill→null can null out data-var cells, so metadata row counts
       // no longer answer COUNT(col) — take the real scan instead
-      !options.getBoolean("fillValueAsNull", false) &&
+      !fillAsNull &&
       aggregation.aggregateExpressions().forall(answerable(_, groupCols.toSet))
   }
 
-  override def pushAggregation(aggregation: Aggregation): Boolean = {
-    if (!supportCompletePushDown(aggregation)) return false
-    aggPushed = Some(aggregation)
-    true
+  /** Complete when metadata answers it; otherwise PARTIAL when every
+    * partition can fold it ([[partialAgg]]): Spark then merges the
+    * partitions' partial rows in its final aggregate. */
+  override def pushAggregation(aggregation: Aggregation): Boolean =
+    if (supportCompletePushDown(aggregation)) { aggPushed = Some(aggregation); true }
+    else partialAgg(aggregation).exists { f => pushdown = pushdown.copy(fold = Some(f)); true }
+
+  /** Most groups a partial aggregate may span (per-partition dense
+    * slots are bounded by it). */
+  private val maxGroups = 1L << 22
+
+  /** COUNT, MIN/MAX of numeric columns and SUM of float columns (AVG
+    * arrives split into SUM and COUNT), grouped by numeric coordinates,
+    * without DISTINCT. */
+  private def partialAgg(aggregation: Aggregation): Option[PushedAgg] = {
+    if (fillAsNull || limit.nonEmpty || offset != 0L) return None
+    def numericCol(n: String) = types.get(n).exists(CellRange.numeric)
+    val groups = aggregation.groupByExpressions().toSeq.map(colName(_))
+    val names = groups.flatten
+    val groupsOk = groups.forall(_.isDefined) && names.distinct.length == names.length &&
+      names.forall(n => meta.coordNames.contains(n) && numericCol(n)) &&
+      names.map(n => meta.coords(meta.coordNames.indexOf(n)).length.toLong)
+        .foldLeft(1L)((a, b) => math.min(a * b, maxGroups + 1)) <= maxGroups
+    val calls = aggregation.aggregateExpressions().toSeq.map {
+      case _: CountStar => Some(AggCall("count", None))
+      case c: Count if !c.isDistinct => colName(c.column).filter(numericCol).map(n => AggCall("count", Some(n)))
+      case m: Min => colName(m.column).filter(numericCol).map(n => AggCall("min", Some(n)))
+      case m: Max => colName(m.column).filter(numericCol).map(n => AggCall("max", Some(n)))
+      case s: Sum if !s.isDistinct => colName(s.column)
+        .filter(n => types.get(n).exists(t => t == FloatType || t == DoubleType))
+        .map(n => AggCall("sum", Some(n)))
+      case _ => None
+    }
+    if (groupsOk && calls.forall(_.isDefined)) Some(PushedAgg(names, calls.flatten)) else None
   }
 
   private def colName(e: org.apache.spark.sql.connector.expressions.Expression): Option[String] =
@@ -931,9 +1040,9 @@ class ZarrScanBuilder(meta: ZarrStoreMeta, options: CaseInsensitiveStringMap)
     case Some(agg) if agg.groupByExpressions().nonEmpty => new ZarrGroupAggScan(meta, agg)
     case Some(agg) => new ZarrAggScan(meta, agg)
     case None =>
-      new ZarrScan(meta, requiredSchema, coordPreds, accepted, limit,
+      new ZarrScan(meta, requiredSchema, coordPreds, pushdown, limit,
         options.getLong("minRowsPerPartition", 65536),
-        options.getBoolean("fillValueAsNull", false),
+        fillAsNull,
         options.getInt("chunkCacheEntries", 0),
         varPreds, offset,
         maxRowsPerPartition = options.getLong("maxRowsPerPartition", 262144L),
@@ -957,7 +1066,7 @@ class ZarrScan(
     meta: ZarrStoreMeta,
     requiredSchema: StructType,
     coordPreds: Map[Int, Seq[GridMath.CoordPred]],
-    pushedFilters: Array[Filter],
+    pushdown: ScanPushdown,
     limit: Option[Long],
     minRowsPerPartition: Long,
     fillAsNull: Boolean = false,
@@ -984,8 +1093,20 @@ class ZarrScan(
   /** Store path, for per-member attribution in union diagnostics. */
   private[graft] def storePath: String = meta.path
 
+  /** Pruning ranges, narrowed on each exactly-filtered dim to its
+    * exact match interval. */
   private val staticRanges: Option[GridMath.Ranges] =
-    GridMath.coordRangesPred(meta.coords.map(_.doubles), coordPreds)
+    GridMath.coordRangesPred(meta.coords.map(_.doubles), coordPreds).flatMap { r =>
+      val n = pushdown.intervals.foldLeft(r) { case (acc, (d, (lo, hi))) =>
+        acc.updated(d, (math.max(acc(d)._1, lo), math.min(acc(d)._2, hi)))
+      }
+      if (n.exists { case (lo, hi) => lo >= hi }) None else Some(n)
+    }
+
+  private val fold = pushdown.fold
+  private val aggFold = fold.collect { case a: PushedAgg => a }
+  /** Data-variable predicates compact rows away in the reader. */
+  private val varCellPreds = pushdown.preds.filterNot { case (n, _) => meta.coordNames.contains(n) }
 
   /** Narrowed further by [[filter]] at runtime (DSv2 dynamic pruning:
     * Spark pushes the build side's join-key values before re-planning
@@ -1007,7 +1128,7 @@ class ZarrScan(
     // dynamic pruning is disabled for that — pathological — shape.
     // Key-grouped mode pins the partition list at planning time
     // (reported numPartitions must match), so it opts out too.
-    if (offset > 0L || keyGrouped) Array.empty
+    if (offset > 0L || keyGrouped || fold.nonEmpty) Array.empty
     else meta.coords.filter(c => c.meta.dtype.kind != 'S')
       .map(_.meta.name).filter(requiredSchema.fieldNames.contains)
       .map(Expressions.column).toArray
@@ -1045,7 +1166,18 @@ class ZarrScan(
     invalidatePlannedPartitions() // ranges changed — re-plan
   }
 
-  override def readSchema(): StructType = requiredSchema
+  /** A partial aggregate emits its group coordinates, then one column
+    * per aggregate in the types Spark's final aggregate merges. */
+  override def readSchema(): StructType = aggFold match {
+    case None => requiredSchema
+    case Some(a) => StructType(
+      a.groupBy.map(n => StructField(n, meta.schema(n).dataType, nullable = false)) ++
+        a.aggs.zipWithIndex.map {
+          case (AggCall("count", _), i) => StructField(s"count_$i", LongType, nullable = false)
+          case (AggCall("sum", _), i) => StructField(s"sum_$i", DoubleType, nullable = true)
+          case (AggCall(fn, c), i) => StructField(s"${fn}_$i", meta.schema(c.get).dataType, nullable = true)
+        })
+  }
 
   /** Key-grouped ("storage-partitioned") mode is active when requested
     * AND the shape allows it: one partition per outer index, each
@@ -1056,7 +1188,7 @@ class ZarrScan(
     * increasing (distinct key per partition), numeric, and no
     * limit/offset (their row clipping crosses partition keys). */
   private val keyGrouped: Boolean =
-    keyByOuter && limit.isEmpty && offset == 0L && meta.coords.nonEmpty &&
+    keyByOuter && limit.isEmpty && offset == 0L && fold.isEmpty && meta.coords.nonEmpty &&
       requiredSchema.fieldNames.contains(meta.coordNames.head) &&
       meta.coords.head.meta.dtype.kind != 'S' && {
         val d = meta.coords.head.doubles
@@ -1082,6 +1214,7 @@ class ZarrScan(
     * merely non-decreasing, so compute the strict prefix and extend it
     * by one non-strict coordinate when possible. */
   override def outputOrdering(): Array[org.apache.spark.sql.connector.expressions.SortOrder] = {
+    if (fold.nonEmpty) return Array.empty
     val names = requiredSchema.fieldNames.toSet
     def eligible(c: CoordData, strict: Boolean): Boolean =
       names.contains(c.meta.name) && c.meta.dtype.kind != 'S' && {
@@ -1103,26 +1236,37 @@ class ZarrScan(
 
   /** `spark.readStream.format("zarr")`: the store's outer dimension is
     * the stream — each micro-batch covers the slabs the append sink
-    * added since the last trigger. Column pruning and coordinate
-    * predicates push through (predicates re-evaluated per batch
-    * against the grown coordinate arrays); limit/offset/agg pushdown
-    * don't arise on streaming plans. Option `startingOffset=latest`
-    * skips the pre-existing grid. */
+    * added since the last trigger. Spark 4.1 pushes nothing into a
+    * micro-batch scan (its Filter stays above it); should filters be
+    * pushed, the stream re-evaluates coordinate predicates per batch
+    * against the grown coordinate arrays and applies the exact ones per
+    * cell. Limit/offset/agg pushdown don't arise on streaming plans.
+    * Option `startingOffset=latest` skips the pre-existing grid. */
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new ZarrMicroBatchStream(meta.path, requiredSchema, coordPreds,
+    new ZarrMicroBatchStream(meta.path, requiredSchema, coordPreds, pushdown.preds,
       minRowsPerPartition, fillAsNull, chunkCacheEntries, prefetch,
       startFromLatest = startingOffsetLatest,
       maxRowsPerPartition = maxRowsPerPartition,
       maxSlabsPerTrigger = maxSlabsPerTrigger)
 
+  /** `rows=F of T`: the grid rows the planned partitions cover (after
+    * range, `.zstats`, limit/offset and runtime pruning) of the whole
+    * grid's — the reference's per-scan `reduction_pct`. */
   override def description(): String = {
     val r = ranges.map(_.map { case (s, e) => s"[$s,$e)" }.mkString(",")).getOrElse("EMPTY")
-    val topN = topNVar.map { case (v, desc, n) =>
-      s" topN=$v ${if (desc) "DESC" else "ASC"} $n" }.getOrElse("")
-    s"ZarrScan path=${meta.path} rows=$filteredRows ranges=$r " +
-      s"limit=${limit.getOrElse(-1L)} offset=$offset$topN " +
-      s"pushedFilters=[${pushedFilters.mkString(", ")}]"
+    val covered = planInputPartitions().map {
+      case p: ZarrInputPartition => p.rowEnd - p.rowStart
+      case k: ZarrKeyedInputPartition => k.p.rowEnd - k.p.rowStart
+      case _ => 0L
+    }.sum
+    val total = meta.totalRows
+    val pruned = if (total == 0) 0.0 else 100.0 * (total - covered) / total
+    val folded = fold.map(f => s" $f").getOrElse("")
+    val statsTopN = topNVar.map(_ => " (.zstats pruned)").getOrElse("")
+    f"ZarrScan path=${meta.path} rows=$covered of $total ($pruned%.1f%% pruned) ranges=$r " +
+      s"limit=${limit.getOrElse(-1L)} offset=$offset$folded$statsTopN " +
+      s"exactFilters=[${pushdown.exact.mkString(", ")}] postScan=[${pushdown.postScan.mkString(", ")}]"
   }
 
   /** Planned partitions are cached: Spark asks for the partition list
@@ -1139,20 +1283,62 @@ class ZarrScan(
     cachedPartitions
   }
 
-  private def computePartitions(): Array[InputPartition] = ranges match {
-    case None => Array.empty // provably empty: filter value absent from coordinate
-    case Some(r) =>
+  /** Columns each partition reads: the emitted ones first (none for a
+    * partial aggregate, which emits its own), then those only the
+    * predicates and the fold need. */
+  private lazy val readNames: Seq[String] = {
+    val out = if (aggFold.isDefined) Nil else requiredSchema.fieldNames.toSeq
+    val foldCols = fold.toSeq.flatMap {
+      case a: PushedAgg => a.aggs.flatMap(c => if (c.fn == "count") None else c.col)
+      case t: PushedTopN => Seq(t.col)
+    }
+    out ++ (foldCols ++ varCellPreds.map(_._1)).distinct.filterNot(out.contains)
+  }
+
+  private def projectionOf(names: Seq[String]): Seq[ProjField] = names.map { n =>
+    val ci = meta.coordNames.indexOf(n)
+    if (ci >= 0) CoordField(ci)
+    else VarField(meta.dataVars.find(_.name == n).getOrElse(
+      throw new IllegalArgumentException(s"Unknown column $n")))
+  }
+
+  /** The partition template carrying the pushdown: the slice bounds are
+    * filled in per partition. */
+  private def partition(r: GridMath.Ranges): ZarrInputPartition = {
+    val names = readNames
+    val at = names.zipWithIndex.toMap
+    ZarrInputPartition(meta.path, 0L, 0L, r, meta.coords, projectionOf(names),
+      fillAsNull, chunkCacheEntries, prefetch,
+      preds = varCellPreds.map { case (n, cr) => CellPred(at(n), cr) },
+      fold = fold.map {
+        case a: PushedAgg => AggFold(a.groupBy.map(meta.coordNames.indexOf), a.aggs.map {
+          case AggCall("count", _) => FoldCount
+          case AggCall("sum", c) => FoldSum(at(c.get))
+          case AggCall("min", c) => FoldMin(at(c.get))
+          case AggCall(_, c) => FoldMax(at(c.get))
+        })
+        case t: PushedTopN => TopNFold(at(t.col), t.desc, t.n)
+      },
+      outCols = if (aggFold.isDefined) 0 else requiredSchema.length,
+      rowLimit = if (varCellPreds.nonEmpty) limit.getOrElse(-1L) else -1L)
+  }
+
+  private def computePartitions(): Array[InputPartition] = {
+    val parts = ranges.map(slices).getOrElse(Array.empty[InputPartition])
+    // an ungrouped aggregate has exactly one row even over no rows:
+    // Spark merges partial COUNTs with SUM, which no rows would make NULL
+    if (parts.isEmpty && aggFold.exists(_.groupBy.isEmpty))
+      Array(partition(meta.coords.map(c => (0, c.length)).toArray))
+    else parts
+  }
+
+  private def slices(r: GridMath.Ranges): Array[InputPartition] = {
       // split where the DATA chunks split: the smallest chunk extent
       // along dim 0 across data variables (coordinate arrays are
       // irrelevant here — they're usually single-chunk)
       val outerChunk = meta.dataVars.map(_.chunks.head)
         .reduceOption(math.min).filter(_ > 0).getOrElse(1)
-      val projection: Seq[ProjField] = requiredSchema.fields.toSeq.map { f =>
-        val ci = meta.coordNames.indexOf(f.name)
-        if (ci >= 0) CoordField(ci)
-        else VarField(meta.dataVars.find(_.name == f.name).getOrElse(
-          throw new IllegalArgumentException(s"Unknown column ${f.name}")))
-      }
+      val template = partition(r)
       if (keyGrouped) {
         // one partition per outer index, tagged with its coordinate
         // value (HasPartitionKey) — stats pruning must NOT drop
@@ -1165,21 +1351,23 @@ class ZarrScan(
             case v => v
           }
           ZarrKeyedInputPartition(
-            ZarrInputPartition(meta.path, 0L, innerRows, r.updated(0, (o, o + 1)),
-              meta.coords, projection, fillAsNull, chunkCacheEntries, prefetch),
+            template.copy(rowEnd = innerRows, ranges = r.updated(0, (o, o + 1))),
             new GenericInternalRow(Array[Any](key))): InputPartition
         }.toArray
       } else {
+      // a LIMIT under a data-variable predicate counts emitted rows in
+      // each partition, so it cannot clip the row space
+      val rowSpaceLimit = if (varCellPreds.isEmpty) limit else None
       // partition-count ceiling: when the selected row space divided
       // by the row cap would exceed maxPartitions, raise BOTH the
       // merge floor and the split cap to the per-partition target —
       // a 10^12-row grid plans ~maxPartitions chunk-aligned slices,
       // not millions
-      val selected = limit
+      val selected = rowSpaceLimit
         .map(math.min(_, GridMath.totalRows(r))).getOrElse(GridMath.totalRows(r))
       val target =
         if (maxPartitions > 0) (selected + maxPartitions - 1) / maxPartitions else 0L
-      GridMath.partitionSlices(r, outerChunk, limit,
+      GridMath.partitionSlices(r, outerChunk, rowSpaceLimit,
         math.max(minRowsPerPartition, target),
         // per-dim minimum data-chunk extents: sub-slab splits align to
         // the inner chunk grid so partitions own whole chunks
@@ -1198,8 +1386,7 @@ class ZarrScan(
         }
         .filter(s => sliceMayMatch(s._1, s._2, r))
         .filter(s => sliceMayReachTopN(s._1, s._2, r))
-        .map(s => ZarrInputPartition(meta.path, s._1, s._2, r, meta.coords, projection,
-          fillAsNull, chunkCacheEntries, prefetch): InputPartition)
+        .map(s => template.copy(rowStart = s._1, rowEnd = s._2): InputPartition)
         .toArray
       }
   }
@@ -1273,12 +1460,13 @@ class ZarrScan(
     * a stats entry are assumed possible (never prune blind). */
   private def sliceMayMatch(rowStart: Long, rowEnd: Long, r: GridMath.Ranges): Boolean = {
     if (varPreds.isEmpty) return true
-    def possible(p: GridMath.CoordPred, mn: Double, mx: Double): Boolean = p match {
+    // NaN stats (a chunk holding NaN cells) prove nothing
+    def possible(p: GridMath.CoordPred, mn: Double, mx: Double): Boolean = mn.isNaN || mx.isNaN || (p match {
       case GridMath.CoordPred.Eq(t) => t >= mn - 1e-9 && t <= mx + 1e-9
       case GridMath.CoordPred.Gt(t, orEq) => if (orEq) mx >= t else mx > t
       case GridMath.CoordPred.Lt(t, orEq) => if (orEq) mn <= t else mn < t
       case GridMath.CoordPred.InSet(vs) => vs.exists(t => t >= mn - 1e-9 && t <= mx + 1e-9)
-    }
+    })
     val idx = new Array[Int](r.length)
     GridMath.rowToIndices(rowStart, r, idx); val o0 = idx(0)
     GridMath.rowToIndices(rowEnd - 1, r, idx); val o1 = idx(0)
@@ -1313,9 +1501,17 @@ class ZarrScan(
     * count; per-coordinate min/max/distinct/nullCount. */
   override def estimateStatistics(): Statistics = {
     val rowWidth = math.max(8,
-      requiredSchema.fields.map(_.dataType.defaultSize).sum)
-    val rows = math.max(0L,
+      readSchema().fields.map(_.dataType.defaultSize).sum)
+    val scanned = math.max(0L,
       limit.map(math.min(_, filteredRows)).getOrElse(filteredRows) - offset)
+    // a fold emits at most its groups (or n rows) per partition
+    val rows = fold match {
+      case Some(a: PushedAgg) =>
+        val groups = a.groupBy.map(n => meta.coords(meta.coordNames.indexOf(n)).length.toLong).product
+        math.max(1L, math.min(scanned, groups * plannedPartitionCount))
+      case Some(t: PushedTopN) => math.min(scanned, t.n.toLong * plannedPartitionCount)
+      case None => scanned
+    }
     val colStats = new java.util.HashMap[NamedReference, ColumnStatistics]()
     meta.coords.zipWithIndex.foreach { case (c, _) =>
       if (requiredSchema.fieldNames.contains(c.meta.name) && c.meta.dtype.kind != 'S') {
@@ -1330,7 +1526,7 @@ class ZarrScan(
   }
 
   override def supportedCustomMetrics(): Array[CustomMetric] =
-    Array(new ZarrBytesReadMetric, new ZarrChunksDecodedMetric)
+    Array(new ZarrBytesReadMetric, new ZarrChunksDecodedMetric, new ZarrRowsOutMetric)
 }
 
 private class ZarrColumnStats(c: CoordData) extends ColumnStatistics {
@@ -1352,6 +1548,10 @@ class ZarrBytesReadMetric extends CustomSumMetric {
 class ZarrChunksDecodedMetric extends CustomSumMetric {
   override def name(): String = "zarrChunksDecoded"
   override def description(): String = "zarr chunks decoded"
+}
+class ZarrRowsOutMetric extends CustomSumMetric {
+  override def name(): String = "zarrRowsOut"
+  override def description(): String = "zarr rows handed to Spark"
 }
 /** Per-member IO metric of a union scan (`<base>.m<i>`): sums only
   * the tasks of member `i`'s partitions, so runtime IO is
@@ -1720,7 +1920,17 @@ final case class ZarrInputPartition(
       * multi-store union scan (−1 otherwise): readers then ALSO report
       * their IO under `zarrBytesRead.m<i>`/`zarrChunksDecoded.m<i>`,
       * so the REPL's \analyze can attribute bytes per member store. */
-    memberIdx: Int = -1) extends InputPartition
+    memberIdx: Int = -1,
+    /** Pushed predicates the reader evaluates per cell. */
+    preds: Seq[CellPred] = Nil,
+    /** What the partition folds its cells into, instead of emitting them. */
+    fold: Option[ScanFold] = None,
+    /** Leading projection fields emitted (−1 = all); the rest feed
+      * predicates and folds only. */
+    outCols: Int = -1,
+    /** Rows the partition may emit (−1 = no limit): a LIMIT under a
+      * pushed data-variable predicate counts emitted rows. */
+    rowLimit: Long = -1L) extends InputPartition
 
 /** One outer-index slab tagged with its coordinate value — the unit of
   * key-grouped (storage-partitioned) execution. */

@@ -8,14 +8,17 @@ import org.apache.spark.sql.types._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Randomized pruning-soundness property for the Zarr scan: for ANY
+/** Randomized soundness property for the Zarr scan: for ANY
   * predicate, the planned (pruned) scan plus Spark's residual filter
   * must return exactly the rows of the unpruned table filtered
-  * post-hoc. The connector's Inexact pushdown posture re-applies every
-  * filter after the scan, so the only way a result can be wrong is
-  * OVER-pruning — a chunk or partition wrongly skipped at plan time.
-  * That bug class lives on edge values the fixed filter tests
-  * hand-pick around: float coordinates carrying representation error
+  * post-hoc. Comparisons in the exact set are evaluated by the scan
+  * itself (a coordinate's contiguous match interval, a data variable's
+  * per-cell check) and Spark drops them; only the rest keep the
+  * Inexact contract and are re-applied after the scan. So a result can
+  * be wrong by OVER-pruning — a chunk or partition wrongly skipped at
+  * plan time — or by a wrong exact evaluation. Both bug classes live
+  * on edge values the fixed filter tests hand-pick around: float
+  * coordinates carrying representation error
   * (i * 0.3 steps), epsilon-perturbed constants, midpoints,
   * out-of-domain constants (empty-range short-circuit), negated atoms,
   * and compound AND/OR trees mixing pushable coordinate atoms with
@@ -113,6 +116,39 @@ class ZarrFilterPropSpec extends AnyFunSuite {
     // real row returns, or the property is vacuous.
     assert(empty > 5, s"only $empty empty-result predicates — domain too narrow")
     assert(nonEmpty > 20, s"only $nonEmpty non-empty predicates — domain too wide")
+  }
+
+  /** Doubles rounded to 9 significant digits: partial sums merge in a
+    * different order on each side. */
+  private def approx(r: org.apache.spark.sql.Row): String = r.toSeq.map {
+    case d: Double => f"$d%.9g"
+    case o => String.valueOf(o)
+  }.mkString("|")
+
+  test("grouped COUNT/MIN/MAX/SUM and ORDER BY v DESC LIMIT k under random predicates") {
+    var folded = 0
+    val prop = Prop.forAll(genPred, Gen.choose(1, 40)) { (pred, k) =>
+      val agg = (d: DataFrame) => d.filter(pred).groupBy("t")
+        .agg(count(lit(1)), min("v"), max("v"), sum("v"), min("lat"), max("lon"))
+      val top = (d: DataFrame) => d.filter(pred).orderBy(desc("v")).limit(k)
+      val plans = Seq(agg(zarr), top(zarr)).map(_.queryExecution.sparkPlan.toString)
+      folded += plans.count(p => p.contains("partialAgg=") || p.contains("topN="))
+      val gotAgg = agg(zarr).collect().map(approx).sorted.toSeq
+      val wantAgg = agg(local).collect().map(approx).sorted.toSeq
+      // ties may pick different rows: compare the top keys, and check
+      // every returned row is a source row
+      val gotTop = top(zarr).collect()
+      val wantTop = top(local).collect()
+      val source = local.filter(pred).collect().map(_.toSeq).toSet
+      Prop(gotAgg == wantAgg) :| s"agg pred=$pred got=$gotAgg want=$wantAgg" &&
+        Prop(gotTop.map(_.getDouble(3)).toSeq == wantTop.map(_.getDouble(3)).toSeq &&
+          gotTop.forall(r => source.contains(r.toSeq))) :| s"top pred=$pred k=$k"
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(60), prop)
+    assert(res.passed, res.status.toString)
+    // about a third of the random predicates are wholly exact, so ~40
+    // of the 120 plans fold; 10 is far below that, not a tuned bound
+    assert(folded > 10, s"only $folded plans folded in the scan")
   }
 
   // ---- string + datetime coordinates ---------------------------------

@@ -91,14 +91,19 @@ class ZarrSpec extends AnyFunSuite {
     assert(scansOf(df).head.description().contains("limit=5"))
   }
 
-  test("filter + limit: limit stays above the post-scan filter (correctness)") {
-    // with any filter present Spark keeps the Filter node, so the limit
-    // is NOT pushed into the scan — results must still be exact
+  test("filter + limit: an exact filter lets the limit into the scan (correctness)") {
+    // the coordinate equality is exact (its range is the filter), so
+    // Spark drops its Filter node and pushes the limit into the scan
     val df = zarr(v3).filter(col("time") === 2).limit(7)
     assert(df.count() == 7)
     assert(df.collect().forall(_.getAs[Long]("time") == 2))
     val scan = scansOf(df).head
-    assert(scan.description().contains("limit=-1"), scan.description())
+    assert(scan.description().contains("limit=7"), scan.description())
+    // under a data-variable predicate the limit counts emitted rows
+    val byVar = zarr(v3).filter(col("temperature") > 50).limit(7)
+    assert(scansOf(byVar).head.description().contains("limit=7"))
+    val rows = byVar.collect()
+    assert(rows.length == 7 && rows.forall(_.getAs[Long]("temperature") > 50))
   }
 
   test("chunkCacheEntries caches decoded chunks across queries, results unchanged") {
@@ -162,11 +167,33 @@ class ZarrSpec extends AnyFunSuite {
     assert(df.count() == 0)
   }
 
-  test("data-variable filter is not pushed but stays correct") {
+  test("data-variable filter is evaluated exactly in the scan") {
     val df = zarr(v3).filter(col("temperature") > 50)
     val scan = scansOf(df).head
-    assert(!scan.description().contains("temperature"))
-    assert(df.collect().forall(_.getAs[Long]("temperature") > 50))
+    assert(scan.description().contains("exactFilters=[IsNotNull(temperature), GreaterThan(temperature,50)]"),
+      scan.description())
+    assert(scan.description().contains("postScan=[]"), scan.description())
+    val rows = df.collect()
+    assert(rows.nonEmpty && rows.forall(_.getAs[Long]("temperature") > 50))
+    assert(rows.length == zarr(v3).collect().count(_.getAs[Long]("temperature") > 50))
+  }
+
+  test("EXPLAIN names exact and post-scan filters, the fold and the pruned rows") {
+    val agg = zarr(v3).filter(col("humidity") > 50 && col("time") >= 2)
+      .groupBy("time").agg(count(lit(1)), sum(col("humidity").cast("double")))
+    val aggDesc = scansOf(agg).head.description()
+    assert(aggDesc.contains("rows=500 of 700 (28.6% pruned)"), aggDesc)
+    assert(aggDesc.contains("exactFilters=[IsNotNull(humidity), GreaterThan(humidity,50), " +
+      "GreaterThanOrEqual(time,2)] postScan=[]"), aggDesc)
+    val posted = zarr(v3).filter(col("time").isin(1, 3) && col("temperature") > 0)
+    val postDesc = scansOf(posted).head.description()
+    assert(postDesc.contains("postScan=[In(time, [1,3])]"), postDesc)
+    val top = zarr(v3).orderBy(col("temperature").desc).limit(10)
+    assert(scansOf(top).head.description().contains("topN=temperature DESC 10"))
+    val v2f = spark.read.format("zarr").load(s"$base/synthetic_v2.zarr")
+    val grouped = v2f.groupBy("time").agg(max("temperature"))
+    assert(scansOf(grouped).head.description().contains("partialAgg=[max(temperature)] groupBy=[time]"),
+      scansOf(grouped).head.description())
   }
 
   // -------------------------------------------------------- optimizer suite

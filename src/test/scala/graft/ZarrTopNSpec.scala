@@ -51,8 +51,9 @@ class ZarrTopNSpec extends AnyFunSuite {
       .select("time", "lon", "lat").limit(4)
     assert(mixed.collect().map(_.toSeq).toSeq ==
       Seq(Seq(0L, 9L, 0L), Seq(0L, 9L, 1L), Seq(0L, 9L, 2L), Seq(0L, 9L, 3L)))
-    // with a filter the top-n stays above the (inexact) post-scan
-    // filter — no row-space clipping, result exact
+    // with a data-variable filter (evaluated exactly by the scan) the
+    // coordinate-prefix shortcut declines — no row-space clipping,
+    // result exact
     val filtered = zarr.filter(col("temperature") > 0)
       .orderBy("time", "lon", "lat").select("time", "lon", "lat").limit(2)
     assert(filtered.collect().length == 2)
