@@ -25,9 +25,14 @@ import java.nio.file.{Files, Paths}
   */
 object ZarrFuzzRun {
 
-  /** A scan description naming filters Spark pushed (exact or not). */
-  private[graft] def filtersPushed(desc: String): Boolean =
-    desc.contains("exactFilters=[") && !desc.contains("exactFilters=[] postScan=[]")
+  /** A scan description naming filters that prune its coordinate
+    * ranges or its `.zstats` partitions. */
+  private[graft] def rangePruned(desc: String): Boolean =
+    desc.contains("pruneFilters=[") && !desc.contains("pruneFilters=[]")
+
+  /** A scan description whose ORDER BY … LIMIT pruned partitions by
+    * their `.zstats` min/max. */
+  private[graft] def statsTopN(desc: String): Boolean = desc.contains("(.zstats pruned)")
 
   /** All DSv2 scan descriptions in the plan, descending through AQE. */
   private[graft] def scanDescs(plan: SparkPlan): Seq[String] = {
@@ -89,8 +94,8 @@ object ZarrFuzzRun {
         val df = spark.sql(sql)
         df.write.mode("overwrite").parquet(s"$outDir/$name")
         val descs = scanDescs(df.queryExecution.executedPlan)
-        if (descs.exists(filtersPushed)) markers("coord_range") += 1
-        if (descs.exists(_.contains(" topN="))) markers("topn") += 1
+        if (descs.exists(rangePruned)) markers("coord_range") += 1
+        if (descs.exists(statsTopN)) markers("topn") += 1
         // a partial aggregate or top-N folded inside the scan
         if (descs.exists(d => d.contains(" partialAgg=") || d.contains(" topN="))) markers("scan_fold") += 1
         // coordinate-prefix TopN pushes as either limit (ASC) or
@@ -104,7 +109,7 @@ object ZarrFuzzRun {
         if (descs.exists(_.contains("ZarrUnionGroupAggScan"))) markers("union_group_agg") += 1
         else if (descs.exists(_.contains("ZarrUnionAggScan"))) markers("union_agg") += 1
         // coordinate pushdown composed over the sharded-v3 read path
-        if (sql.contains("grid_e") && descs.exists(filtersPushed))
+        if (sql.contains("grid_e") && descs.exists(rangePruned))
           markers("shard_range") += 1
       } catch { case e: Exception =>
         failed += 1

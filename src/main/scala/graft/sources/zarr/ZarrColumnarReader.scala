@@ -44,20 +44,29 @@ class ZarrColumnarReader(p: ZarrInputPartition, batchSize: Int = 4096)
   /** Leading projection fields the plain and top-N paths emit; the
     * rest are read only for predicates and folds. */
   private val nOut = if (p.outCols < 0) fields.length else p.outCols
-  private val preds = p.preds.toArray
 
   private def typeOf(f: ProjField): DataType = f match {
     case CoordField(d) => p.coords(d).meta.dtype.sparkType
     case VarField(m) => m.dtype.sparkType
   }
 
+  /** The projection field of a column the predicates or the fold name. */
+  private val fieldOf: Map[String, Int] = fields.zipWithIndex.map {
+    case (CoordField(d), i) => p.coords(d).meta.name -> i
+    case (VarField(m), i) => m.name -> i
+  }.toMap
+  /** The coordinate dimension of a grouping column. */
+  private def dimOf(name: String): Int = p.coords.indexWhere(_.meta.name == name)
+
+  /** Each predicate as (projection field, range). */
+  private val preds: Array[(Int, CellRange)] = p.preds.map(c => (fieldOf(c.col), c.range)).toArray
+
   private val outTypes: Array[DataType] = p.fold match {
     case Some(AggFold(g, aggs)) =>
-      (g.map(d => p.coords(d).meta.dtype.sparkType) ++ aggs.map {
+      (g.map(n => p.coords(dimOf(n)).meta.dtype.sparkType) ++ aggs.map {
         case FoldCount => LongType
         case FoldSum(_) => DoubleType
-        case FoldMin(f) => typeOf(fields(f))
-        case FoldMax(f) => typeOf(fields(f))
+        case a => typeOf(fields(fieldOf(a.col.get)))
       }).toArray
     case _ => fields.take(nOut).map(typeOf)
   }
@@ -276,8 +285,8 @@ class ZarrColumnarReader(p: ZarrInputPartition, batchSize: Int = 4096)
     selAll = true
     var k = 0
     while (k < preds.length && nSel > 0) {
-      bind(preds(k).field)
-      applyPred(preds(k).range)
+      bind(preds(k)._1)
+      applyPred(preds(k)._2)
       k += 1
     }
   }
@@ -298,9 +307,9 @@ class ZarrColumnarReader(p: ZarrInputPartition, batchSize: Int = 4096)
       val st = varStates(varOf(f)); sArr = st.chunk; sOff = st.offset; sStep = 1
   }
 
-  /** Keep the selected cells of the bound source that lie in `r`. */
+  /** Keep the selected cells of the bound source (a data variable, so
+    * one cell per run position) that lie in `r`. */
   private def applyPred(r: CellRange): Unit = {
-    if (sStep == 0) { if (!r.passes(sArr, sOff)) nSel = 0; return }
     val all = selAll
     val n = nSel
     val off = sOff
@@ -436,9 +445,11 @@ class ZarrColumnarReader(p: ZarrInputPartition, batchSize: Int = 4096)
 
   /** Dense per-group slots over the partition's index box: along each
     * grouped dim, the indices its rows can reach (one index while the
-    * slice stays inside one value of every outer dim). */
+    * slice stays inside one value of every outer dim). The box holds at
+    * most every group, which the scan builder bounds by the partition
+    * split cap. */
   private final class AggAcc(spec: AggFold) extends Acc {
-    private val g = spec.groupDims.toArray
+    private val g = spec.groupBy.map(dimOf).toArray
     private val (boxLo, boxLen) = {
       val first = new Array[Int](nDims)
       val lastIdx = new Array[Int](nDims)
@@ -474,24 +485,30 @@ class ZarrColumnarReader(p: ZarrInputPartition, batchSize: Int = 4096)
     private val lastG = g.indexOf(last)
     private val counts = new Array[Long](nSlots)
     private val aggs = spec.aggs.toArray
+    /** Per aggregate: its projection field (−1 for COUNT). */
+    private val aggField: Array[Int] = aggs.map(_.col.map(fieldOf).getOrElse(-1))
     /** Per aggregate: double slots (sums; min/max of float columns) or
       * long slots (min/max of integral columns). */
-    private val dSlots: Array[Array[Double]] = aggs.map {
-      case FoldSum(_) => new Array[Double](nSlots)
-      case FoldMin(f) if floating(f) => Array.fill(nSlots)(Double.NaN)
-      case FoldMax(f) if floating(f) => Array.fill(nSlots)(Double.NegativeInfinity)
-      case _ => null
-    }
-    private val lSlots: Array[Array[Long]] = aggs.map {
-      case FoldMin(f) if !floating(f) => Array.fill(nSlots)(Long.MaxValue)
-      case FoldMax(f) if !floating(f) => Array.fill(nSlots)(Long.MinValue)
-      case _ => null
-    }
+    private val dSlots: Array[Array[Double]] = aggs.indices.map { a =>
+      aggs(a) match {
+        case FoldSum(_) => new Array[Double](nSlots)
+        case FoldMin(_) if floating(a) => Array.fill(nSlots)(Double.NaN)
+        case FoldMax(_) if floating(a) => Array.fill(nSlots)(Double.NegativeInfinity)
+        case _ => null
+      }
+    }.toArray
+    private val lSlots: Array[Array[Long]] = aggs.indices.map { a =>
+      aggs(a) match {
+        case FoldMin(_) if !floating(a) => Array.fill(nSlots)(Long.MaxValue)
+        case FoldMax(_) if !floating(a) => Array.fill(nSlots)(Long.MinValue)
+        case _ => null
+      }
+    }.toArray
 
-    private def floating(f: Int): Boolean = typeOf(fields(f)) match {
+    private def floating(a: Int): Boolean = aggField(a) >= 0 && (typeOf(fields(aggField(a))) match {
       case FloatType | DoubleType => true
       case _ => false
-    }
+    })
 
     override def add(): Unit = {
       var base = 0
@@ -507,9 +524,11 @@ class ZarrColumnarReader(p: ZarrInputPartition, batchSize: Int = 4096)
       while (a < aggs.length) {
         aggs(a) match {
           case FoldCount =>
-          case FoldSum(f) => bind(f); sum(dSlots(a), base, step)
-          case FoldMin(f) => bind(f); if (dSlots(a) != null) minD(dSlots(a), base, step) else minL(lSlots(a), base, step)
-          case FoldMax(f) => bind(f); if (dSlots(a) != null) maxD(dSlots(a), base, step) else maxL(lSlots(a), base, step)
+          case FoldSum(_) => bind(aggField(a)); sum(dSlots(a), base, step)
+          case FoldMin(_) =>
+            bind(aggField(a)); if (dSlots(a) != null) minD(dSlots(a), base, step) else minL(lSlots(a), base, step)
+          case FoldMax(_) =>
+            bind(aggField(a)); if (dSlots(a) != null) maxD(dSlots(a), base, step) else maxL(lSlots(a), base, step)
         }
         a += 1
       }
@@ -592,7 +611,17 @@ class ZarrColumnarReader(p: ZarrInputPartition, batchSize: Int = 4096)
     /** Non-empty slots, in slot (row-major group) order; an ungrouped
       * fold always has its one row. */
     private lazy val out: Array[Int] =
-      if (g.isEmpty) Array(0) else (0 until nSlots).filter(counts(_) > 0).toArray
+      if (g.isEmpty) Array(0)
+      else {
+        var n = 0
+        var s = 0
+        while (s < nSlots) { if (counts(s) > 0) n += 1; s += 1 }
+        val o = new Array[Int](n)
+        n = 0
+        s = 0
+        while (s < nSlots) { if (counts(s) > 0) { o(n) = s; n += 1 }; s += 1 }
+        o
+      }
 
     override def rows: Int = out.length
 
@@ -638,6 +667,7 @@ class ZarrColumnarReader(p: ZarrInputPartition, batchSize: Int = 4096)
     * first. */
   private final class TopNAcc(spec: TopNFold) extends Acc {
     private val cap = spec.n
+    private val key = fieldOf(spec.col)
     private val ranks = new Array[Long](cap)
     private val seqs = new Array[Long](cap)
     private val vals = new Array[Array[Any]](cap)
@@ -650,7 +680,7 @@ class ZarrColumnarReader(p: ZarrInputPartition, batchSize: Int = 4096)
       ranks(a) < ranks(b) || ranks(a) == ranks(b) && seqs(a) > seqs(b)
 
     override def add(): Unit = {
-      bind(spec.field)
+      bind(key)
       val n = nSel
       var k = 0
       while (k < n) {

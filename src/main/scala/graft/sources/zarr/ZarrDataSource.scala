@@ -665,9 +665,6 @@ class ZarrScanBuilder(meta: ZarrStoreMeta, options: CaseInsensitiveStringMap)
     with SupportsPushDownAggregates {
 
   private var requiredSchema: StructType = meta.schema
-  private var accepted: Array[Filter] = Array.empty
-  private var coordPreds: Map[Int, Seq[GridMath.CoordPred]] = Map.empty
-  private var varPreds: Map[String, Seq[GridMath.CoordPred]] = Map.empty
   private var pushdown = ScanPushdown()
   private var limit: Option[Long] = None
   private var offset: Long = 0L
@@ -680,159 +677,23 @@ class ZarrScanBuilder(meta: ZarrStoreMeta, options: CaseInsensitiveStringMap)
 
   override def pruneColumns(required: StructType): Unit = requiredSchema = required
 
-  /** Accept equality, range (`>`, `>=`, `<`, `<=`, and thus BETWEEN —
-    * Catalyst splits it into two conjuncts) and IN conjuncts on
-    * coordinate columns for index-range pruning, and data-variable
-    * comparisons for `.zstats` pruning. Return as post-scan only what
-    * the scan cannot evaluate exactly ([[classify]]); outside that
-    * exact set the reference's Inexact contract still holds and Spark
-    * re-applies the filter. */
+  /** Read each filter once ([[ScanPushdown.classify]]): coordinate
+    * comparisons and IN narrow the index ranges, data-variable
+    * comparisons prune `.zstats` partitions, and the exact set is
+    * evaluated by the scan. Return as post-scan only what falls outside
+    * the exact set; there the reference's Inexact contract still holds
+    * and Spark re-applies the filter. */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    import GridMath.CoordPred
-    val coordIdx = meta.coordNames.zipWithIndex.toMap
-    val acc = mutable.ArrayBuffer.empty[Filter]
-    val preds = mutable.Map.empty[Int, List[CoordPred]]
-    def isStringCoord(attr: String): Boolean =
-      coordIdx.get(attr).exists(d => meta.coords(d).meta.dtype.kind == 'S')
-    def add(f: Filter, attr: String, p: CoordPred): Unit =
-      coordIdx.get(attr).filterNot(_ => isStringCoord(attr)).foreach { idx =>
-        acc += f; preds(idx) = p :: preds.getOrElse(idx, Nil)
-      }
-    // String coordinates live in index space: equality on a string
-    // coord translates to equality on its index (absent value -> an
-    // impossible index, which plans zero partitions — correct, since
-    // no row can match).
-    def addStr(f: Filter, attr: String, v: String): Unit =
-      coordIdx.get(attr).filter(_ => isStringCoord(attr)).foreach { idx =>
-        val i = meta.coords(idx).raw match {
-          case a: Array[String] => a.indexOf(v)
-          case _ => -1
-        }
-        acc += f
-        preds(idx) = CoordPred.Eq(i.toDouble) :: preds.getOrElse(idx, Nil)
-      }
-    // Data-variable predicates prune whole partitions via the
-    // `.zstats` per-chunk min/max sidecars (reference roadmap
-    // "data-variable filter pushdown" / "statistics-based chunk
-    // pruning") — only for variables that carry stats; pruning only
-    // skips partitions, the rows are filtered per cell by the reader
-    // (exact set) or by Spark (post-scan).
-    val statVars = meta.dataVars.filter(_.chunkStats.nonEmpty).map(_.name).toSet
-    val vps = mutable.Map.empty[String, List[CoordPred]]
-    def addVar(f: Filter, attr: String, p: CoordPred): Unit = p match {
-      // a NaN threshold is not a [min,max] bound (`v <= NaN` holds everywhere)
-      case CoordPred.Eq(t) if t.isNaN =>
-      case CoordPred.Gt(t, _) if t.isNaN =>
-      case CoordPred.Lt(t, _) if t.isNaN =>
-      case _ => if (statVars(attr)) { acc += f; vps(attr) = p :: vps.getOrElse(attr, Nil) }
-    }
-    filters.foreach {
-      case f @ EqualTo(attr, v: String) => addStr(f, attr, v)
-      case f @ EqualNullSafe(attr, v: String) => addStr(f, attr, v)
-      case f @ EqualTo(attr, v) =>
-        numeric(v).foreach { d =>
-          add(f, attr, CoordPred.Eq(d)); addVar(f, attr, CoordPred.Eq(d)) }
-      case f @ EqualNullSafe(attr, v) =>
-        numeric(v).foreach(d => add(f, attr, CoordPred.Eq(d)))
-      case f @ GreaterThan(attr, v) =>
-        numeric(v).foreach { d =>
-          add(f, attr, CoordPred.Gt(d, orEqual = false))
-          addVar(f, attr, CoordPred.Gt(d, orEqual = false)) }
-      case f @ GreaterThanOrEqual(attr, v) =>
-        numeric(v).foreach { d =>
-          add(f, attr, CoordPred.Gt(d, orEqual = true))
-          addVar(f, attr, CoordPred.Gt(d, orEqual = true)) }
-      case f @ LessThan(attr, v) =>
-        numeric(v).foreach { d =>
-          add(f, attr, CoordPred.Lt(d, orEqual = false))
-          addVar(f, attr, CoordPred.Lt(d, orEqual = false)) }
-      case f @ LessThanOrEqual(attr, v) =>
-        numeric(v).foreach { d =>
-          add(f, attr, CoordPred.Lt(d, orEqual = true))
-          addVar(f, attr, CoordPred.Lt(d, orEqual = true)) }
-      case f @ In(attr, vs) if vs.nonEmpty && vs.forall(numeric(_).isDefined) =>
-        add(f, attr, CoordPred.InSet(vs.toSeq.flatMap(numeric)))
-      case _ =>
-    }
-    accepted = acc.toArray
-    coordPreds = preds.toMap
-    varPreds = vps.toMap.map { case (k, v) => k -> v.toSeq }
-    pushdown = classify(filters)
+    pushdown = ScanPushdown.classify(filters.toSeq, meta, fillAsNull)
     pushdown.postScan.toArray
-  }
-
-  /** The exact set: `=`, `<`, `<=`, `>`, `>=` against a numeric literal
-    * and IsNotNull, on numeric data variables and coordinates, compared
-    * in the column's own type ([[CellRange.of]]). A coordinate's
-    * conjunction is exact only when its matches form one contiguous
-    * index interval, which becomes the scan's range on that dim; a
-    * data variable's is evaluated per cell by the reader. Everything
-    * under `fillValueAsNull` stays post-scan. */
-  private def classify(filters: Array[Filter]): ScanPushdown = {
-    def numericCol(a: String): Boolean = !fillAsNull && types.get(a).exists(CellRange.numeric)
-    val byCol = mutable.LinkedHashMap.empty[String, (CellRange, List[Filter])]
-    val exact = mutable.ArrayBuffer.empty[Filter]
-    filters.foreach {
-      case f @ IsNotNull(a) if numericCol(a) => exact += f // no exact shape has null cells
-      case f => attrOf(f).filter(numericCol).foreach { a =>
-        CellRange.of(f, types(a)).foreach { r =>
-          val (r0, fs) = byCol.getOrElse(a, (CellRange.all, Nil))
-          byCol(a) = (r0.and(r), f :: fs)
-        }
-      }
-    }
-    val intervals = mutable.Map.empty[Int, (Int, Int)]
-    val preds = byCol.toSeq.filter { case (a, (r, fs)) =>
-      val d = meta.coordNames.indexOf(a)
-      val ok = d < 0 || matchInterval(meta.coords(d), r).map(iv => intervals(d) = iv).isDefined
-      if (ok) exact ++= fs
-      ok
-    }.map { case (a, (r, _)) => a -> r }
-    ScanPushdown(exact.toSeq, filters.toSeq.filterNot(exact.contains), preds, intervals.toMap)
-  }
-
-  private def attrOf(f: Filter): Option[String] = f match {
-    case EqualTo(a, _) => Some(a)
-    case GreaterThan(a, _) => Some(a)
-    case GreaterThanOrEqual(a, _) => Some(a)
-    case LessThan(a, _) => Some(a)
-    case LessThanOrEqual(a, _) => Some(a)
-    case _ => None
-  }
-
-  /** The index interval of `c`'s values in `r`, if they form one
-    * (`(0, 0)` when none do). */
-  private def matchInterval(c: CoordData, r: CellRange): Option[(Int, Int)] = {
-    var first = -1
-    var lastHit = -1
-    var i = 0
-    while (i < c.length) {
-      if (r.passes(c.raw, i)) {
-        if (first < 0) first = i else if (lastHit != i - 1) return None
-        lastHit = i
-      }
-      i += 1
-    }
-    Some(if (first < 0) (0, 0) else (first, lastHit + 1))
   }
 
   /** A pushed data-variable predicate: the reader compacts cells away,
     * so the row space no longer maps onto output rows. */
-  private def cellFiltered: Boolean =
-    pushdown.preds.exists { case (n, _) => !meta.coordNames.contains(n) }
+  private def cellFiltered: Boolean = pushdown.cellPreds.nonEmpty
 
-  private def numeric(v: Any): Option[Double] = v match {
-    case n: java.lang.Number => Some(n.doubleValue())
-    // datetime coords decode to epoch micros, so timestamp literals
-    // compare in micro space (exact in double until epoch ~2^53 µs)
-    case t: java.sql.Timestamp =>
-      Some((t.getTime * 1000L + (t.getNanos / 1000) % 1000).toDouble)
-    case i: java.time.Instant =>
-      Some((i.getEpochSecond * 1000000L + i.getNano / 1000).toDouble)
-    case _ => None
-  }
-
-  override def pushedFilters(): Array[Filter] = (accepted ++ pushdown.exact).distinct
+  override def pushedFilters(): Array[Filter] =
+    (pushdown.pruning ++ pushdown.exact).distinct.toArray
 
   override def pushLimit(n: Int): Boolean = { limit = Some(n.toLong); true }
   override def isPartiallyPushed: Boolean = true
@@ -874,14 +735,13 @@ class ZarrScanBuilder(meta: ZarrStoreMeta, options: CaseInsensitiveStringMap)
       case r: NamedReference if r.fieldNames().length == 1 => Some(r.fieldNames().head)
       case _ => None
     }
-    val unfiltered = coordPreds.isEmpty && varPreds.isEmpty && accepted.isEmpty &&
-      pushdown.exact.isEmpty
+    val unfiltered = pushdown.unfiltered
     if (unfiltered && orders.length <= meta.coords.length && prefixTopN(orders, n, colOf)) return true
     if (orders.length != 1 || fillAsNull || n <= 0 || n > maxTopN) return false
     colOf(orders.head).filter(c => types.get(c).exists(CellRange.numeric)).exists { name =>
       val desc = orders.head.direction() ==
         org.apache.spark.sql.connector.expressions.SortDirection.DESCENDING
-      pushdown = pushdown.copy(fold = Some(PushedTopN(name, desc, n)))
+      pushdown = pushdown.copy(fold = Some(TopNFold(name, desc, n)))
       if (unfiltered && meta.dataVars.exists(v => v.name == name && v.chunkStats.nonEmpty))
         topNVar = Some((name, desc, n))
       true
@@ -926,8 +786,7 @@ class ZarrScanBuilder(meta: ZarrStoreMeta, options: CaseInsensitiveStringMap)
     val groupCols = groups.flatMap(colName(_))
     groups.length == groupCols.length &&
       groupCols.forall(n => meta.coordNames.contains(n) && uniqueCoord(n)) &&
-      coordPreds.isEmpty && pushdown.exact.isEmpty &&
-      accepted.isEmpty && limit.isEmpty && offset == 0L &&
+      pushdown.unfiltered && limit.isEmpty && offset == 0L &&
       // an empty grid (zero-length coordinate — the streaming sink's
       // pre-first-append state) has no metadata bounds to answer
       // MIN/MAX with; the real (empty) scan yields the correct NULLs
@@ -945,14 +804,16 @@ class ZarrScanBuilder(meta: ZarrStoreMeta, options: CaseInsensitiveStringMap)
     if (supportCompletePushDown(aggregation)) { aggPushed = Some(aggregation); true }
     else partialAgg(aggregation).exists { f => pushdown = pushdown.copy(fold = Some(f)); true }
 
-  /** Most groups a partial aggregate may span (per-partition dense
-    * slots are bounded by it). */
-  private val maxGroups = 1L << 22
+  /** The split cap of a partition: `slices` plans no partition of more
+    * rows. */
+  private val maxRowsPerPartition = options.getLong("maxRowsPerPartition", 262144L)
 
   /** COUNT, MIN/MAX of numeric columns and SUM of float columns (AVG
     * arrives split into SUM and COUNT), grouped by numeric coordinates,
-    * without DISTINCT. */
-  private def partialAgg(aggregation: Aggregation): Option[PushedAgg] = {
+    * without DISTINCT. A partition folds into one slot per group its
+    * rows can reach, so the groups may number at most the split cap:
+    * the slots then take no more room than the partition's rows. */
+  private def partialAgg(aggregation: Aggregation): Option[AggFold] = {
     if (fillAsNull || limit.nonEmpty || offset != 0L) return None
     def numericCol(n: String) = types.get(n).exists(CellRange.numeric)
     val groups = aggregation.groupByExpressions().toSeq.map(colName(_))
@@ -960,18 +821,18 @@ class ZarrScanBuilder(meta: ZarrStoreMeta, options: CaseInsensitiveStringMap)
     val groupsOk = groups.forall(_.isDefined) && names.distinct.length == names.length &&
       names.forall(n => meta.coordNames.contains(n) && numericCol(n)) &&
       names.map(n => meta.coords(meta.coordNames.indexOf(n)).length.toLong)
-        .foldLeft(1L)((a, b) => math.min(a * b, maxGroups + 1)) <= maxGroups
-    val calls = aggregation.aggregateExpressions().toSeq.map {
-      case _: CountStar => Some(AggCall("count", None))
-      case c: Count if !c.isDistinct => colName(c.column).filter(numericCol).map(n => AggCall("count", Some(n)))
-      case m: Min => colName(m.column).filter(numericCol).map(n => AggCall("min", Some(n)))
-      case m: Max => colName(m.column).filter(numericCol).map(n => AggCall("max", Some(n)))
+        .foldLeft(1L)((a, b) => math.min(a * b, maxRowsPerPartition + 1)) <= maxRowsPerPartition
+    val aggs = aggregation.aggregateExpressions().toSeq.map {
+      case _: CountStar => Some(FoldCount)
+      case c: Count if !c.isDistinct => colName(c.column).filter(numericCol).map(_ => FoldCount)
+      case m: Min => colName(m.column).filter(numericCol).map(FoldMin)
+      case m: Max => colName(m.column).filter(numericCol).map(FoldMax)
       case s: Sum if !s.isDistinct => colName(s.column)
         .filter(n => types.get(n).exists(t => t == FloatType || t == DoubleType))
-        .map(n => AggCall("sum", Some(n)))
+        .map(FoldSum)
       case _ => None
     }
-    if (groupsOk && calls.forall(_.isDefined)) Some(PushedAgg(names, calls.flatten)) else None
+    if (groupsOk && aggs.forall(_.isDefined)) Some(AggFold(names, aggs.flatten)) else None
   }
 
   private def colName(e: org.apache.spark.sql.connector.expressions.Expression): Option[String] =
@@ -1040,12 +901,12 @@ class ZarrScanBuilder(meta: ZarrStoreMeta, options: CaseInsensitiveStringMap)
     case Some(agg) if agg.groupByExpressions().nonEmpty => new ZarrGroupAggScan(meta, agg)
     case Some(agg) => new ZarrAggScan(meta, agg)
     case None =>
-      new ZarrScan(meta, requiredSchema, coordPreds, pushdown, limit,
+      new ZarrScan(meta, requiredSchema, pushdown, limit,
         options.getLong("minRowsPerPartition", 65536),
         fillAsNull,
         options.getInt("chunkCacheEntries", 0),
-        varPreds, offset,
-        maxRowsPerPartition = options.getLong("maxRowsPerPartition", 262144L),
+        offset,
+        maxRowsPerPartition = maxRowsPerPartition,
         // read-ahead defaults ON for remote backends (each chunk costs
         // a round trip there) and OFF for local files; explicit option
         // wins either way
@@ -1065,13 +926,11 @@ class ZarrScanBuilder(meta: ZarrStoreMeta, options: CaseInsensitiveStringMap)
 class ZarrScan(
     meta: ZarrStoreMeta,
     requiredSchema: StructType,
-    coordPreds: Map[Int, Seq[GridMath.CoordPred]],
     pushdown: ScanPushdown,
     limit: Option[Long],
     minRowsPerPartition: Long,
     fillAsNull: Boolean = false,
     chunkCacheEntries: Int = 0,
-    varPreds: Map[String, Seq[GridMath.CoordPred]] = Map.empty,
     offset: Long = 0L,
     maxRowsPerPartition: Long = 262144L,
     prefetch: Boolean = false,
@@ -1096,7 +955,7 @@ class ZarrScan(
   /** Pruning ranges, narrowed on each exactly-filtered dim to its
     * exact match interval. */
   private val staticRanges: Option[GridMath.Ranges] =
-    GridMath.coordRangesPred(meta.coords.map(_.doubles), coordPreds).flatMap { r =>
+    GridMath.coordRangesPred(meta.coords.map(_.doubles), pushdown.coordBounds).flatMap { r =>
       val n = pushdown.intervals.foldLeft(r) { case (acc, (d, (lo, hi))) =>
         acc.updated(d, (math.max(acc(d)._1, lo), math.min(acc(d)._2, hi)))
       }
@@ -1104,9 +963,10 @@ class ZarrScan(
     }
 
   private val fold = pushdown.fold
-  private val aggFold = fold.collect { case a: PushedAgg => a }
+  private val aggFold = fold.collect { case a: AggFold => a }
   /** Data-variable predicates compact rows away in the reader. */
-  private val varCellPreds = pushdown.preds.filterNot { case (n, _) => meta.coordNames.contains(n) }
+  private val cellPreds = pushdown.cellPreds
+  private val varBounds = pushdown.varBounds
 
   /** Narrowed further by [[filter]] at runtime (DSv2 dynamic pruning:
     * Spark pushes the build side's join-key values before re-planning
@@ -1173,9 +1033,10 @@ class ZarrScan(
     case Some(a) => StructType(
       a.groupBy.map(n => StructField(n, meta.schema(n).dataType, nullable = false)) ++
         a.aggs.zipWithIndex.map {
-          case (AggCall("count", _), i) => StructField(s"count_$i", LongType, nullable = false)
-          case (AggCall("sum", _), i) => StructField(s"sum_$i", DoubleType, nullable = true)
-          case (AggCall(fn, c), i) => StructField(s"${fn}_$i", meta.schema(c.get).dataType, nullable = true)
+          case (FoldCount, i) => StructField(s"count_$i", LongType, nullable = false)
+          case (FoldSum(_), i) => StructField(s"sum_$i", DoubleType, nullable = true)
+          case (FoldMin(c), i) => StructField(s"min_$i", meta.schema(c).dataType, nullable = true)
+          case (FoldMax(c), i) => StructField(s"max_$i", meta.schema(c).dataType, nullable = true)
         })
   }
 
@@ -1236,19 +1097,24 @@ class ZarrScan(
 
   /** `spark.readStream.format("zarr")`: the store's outer dimension is
     * the stream — each micro-batch covers the slabs the append sink
-    * added since the last trigger. Spark 4.1 pushes nothing into a
-    * micro-batch scan (its Filter stays above it); should filters be
-    * pushed, the stream re-evaluates coordinate predicates per batch
-    * against the grown coordinate arrays and applies the exact ones per
-    * cell. Limit/offset/agg pushdown don't arise on streaming plans.
-    * Option `startingOffset=latest` skips the pre-existing grid. */
+    * added since the last trigger. Spark 4.1 pushes no filter into a
+    * micro-batch scan (its Filter stays above it), so only column
+    * pruning arrives here; coordinate bounds, were any pushed, are
+    * re-evaluated per batch against the grown coordinate arrays. An
+    * exact filter would have left Spark without its Filter, which the
+    * micro-batch does not evaluate, so it is refused. Limit/offset/agg
+    * pushdown don't arise on streaming plans. Option
+    * `startingOffset=latest` skips the pre-existing grid. */
   override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new ZarrMicroBatchStream(meta.path, requiredSchema, coordPreds, pushdown.preds,
+      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
+    if (pushdown.exact.nonEmpty)
+      throw new IllegalStateException(s"Exact filters pushed into a micro-batch scan: ${pushdown.exact}")
+    new ZarrMicroBatchStream(meta.path, requiredSchema, pushdown.coordBounds,
       minRowsPerPartition, fillAsNull, chunkCacheEntries, prefetch,
       startFromLatest = startingOffsetLatest,
       maxRowsPerPartition = maxRowsPerPartition,
       maxSlabsPerTrigger = maxSlabsPerTrigger)
+  }
 
   /** `rows=F of T`: the grid rows the planned partitions cover (after
     * range, `.zstats`, limit/offset and runtime pruning) of the whole
@@ -1266,6 +1132,7 @@ class ZarrScan(
     val statsTopN = topNVar.map(_ => " (.zstats pruned)").getOrElse("")
     f"ZarrScan path=${meta.path} rows=$covered of $total ($pruned%.1f%% pruned) ranges=$r " +
       s"limit=${limit.getOrElse(-1L)} offset=$offset$folded$statsTopN " +
+      s"pruneFilters=[${pushdown.pruning.mkString(", ")}] " +
       s"exactFilters=[${pushdown.exact.mkString(", ")}] postScan=[${pushdown.postScan.mkString(", ")}]"
   }
 
@@ -1289,10 +1156,10 @@ class ZarrScan(
   private lazy val readNames: Seq[String] = {
     val out = if (aggFold.isDefined) Nil else requiredSchema.fieldNames.toSeq
     val foldCols = fold.toSeq.flatMap {
-      case a: PushedAgg => a.aggs.flatMap(c => if (c.fn == "count") None else c.col)
-      case t: PushedTopN => Seq(t.col)
+      case a: AggFold => a.aggs.flatMap(_.col)
+      case t: TopNFold => Seq(t.col)
     }
-    out ++ (foldCols ++ varCellPreds.map(_._1)).distinct.filterNot(out.contains)
+    out ++ (foldCols ++ cellPreds.map(_._1)).distinct.filterNot(out.contains)
   }
 
   private def projectionOf(names: Seq[String]): Seq[ProjField] = names.map { n =>
@@ -1305,22 +1172,12 @@ class ZarrScan(
   /** The partition template carrying the pushdown: the slice bounds are
     * filled in per partition. */
   private def partition(r: GridMath.Ranges): ZarrInputPartition = {
-    val names = readNames
-    val at = names.zipWithIndex.toMap
-    ZarrInputPartition(meta.path, 0L, 0L, r, meta.coords, projectionOf(names),
+    ZarrInputPartition(meta.path, 0L, 0L, r, meta.coords, projectionOf(readNames),
       fillAsNull, chunkCacheEntries, prefetch,
-      preds = varCellPreds.map { case (n, cr) => CellPred(at(n), cr) },
-      fold = fold.map {
-        case a: PushedAgg => AggFold(a.groupBy.map(meta.coordNames.indexOf), a.aggs.map {
-          case AggCall("count", _) => FoldCount
-          case AggCall("sum", c) => FoldSum(at(c.get))
-          case AggCall("min", c) => FoldMin(at(c.get))
-          case AggCall(_, c) => FoldMax(at(c.get))
-        })
-        case t: PushedTopN => TopNFold(at(t.col), t.desc, t.n)
-      },
+      preds = cellPreds.map { case (n, cr) => CellPred(n, cr) },
+      fold = fold,
       outCols = if (aggFold.isDefined) 0 else requiredSchema.length,
-      rowLimit = if (varCellPreds.nonEmpty) limit.getOrElse(-1L) else -1L)
+      rowLimit = if (cellPreds.nonEmpty) limit.getOrElse(-1L) else -1L)
   }
 
   private def computePartitions(): Array[InputPartition] = {
@@ -1357,7 +1214,7 @@ class ZarrScan(
       } else {
       // a LIMIT under a data-variable predicate counts emitted rows in
       // each partition, so it cannot clip the row space
-      val rowSpaceLimit = if (varCellPreds.isEmpty) limit else None
+      val rowSpaceLimit = if (cellPreds.isEmpty) limit else None
       // partition-count ceiling: when the selected row space divided
       // by the row cap would exceed maxPartitions, raise BOTH the
       // merge floor and the split cap to the per-partition target —
@@ -1459,7 +1316,7 @@ class ZarrScan(
     * predicate conjunction by its `.zstats` [min,max]. Chunks without
     * a stats entry are assumed possible (never prune blind). */
   private def sliceMayMatch(rowStart: Long, rowEnd: Long, r: GridMath.Ranges): Boolean = {
-    if (varPreds.isEmpty) return true
+    if (varBounds.isEmpty) return true
     // NaN stats (a chunk holding NaN cells) prove nothing
     def possible(p: GridMath.CoordPred, mn: Double, mx: Double): Boolean = mn.isNaN || mx.isNaN || (p match {
       case GridMath.CoordPred.Eq(t) => t >= mn - 1e-9 && t <= mx + 1e-9
@@ -1470,7 +1327,7 @@ class ZarrScan(
     val idx = new Array[Int](r.length)
     GridMath.rowToIndices(rowStart, r, idx); val o0 = idx(0)
     GridMath.rowToIndices(rowEnd - 1, r, idx); val o1 = idx(0)
-    varPreds.forall { case (name, preds) =>
+    varBounds.forall { case (name, preds) =>
       meta.dataVars.find(_.name == name).forall { m =>
         val innerGrid = m.chunkGrid.drop(1)
         val coveredOuter = (o0 / m.chunks.head) to (o1 / m.chunks.head)
@@ -1506,10 +1363,10 @@ class ZarrScan(
       limit.map(math.min(_, filteredRows)).getOrElse(filteredRows) - offset)
     // a fold emits at most its groups (or n rows) per partition
     val rows = fold match {
-      case Some(a: PushedAgg) =>
+      case Some(a: AggFold) =>
         val groups = a.groupBy.map(n => meta.coords(meta.coordNames.indexOf(n)).length.toLong).product
         math.max(1L, math.min(scanned, groups * plannedPartitionCount))
-      case Some(t: PushedTopN) => math.min(scanned, t.n.toLong * plannedPartitionCount)
+      case Some(t: TopNFold) => math.min(scanned, t.n.toLong * plannedPartitionCount)
       case None => scanned
     }
     val colStats = new java.util.HashMap[NamedReference, ColumnStatistics]()

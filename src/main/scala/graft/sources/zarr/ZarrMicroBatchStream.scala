@@ -29,21 +29,16 @@ final case class ZarrOffset(outer: Long) extends Offset {
   * before metadata) guarantees any extent the metadata advertises is
   * fully readable.
   *
-  * Spark 4.1 pushes no filter into a micro-batch scan, so `coordPreds`
-  * and `cellPreds` are empty there and Spark's Filter does the work.
-  * Should filters be pushed, coordinate predicates are re-evaluated
-  * against the FRESH coordinate arrays on every batch — a predicate on
-  * the outer (time) dimension must see values that did not exist when
-  * the stream started — and only need to give a superset range: the
-  * partitions carry every predicate Spark would drop as exact
-  * (`cellPreds`, coordinates included, since appended values need not
-  * keep one contiguous match interval), and the reader applies them
-  * per cell. */
+  * Pushed coordinate predicates are re-evaluated against the FRESH
+  * coordinate arrays on every batch — a predicate on the outer
+  * (time) dimension must see values that did not exist when the
+  * stream started. Filters stay Inexact (Spark re-applies them), so
+  * the re-evaluated bounding ranges only need to be a superset per
+  * batch. */
 class ZarrMicroBatchStream(
     path: String,
     requiredSchema: StructType,
     coordPreds: Map[Int, Seq[GridMath.CoordPred]],
-    cellPreds: Seq[(String, CellRange)],
     minRowsPerPartition: Long,
     fillAsNull: Boolean,
     chunkCacheEntries: Int,
@@ -192,15 +187,12 @@ class ZarrMicroBatchStream(
         val ranges = r.updated(0, (lo, hi))
         val outerChunk = meta.dataVars.map(_.chunks.head)
           .reduceOption(math.min).filter(_ > 0).getOrElse(1)
-        val out = requiredSchema.fieldNames.toSeq
-        val names = out ++ cellPreds.map(_._1).distinct.filterNot(out.contains)
-        val projection: Seq[ProjField] = names.map { n =>
-          val ci = meta.coordNames.indexOf(n)
+        val projection: Seq[ProjField] = requiredSchema.fields.toSeq.map { f =>
+          val ci = meta.coordNames.indexOf(f.name)
           if (ci >= 0) CoordField(ci)
-          else VarField(meta.dataVars.find(_.name == n).getOrElse(
-            throw new IllegalArgumentException(s"Unknown column $n")))
+          else VarField(meta.dataVars.find(_.name == f.name).getOrElse(
+            throw new IllegalArgumentException(s"Unknown column ${f.name}")))
         }
-        val preds = cellPreds.map { case (n, r) => CellPred(names.indexOf(n), r) }
         GridMath.partitionSlices(ranges, outerChunk, None, minRowsPerPartition,
           // same inner-chunk-aligned sub-slab splitting as the batch
           // scan: an appended slab with a huge inner grid must not
@@ -209,8 +201,7 @@ class ZarrMicroBatchStream(
             meta.dataVars.map(_.chunks(d)).reduceOption(math.min).filter(_ > 0).getOrElse(1)),
           maxRowsPerPartition = maxRowsPerPartition)
           .map(s => ZarrInputPartition(path, s._1, s._2, ranges, meta.coords,
-            projection, fillAsNull, chunkCacheEntries, prefetch,
-            preds = preds, outCols = out.length): InputPartition)
+            projection, fillAsNull, chunkCacheEntries, prefetch): InputPartition)
           .toArray
     }
   }

@@ -11,6 +11,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.sources.zarr.{AggFold, FoldCount, FoldSum, VarField, ZarrColumnarReader, ZarrInputPartition, ZarrMeta}
+
 /** Every shape the Zarr scan evaluates itself — exact filters, partial
   * aggregates, in-scan top-N — against the same query over the
   * table's collected rows. Three grids: a v2 store, a v3 sharded store
@@ -89,8 +91,10 @@ class ZarrFoldSpec extends AnyFunSuite {
     root.toString
   }
 
+  /** Partitions cut inside a 63-row slab; a partial aggregate may span
+    * up to 60 groups (x, t has 54). */
   private def zarr(path: String): DataFrame = spark.read.format("zarr")
-    .option("minRowsPerPartition", "1").option("maxRowsPerPartition", "40").load(path)
+    .option("minRowsPerPartition", "1").option("maxRowsPerPartition", "60").load(path)
 
   /** The table's rows, collected and re-parallelized: the reference side
     * shares no pushdown with the scan under test. */
@@ -168,6 +172,40 @@ class ZarrFoldSpec extends AnyFunSuite {
       // grouped: no group at all
       assert(zarr(path).where(col("t") === 99L).groupBy("x").agg(sum("v")).collect().isEmpty)
     }
+  }
+
+  test("GROUP BY two inner coordinates folds across outer boundaries, within the split cap") {
+    // two outer steps (126 rows) per partition, 63 (y, x) groups
+    val z = spark.read.format("zarr").option("minRowsPerPartition", "100")
+      .option("maxRowsPerPartition", "130").load(v2)
+    val l = local(z)
+    def q(d: DataFrame) = d.where(col("v") > -5.0f).groupBy("y", "x")
+      .agg(count(lit(1)), sum("v"), min("k"), max("w"))
+    assert(scanDesc(q(z)).contains("groupBy=[y,x]"), scanDesc(q(z)))
+    assert(rowsOf(q(z)) == rowsOf(q(l)))
+    // a partition of six rows across the t = 0 → 1 boundary: one row
+    // per group it reaches, in (y, x) order
+    val meta = ZarrMeta.readStore(v2)
+    val part = ZarrInputPartition(v2, 60L, 66L, meta.coords.map(c => (0, c.length)).toArray, meta.coords,
+      Seq(VarField(meta.dataVars.find(_.name == "v").get)),
+      fold = Some(AggFold(Seq("y", "x"), Seq(FoldCount, FoldSum("v")))), outCols = 0)
+    val reader = new ZarrColumnarReader(part)
+    val got = try {
+      assert(reader.next())
+      val b = reader.get()
+      val rows = (0 until b.numRows()).map(i =>
+        (b.column(0).getDouble(i), b.column(1).getLong(i), b.column(2).getLong(i), b.column(3).getDouble(i)))
+      assert(!reader.next())
+      rows
+    } finally reader.close()
+    def v(id: Int): Double = (((id * 37) % 101 - 50) * 0.25f).toDouble
+    val want = Seq(63 -> (0, 0), 64 -> (0, 1), 65 -> (0, 2), 60 -> (6, 6), 61 -> (6, 7), 62 -> (6, 8))
+      .map { case (id, (y, x)) => (y * 1.5 - 4.0, x.toLong, 1L, v(id)) }
+    assert(got == want)
+    // more groups than the split cap (63 > 60): Spark aggregates the cells
+    val capped = zarr(v2).groupBy("y", "x").agg(sum("v"))
+    assert(!scanDesc(capped).contains("partialAgg="), scanDesc(capped))
+    assert(rowsOf(capped) == rowsOf(local(zarr(v2)).groupBy("y", "x").agg(sum("v"))))
   }
 
   test("NaN and −0.0 follow Spark's rules in filters and folds") {
