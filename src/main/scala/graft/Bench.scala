@@ -58,6 +58,31 @@ object Bench {
       s"SPARK_GRAFT_CPUS must be a positive integer, got '$s'"))
   }
 
+  /** The bench session: `local[cpus]`, UTC, graft's extensions, AQE
+    * and V2 bucketing. [[BenchOne]] uses it too, so a single-query
+    * timing measures the configuration the bench measures.
+    * SPARK_GRAFT_SHUFFLE: shuffle-partition override for scale probes.
+    * The default (= cores) is right at gate scale, but partition count
+    * must track DATA volume, not core count: at sf10p the minhash band
+    * join's 32-partition shuffle put ~0.5 GB single allocations in 32
+    * concurrent tasks and OOM'd a 32 GB heap. On a real cluster this is
+    * the spark.sql.shuffle.partitions sizing every deployment tunes. */
+  private[graft] def session(cpus: Int): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions",
+        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus.toString))
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config("spark.sql.sources.v2.bucketing.enabled", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   def main(args: Array[String]): Unit = {
     val loadAtStart = loadavg()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -70,24 +95,7 @@ object Bench {
     def selected = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (n, _) =>
       only.forall(_.exists(n.startsWith))
     }
-    // SPARK_GRAFT_SHUFFLE: shuffle-partition override for scale probes.
-    // The default (= cores) is right at gate scale, but partition count
-    // must track DATA volume, not core count: at sf10p the minhash band
-    // join's 32-partition shuffle put ~0.5 GB single allocations in 32
-    // concurrent tasks and OOM'd a 32 GB heap. On a real cluster this is
-    // the spark.sql.shuffle.partitions sizing every deployment tunes.
-    val shufParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufParts)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session(cpus)
     silenceJobGroupCancelWarn()
     // Warmup pass: JVM/codegen/catalog warm, parquet footers cached —
     // the timed pass then measures steady-state plan execution rather

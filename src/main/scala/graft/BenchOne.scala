@@ -1,8 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-/** Dev-loop single-query timer: warmup + N timed runs of one query,
-  * same session config as [[Bench]]. Usage:
+/** Dev-loop single-query timer: warmup + N timed runs of one query, in
+  * the bench's own session ([[Bench.session]]: same `SPARK_GRAFT_CPUS`
+  * parsing and default, UTC, `SPARK_GRAFT_SHUFFLE`). Usage:
   *   tools/run.sh graft.BenchOne <name> [sfDir] [runs]
   */
 object BenchOne {
@@ -10,17 +10,7 @@ object BenchOne {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val runs = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session(Bench.cpusOf(sys.env.get("SPARK_GRAFT_CPUS")))
     val fn = SparkEntry.queries(name)
     (1 to runs + 1).foreach { i =>
       val t0 = System.nanoTime()

@@ -3,11 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 import graft.functions.{FloatVecDot, NfcNormalize}
 
-/** Session extensions: registers graft's custom Catalyst expressions
-  * for SQL use. Activate with
+/** Session extensions: registers graft's codegen'd kernels
+  * ([[graft.functions.Kernel]]) for SQL use. Activate with
   * `.config("spark.sql.extensions", "graft.GraftExtensions")` or
   * `.withExtensions(new GraftExtensions)` — the
   * SparkSessionExtensions injection slot SURVEY.md §4.3 reserves for
@@ -33,15 +34,16 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectFunction((
       new FunctionIdentifier("float_vec_dot"),
-      new ExpressionInfo(classOf[FloatVecDot].getName, "float_vec_dot"),
+      new ExpressionInfo(FloatVecDot.getClass.getName, "float_vec_dot"),
       (exprs: Seq[Expression]) => exprs match {
-        case Seq(a, b) => FloatVecDot(a, b)
+        case Seq(a, b) =>
+          ColumnBridge.expression(FloatVecDot(ColumnBridge.column(a), ColumnBridge.column(b)))
         case _ => throw new IllegalArgumentException(
           "float_vec_dot(array<float>, array<float>)")
       }))
     e.injectFunction((
       new FunctionIdentifier("nfc_normalize"),
-      new ExpressionInfo(classOf[NfcNormalize].getName, "nfc_normalize"),
+      new ExpressionInfo(NfcNormalize.getClass.getName, "nfc_normalize"),
       (exprs: Seq[Expression]) => exprs match {
         case Seq(c) => NfcNormalize(c)
         case _ => throw new IllegalArgumentException("nfc_normalize(string)")

@@ -1,12 +1,12 @@
 package graft.functions
 
+import java.util.Arrays
+
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
+import org.apache.spark.sql.types.{ArrayType, ObjectType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Apply a FIXED ordered BPE merge table to one word — all rounds in a
@@ -24,73 +24,28 @@ import org.apache.spark.unsafe.types.UTF8String
   * bytes, which equals Spark's string equality (both are exact byte
   * comparisons of code-point sequences).
   *
+  * Why a kernel: the merge table passes once as a `byte[][]` constant
+  * ([[Kernel.const]]), and a word's whole segmentation is one JVM loop
+  * instead of `m` interpreted lambda folds.
+  *
   * An empty word has no symbols and segments to an EMPTY array, not to
   * `[""]` (the corpus path drops empty words before segmenting).
   */
-case class BpeSegment(child: Expression, merges: Seq[(String, String)])
-    extends UnaryExpression {
-
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "bpe_segment"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"bpe_segment requires string, got ${child.dataType.simpleString}")
-
-  // flat pair table: entry 2k = merge k's left symbol, 2k+1 = right
-  @transient private lazy val mergeBytes: Array[Array[Byte]] =
-    merges.flatMap { case (a, b) =>
-      Seq(a.getBytes("UTF-8"), b.getBytes("UTF-8"))
-    }.toArray
-
-  override def nullSafeEval(input: Any): Any =
-    BpeSegment.segment(input.asInstanceOf[UTF8String], mergeBytes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("mergeBytes", mergeBytes, "byte[][]")
-    defineCodeGen(ctx, ev, c => s"graft.functions.BpeSegment.segment($c, $ref)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): BpeSegment =
-    copy(child = newChild)
-}
-
 object BpeSegment {
-  private def rangeEq(bytes: Array[Byte], s: Int, e: Int, p: Array[Byte]): Boolean = {
-    if (e - s != p.length) return false
-    var i = 0
-    while (i < p.length) {
-      if (bytes(s + i) != p(i)) return false
-      i += 1
-    }
-    true
-  }
-
-  /** Static hot path shared by interpreted and generated code. */
   def segment(word: UTF8String, merges: Array[Array[Byte]]): ArrayData = {
     val bytes = word.getBytes // private copy; emitted slices share it
     val n = bytes.length
-    // code-point boundaries (UTF-8 continuation bytes are 10xxxxxx)
-    var count = 0
+    // symbol k spans bytes [begs(k), ends(k)); one symbol per code
+    // point to start (UTF-8 continuation bytes are 10xxxxxx)
+    val begs = new Array[Int](n)
+    val ends = new Array[Int](n)
+    var m = 0
     var i = 0
-    while (i < n) { if ((bytes(i) & 0xc0) != 0x80) count += 1; i += 1 }
-    if (count == 0) return new GenericArrayData(Array.empty[Any])
-    val begs = new Array[Int](count)
-    val ends = new Array[Int](count)
-    var t = 0
-    i = 0
     while (i < n) {
-      if ((bytes(i) & 0xc0) != 0x80) {
-        if (t > 0) ends(t - 1) = i
-        begs(t) = i
-        t += 1
-      }
+      if ((bytes(i) & 0xc0) != 0x80) { if (m > 0) ends(m - 1) = i; begs(m) = i; m += 1 }
       i += 1
     }
-    ends(count - 1) = n
-    var m = count
+    if (m > 0) ends(m - 1) = n
     var r = 0
     while (r < merges.length) {
       val a = merges(r)
@@ -98,8 +53,8 @@ object BpeSegment {
       var w = 0
       var j = 0
       while (j < m) {
-        if (j + 1 < m && rangeEq(bytes, begs(j), ends(j), a) &&
-            rangeEq(bytes, begs(j + 1), ends(j + 1), b)) {
+        if (j + 1 < m && Arrays.equals(bytes, begs(j), ends(j), a, 0, a.length) &&
+            Arrays.equals(bytes, begs(j + 1), ends(j + 1), b, 0, b.length)) {
           begs(w) = begs(j); ends(w) = ends(j + 1); j += 2
         } else {
           begs(w) = begs(j); ends(w) = ends(j); j += 1
@@ -109,15 +64,19 @@ object BpeSegment {
       m = w
       r += 2
     }
-    val out = new Array[Any](m)
-    var k = 0
-    while (k < m) {
-      out(k) = UTF8String.fromBytes(bytes, begs(k), ends(k) - begs(k))
-      k += 1
-    }
-    new GenericArrayData(out)
+    new GenericArrayData(Array.tabulate[Any](m)(k =>
+      UTF8String.fromBytes(bytes, begs(k), ends(k) - begs(k))))
   }
 
-  def apply(c: Column, merges: Seq[(String, String)]): Column =
-    ColumnBridge.column(BpeSegment(ColumnBridge.expression(c), merges))
+  def apply(c: Column, merges: Seq[(String, String)]): Column = {
+    // flat pair table: entry 2k = merge k's left symbol, 2k+1 = right
+    val table = merges.flatMap { case (a, b) =>
+      Seq(a.getBytes("UTF-8"), b.getBytes("UTF-8"))
+    }.toArray
+    Kernel.call(this, "segment", ArrayType(StringType, containsNull = false),
+      Seq(StringType, ObjectType(classOf[Array[Array[Byte]]])), Seq(c, Kernel.const(table)))
+  }
+
+  def apply(e: Expression, merges: Seq[(String, String)]): Expression =
+    ColumnBridge.expression(apply(ColumnBridge.column(e), merges))
 }

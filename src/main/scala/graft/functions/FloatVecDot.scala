@@ -1,52 +1,29 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
 
 /** Codegen'd dot product of two `array<float>` columns, accumulated as
   * a sequential double fold (same arithmetic as
   * `aggregate(zip_with(...))`, and bit-identical to the DuckDB oracle's
   * zipped-UNNEST sum — see [[VectorOps]]).
   *
-  * Why a custom Catalyst expression: the higher-order-function
-  * formulation allocates a lambda frame per element and never enters
-  * whole-stage codegen's tight loop; this expression generates a
-  * primitive `while` loop over the underlying float arrays, which is
-  * the difference between interpreting 64 lambda calls per pair and
-  * one fused loop per pair in the 100 TB pairwise-similarity path.
+  * Why a kernel: the higher-order-function formulation allocates a
+  * lambda frame per element and never enters whole-stage codegen's
+  * tight loop; [[dot]] is a primitive `while` loop over the underlying
+  * float arrays, which is the difference between interpreting 64
+  * lambda calls per pair and one fused loop per pair in the
+  * pairwise-similarity path.
+  *
+  * The declared `array<float>` input types are the plan-time guard:
+  * without them an `array<double>` argument would read 4-byte floats
+  * over 8-byte slots and return garbage rather than an analysis error.
   */
-case class FloatVecDot(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = DoubleType
-
-  /** Plan-time type enforcement: without it, an `array<double>`
-    * argument would read 4-byte floats over 8-byte slots and return
-    * GARBAGE numbers rather than an analysis error. */
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def isFloatArray(dt: DataType) = dt match {
-      case ArrayType(FloatType, _) => true
-      case _ => false
-    }
-    if (isFloatArray(left.dataType) && isFloatArray(right.dataType))
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"float_vec_dot requires (array<float>, array<float>), " +
-        s"got (${left.dataType.simpleString}, ${right.dataType.simpleString})")
-  }
-
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    // same semantics as aggregate(zip_with(...)): a length mismatch
-    // or null element yields NULL, never a silently-truncated product
+object FloatVecDot {
+  /** Null on a length mismatch or a null element — the semantics of
+    * `aggregate(zip_with(...))`, never a silently truncated product. */
+  def dot(x: ArrayData, y: ArrayData): java.lang.Double = {
     if (x.numElements() != y.numElements()) return null
     val n = x.numElements()
     var acc = 0.0
@@ -59,32 +36,7 @@ case class FloatVecDot(left: Expression, right: Expression)
     acc
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      s"""
-         |if ($x.numElements() != $y.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int $n = $x.numElements();
-         |  double $acc = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if ($x.isNullAt($i) || $y.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |    $acc += (double) $x.getFloat($i) * (double) $y.getFloat($i);
-         |  }
-         |  if (!${ev.isNull}) ${ev.value} = $acc;
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): FloatVecDot =
-    copy(left = l, right = r)
-}
-
-object FloatVecDot {
   def apply(a: Column, b: Column): Column =
-    ColumnBridge.column(
-      FloatVecDot(ColumnBridge.expression(a), ColumnBridge.expression(b)))
+    Kernel.call(this, "dot", DoubleType, Seq(ArrayType(FloatType), ArrayType(FloatType)),
+      Seq(a, b), mayReturnNull = true)
 }

@@ -1,13 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** All char-5-gram base-31 polynomial codes of a document in ONE
@@ -22,7 +17,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * agrees with both engines). Documents shorter than 5 code points
   * yield an empty array.
   *
-  * Why a custom expression: gramCodes is the dedup family's shared
+  * Why a kernel: gramCodes is the dedup family's shared
   * inner loop (d2/d3/d4/d11/d13/t4 all derive from the gram index) and
   * the former shape ran TWO interpreted `transform` lambdas per
   * document (char-code array build + per-position polynomial), boxing
@@ -32,51 +27,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * correctness depended on Spark ≥ 3.4 dropping the trailing empty
   * split element (r15 ADVICE): the bound here is structural.
   */
-case class GramCodes(child: Expression) extends UnaryExpression {
-
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "gram_codes"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"gram_codes requires string, got ${child.dataType.simpleString}")
-
-  override def nullSafeEval(input: Any): Any =
-    GramCodes.compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.GramCodes.compute($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): GramCodes =
-    copy(child = newChild)
-}
-
 object GramCodes {
-  /** Static hot path shared by interpreted and generated code. */
-  def compute(text: UTF8String): ArrayData = {
+  def compute(text: UTF8String): UnsafeArrayData = {
     val nBytes = text.numBytes
-    // decode UTF-8 code points (UTF8String payloads are valid UTF-8;
-    // continuation bytes are 10xxxxxx)
+    // decode UTF-8 code points (UTF8String payloads are valid UTF-8)
     val cp = new Array[Int](nBytes) // upper bound: 1 cp per byte
     var n = 0
     var i = 0
     while (i < nBytes) {
-      val b0 = text.getByte(i) & 0xff
-      if (b0 < 0x80) { cp(n) = b0; i += 1 }
-      else if (b0 < 0xe0) {
-        cp(n) = ((b0 & 0x1f) << 6) | (text.getByte(i + 1) & 0x3f)
-        i += 2
-      } else if (b0 < 0xf0) {
-        cp(n) = ((b0 & 0x0f) << 12) | ((text.getByte(i + 1) & 0x3f) << 6) |
-          (text.getByte(i + 2) & 0x3f)
-        i += 3
-      } else {
-        cp(n) = ((b0 & 0x07) << 18) | ((text.getByte(i + 1) & 0x3f) << 12) |
-          ((text.getByte(i + 2) & 0x3f) << 6) | (text.getByte(i + 3) & 0x3f)
-        i += 4
-      }
+      cp(n) = text.codePointFrom(i)
+      i += UTF8String.numBytesForFirstByte(text.getByte(i))
       n += 1
     }
     val grams = n - 4
@@ -92,5 +52,6 @@ object GramCodes {
   }
 
   def apply(c: Column): Column =
-    ColumnBridge.column(GramCodes(ColumnBridge.expression(c)))
+    Kernel.call(this, "compute", ArrayType(LongType, containsNull = false),
+      Seq(StringType), Seq(c))
 }

@@ -1,12 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, LongType}
 
 /** Codegen'd squared L2 distance of two `array<bigint>` columns —
   * `Σ (x_i − y_i)²` as one fused primitive loop, numerically identical
@@ -16,37 +12,16 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * far below overflow: diffs ≤ 2^21, squares ≤ 2^42, dim-64 sums
   * ≤ 2^48).
   *
-  * Why a custom Catalyst expression (same story as [[FloatVecDot]]):
-  * the HOF allocates a lambda frame per element and stays outside
-  * whole-stage codegen's tight loop. In k-means assignment the
-  * expression runs N×k times — with d8's corpus-scaled k this is the
-  * pipeline's hot loop, and the fused form measured ~10× the HOF's
-  * throughput at 10× gate scale.
+  * Why a kernel (same story as [[FloatVecDot]]): the HOF allocates a
+  * lambda frame per element and stays outside whole-stage codegen's
+  * tight loop. In k-means assignment the distance runs N×k times —
+  * with d8's corpus-scaled k this is the pipeline's hot loop, and the
+  * fused form measured ~10× the HOF's throughput at 10× gate scale.
   */
-case class LongVecDistSq(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def isLongArray(dt: DataType) = dt match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    }
-    if (isLongArray(left.dataType) && isLongArray(right.dataType))
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"long_vec_dist_sq requires (array<bigint>, array<bigint>), " +
-        s"got (${left.dataType.simpleString}, ${right.dataType.simpleString})")
-  }
-
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    // same semantics as the HOF: length mismatch or null element is
-    // NULL, never a silently-truncated distance
+object LongVecDistSq {
+  /** Null on a length mismatch or a null element (the HOF's
+    * semantics), never a silently truncated distance. */
+  def distSq(x: ArrayData, y: ArrayData): java.lang.Long = {
     if (x.numElements() != y.numElements()) return null
     val n = x.numElements()
     var acc = 0L
@@ -60,34 +35,7 @@ case class LongVecDistSq(left: Expression, right: Expression)
     acc
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      val d = ctx.freshName("d")
-      s"""
-         |if ($x.numElements() != $y.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int $n = $x.numElements();
-         |  long $acc = 0L;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if ($x.isNullAt($i) || $y.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |    long $d = $x.getLong($i) - $y.getLong($i);
-         |    $acc += $d * $d;
-         |  }
-         |  if (!${ev.isNull}) ${ev.value} = $acc;
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): LongVecDistSq =
-    copy(left = l, right = r)
-}
-
-object LongVecDistSq {
   def apply(a: Column, b: Column): Column =
-    ColumnBridge.column(
-      LongVecDistSq(ColumnBridge.expression(a), ColumnBridge.expression(b)))
+    Kernel.call(this, "distSq", LongType, Seq(ArrayType(LongType), ArrayType(LongType)),
+      Seq(a, b), mayReturnNull = true)
 }

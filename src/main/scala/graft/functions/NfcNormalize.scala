@@ -3,46 +3,28 @@ package graft.functions
 import java.text.Normalizer
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Unicode NFC normalization as a codegen'd Catalyst expression
-  * (SQL name `nfc_normalize`, matching DuckDB's function of the same
+/** Unicode NFC normalization as a codegen'd kernel (SQL name `nfc_normalize`, matching DuckDB's function of the same
   * name) — the canonicalization step of a text-curation pipeline:
   * decomposed sequences (`e` + U+0301) collapse to their precomposed
   * form (`é`), so downstream dedup/fingerprinting treats visually
   * identical documents as byte-identical.
   *
-  * Why a custom expression and not a UDF: the hot path is a static
+  * Why a kernel and not a UDF: the hot path is a static
   * JDK call (`java.text.Normalizer`), and `isNormalized` is a cheap
   * scan that short-circuits the (overwhelmingly common) ASCII case to
   * a zero-copy pass-through — inside whole-stage codegen there is no
   * row boxing, no Scala closure dispatch, and no UTF8String→String
   * round trip unless the row actually needs rewriting.
   */
-case class NfcNormalize(child: Expression) extends UnaryExpression {
-
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = StringType
-  override def prettyName: String = "nfc_normalize"
-
-  override def nullSafeEval(input: Any): Any =
-    NfcNormalize.normalize(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.NfcNormalize.normalize($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): NfcNormalize =
-    copy(child = newChild)
-}
-
 object NfcNormalize {
-  /** Static hot path shared by interpreted and generated code. Pure
-    * ASCII (the overwhelming bulk of a web corpus) is detected on the
-    * raw bytes and returned without ever materializing a j.l.String. */
+  /** Pure ASCII (the overwhelming bulk of a web corpus) is detected on
+    * the raw bytes and returned without ever materializing a
+    * j.l.String. */
   def normalize(s: UTF8String): UTF8String = {
     val n = s.numBytes
     var i = 0
@@ -54,5 +36,7 @@ object NfcNormalize {
   }
 
   def apply(c: Column): Column =
-    ColumnBridge.column(NfcNormalize(ColumnBridge.expression(c)))
+    Kernel.call(this, "normalize", StringType, Seq(StringType), Seq(c))
+
+  def apply(e: Expression): Expression = ColumnBridge.expression(apply(ColumnBridge.column(e)))
 }

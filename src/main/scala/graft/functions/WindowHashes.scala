@@ -1,13 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.catalyst.expressions.{UnsafeArrayData, XXH64}
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** All `w`-token sliding-window hashes of a space-tokenized document in
@@ -22,7 +18,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * the same XXH64/seed-42 primitive Spark's `xxhash64` uses makes the
   * result bit-identical with ZERO window-string allocations.
   *
-  * Why a custom expression (the d9/d10 hot path): the former
+  * Why a kernel (the d9/d10 hot path): the former
   * `explode(transform(sequence(1, n), i -> array_join(slice(t, i, w),
   * ' ')))` built one UTF8String per position per document — ~w× the
   * corpus in allocations — through an interpreted lambda, only for
@@ -30,50 +26,23 @@ import org.apache.spark.unsafe.types.UTF8String
   * shorter than `w` tokens yield an empty array (explode drops them —
   * the old `size(t) >= w` pre-filter, subsumed).
   */
-case class WindowHashes(child: Expression, w: Int) extends UnaryExpression {
-  require(w >= 1, s"window width must be >= 1, got $w")
-
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "window_hashes"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"window_hashes requires string, got ${child.dataType.simpleString}")
-
-  override def nullSafeEval(input: Any): Any =
-    WindowHashes.compute(input.asInstanceOf[UTF8String], w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.WindowHashes.compute($c, $w)")
-
-  override protected def withNewChildInternal(newChild: Expression): WindowHashes =
-    copy(child = newChild)
-}
-
 object WindowHashes {
   private val SEED = 42L // org.apache.spark.sql.catalyst.expressions.XxHash64's default
 
-  /** Static hot path shared by interpreted and generated code. */
-  def compute(text: UTF8String, w: Int): ArrayData = {
+  def compute(text: UTF8String, w: Int): UnsafeArrayData = {
     val nBytes = text.numBytes
-    var spaces = 0
-    var i = 0
-    while (i < nBytes) { if (text.getByte(i) == 0x20) spaces += 1; i += 1 }
-    val nToks = spaces + 1
-    val nWins = nToks - w + 1
-    if (nWins <= 0) return UnsafeArrayData.fromPrimitiveArray(Array.emptyLongArray)
     // token j (0-based) spans bytes [starts(j), starts(j+1) - 1); the
     // sentinel starts(nToks) = nBytes + 1 makes the last token uniform
-    val starts = new Array[Int](nToks + 1)
-    var t = 1
-    i = 0
+    val starts = new Array[Int](nBytes + 2) // upper bound: every byte a space
+    var nToks = 1
+    var i = 0
     while (i < nBytes) {
-      if (text.getByte(i) == 0x20) { starts(t) = i + 1; t += 1 }
+      if (text.getByte(i) == 0x20) { starts(nToks) = i + 1; nToks += 1 }
       i += 1
     }
     starts(nToks) = nBytes + 1
+    val nWins = nToks - w + 1
+    if (nWins <= 0) return UnsafeArrayData.fromPrimitiveArray(Array.emptyLongArray)
     val base = text.getBaseObject
     val off = text.getBaseOffset
     val out = new Array[Long](nWins)
@@ -86,6 +55,9 @@ object WindowHashes {
     UnsafeArrayData.fromPrimitiveArray(out)
   }
 
-  def apply(c: Column, w: Int): Column =
-    ColumnBridge.column(WindowHashes(ColumnBridge.expression(c), w))
+  def apply(c: Column, w: Int): Column = {
+    require(w >= 1, s"window width must be >= 1, got $w")
+    Kernel.call(this, "compute", ArrayType(LongType, containsNull = false),
+      Seq(StringType, IntegerType), Seq(c, lit(w)))
+  }
 }

@@ -473,7 +473,7 @@ object TextAnalysis {
     FROM raw"""
 
   /** Unicode NFC canonicalization ([[graft.functions.NfcNormalize]],
-    * a codegen'd Catalyst expression; SQL `nfc_normalize` matching
+    * a codegen'd kernel; SQL `nfc_normalize` matching
     * DuckDB's builtin of the same name). The corpus is ASCII, so like
     * t9 each row gets a deterministic fixture suffix: even doc_ids a
     * DECOMPOSED `cafe` + U+0301 (NFC collapses it, length shrinks by

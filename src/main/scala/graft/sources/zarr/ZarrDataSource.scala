@@ -18,6 +18,8 @@ import org.apache.spark.sql.sources.{EqualNullSafe, EqualTo, Filter, GreaterThan
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
+import ZarrDataSource.{colName, pushedCol}
+
 /** Spark DataSource V2 connector for Zarr v2/v3 stores — the rebuild
   * of the reference's `ZarrTable`/`ZarrExec` surface
   * (/root/reference/src/datasource/zarr.rs:19-255,
@@ -187,6 +189,20 @@ class ZarrDataSource extends TableProvider
 }
 
 object ZarrDataSource {
+
+  /** The column a pushed V2 expression names: `Some` for a single-part
+    * reference, `None` for anything else (nested field, computed
+    * expression). */
+  private[zarr] def colName(e: org.apache.spark.sql.connector.expressions.Expression)
+      : Option[String] = e match {
+    case r: NamedReference if r.fieldNames().length == 1 => Some(r.fieldNames().head)
+    case _ => None
+  }
+
+  /** [[colName]] of an expression the scan builder already accepted as
+    * a column (the metadata-only aggregate scans). */
+  private[zarr] def pushedCol(e: org.apache.spark.sql.connector.expressions.Expression): String =
+    colName(e).getOrElse(throw new IllegalStateException(s"pushed expression $e is not a column"))
 
   /** Shared sink path for the V1 hook and the DSv2 V1Write fallback
     * (CTAS / INSERT OVERWRITE): validate options, write the full store
@@ -389,12 +405,6 @@ class ZarrUnionScanBuilder(metas: Seq[ZarrStoreMeta], options: CaseInsensitiveSt
   private val delegates = metas.map(new ZarrScanBuilder(_, options))
   private var aggPushed: Option[Aggregation] = None
 
-  private def colName(e: org.apache.spark.sql.connector.expressions.Expression)
-      : Option[String] = e match {
-    case r: NamedReference if r.fieldNames().length == 1 => Some(r.fieldNames().head)
-    case _ => None
-  }
-
   /** Group-count planner heuristic: each member's grouped specs fold
     * its sidecar per-chunk map at planInputPartitions — driver
     * planning work proportional to the group count. The guard bounds
@@ -495,12 +505,6 @@ private[graft] object ZarrUnionGroups {
     * slightly conservative: a near-overflow union falls back to the
     * real scan; results are identical either way. */
   def mergeable(metas: Seq[ZarrStoreMeta], agg: Aggregation): Boolean = {
-    def colName(e: org.apache.spark.sql.connector.expressions.Expression)
-        : Option[String] = e match {
-      case r: NamedReference if r.fieldNames().length == 1 =>
-        Some(r.fieldNames().head)
-      case _ => None
-    }
     val kindsOk = agg.aggregateExpressions().forall {
       case _: CountStar => true
       case c: Count => !c.isDistinct
@@ -572,9 +576,6 @@ class ZarrUnionGroupAggScan(metas: Seq[ZarrStoreMeta], agg: Aggregation)
   * Schema matches [[ZarrAggScan]]; values combine across members. */
 class ZarrUnionAggScan(metas: Seq[ZarrStoreMeta], agg: Aggregation) extends Scan with Batch {
 
-  private def colName(e: org.apache.spark.sql.connector.expressions.Expression): String =
-    e.asInstanceOf[NamedReference].fieldNames().head
-
   override def readSchema(): StructType =
     new ZarrAggScan(metas.head, agg).readSchema()
 
@@ -590,26 +591,26 @@ class ZarrUnionAggScan(metas: Seq[ZarrStoreMeta], agg: Aggregation) extends Scan
       case _: CountStar => totalRows
       case c: Count if !c.isDistinct => totalRows
       case m: Min =>
-        val n = colName(m.column)
+        val n = pushedCol(m.column)
         val per = metas.map { meta =>
           val c = meta.coords.find(_.meta.name == n).get
           (c.min, ChunkCodec.elementAt(c.raw, GridMath.findCoordIndex(c.doubles, c.min)))
         }
         per.minBy(_._1)._2
       case m: Max =>
-        val n = colName(m.column)
+        val n = pushedCol(m.column)
         val per = metas.map { meta =>
           val c = meta.coords.find(_.meta.name == n).get
           (c.max, ChunkCodec.elementAt(c.raw, GridMath.findCoordIndex(c.doubles, c.max)))
         }
         per.maxBy(_._1)._2
       case s: Sum =>
-        val n = colName(s.column)
+        val n = pushedCol(s.column)
         val total = metas.map(m => ZarrSums.totalFor(m, n).get)
           .foldLeft(java.math.BigDecimal.ZERO)(_.add(_))
         if (ZarrSums.isIntegral(metas.head, n)) total.longValueExact() else total.doubleValue()
       case a: Avg =>
-        val n = colName(a.column)
+        val n = pushedCol(a.column)
         val total = metas.map(m => ZarrSums.totalFor(m, n).get)
           .foldLeft(java.math.BigDecimal.ZERO)(_.add(_))
         total.doubleValue() / totalRows
@@ -731,14 +732,10 @@ class ZarrScanBuilder(meta: ZarrStoreMeta, options: CaseInsensitiveStringMap)
     * roadmap row. */
   override def pushTopN(orders: Array[SortOrderV2], n: Int): Boolean = {
     if (limit.nonEmpty || offset != 0L || orders.isEmpty) return false
-    def colOf(o: SortOrderV2): Option[String] = o.expression() match {
-      case r: NamedReference if r.fieldNames().length == 1 => Some(r.fieldNames().head)
-      case _ => None
-    }
     val unfiltered = pushdown.unfiltered
-    if (unfiltered && orders.length <= meta.coords.length && prefixTopN(orders, n, colOf)) return true
+    if (unfiltered && orders.length <= meta.coords.length && prefixTopN(orders, n)) return true
     if (orders.length != 1 || fillAsNull || n <= 0 || n > maxTopN) return false
-    colOf(orders.head).filter(c => types.get(c).exists(CellRange.numeric)).exists { name =>
+    colName(orders.head.expression()).filter(c => types.get(c).exists(CellRange.numeric)).exists { name =>
       val desc = orders.head.direction() ==
         org.apache.spark.sql.connector.expressions.SortDirection.DESCENDING
       pushdown = pushdown.copy(fold = Some(TopNFold(name, desc, n)))
@@ -752,10 +749,9 @@ class ZarrScanBuilder(meta: ZarrStoreMeta, options: CaseInsensitiveStringMap)
     * STRICTLY increasing: a duplicate value in a non-last key makes
     * the row-major tuple sequence unsorted by these columns, and the
     * clipped window could miss true top-n rows. */
-  private def prefixTopN(orders: Array[SortOrderV2], n: Int,
-      colOf: SortOrderV2 => Option[String]): Boolean = {
+  private def prefixTopN(orders: Array[SortOrderV2], n: Int): Boolean = {
     val prefixOk = orders.zip(meta.coords).zipWithIndex.forall { case ((o, c), i) =>
-      colOf(o).contains(c.meta.name) && c.meta.dtype.kind != 'S' && {
+      colName(o.expression()).contains(c.meta.name) && c.meta.dtype.kind != 'S' && {
         val d = c.doubles
         val strict = i < orders.length - 1
         (1 until d.length).forall(j =>
@@ -834,12 +830,6 @@ class ZarrScanBuilder(meta: ZarrStoreMeta, options: CaseInsensitiveStringMap)
     }
     if (groupsOk && aggs.forall(_.isDefined)) Some(AggFold(names, aggs.flatten)) else None
   }
-
-  private def colName(e: org.apache.spark.sql.connector.expressions.Expression): Option[String] =
-    e match {
-      case r: NamedReference if r.fieldNames().length == 1 => Some(r.fieldNames().head)
-      case _ => None
-    }
 
   private def numericCoord(name: String): Boolean =
     meta.coords.exists(c => c.meta.name == name && c.meta.dtype.kind != 'S')
@@ -997,9 +987,7 @@ class ZarrScan(
     val coordIdx = meta.coordNames.zipWithIndex.toMap
     predicates.foreach { p =>
       val children = p.children()
-      val dimOpt = children.headOption.collect {
-        case r: NamedReference if r.fieldNames().length == 1 => r.fieldNames().head
-      }.flatMap(coordIdx.get)
+      val dimOpt = children.headOption.flatMap(colName).flatMap(coordIdx.get)
       val values = children.drop(1).collect {
         case l: org.apache.spark.sql.connector.expressions.Literal[_] =>
           l.value() match {
@@ -1162,17 +1150,10 @@ class ZarrScan(
     out ++ (foldCols ++ cellPreds.map(_._1)).distinct.filterNot(out.contains)
   }
 
-  private def projectionOf(names: Seq[String]): Seq[ProjField] = names.map { n =>
-    val ci = meta.coordNames.indexOf(n)
-    if (ci >= 0) CoordField(ci)
-    else VarField(meta.dataVars.find(_.name == n).getOrElse(
-      throw new IllegalArgumentException(s"Unknown column $n")))
-  }
-
   /** The partition template carrying the pushdown: the slice bounds are
     * filled in per partition. */
   private def partition(r: GridMath.Ranges): ZarrInputPartition = {
-    ZarrInputPartition(meta.path, 0L, 0L, r, meta.coords, projectionOf(readNames),
+    ZarrInputPartition(meta.path, 0L, 0L, r, meta.coords, meta.projection(readNames),
       fillAsNull, chunkCacheEntries, prefetch,
       preds = cellPreds.map { case (n, cr) => CellPred(n, cr) },
       fold = fold,
@@ -1190,11 +1171,6 @@ class ZarrScan(
   }
 
   private def slices(r: GridMath.Ranges): Array[InputPartition] = {
-      // split where the DATA chunks split: the smallest chunk extent
-      // along dim 0 across data variables (coordinate arrays are
-      // irrelevant here — they're usually single-chunk)
-      val outerChunk = meta.dataVars.map(_.chunks.head)
-        .reduceOption(math.min).filter(_ > 0).getOrElse(1)
       val template = partition(r)
       if (keyGrouped) {
         // one partition per outer index, tagged with its coordinate
@@ -1224,12 +1200,9 @@ class ZarrScan(
         .map(math.min(_, GridMath.totalRows(r))).getOrElse(GridMath.totalRows(r))
       val target =
         if (maxPartitions > 0) (selected + maxPartitions - 1) / maxPartitions else 0L
-      GridMath.partitionSlices(r, outerChunk, rowSpaceLimit,
-        math.max(minRowsPerPartition, target),
-        // per-dim minimum data-chunk extents: sub-slab splits align to
-        // the inner chunk grid so partitions own whole chunks
-        innerChunks = (0 until meta.coords.length).map(d =>
-          meta.dataVars.map(_.chunks(d)).reduceOption(math.min).filter(_ > 0).getOrElse(1)),
+      val extents = meta.chunkExtents
+      GridMath.partitionSlices(r, extents.head, rowSpaceLimit,
+        math.max(minRowsPerPartition, target), innerChunks = extents,
         // split cap at 2× the merge floor: a merge that lands between
         // target and 2×target stays one partition instead of
         // re-splitting to per-outer-step slices
@@ -1547,19 +1520,16 @@ private[zarr] object ZarrSums {
   * of the reference's CountStatisticsRule / MinMaxStatisticsRule. */
 class ZarrAggScan(meta: ZarrStoreMeta, agg: Aggregation) extends Scan with Batch {
 
-  private def colName(e: org.apache.spark.sql.connector.expressions.Expression): String =
-    e.asInstanceOf[NamedReference].fieldNames().head
-
   override def readSchema(): StructType = StructType(
     agg.aggregateExpressions().zipWithIndex.map {
       case (_: CountStar, i) => StructField(s"count_$i", LongType, nullable = false)
       case (_: Count, i) => StructField(s"count_$i", LongType, nullable = false)
       case (m: Min, i) =>
-        StructField(s"min_$i", meta.schema(colName(m.column)).dataType, nullable = true)
+        StructField(s"min_$i", meta.schema(pushedCol(m.column)).dataType, nullable = true)
       case (m: Max, i) =>
-        StructField(s"max_$i", meta.schema(colName(m.column)).dataType, nullable = true)
+        StructField(s"max_$i", meta.schema(pushedCol(m.column)).dataType, nullable = true)
       case (s: Sum, i) =>
-        val t = if (ZarrSums.isIntegral(meta, colName(s.column))) LongType else DoubleType
+        val t = if (ZarrSums.isIntegral(meta, pushedCol(s.column))) LongType else DoubleType
         StructField(s"sum_$i", t, nullable = true)
       case (_: Avg, i) => StructField(s"avg_$i", DoubleType, nullable = true)
       case (other, _) => throw new IllegalStateException(s"Unexpected pushed agg: $other")
@@ -1576,21 +1546,21 @@ class ZarrAggScan(meta: ZarrStoreMeta, agg: Aggregation) extends Scan with Batch
     val values: Array[Any] = agg.aggregateExpressions().map {
       case _: CountStar => meta.totalRows
       case c: Count if !c.isDistinct => meta.totalRows // null_count is 0 for every column
-      case c: Count => coordByName(colName(c.column)).length.toLong
+      case c: Count => coordByName(pushedCol(c.column)).length.toLong
       case m: Min =>
-        val c = coordByName(colName(m.column))
+        val c = coordByName(pushedCol(m.column))
         ChunkCodec.elementAt(c.raw, GridMath.findCoordIndex(c.doubles, c.min))
       case m: Max =>
-        val c = coordByName(colName(m.column))
+        val c = coordByName(pushedCol(m.column))
         ChunkCodec.elementAt(c.raw, GridMath.findCoordIndex(c.doubles, c.max))
       case s: Sum =>
-        val n = colName(s.column)
+        val n = pushedCol(s.column)
         val total = ZarrSums.totalFor(meta, n).get
         if (ZarrSums.isIntegral(meta, n)) total.longValueExact() else total.doubleValue()
       case a: Avg =>
         // double division of the exact total — identical to Spark's
         // sum.toDouble / count and to the oracle's CAST(s AS DOUBLE)/n
-        ZarrSums.totalFor(meta, colName(a.column)).get.doubleValue() / meta.totalRows
+        ZarrSums.totalFor(meta, pushedCol(a.column)).get.doubleValue() / meta.totalRows
       case other => throw new IllegalStateException(s"Unexpected pushed agg: $other")
     }
     Array(ZarrAggPartition(values))
@@ -1607,10 +1577,7 @@ class ZarrAggScan(meta: ZarrStoreMeta, agg: Aggregation) extends Scan with Batch
   * dimension, so even a million-group dimension emits in parallel. */
 class ZarrGroupAggScan(meta: ZarrStoreMeta, agg: Aggregation) extends Scan with Batch {
 
-  private def colNameOf(e: org.apache.spark.sql.connector.expressions.Expression): String =
-    e.asInstanceOf[NamedReference].fieldNames().head
-
-  private val groupNames: Seq[String] = agg.groupByExpressions().map(colNameOf).toSeq
+  private val groupNames: Seq[String] = agg.groupByExpressions().map(pushedCol).toSeq
   private val groupDims: Seq[Int] = groupNames.map(meta.coordNames.indexOf)
   private val groupedSet = groupNames.toSet
   private val coordByName = meta.coords.map(c => c.meta.name -> c).toMap
@@ -1627,19 +1594,19 @@ class ZarrGroupAggScan(meta: ZarrStoreMeta, agg: Aggregation) extends Scan with 
   private lazy val specs: Seq[ZarrGroupAggSpec] = agg.aggregateExpressions().toSeq.map {
     case _: CountStar => ZarrAggConst(rowsPerGroup)
     case c: Count if !c.isDistinct => ZarrAggConst(rowsPerGroup) // null_count 0 everywhere
-    case c: Count => ZarrAggConst(coordByName(colNameOf(c.column)).length.toLong)
+    case c: Count => ZarrAggConst(coordByName(pushedCol(c.column)).length.toLong)
     case m: Min =>
-      val n = colNameOf(m.column)
+      val n = pushedCol(m.column)
       if (groupedSet(n)) ZarrAggGroupVal(groupNames.indexOf(n))
       else { val c = coordByName(n)
         ZarrAggConst(ChunkCodec.elementAt(c.raw, GridMath.findCoordIndex(c.doubles, c.min))) }
     case m: Max =>
-      val n = colNameOf(m.column)
+      val n = pushedCol(m.column)
       if (groupedSet(n)) ZarrAggGroupVal(groupNames.indexOf(n))
       else { val c = coordByName(n)
         ZarrAggConst(ChunkCodec.elementAt(c.raw, GridMath.findCoordIndex(c.doubles, c.max))) }
     case s: Sum =>
-      val n = colNameOf(s.column)
+      val n = pushedCol(s.column)
       val (totals, dflt) = ZarrSums.groupTotals(meta, n, groupDims).get
       if (ZarrSums.isIntegral(meta, n))
         ZarrAggGroupTotal(totals.map { case (k, v) => k -> (v.longValueExact(): Any) },
@@ -1648,7 +1615,7 @@ class ZarrGroupAggScan(meta: ZarrStoreMeta, agg: Aggregation) extends Scan with 
         ZarrAggGroupTotal(totals.map { case (k, v) => k -> (v.doubleValue(): Any) },
           dflt.doubleValue())
     case a: Avg =>
-      val n = colNameOf(a.column)
+      val n = pushedCol(a.column)
       val (totals, dflt) = ZarrSums.groupTotals(meta, n, groupDims).get
       ZarrAggGroupTotal(
         totals.map { case (k, v) => k -> (v.doubleValue() / rowsPerGroup: Any) },
@@ -1662,11 +1629,11 @@ class ZarrGroupAggScan(meta: ZarrStoreMeta, agg: Aggregation) extends Scan with 
         case (_: CountStar, i) => StructField(s"count_$i", LongType, nullable = false)
         case (_: Count, i) => StructField(s"count_$i", LongType, nullable = false)
         case (m: Min, i) =>
-          StructField(s"min_$i", meta.schema(colNameOf(m.column)).dataType, nullable = true)
+          StructField(s"min_$i", meta.schema(pushedCol(m.column)).dataType, nullable = true)
         case (m: Max, i) =>
-          StructField(s"max_$i", meta.schema(colNameOf(m.column)).dataType, nullable = true)
+          StructField(s"max_$i", meta.schema(pushedCol(m.column)).dataType, nullable = true)
         case (s: Sum, i) =>
-          val t = if (ZarrSums.isIntegral(meta, colNameOf(s.column))) LongType else DoubleType
+          val t = if (ZarrSums.isIntegral(meta, pushedCol(s.column))) LongType else DoubleType
           StructField(s"sum_$i", t, nullable = true)
         case (_: Avg, i) => StructField(s"avg_$i", DoubleType, nullable = true)
         case (other, _) => throw new IllegalStateException(s"Unexpected pushed agg: $other")

@@ -172,6 +172,23 @@ final case class ZarrStoreMeta(
   def coordNames: Seq[String] = coords.map(_.meta.name)
   def totalRows: Long = coords.map(_.length.toLong).product
 
+  /** Reader fields for the named columns, in order: a coordinate by its
+    * dimension, a data variable by its array metadata. */
+  def projection(names: Seq[String]): Seq[ProjField] = names.map { n =>
+    val ci = coordNames.indexOf(n)
+    if (ci >= 0) CoordField(ci)
+    else VarField(dataVars.find(_.name == n).getOrElse(
+      throw new IllegalArgumentException(s"Unknown column $n")))
+  }
+
+  /** Per-dimension split unit for partitions: the smallest DATA chunk
+    * extent across data variables (1 with none). Coordinate arrays are
+    * irrelevant here — they're usually single-chunk. Partitions split
+    * along dim 0 at multiples of the head and, for sub-slab splits, at
+    * the inner extents, so each owns whole chunks. */
+  def chunkExtents: Seq[Int] = coords.indices.map(d =>
+    dataVars.map(_.chunks(d)).reduceOption(math.min).filter(_ > 0).getOrElse(1))
+
   private def fieldMeta(attrs: Map[String, String]): Metadata =
     attrs.foldLeft(new MetadataBuilder()) { case (b, (k, v)) =>
       // `_ARRAY_DIMENSIONS` is the xarray dimension-naming convention

@@ -185,21 +185,12 @@ class ZarrMicroBatchStream(
         val hi = math.min(r(0)._2, e0.toInt)
         if (lo >= hi) return Array.empty
         val ranges = r.updated(0, (lo, hi))
-        val outerChunk = meta.dataVars.map(_.chunks.head)
-          .reduceOption(math.min).filter(_ > 0).getOrElse(1)
-        val projection: Seq[ProjField] = requiredSchema.fields.toSeq.map { f =>
-          val ci = meta.coordNames.indexOf(f.name)
-          if (ci >= 0) CoordField(ci)
-          else VarField(meta.dataVars.find(_.name == f.name).getOrElse(
-            throw new IllegalArgumentException(s"Unknown column ${f.name}")))
-        }
-        GridMath.partitionSlices(ranges, outerChunk, None, minRowsPerPartition,
-          // same inner-chunk-aligned sub-slab splitting as the batch
-          // scan: an appended slab with a huge inner grid must not
-          // serialize a whole micro-batch through one task
-          innerChunks = (0 until meta.coords.length).map(d =>
-            meta.dataVars.map(_.chunks(d)).reduceOption(math.min).filter(_ > 0).getOrElse(1)),
-          maxRowsPerPartition = maxRowsPerPartition)
+        val projection = meta.projection(requiredSchema.fieldNames.toSeq)
+        // inner-chunk-aligned sub-slab splitting: an appended slab with a
+        // huge inner grid must not serialize a micro-batch through one task
+        val extents = meta.chunkExtents
+        GridMath.partitionSlices(ranges, extents.head, None, minRowsPerPartition,
+          innerChunks = extents, maxRowsPerPartition = maxRowsPerPartition)
           .map(s => ZarrInputPartition(path, s._1, s._2, ranges, meta.coords,
             projection, fillAsNull, chunkCacheEntries, prefetch): InputPartition)
           .toArray
