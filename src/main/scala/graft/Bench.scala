@@ -50,17 +50,19 @@ object Bench {
       finally src.close()
     } catch { case _: Exception => "" }
 
-  /** `SPARK_GRAFT_CPUS` as the `local[N]` worker count (4 when unset).
-    * It lands in the master URL and as a bare number in the headline
-    * JSON, so anything but a positive integer is refused up front. */
-  private[graft] def cpusOf(raw: Option[String]): Int = raw.fold(4) { s =>
+  /** `SPARK_GRAFT_CPUS` as the `local[N]` worker count (`default`, 4
+    * for the bench, when unset). It lands in the master URL and as a
+    * bare number in the headline JSON, so anything but a positive
+    * integer is refused up front. */
+  private[graft] def cpusOf(raw: Option[String], default: Int = 4): Int = raw.fold(default) { s =>
     s.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
       s"SPARK_GRAFT_CPUS must be a positive integer, got '$s'"))
   }
 
   /** The bench session: `local[cpus]`, UTC, graft's extensions, AQE
-    * and V2 bucketing. [[BenchOne]] uses it too, so a single-query
-    * timing measures the configuration the bench measures.
+    * and V2 bucketing. [[BenchOne]] and the zarr fuzz runners use it
+    * too, so a single-query timing or a fuzz lane plans what the bench
+    * plans.
     * SPARK_GRAFT_SHUFFLE: shuffle-partition override for scale probes.
     * The default (= cores) is right at gate scale, but partition count
     * must track DATA volume, not core count: at sf10p the minhash band

@@ -6,9 +6,12 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
 import graft.functions.{FloatVecDot, NfcNormalize}
+import graft.sources.zarr.ZarrFoldMerge
 
 /** Session extensions: registers graft's codegen'd kernels
-  * ([[graft.functions.Kernel]]) for SQL use. Activate with
+  * ([[graft.functions.Kernel]]) for SQL use, and the planner strategy
+  * that merges a folded Zarr aggregate's partial rows on the driver
+  * ([[graft.sources.zarr.ZarrFoldMerge]]). Activate with
   * `.config("spark.sql.extensions", "graft.GraftExtensions")` or
   * `.withExtensions(new GraftExtensions)` — the
   * SparkSessionExtensions injection slot SURVEY.md §4.3 reserves for
@@ -32,6 +35,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 
   override def apply(e: SparkSessionExtensions): Unit = {
+    e.injectPlannerStrategy(_ => ZarrFoldMerge)
     e.injectFunction((
       new FunctionIdentifier("float_vec_dot"),
       new ExpressionInfo(FloatVecDot.getClass.getName, "float_vec_dot"),

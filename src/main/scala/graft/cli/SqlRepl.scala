@@ -379,13 +379,15 @@ object SqlRepl {
     * execute the query, then report each scan's post-run SQL metrics —
     * the DSv2 custom metrics (zarrBytesRead / zarrChunksDecoded /
     * zarrRowsOut, the rows the scan handed Spark after its folds) plus
-    * output rows — so "did that filter prune chunk IO?" is answerable
-    * from the shell. */
+    * output rows, and under a folded aggregate a `merge:` line with the
+    * partial rows merged on the driver and the time it took — so "did
+    * that filter prune chunk IO?" is answerable from the shell. */
   private def runAnalyze(spark: SparkSession, sql: String,
       out: String => Unit): Unit = {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    import graft.sources.zarr.ZarrFoldMergeExec
     val t0 = System.nanoTime()
     try {
       val df = spark.sql(sql)
@@ -398,16 +400,19 @@ object SqlRepl {
         df.queryExecution.toRdd.mapPartitions(
           it => Iterator.single(it.size.toLong)).collect().sum
       }
-      def scansOf(p: SparkPlan): Seq[BatchScanExec] = p match {
-        case a: AdaptiveSparkPlanExec => scansOf(a.executedPlan)
-        case s: QueryStageExec => scansOf(s.plan)
-        case b: BatchScanExec => Seq(b)
-        case o => o.children.flatMap(scansOf)
-      }
+      // each scan, with the driver-side merge of its partial rows above it
+      def scansOf(p: SparkPlan, merge: Option[ZarrFoldMergeExec]): Seq[(BatchScanExec, Option[ZarrFoldMergeExec])] =
+        p match {
+          case a: AdaptiveSparkPlanExec => scansOf(a.executedPlan, merge)
+          case s: QueryStageExec => scansOf(s.plan, merge)
+          case m: ZarrFoldMergeExec => scansOf(m.child, Some(m))
+          case b: BatchScanExec => Seq(b -> merge)
+          case o => o.children.flatMap(scansOf(_, merge))
+        }
       out(f"$n rows | ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      val scans = scansOf(df.queryExecution.executedPlan)
+      val scans = scansOf(df.queryExecution.executedPlan, None)
       if (scans.isEmpty) out("no v2 scans in plan")
-      scans.foreach { b =>
+      scans.foreach { case (b, merge) =>
         val top = Seq("numOutputRows", "zarrBytesRead", "zarrChunksDecoded", "zarrRowsOut")
           .flatMap(k => b.metrics.get(k).map(m => s"$k=${m.value}"))
         // metadata-answered scans (COUNT/MIN/MAX/SUM/grouped variants,
@@ -430,6 +435,10 @@ object SqlRepl {
                 out(s"  member $i [${u.scans(i).storePath}]: ${mm.mkString("  ")}")
             }
           case _ =>
+        }
+        merge.foreach { m =>
+          out(f"merge: partialRows=${m.metrics("partialRows").value}  " +
+            f"mergeTime=${m.metrics("mergeTime").value / 1e6}%.3f ms")
         }
       }
     } catch {

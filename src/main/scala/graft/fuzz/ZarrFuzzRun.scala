@@ -1,6 +1,5 @@
 package graft.fuzz
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
@@ -54,17 +53,7 @@ object ZarrFuzzRun {
     val Array(sfDir, outDir) = args.take(2)
     val nSeeds = if (args.length > 2) args(2).toInt else 250
     val seed0 = if (args.length > 3) args(3).toLong else 0L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Bench.session(graft.Bench.cpusOf(sys.env.get("SPARK_GRAFT_CPUS"), 8))
 
     // oracle relations: grid exports + the sf corpus under one dir
     val tablesDir = s"${outDir}_tables"

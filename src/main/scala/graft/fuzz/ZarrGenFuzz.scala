@@ -342,14 +342,7 @@ object ZarrGenFuzzRun {
     val outDir = if (args.nonEmpty) args(0) else "/tmp/genfuzz_out"
     val nSeeds = if (args.length > 1) args(1).toInt else 250
     val seed0 = if (args.length > 2) args(2).toLong else 0L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Bench.session(graft.Bench.cpusOf(sys.env.get("SPARK_GRAFT_CPUS"), 8))
     spark.sparkContext.setLogLevel("ERROR")
     val c = new ZarrGenFuzz.Counters
     var failed = 0

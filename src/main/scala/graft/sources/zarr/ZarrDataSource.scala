@@ -953,7 +953,9 @@ class ZarrScan(
     }
 
   private val fold = pushdown.fold
-  private val aggFold = fold.collect { case a: AggFold => a }
+  /** The partial aggregate the scan folds, if any: [[ZarrFoldMerge]]
+    * merges its rows on the driver. */
+  private[zarr] val aggFold = fold.collect { case a: AggFold => a }
   /** Data-variable predicates compact rows away in the reader. */
   private val cellPreds = pushdown.cellPreds
   private val varBounds = pushdown.varBounds
@@ -1028,11 +1030,16 @@ class ZarrScan(
         })
   }
 
-  /** Key-grouped ("storage-partitioned") mode is active when requested
-    * AND the shape allows it: one partition per outer index, each
-    * tagged with its outer coordinate value, so `groupBy(outer)` and
-    * same-grid joins need NO shuffle (Spark's storage-partitioned
-    * execution, `spark.sql.sources.v2.bucketing.enabled`). Guards:
+  /** Key-grouped ("storage-partitioned") mode, read option
+    * `partitionByOuter`, is active when requested AND the shape allows
+    * it: one partition per outer index, each tagged with its outer
+    * coordinate value, so `groupBy(outer)` and same-grid joins need NO
+    * shuffle (Spark's storage-partitioned execution,
+    * `spark.sql.sources.v2.bucketing.enabled`). A folded aggregate
+    * needs neither (its partial rows merge on the driver,
+    * [[ZarrFoldMerge]]); what still needs it is a GROUP BY the scan
+    * cannot fold — `z1_zarr_group_agg`'s integral SUM — and same-grid
+    * joins. Guards:
     * the outer coordinate must be projected (it is the key), strictly
     * increasing (distinct key per partition), numeric, and no
     * limit/offset (their row clipping crosses partition keys). */

@@ -28,7 +28,9 @@ object ZarrQueries {
   /** Flattened-grid group aggregate (the reference's marquee query
     * shape, README.md:227-233), run storage-partitioned: each time
     * step is one key-tagged partition, so the aggregation needs no
-    * shuffle at any grid size (ZarrKeyGroupedSpec asserts the plan). */
+    * shuffle at any grid size (ZarrKeyGroupedSpec asserts the plan).
+    * The scan folds no integral SUM, so Spark aggregates here, and
+    * `partitionByOuter` is what spares it the shuffle. */
   def z1_zarr_group_agg(s: SparkSession, dir: String): DataFrame =
     s.read.format("zarr").option("partitionByOuter", "true").load(store)
       .groupBy("time")

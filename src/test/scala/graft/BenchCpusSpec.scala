@@ -14,6 +14,12 @@ class BenchCpusSpec extends AnyFunSuite {
     assert(Bench.cpusOf(Some(" 32\n")) == 32)
   }
 
+  test("a caller's default applies only when unset") {
+    // the zarr fuzz runners default to 8
+    assert(Bench.cpusOf(None, 8) == 8)
+    assert(Bench.cpusOf(Some("2"), 8) == 2)
+  }
+
   test("non-numeric or non-positive values are refused by name") {
     Seq("", "four", "8c", "2.5", "0", "-3", "8,9", "99999999999").foreach { bad =>
       val e = intercept[IllegalArgumentException](Bench.cpusOf(Some(bad)))

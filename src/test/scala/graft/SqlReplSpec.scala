@@ -196,6 +196,24 @@ class SqlReplSpec extends AnyFunSuite {
       l.contains("metadata-only: zero chunk IO")), out.mkString("\n"))
   }
 
+  test("\\analyze prints a merge: line after the scan of a folded aggregate") {
+    import spark.implicits._
+    val store = java.nio.file.Files.createTempDirectory("repl_merge").resolve("m.zarr").toString
+    (for (t <- 0L until 4L; x <- 0L until 5L) yield (t, x, (t * 5 + x).toFloat * 0.5f))
+      .toDF("t", "x", "v").write.format("zarr").option("coords", "t,x").option("chunkOuter", "1")
+      .mode("overwrite").save(store)
+    val out = drive(
+      s"CREATE TABLE repl_m USING zarr OPTIONS (path '$store', minRowsPerPartition '1', maxRowsPerPartition '5');",
+      "\\analyze SELECT t, SUM(v) AS s, MAX(v) AS m FROM repl_m WHERE v > 1.0 GROUP BY t;",
+      "DROP TABLE repl_m;",
+      "quit")
+    assert(out.exists(_.matches("4 rows \\| .*s")), out.mkString("\n"))
+    val scan = out.indexWhere(_.startsWith("scan ZarrScan"))
+    assert(scan >= 0, out.mkString("\n"))
+    // one partial row per outer step, merged on the driver
+    assert(out(scan + 1).matches("merge: partialRows=4  mergeTime=[0-9.]+ ms"), out.mkString("\n"))
+  }
+
   test("EXPLAIN ANALYZE / EXPLAIN VERBOSE SQL dialects work like the reference CLI") {
     val store = java.nio.file.Paths.get("src/test/resources/zarr/synthetic_v3.zarr")
       .toAbsolutePath.toString

@@ -13,14 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.zarr.{AggFold, FoldCount, FoldSum, VarField, ZarrColumnarReader, ZarrInputPartition, ZarrMeta}
 
-/** Every shape the Zarr scan evaluates itself — exact filters, partial
-  * aggregates, in-scan top-N — against the same query over the
-  * table's collected rows. Three grids: a v2 store, a v3 sharded store
-  * and a hand-written v2 store with NaN cells, −0.0, absent chunks and
-  * a non-monotone coordinate. Cell values are multiples of 1/4, so
-  * every SUM and AVG is exact and must match bit for bit whatever
-  * order Spark merges partitions in. */
-class ZarrFoldSpec extends AnyFunSuite {
+/** The grids and shapes [[ZarrFoldSpec]] and [[ZarrFoldMergeSpec]] share. */
+object ZarrFoldSpec {
   import TestSession._
 
   private val (nt, ny, nx) = (6, 7, 9)
@@ -44,13 +38,13 @@ class ZarrFoldSpec extends AnyFunSuite {
     out
   }
 
-  private lazy val v2 = written(2)
-  private lazy val v3 = written(3)
+  lazy val v2 = written(2)
+  lazy val v3 = written(3)
 
   /** t = [3, 1, 2, 0, 5] (non-monotone), x = [-1.5, -0.0, 0.5, 2.0];
     * v <f4 with NaN, ±0.0 and ±Inf cells, chunks 2×2 with chunk 1.1
     * absent (fill NaN); w <f8 (fill 0.5, chunk 2.0 absent); k <i4. */
-  private lazy val edge: String = {
+  lazy val edge: String = {
     val root = Files.createTempDirectory("zarr_fold_edge")
     def write(rel: String, b: Array[Byte]): Unit = {
       val p = root.resolve(rel); Files.createDirectories(p.getParent); Files.write(p, b)
@@ -93,28 +87,28 @@ class ZarrFoldSpec extends AnyFunSuite {
 
   /** Partitions cut inside a 63-row slab; a partial aggregate may span
     * up to 60 groups (x, t has 54). */
-  private def zarr(path: String): DataFrame = spark.read.format("zarr")
+  def zarr(path: String): DataFrame = spark.read.format("zarr")
     .option("minRowsPerPartition", "1").option("maxRowsPerPartition", "60").load(path)
 
   /** The table's rows, collected and re-parallelized: the reference side
     * shares no pushdown with the scan under test. */
-  private def local(z: DataFrame): DataFrame =
+  def local(z: DataFrame): DataFrame =
     spark.createDataFrame(spark.sparkContext.parallelize(z.collect().toSeq, 3), z.schema)
 
   /** Doubles by bits, −0.0 folded onto 0.0 (Spark's equality): SUM/AVG
     * must agree bit for bit. */
-  private def canon(v: Any): Any = v match {
+  def canon(v: Any): Any = v match {
     case d: Double => java.lang.Double.doubleToLongBits(if (d == 0.0) 0.0 else d)
     case f: Float => java.lang.Double.doubleToLongBits(if (f == 0.0f) 0.0 else f.toDouble)
     case o => o
   }
-  private def rowsOf(df: DataFrame): Seq[String] =
+  def rowsOf(df: DataFrame): Seq[String] =
     df.collect().map(_.toSeq.map(canon).mkString("|")).sorted.toSeq
 
-  private def scanDesc(df: DataFrame): String =
+  def scanDesc(df: DataFrame): String =
     df.queryExecution.sparkPlan.collect { case b: BatchScanExec => b.scan.description() }.mkString(" ; ")
 
-  private def shapes(d: DataFrame): Seq[(String, DataFrame, String)] = {
+  def shapes(d: DataFrame): Seq[(String, DataFrame, String)] = {
     val pred = col("v") > -3.0f && col("w") <= 20.0
     val aggs = Seq(count(lit(1)), count("v"), sum("v"), avg("v"), sum("w"), avg("w"),
       min("v"), max("v"), min("w"), max("w"), min("k"), max("k"))
@@ -128,6 +122,18 @@ class ZarrFoldSpec extends AnyFunSuite {
       ("grouped by x, t", d.where(col("k") < 5).groupBy("x", "t").agg(count(lit(1)), sum("v"), max("k")),
         "groupBy=[x,t]"))
   }
+}
+
+/** Every shape the Zarr scan evaluates itself — exact filters, partial
+  * aggregates, in-scan top-N — against the same query over the
+  * table's collected rows. Three grids: a v2 store, a v3 sharded store
+  * and a hand-written v2 store with NaN cells, −0.0, absent chunks and
+  * a non-monotone coordinate. Cell values are multiples of 1/4, so
+  * every SUM and AVG is exact and must match bit for bit whatever
+  * order Spark merges partitions in. */
+class ZarrFoldSpec extends AnyFunSuite {
+  import TestSession._
+  import ZarrFoldSpec._
 
   private def topN(d: DataFrame): Seq[(String, DataFrame, String)] = Seq(
     ("top-N DESC", d.where(col("w") < 20.0).orderBy(desc("v")).limit(7), "topN=v DESC 7"),
