@@ -423,16 +423,18 @@ object SqlRepl {
               b.scan.description().contains("metadata-only"))
             "  (metadata-only: zero chunk IO)"
           else ""
-        out(s"scan ${b.scan.getClass.getSimpleName}: ${top.mkString("  ")}$note")
+        // the description's leading marker names the scan's shape
+        // (ZarrScan, ZarrUnionScan, ZarrAggScan, …)
+        out(s"scan ${b.scan.description().takeWhile(_.isLetterOrDigit)}: ${top.mkString("  ")}$note")
         // union scans: per-member IO breakdown (metric names carry the
         // member ordinal; resolve each ordinal to its store path)
         b.scan match {
-          case u: graft.sources.zarr.ZarrUnionScan =>
-            u.scans.indices.foreach { i =>
+          case z: graft.sources.zarr.ZarrScan if z.storePaths.length > 1 =>
+            z.storePaths.zipWithIndex.foreach { case (path, i) =>
               val mm = Seq(s"zarrBytesRead.m$i", s"zarrChunksDecoded.m$i")
                 .flatMap(k => b.metrics.get(k).map(m => s"$k=${m.value}"))
               if (mm.nonEmpty)
-                out(s"  member $i [${u.scans(i).storePath}]: ${mm.mkString("  ")}")
+                out(s"  member $i [$path]: ${mm.mkString("  ")}")
             }
           case _ =>
         }

@@ -72,8 +72,9 @@ object ZarrFuzzRun {
       // grammar v3: pushdown composition over the sharded-v3 fixture
       // and the multi-store union's executor-merged aggregates
       "shard_range" -> 0, "union_agg" -> 0, "union_group_agg" -> 0,
-      // grammar v4: partial aggregates and top-N folded in the scan
-      "scan_fold" -> 0)
+      // grammar v4: partial aggregates and top-N folded in the scan;
+      // union reads that answer filters exactly or fold
+      "scan_fold" -> 0, "union_fold" -> 0)
       .withDefaultValue(0)
     var failed = 0
     val sqls = (seed0 until seed0 + nSeeds).map { seed =>
@@ -87,6 +88,9 @@ object ZarrFuzzRun {
         if (descs.exists(statsTopN)) markers("topn") += 1
         // a partial aggregate or top-N folded inside the scan
         if (descs.exists(d => d.contains(" partialAgg=") || d.contains(" topN="))) markers("scan_fold") += 1
+        if (descs.exists(d => d.startsWith("ZarrUnionScan(") && (d.contains(" partialAgg=") ||
+            d.contains(" topN=") || "exactFilters=\\[[^\\]]".r.findFirstIn(d).isDefined)))
+          markers("union_fold") += 1
         // coordinate-prefix TopN pushes as either limit (ASC) or
         // offset (DESC) — both count as the limit-subset family
         val off = "offset=(\\d+)".r

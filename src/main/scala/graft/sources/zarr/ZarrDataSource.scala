@@ -18,7 +18,7 @@ import org.apache.spark.sql.sources.{EqualNullSafe, EqualTo, Filter, GreaterThan
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import ZarrDataSource.{colName, pushedCol}
+import ZarrDataSource.{colName, isStore, pushedCol}
 
 /** Spark DataSource V2 connector for Zarr v2/v3 stores — the rebuild
   * of the reference's `ZarrTable`/`ZarrExec` surface
@@ -86,21 +86,6 @@ class ZarrDataSource extends TableProvider
 
   private def pathOf(options: CaseInsensitiveStringMap): String =
     pathsOf(options).head
-
-  /** Does a Zarr store exist at `path`? Only the not-found family maps
-    * to `false`; transient IO failures (network, permissions, HTTP 5xx)
-    * propagate — otherwise a blip on an EXISTING store would
-    * misclassify it as absent, giving reads an empty schema and letting
-    * ErrorIfExists/Ignore/Append writes proceed as if the target were
-    * free. */
-  private def isStore(path: String): Boolean =
-    try { ZarrMeta.detectVersion(ZarrStore.open(path)); true }
-    catch {
-      case _: IllegalArgumentException => false // no dir / not a Zarr store
-      case _: java.io.FileNotFoundException => false
-      case _: java.nio.file.NoSuchFileException => false
-      case _: UnsupportedOperationException => false // listing-less backend, no metadata
-    }
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val path = pathOf(options)
@@ -190,6 +175,21 @@ class ZarrDataSource extends TableProvider
 
 object ZarrDataSource {
 
+  /** Does a Zarr store exist at `path`? Only the not-found family maps
+    * to `false`; transient IO failures (network, permissions, HTTP 5xx)
+    * propagate — otherwise a blip on an EXISTING store would
+    * misclassify it as absent, giving reads an empty schema and letting
+    * ErrorIfExists/Ignore/Append writes proceed as if the target were
+    * free. */
+  private[zarr] def isStore(path: String): Boolean =
+    try { ZarrMeta.detectVersion(ZarrStore.open(path)); true }
+    catch {
+      case _: IllegalArgumentException => false // no dir / not a Zarr store
+      case _: java.io.FileNotFoundException => false
+      case _: java.nio.file.NoSuchFileException => false
+      case _: UnsupportedOperationException => false // listing-less backend, no metadata
+    }
+
   /** The column a pushed V2 expression names: `Some` for a single-part
     * reference, `None` for anything else (nested field, computed
     * expression). */
@@ -204,6 +204,30 @@ object ZarrDataSource {
   private[zarr] def pushedCol(e: org.apache.spark.sql.connector.expressions.Expression): String =
     colName(e).getOrElse(throw new IllegalStateException(s"pushed expression $e is not a column"))
 
+  /** The V1Write behind CTAS, `INSERT OVERWRITE` and `INSERT INTO`:
+    * `defaults` (a table's DDL options, or an existing store's
+    * coordinate order), then the write-time options, write-time
+    * winning, with the path pinned to the table's. */
+  private[zarr] def writeBuilder(path: String, defaults: Map[String, String],
+      info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
+      : org.apache.spark.sql.connector.write.WriteBuilder =
+    new org.apache.spark.sql.connector.write.WriteBuilder
+      with org.apache.spark.sql.connector.write.SupportsTruncate {
+      private var replace = false
+      override def truncate(): org.apache.spark.sql.connector.write.WriteBuilder = {
+        replace = true; this
+      }
+      override def build(): org.apache.spark.sql.connector.write.Write =
+        new org.apache.spark.sql.connector.write.V1Write {
+          override def toInsertableRelation: org.apache.spark.sql.sources.InsertableRelation =
+            (data: org.apache.spark.sql.DataFrame, overwrite: Boolean) => {
+              val params = (defaults ++ info.options.asCaseSensitiveMap().asScala.toMap ++
+                Map("path" -> path)).map { case (k, v) => k.toLowerCase(java.util.Locale.ROOT) -> v }
+              writeWithModes(data, params, replaceExisting = overwrite || replace)
+            }
+        }
+    }
+
   /** Shared sink path for the V1 hook and the DSv2 V1Write fallback
     * (CTAS / INSERT OVERWRITE): validate options, write the full store
     * to a temp sibling via [[ZarrWriter]], swap into place on success.
@@ -214,13 +238,7 @@ object ZarrDataSource {
       params: Map[String, String], replaceExisting: Boolean): Unit = {
     val path = params.getOrElse("path",
       throw new IllegalArgumentException("Zarr write requires a path"))
-    val exists = try { ZarrMeta.detectVersion(ZarrStore.open(path)); true }
-      catch {
-        case _: IllegalArgumentException => false
-        case _: java.io.FileNotFoundException => false
-        case _: java.nio.file.NoSuchFileException => false
-        case _: UnsupportedOperationException => false
-      }
+    val exists = isStore(path)
     if (exists && !replaceExisting) {
       // plain INSERT INTO an existing store = outer-dimension append
       ZarrWriter.append(data, path)
@@ -311,27 +329,7 @@ class ZarrPendingWriteTable(path: String, writeSchema: StructType,
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder =
-    new org.apache.spark.sql.connector.write.WriteBuilder
-      with org.apache.spark.sql.connector.write.SupportsTruncate {
-      private var replace = false
-      override def truncate(): org.apache.spark.sql.connector.write.WriteBuilder = {
-        replace = true; this
-      }
-      override def build(): org.apache.spark.sql.connector.write.Write =
-        new org.apache.spark.sql.connector.write.V1Write {
-          override def toInsertableRelation: org.apache.spark.sql.sources.InsertableRelation =
-            (data: org.apache.spark.sql.DataFrame, overwrite: Boolean) => {
-              // table-level OPTIONS (CTAS DDL) + write-time options,
-              // write-time winning; path pinned to this table's
-              val params = (tableProps ++
-                info.options.asCaseSensitiveMap().asScala.toMap ++
-                Map("path" -> path)).map { case (k, v) =>
-                  k.toLowerCase(java.util.Locale.ROOT) -> v }
-              ZarrDataSource.writeWithModes(data, params,
-                replaceExisting = overwrite || replace)
-            }
-        }
-    }
+    ZarrDataSource.writeBuilder(path, tableProps, info)
 }
 
 class ZarrTable(meta: ZarrStoreMeta) extends Table with SupportsRead
@@ -351,25 +349,7 @@ class ZarrTable(meta: ZarrStoreMeta) extends Table with SupportsRead
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder =
-    new org.apache.spark.sql.connector.write.WriteBuilder
-      with org.apache.spark.sql.connector.write.SupportsTruncate {
-      private var replace = false
-      override def truncate(): org.apache.spark.sql.connector.write.WriteBuilder = {
-        replace = true; this
-      }
-      override def build(): org.apache.spark.sql.connector.write.Write =
-        new org.apache.spark.sql.connector.write.V1Write {
-          override def toInsertableRelation: org.apache.spark.sql.sources.InsertableRelation =
-            (data: org.apache.spark.sql.DataFrame, overwrite: Boolean) => {
-              val params = (Map("coords" -> meta.coordNames.mkString(",")) ++
-                info.options.asCaseSensitiveMap().asScala.toMap ++
-                Map("path" -> meta.path)).map { case (k, v) =>
-                  k.toLowerCase(java.util.Locale.ROOT) -> v }
-              ZarrDataSource.writeWithModes(data, params,
-                replaceExisting = overwrite || replace)
-            }
-        }
-    }
+    ZarrDataSource.writeBuilder(meta.path, Map("coords" -> meta.coordNames.mkString(",")), info)
   /** Group attributes surface as table properties (`SHOW TBLPROPERTIES`)
     * — the reference's roadmap attribute exposure. */
   override def properties(): java.util.Map[String, String] = {
@@ -378,285 +358,32 @@ class ZarrTable(meta: ZarrStoreMeta) extends Table with SupportsRead
     m
   }
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ZarrScanBuilder(meta, options)
+    new ZarrScanBuilder(Seq(meta), options)
 }
 
 /** UNION ALL of several same-schema stores — the "archive split into
   * one store per year" layout. Read-only; each member store keeps its
-  * own pushdown planning (a time filter prunes each store's chunk
-  * ranges independently, so a member with no matching coordinates
-  * plans zero partitions — store-level pruning for free). */
+  * own pushdown planning inside the one [[ZarrScanBuilder]] (a time
+  * filter prunes each store's chunk ranges independently, so a member
+  * with no matching coordinates plans zero partitions — store-level
+  * pruning for free). */
 class ZarrUnionTable(metas: Seq[ZarrStoreMeta]) extends Table with SupportsRead {
   override def name(): String = s"zarr-union:${metas.map(_.path).mkString(",")}"
   override def schema(): StructType = metas.head.schema
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ZarrUnionScanBuilder(metas, options)
+    new ZarrScanBuilder(metas, options)
 }
 
-class ZarrUnionScanBuilder(metas: Seq[ZarrStoreMeta], options: CaseInsensitiveStringMap)
-    extends ScanBuilder
-    with SupportsPushDownRequiredColumns
-    with SupportsPushDownFilters
-    with SupportsPushDownLimit
-    with SupportsPushDownAggregates {
-
-  private val delegates = metas.map(new ZarrScanBuilder(_, options))
-  private var aggPushed: Option[Aggregation] = None
-
-  /** Group-count planner heuristic: each member's grouped specs fold
-    * its sidecar per-chunk map at planInputPartitions — driver
-    * planning work proportional to the group count. The guard bounds
-    * that PLANNING cost (execution memory is Spark's shuffle, not
-    * ours). Exact arithmetic: an overflowed product must count as
-    * unbounded, not wrap past the guard. */
-  private def groupsBounded(aggregation: Aggregation): Boolean =
-    try {
-      metas.map { m =>
-        aggregation.groupByExpressions().flatMap(colName).map(n =>
-          m.coords.find(_.meta.name == n).map(_.length.toLong)
-            .getOrElse(throw new ArithmeticException("not a coordinate")))
-          .foldLeft(1L)(Math.multiplyExact)
-      }.foldLeft(0L)(Math.addExact) <= (1L << 20)
-    } catch { case _: ArithmeticException => false }
-
-  /** Only UNGROUPED metadata aggregates are COMPLETE pushdown over a
-    * union — the fold of one scalar answer per member (COUNT sums,
-    * MIN/MAX combine, SUM adds exact totals, AVG = Σ totals / Σ rows:
-    * "count and sum a 30-year year-per-store archive" reads 30
-    * sidecars, zero chunks). GROUPED aggregates deliberately report
-    * NOT complete — [[pushAggregation]] still accepts them, but as a
-    * PARTIAL pushdown: Spark plans the final merge aggregation itself,
-    * an executor-side shuffle sized to members × groups, so no driver
-    * structure ever scales with the group count. COUNT(DISTINCT) is
-    * not combinable across members (values overlap) → real scan. */
-  override def supportCompletePushDown(aggregation: Aggregation): Boolean =
-    aggregation.groupByExpressions().isEmpty &&
-      delegates.forall(_.supportCompletePushDown(aggregation)) &&
-      aggregation.aggregateExpressions().forall {
-        case c: Count if c.isDistinct => false // values overlap across members
-        case s: Sum => // the UNION total must fit the result type
-          colName(s.column).exists { n =>
-            !ZarrSums.isIntegral(metas.head, n) || {
-              val totals = metas.map(m => ZarrSums.totalFor(m, n))
-              totals.forall(_.isDefined) && ZarrSums.fitsLong(
-                totals.flatten.foldLeft(java.math.BigDecimal.ZERO)(_.add(_)))
-            }
-          }
-        case _ => true
-      }
-
-  override def pushAggregation(aggregation: Aggregation): Boolean = {
-    val ok =
-      if (aggregation.groupByExpressions().isEmpty)
-        supportCompletePushDown(aggregation)
-      else
-        // Partial pushdown of grouped shapes: optimizer-time work stops
-        // at ANSWERABILITY (Catalyst probes pushdown for plans it may
-        // discard — per-probe sidecar folds were a planning-cost
-        // scale-killer). mergeable() also proves integral sums cannot
-        // overflow Spark's final Long SUM of the member partials.
-        groupsBounded(aggregation) &&
-          delegates.forall(_.supportCompletePushDown(aggregation)) &&
-          ZarrUnionGroups.mergeable(metas, aggregation)
-    if (ok) aggPushed = Some(aggregation)
-    ok
-  }
-
-  override def pruneColumns(required: StructType): Unit =
-    delegates.foreach(_.pruneColumns(required))
-
-  /** Fan the filters out; every member evaluates them against its own
-    * coordinates. All filters stay post-scan (Inexact), so the union
-    * is exact regardless of per-store pruning differences. */
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    delegates.foreach(_.pushFilters(filters))
-    filters
-  }
-  override def pushedFilters(): Array[Filter] = delegates.head.pushedFilters()
-
-  /** LIMIT n per member is a superset of LIMIT n over the union —
-    * partial semantics, Spark re-limits above. */
-  override def pushLimit(n: Int): Boolean = { delegates.foreach(_.pushLimit(n)); true }
-  override def isPartiallyPushed: Boolean = true
-
-  override def build(): Scan = aggPushed match {
-    case Some(agg) if agg.groupByExpressions().nonEmpty =>
-      new ZarrUnionGroupAggScan(metas, agg)
-    case Some(agg) => new ZarrUnionAggScan(metas, agg)
-    case None => new ZarrUnionScan(delegates.map(_.build().asInstanceOf[ZarrScan]))
-  }
-}
-
-/** Answerability checks for grouped metadata aggregates over a union.
-  * The MERGE itself is not implemented here at all: the union scan
-  * emits every member's per-group answers and Spark's final (partial
-  * pushdown) aggregation merges them by key on executors. */
-private[graft] object ZarrUnionGroups {
-
-  /** Metadata-only answerability check for a grouped union merge: agg
-    * kinds must be mergeable by Spark's final aggregation (SUM over
-    * counts/sums, MIN/MAX over bounds), counts must fit Long (Σ member
-    * rows), and integral sums must PROVABLY fit Long — Spark's
-    * non-ANSI Long SUM would wrap silently. The sum bound is
-    * |Σ_m t_m(g)| ≤ Σ_m max_g |t_m(g)| over each member's sidecar
-    * group totals — sound no matter how member group keys align, and
-    * slightly conservative: a near-overflow union falls back to the
-    * real scan; results are identical either way. */
-  def mergeable(metas: Seq[ZarrStoreMeta], agg: Aggregation): Boolean = {
-    val kindsOk = agg.aggregateExpressions().forall {
-      case _: CountStar => true
-      case c: Count => !c.isDistinct
-      case _: Min | _: Max => true
-      case s: Sum => !s.isDistinct
-      case _ => false
-    }
-    if (!kindsOk) return false
-    try metas.map(_.totalRows).foldLeft(0L)(Math.addExact)
-    catch { case _: ArithmeticException => return false }
-    val groupNames = agg.groupByExpressions().toSeq.flatMap(colName(_))
-    agg.aggregateExpressions().forall {
-      case s: Sum => colName(s.column).exists { n =>
-        !ZarrSums.isIntegral(metas.head, n) || {
-          var bound = java.math.BigDecimal.ZERO
-          metas.forall { meta =>
-            val dims = groupNames.map(meta.coordNames.indexOf)
-            ZarrSums.groupTotals(meta, n, dims) match {
-              case Some((totals, dflt)) =>
-                val maxAbs = (totals.valuesIterator ++ Iterator(dflt))
-                  .map(_.abs).foldLeft(java.math.BigDecimal.ZERO)(_.max(_))
-                bound = bound.add(maxAbs)
-                true
-              case None => false
-            }
-          } && ZarrSums.fitsLong(bound)
-        }
-      }
-      case _ => true
-    }
-  }
-
-}
-
-/** Metadata-only GROUPED aggregates over a union, pushed PARTIALLY:
-  * the scan concatenates every member's per-group metadata partitions
-  * (group keys may repeat across members — stores need not partition
-  * the key domain) and Spark's final aggregation merges them by key on
-  * EXECUTORS — SUM re-adds counts/sums, MIN/MAX re-combine bounds. No
-  * driver structure scales with the group count, the merge shuffle is
-  * sized to members × groups, and chunk IO stays zero. Pushdown-time
-  * work stops at answerability ([[ZarrUnionGroups.mergeable]]); member
-  * specs (sidecar folds) are built lazily at planInputPartitions, so
-  * optimizer probes on discarded plans cost nothing. */
-class ZarrUnionGroupAggScan(metas: Seq[ZarrStoreMeta], agg: Aggregation)
-    extends Scan with Batch {
-
-  private lazy val members = metas.map(new ZarrGroupAggScan(_, agg))
-
-  override def readSchema(): StructType =
-    new ZarrGroupAggScan(metas.head, agg).readSchema()
-
-  override def description(): String =
-    s"ZarrUnionGroupAggScan members=${metas.size} (metadata-only, " +
-      s"partial: Spark merges member answers by group key) " +
-      s"groups=[${agg.groupByExpressions().mkString(",")}] " +
-      s"aggs=[${agg.aggregateExpressions().mkString(", ")}]"
-
-  override def toBatch: Batch = this
-
-  override def planInputPartitions(): Array[InputPartition] =
-    members.flatMap(_.planInputPartitions()).toArray
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new ZarrGroupAggReaderFactory
-}
-
-/** Metadata-only fold of per-member aggregate answers (ungrouped).
-  * Schema matches [[ZarrAggScan]]; values combine across members. */
-class ZarrUnionAggScan(metas: Seq[ZarrStoreMeta], agg: Aggregation) extends Scan with Batch {
-
-  override def readSchema(): StructType =
-    new ZarrAggScan(metas.head, agg).readSchema()
-
-  override def description(): String =
-    s"ZarrUnionAggScan members=${metas.size} (metadata-only) " +
-      s"aggs=[${agg.aggregateExpressions().mkString(", ")}]"
-
-  override def toBatch: Batch = this
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    val totalRows = metas.map(_.totalRows).sum
-    val values: Array[Any] = agg.aggregateExpressions().map {
-      case _: CountStar => totalRows
-      case c: Count if !c.isDistinct => totalRows
-      case m: Min =>
-        val n = pushedCol(m.column)
-        val per = metas.map { meta =>
-          val c = meta.coords.find(_.meta.name == n).get
-          (c.min, ChunkCodec.elementAt(c.raw, GridMath.findCoordIndex(c.doubles, c.min)))
-        }
-        per.minBy(_._1)._2
-      case m: Max =>
-        val n = pushedCol(m.column)
-        val per = metas.map { meta =>
-          val c = meta.coords.find(_.meta.name == n).get
-          (c.max, ChunkCodec.elementAt(c.raw, GridMath.findCoordIndex(c.doubles, c.max)))
-        }
-        per.maxBy(_._1)._2
-      case s: Sum =>
-        val n = pushedCol(s.column)
-        val total = metas.map(m => ZarrSums.totalFor(m, n).get)
-          .foldLeft(java.math.BigDecimal.ZERO)(_.add(_))
-        if (ZarrSums.isIntegral(metas.head, n)) total.longValueExact() else total.doubleValue()
-      case a: Avg =>
-        val n = pushedCol(a.column)
-        val total = metas.map(m => ZarrSums.totalFor(m, n).get)
-          .foldLeft(java.math.BigDecimal.ZERO)(_.add(_))
-        total.doubleValue() / totalRows
-      case other => throw new IllegalStateException(s"Unexpected pushed agg: $other")
-    }
-    Array(ZarrAggPartition(values))
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory = new ZarrAggReaderFactory
-}
-
-class ZarrUnionScan(val scans: Seq[ZarrScan]) extends Scan with Batch
-    with SupportsReportStatistics {
-  override def readSchema(): StructType = scans.head.readSchema()
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"ZarrUnionScan(${scans.map(_.description()).mkString(" UNION ")})"
-  /** Member partitions tagged with their member ordinal, so task IO
-    * also lands in the per-member metric counters. */
-  override def planInputPartitions(): Array[InputPartition] =
-    scans.zipWithIndex.flatMap { case (s, i) =>
-      s.planInputPartitions().map {
-        case p: ZarrInputPartition => p.copy(memberIdx = i): InputPartition
-        case k: ZarrKeyedInputPartition =>
-          k.copy(p = k.p.copy(memberIdx = i)): InputPartition
-        case other => other
-      }
-    }.toArray
-  override def createReaderFactory(): PartitionReaderFactory = new ZarrReaderFactory
-  override def estimateStatistics(): Statistics = {
-    val parts = scans.map(_.estimateStatistics())
-    new Statistics {
-      override def sizeInBytes(): OptionalLong =
-        OptionalLong.of(parts.map(_.sizeInBytes().orElse(0L)).sum)
-      override def numRows(): OptionalLong =
-        OptionalLong.of(parts.map(_.numRows().orElse(0L)).sum)
-    }
-  }
-  override def supportedCustomMetrics(): Array[CustomMetric] =
-    Array[CustomMetric](new ZarrBytesReadMetric, new ZarrChunksDecodedMetric, new ZarrRowsOutMetric) ++
-      scans.indices.flatMap(i => Seq(
-        new ZarrMemberMetric("zarrBytesRead", i),
-        new ZarrMemberMetric("zarrChunksDecoded", i)))
-}
-
-class ZarrScanBuilder(meta: ZarrStoreMeta, options: CaseInsensitiveStringMap)
+/** Pushdown into one store or a UNION ALL of same-schema stores: a
+  * store is a union of one. Every member classifies the filters over
+  * its own coordinates, and one [[ZarrScan]] plans every member's
+  * partitions, so a union gets exact filters, folds, `.zstats` pruning
+  * and runtime filtering like a lone store. OFFSET, the
+  * coordinate-prefix top-N and key-grouped partitioning are exact only
+  * over one store's row space, so a union refuses them. */
+class ZarrScanBuilder(metas: Seq[ZarrStoreMeta], options: CaseInsensitiveStringMap)
     extends ScanBuilder
     with SupportsPushDownRequiredColumns
     with SupportsPushDownFilters
@@ -665,8 +392,13 @@ class ZarrScanBuilder(meta: ZarrStoreMeta, options: CaseInsensitiveStringMap)
     with SupportsPushDownTopN
     with SupportsPushDownAggregates {
 
+  /** The schema and coordinate names, which every member shares. */
+  private val meta = metas.head
+  private val union = metas.length > 1
+
   private var requiredSchema: StructType = meta.schema
-  private var pushdown = ScanPushdown()
+  private var pushdowns: Seq[ScanPushdown] = metas.map(_ => ScanPushdown())
+  private var fold: Option[ScanFold] = None
   private var limit: Option[Long] = None
   private var offset: Long = 0L
   private var aggPushed: Option[Aggregation] = None
@@ -678,24 +410,32 @@ class ZarrScanBuilder(meta: ZarrStoreMeta, options: CaseInsensitiveStringMap)
 
   override def pruneColumns(required: StructType): Unit = requiredSchema = required
 
-  /** Read each filter once ([[ScanPushdown.classify]]): coordinate
-    * comparisons and IN narrow the index ranges, data-variable
-    * comparisons prune `.zstats` partitions, and the exact set is
-    * evaluated by the scan. Return as post-scan only what falls outside
-    * the exact set; there the reference's Inexact contract still holds
-    * and Spark re-applies the filter. */
+  /** Read each filter once per member ([[ScanPushdown.classify]]):
+    * coordinate comparisons and IN narrow the index ranges,
+    * data-variable comparisons prune `.zstats` partitions, and the
+    * exact set is evaluated by the scan. A filter is exact only when
+    * every member answers it exactly (a coordinate's matches may be
+    * contiguous in one store and not in another). Return as post-scan
+    * only what falls outside the exact set; there the reference's
+    * Inexact contract still holds and Spark re-applies the filter. */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    pushdown = ScanPushdown.classify(filters.toSeq, meta, fillAsNull)
-    pushdown.postScan.toArray
+    val each = metas.map(ScanPushdown.classify(filters.toSeq, _, fillAsNull))
+    val exact = each.map(_.exact.toSet).reduce(_ intersect _)
+    pushdowns = each.map(_.keepExact(exact))
+    pushdowns.head.postScan.toArray
   }
 
   /** A pushed data-variable predicate: the reader compacts cells away,
     * so the row space no longer maps onto output rows. */
-  private def cellFiltered: Boolean = pushdown.cellPreds.nonEmpty
+  private def cellFiltered: Boolean = pushdowns.exists(_.cellPreds.nonEmpty)
+
+  private def unfiltered: Boolean = pushdowns.forall(_.unfiltered)
 
   override def pushedFilters(): Array[Filter] =
-    (pushdown.pruning ++ pushdown.exact).distinct.toArray
+    pushdowns.flatMap(p => p.pruning ++ p.exact).distinct.toArray
 
+  /** LIMIT n per member: over a union a superset of LIMIT n, which
+    * Spark re-limits above. */
   override def pushLimit(n: Int): Boolean = { limit = Some(n.toLong); true }
   override def isPartiallyPushed: Boolean = true
 
@@ -703,11 +443,11 @@ class ZarrScanBuilder(meta: ZarrStoreMeta, options: CaseInsensitiveStringMap)
     * flattened grid enumerates rows in deterministic row-major order,
     * so skipping the first n row ids is precisely SQL's offset over
     * this scan. Spark pushes LIMIT as limit+offset first, so the
-    * planned row window is [offset, pushedLimit). Refused under a
-    * pushed data-variable predicate or a fold: row ids then no longer
-    * count output rows. */
+    * planned row window is [offset, pushedLimit). Refused over a
+    * union, under a pushed data-variable predicate or under a fold:
+    * row ids then no longer count output rows. */
   override def pushOffset(n: Int): Boolean =
-    if (cellFiltered || pushdown.fold.nonEmpty) false else { offset = n.toLong; true }
+    if (union || cellFiltered || fold.nonEmpty) false else { offset = n.toLong; true }
 
   /** Largest LIMIT a partition keeps in its top-N fold. */
   private val maxTopN = 65536
@@ -715,10 +455,10 @@ class ZarrScanBuilder(meta: ZarrStoreMeta, options: CaseInsensitiveStringMap)
   /** ORDER BY + LIMIT. Partial semantics: Spark keeps its Sort+Limit
     * above; the scan only shrinks what reaches it.
     *
-    * A coordinate prefix on an unfiltered scan: the row-major row
-    * space IS sorted by the coordinate columns in dimension order, so
-    * an all-ascending prefix's top-n is the FIRST n grid rows (push as
-    * limit) and an all-descending prefix's top-n is the LAST n (push
+    * A coordinate prefix on an unfiltered single store: the row-major
+    * row space IS sorted by the coordinate columns in dimension order,
+    * so an all-ascending prefix's top-n is the FIRST n grid rows (push
+    * as limit) and an all-descending prefix's top-n is the LAST n (push
     * as offset) — "latest k time steps" reads k slabs, not the
     * archive.
     *
@@ -732,14 +472,13 @@ class ZarrScanBuilder(meta: ZarrStoreMeta, options: CaseInsensitiveStringMap)
     * roadmap row. */
   override def pushTopN(orders: Array[SortOrderV2], n: Int): Boolean = {
     if (limit.nonEmpty || offset != 0L || orders.isEmpty) return false
-    val unfiltered = pushdown.unfiltered
-    if (unfiltered && orders.length <= meta.coords.length && prefixTopN(orders, n)) return true
+    if (!union && unfiltered && orders.length <= meta.coords.length && prefixTopN(orders, n)) return true
     if (orders.length != 1 || fillAsNull || n <= 0 || n > maxTopN) return false
     colName(orders.head.expression()).filter(c => types.get(c).exists(CellRange.numeric)).exists { name =>
       val desc = orders.head.direction() ==
         org.apache.spark.sql.connector.expressions.SortDirection.DESCENDING
-      pushdown = pushdown.copy(fold = Some(TopNFold(name, desc, n)))
-      if (unfiltered && meta.dataVars.exists(v => v.name == name && v.chunkStats.nonEmpty))
+      fold = Some(TopNFold(name, desc, n))
+      if (unfiltered && metas.exists(_.dataVars.exists(v => v.name == name && v.chunkStats.nonEmpty)))
         topNVar = Some((name, desc, n))
       true
     }
@@ -767,38 +506,129 @@ class ZarrScanBuilder(meta: ZarrStoreMeta, options: CaseInsensitiveStringMap)
     }
   }
 
-  /** Metadata-answerable aggregates, with the reference's guards
-    * (count_optimization.rs:67-148): no filters, and every aggregate
-    * must be answerable (MIN/MAX on data variables is not — only
-    * coordinates carry exact bounds). GROUP BY is allowed when every
-    * group key is a coordinate — the grid is a full Cartesian product,
-    * so per-group COUNT = Π non-grouped coordinate lengths, MIN/MAX of
-    * a grouped coordinate is the group value itself, and MIN/MAX of a
-    * non-grouped coordinate is its global bound: all metadata, zero
-    * chunk IO (the grouped generalization of the reference's two
-    * optimizer rules). */
-  override def supportCompletePushDown(aggregation: Aggregation): Boolean = {
+  /** Metadata answers the aggregate in every member, with the
+    * reference's guards (count_optimization.rs:67-148): no filters,
+    * and every aggregate must be answerable (MIN/MAX on data variables
+    * is not — only coordinates carry exact bounds). GROUP BY is allowed
+    * when every group key is a coordinate — the grid is a full
+    * Cartesian product, so per-group COUNT = Π non-grouped coordinate
+    * lengths, MIN/MAX of a grouped coordinate is the group value
+    * itself, and MIN/MAX of a non-grouped coordinate is its global
+    * bound: all metadata, zero chunk IO (the grouped generalization of
+    * the reference's two optimizer rules). */
+  private def metadataAnswers(aggregation: Aggregation): Boolean = {
     val groups = aggregation.groupByExpressions()
     val groupCols = groups.flatMap(colName(_))
-    groups.length == groupCols.length &&
-      groupCols.forall(n => meta.coordNames.contains(n) && uniqueCoord(n)) &&
-      pushdown.unfiltered && limit.isEmpty && offset == 0L &&
-      // an empty grid (zero-length coordinate — the streaming sink's
-      // pre-first-append state) has no metadata bounds to answer
-      // MIN/MAX with; the real (empty) scan yields the correct NULLs
-      meta.totalRows > 0 &&
+    groups.length == groupCols.length && unfiltered && limit.isEmpty && offset == 0L &&
       // fill→null can null out data-var cells, so metadata row counts
       // no longer answer COUNT(col) — take the real scan instead
       !fillAsNull &&
-      aggregation.aggregateExpressions().forall(answerable(_, groupCols.toSet))
+      metas.forall { m =>
+        groupCols.forall(n => m.coordNames.contains(n) && uniqueCoord(m, n)) &&
+          // an empty grid (zero-length coordinate — the streaming sink's
+          // pre-first-append state) has no metadata bounds to answer
+          // MIN/MAX with; the real (empty) scan yields the correct NULLs
+          m.totalRows > 0 &&
+          aggregation.aggregateExpressions().forall(answerable(m, _, groupCols.toSet))
+      }
   }
 
-  /** Complete when metadata answers it; otherwise PARTIAL when every
-    * partition can fold it ([[partialAgg]]): Spark then merges the
-    * partitions' partial rows in its final aggregate. */
+  /** Complete when metadata answers one store's aggregate, or an
+    * ungrouped union aggregate whose member answers combine (COUNT
+    * sums, MIN/MAX combine, SUM adds exact totals, AVG = Σ totals /
+    * Σ rows: "count and sum a 30-year year-per-store archive" reads 30
+    * sidecars, zero chunks). COUNT(DISTINCT) does not combine (values
+    * overlap across members), and an integral union SUM must fit its
+    * result type. */
+  override def supportCompletePushDown(aggregation: Aggregation): Boolean =
+    metadataAnswers(aggregation) && (!union ||
+      aggregation.groupByExpressions().isEmpty && aggregation.aggregateExpressions().forall {
+        case c: Count => !c.isDistinct
+        case s: Sum => colName(s.column).exists(n => !ZarrSums.isIntegral(meta, n) ||
+          ZarrSums.fitsLong(metas.map(ZarrSums.totalFor(_, n).get)
+            .foldLeft(java.math.BigDecimal.ZERO)(_.add(_))))
+        case _ => true
+      })
+
+  /** Complete when [[supportCompletePushDown]]. A grouped union
+    * aggregate metadata answers is pushed PARTIALLY ([[mergesByKey]]):
+    * the scan emits every member's per-group answers and Spark's final
+    * aggregate merges them by key on executors. Otherwise PARTIAL when
+    * every partition can fold it ([[partialAgg]]): Spark then merges
+    * the partitions' partial rows in its final aggregate. */
   override def pushAggregation(aggregation: Aggregation): Boolean =
-    if (supportCompletePushDown(aggregation)) { aggPushed = Some(aggregation); true }
-    else partialAgg(aggregation).exists { f => pushdown = pushdown.copy(fold = Some(f)); true }
+    if (supportCompletePushDown(aggregation) || union && mergesByKey(aggregation)) {
+      aggPushed = Some(aggregation); true
+    } else partialAgg(aggregation).exists { f => fold = Some(f); true }
+
+  /** A grouped union aggregate whose member answers Spark's final
+    * aggregate merges by key: SUM re-adds counts and sums, MIN/MAX
+    * re-combine bounds, in a shuffle sized to members × groups, so no
+    * driver structure scales with the group count. Optimizer-time work
+    * stops at answerability (Catalyst probes pushdown for plans it may
+    * discard — per-probe sidecar folds were a planning-cost
+    * scale-killer): the member group totals are folded only when the
+    * scan plans its partitions. */
+  private def mergesByKey(aggregation: Aggregation): Boolean =
+    aggregation.groupByExpressions().nonEmpty && groupsBounded(aggregation) &&
+      metadataAnswers(aggregation) && mergeable(aggregation)
+
+  /** Group-count planner heuristic: each member's grouped answers fold
+    * its sidecar per-chunk map at planInputPartitions — driver
+    * planning work proportional to the group count. The guard bounds
+    * that PLANNING cost (execution memory is Spark's shuffle, not
+    * ours). Exact arithmetic: an overflowed product must count as
+    * unbounded, not wrap past the guard. */
+  private def groupsBounded(aggregation: Aggregation): Boolean =
+    try {
+      metas.map { m =>
+        aggregation.groupByExpressions().flatMap(colName).map(n =>
+          m.coords.find(_.meta.name == n).map(_.length.toLong)
+            .getOrElse(throw new ArithmeticException("not a coordinate")))
+          .foldLeft(1L)(Math.multiplyExact)
+      }.foldLeft(0L)(Math.addExact) <= (1L << 20)
+    } catch { case _: ArithmeticException => false }
+
+  /** Agg kinds must be mergeable by Spark's final aggregation (SUM over
+    * counts/sums, MIN/MAX over bounds), counts must fit Long (Σ member
+    * rows), and integral sums must PROVABLY fit Long — Spark's
+    * non-ANSI Long SUM would wrap silently. The sum bound is
+    * |Σ_m t_m(g)| ≤ Σ_m max_g |t_m(g)| over each member's sidecar
+    * group totals — sound no matter how member group keys align, and
+    * slightly conservative: a near-overflow union falls back to the
+    * real scan; results are identical either way. */
+  private def mergeable(agg: Aggregation): Boolean = {
+    val kindsOk = agg.aggregateExpressions().forall {
+      case _: CountStar => true
+      case c: Count => !c.isDistinct
+      case _: Min | _: Max => true
+      case s: Sum => !s.isDistinct
+      case _ => false
+    }
+    if (!kindsOk) return false
+    try metas.map(_.totalRows).foldLeft(0L)(Math.addExact)
+    catch { case _: ArithmeticException => return false }
+    val groupNames = agg.groupByExpressions().toSeq.flatMap(colName(_))
+    agg.aggregateExpressions().forall {
+      case s: Sum => colName(s.column).exists { n =>
+        !ZarrSums.isIntegral(meta, n) || {
+          var bound = java.math.BigDecimal.ZERO
+          metas.forall { m =>
+            val dims = groupNames.map(m.coordNames.indexOf)
+            ZarrSums.groupTotals(m, n, dims) match {
+              case Some((totals, dflt)) =>
+                val maxAbs = (totals.valuesIterator ++ Iterator(dflt))
+                  .map(_.abs).foldLeft(java.math.BigDecimal.ZERO)(_.max(_))
+                bound = bound.add(maxAbs)
+                true
+              case None => false
+            }
+          } && ZarrSums.fitsLong(bound)
+        }
+      }
+      case _ => true
+    }
+  }
 
   /** The split cap of a partition: `slices` plans no partition of more
     * rows. */
@@ -807,8 +637,9 @@ class ZarrScanBuilder(meta: ZarrStoreMeta, options: CaseInsensitiveStringMap)
   /** COUNT, MIN/MAX of numeric columns and SUM of float columns (AVG
     * arrives split into SUM and COUNT), grouped by numeric coordinates,
     * without DISTINCT. A partition folds into one slot per group its
-    * rows can reach, so the groups may number at most the split cap:
-    * the slots then take no more room than the partition's rows. */
+    * rows can reach, so the groups may number at most the split cap in
+    * every member: the slots then take no more room than the
+    * partition's rows. */
   private def partialAgg(aggregation: Aggregation): Option[AggFold] = {
     if (fillAsNull || limit.nonEmpty || offset != 0L) return None
     def numericCol(n: String) = types.get(n).exists(CellRange.numeric)
@@ -816,8 +647,8 @@ class ZarrScanBuilder(meta: ZarrStoreMeta, options: CaseInsensitiveStringMap)
     val names = groups.flatten
     val groupsOk = groups.forall(_.isDefined) && names.distinct.length == names.length &&
       names.forall(n => meta.coordNames.contains(n) && numericCol(n)) &&
-      names.map(n => meta.coords(meta.coordNames.indexOf(n)).length.toLong)
-        .foldLeft(1L)((a, b) => math.min(a * b, maxRowsPerPartition + 1)) <= maxRowsPerPartition
+      metas.forall(m => names.map(n => m.coords(m.coordNames.indexOf(n)).length.toLong)
+        .foldLeft(1L)((a, b) => math.min(a * b, maxRowsPerPartition + 1)) <= maxRowsPerPartition)
     val aggs = aggregation.aggregateExpressions().toSeq.map {
       case _: CountStar => Some(FoldCount)
       case c: Count if !c.isDistinct => colName(c.column).filter(numericCol).map(_ => FoldCount)
@@ -831,67 +662,66 @@ class ZarrScanBuilder(meta: ZarrStoreMeta, options: CaseInsensitiveStringMap)
     if (groupsOk && aggs.forall(_.isDefined)) Some(AggFold(names, aggs.flatten)) else None
   }
 
-  private def numericCoord(name: String): Boolean =
-    meta.coords.exists(c => c.meta.name == name && c.meta.dtype.kind != 'S')
+  private def numericCoord(m: ZarrStoreMeta, name: String): Boolean =
+    m.coords.exists(c => c.meta.name == name && c.meta.dtype.kind != 'S')
 
   /** Coordinate values are usually unique but Zarr doesn't enforce it;
     * group-key and COUNT(DISTINCT) answers from metadata are only
     * exact when they are. */
-  private def uniqueCoord(name: String): Boolean =
-    meta.coords.find(_.meta.name == name).exists { c =>
+  private def uniqueCoord(m: ZarrStoreMeta, name: String): Boolean =
+    m.coords.find(_.meta.name == name).exists { c =>
       c.raw match {
         case a: Array[String] => a.distinct.length == a.length
         case _ => c.doubles.distinct.length == c.doubles.length
       }
     }
 
-  private def answerable(f: AggregateFunc, grouped: Set[String] = Set.empty): Boolean = f match {
+  private def answerable(m: ZarrStoreMeta, f: AggregateFunc, grouped: Set[String]): Boolean = f match {
     case _: CountStar => true
-    case c: Count if !c.isDistinct => colName(c.column).exists(meta.schema.fieldNames.contains)
+    case c: Count if !c.isDistinct => colName(c.column).exists(m.schema.fieldNames.contains)
     // COUNT(DISTINCT c) per group: c grouped → 1 per group is correct
     // but Spark plans distinct aggregates differently — keep the
     // reference behavior and answer only non-grouped coordinates
     case c: Count if c.isDistinct =>
       colName(c.column).exists(n =>
-        meta.coordNames.contains(n) && !grouped(n) && uniqueCoord(n))
-    case m: Min => colName(m.column).exists(n => numericCoord(n) || grouped(n))
-    case m: Max => colName(m.column).exists(n => numericCoord(n) || grouped(n))
+        m.coordNames.contains(n) && !grouped(n) && uniqueCoord(m, n))
+    case a: Min => colName(a.column).exists(n => numericCoord(m, n) || grouped(n))
+    case a: Max => colName(a.column).exists(n => numericCoord(m, n) || grouped(n))
     // Chunk-level SUM/AVG pushdown (the reference's roadmap "Aggregate
     // pushdown (push SUM/AVG/COUNT to chunk level)", README.md:298):
     // data-variable totals from the `.zstats` sum partials, coordinate
     // totals from the eagerly-loaded coordinate values — both zero
     // chunk IO. Ungrouped only (per-group sums would need the chunk
     // grid aligned with the group dimensions).
-    case s: Sum if !s.isDistinct && grouped.isEmpty && meta.totalRows > 0 =>
-      colName(s.column).exists(n => ZarrSums.totalFor(meta, n).exists(t =>
-        !ZarrSums.isIntegral(meta, n) || ZarrSums.fitsLong(t)))
-    case a: Avg if !a.isDistinct && grouped.isEmpty && meta.totalRows > 0 =>
-      colName(a.column).exists(n => ZarrSums.totalFor(meta, n).isDefined)
+    case s: Sum if !s.isDistinct && grouped.isEmpty =>
+      colName(s.column).exists(n => ZarrSums.totalFor(m, n).exists(t =>
+        !ZarrSums.isIntegral(m, n) || ZarrSums.fitsLong(t)))
+    case a: Avg if !a.isDistinct && grouped.isEmpty =>
+      colName(a.column).exists(n => ZarrSums.totalFor(m, n).isDefined)
     // GROUPED SUM/AVG (the marquee `GROUP BY time, SUM(temperature)`
     // shape): answerable from the sidecar when the variable's chunk
     // extent is 1 along every grouped dim — each chunk then belongs
     // to exactly one group (the typical time-chunked layout).
-    case s: Sum if !s.isDistinct && grouped.nonEmpty && meta.totalRows > 0 =>
+    case s: Sum if !s.isDistinct =>
       colName(s.column).exists { n =>
-        val dims = grouped.toSeq.map(meta.coordNames.indexOf)
-        ZarrSums.groupTotals(meta, n, dims).exists { case (totals, dflt) =>
-          !ZarrSums.isIntegral(meta, n) ||
+        val dims = grouped.toSeq.map(m.coordNames.indexOf)
+        ZarrSums.groupTotals(m, n, dims).exists { case (totals, dflt) =>
+          !ZarrSums.isIntegral(m, n) ||
             (totals.valuesIterator ++ Iterator(dflt)).forall(ZarrSums.fitsLong)
         }
       }
-    case a: Avg if !a.isDistinct && grouped.nonEmpty && meta.totalRows > 0 =>
+    case a: Avg if !a.isDistinct =>
       colName(a.column).exists { n =>
-        val dims = grouped.toSeq.map(meta.coordNames.indexOf)
-        ZarrSums.groupTotals(meta, n, dims).isDefined
+        val dims = grouped.toSeq.map(m.coordNames.indexOf)
+        ZarrSums.groupTotals(m, n, dims).isDefined
       }
     case _ => false
   }
 
   override def build(): Scan = aggPushed match {
-    case Some(agg) if agg.groupByExpressions().nonEmpty => new ZarrGroupAggScan(meta, agg)
-    case Some(agg) => new ZarrAggScan(meta, agg)
+    case Some(agg) => new ZarrAggScan(metas, agg)
     case None =>
-      new ZarrScan(meta, requiredSchema, pushdown, limit,
+      new ZarrScan(metas, requiredSchema, pushdowns, fold, limit,
         options.getLong("minRowsPerPartition", 65536),
         fillAsNull,
         options.getInt("chunkCacheEntries", 0),
@@ -901,7 +731,7 @@ class ZarrScanBuilder(meta: ZarrStoreMeta, options: CaseInsensitiveStringMap)
         // a round trip there) and OFF for local files; explicit option
         // wins either way
         prefetch = Option(options.get("prefetch")).map(_.toBoolean)
-          .getOrElse(!ZarrStore.open(meta.path).isInstanceOf[LocalStore]),
+          .getOrElse(metas.exists(m => !ZarrStore.open(m.path).isInstanceOf[LocalStore])),
         startingOffsetLatest =
           Option(options.get("startingOffset")).exists(_.equalsIgnoreCase("latest")),
         keyByOuter = options.getBoolean("partitionByOuter", false),
@@ -911,12 +741,16 @@ class ZarrScanBuilder(meta: ZarrStoreMeta, options: CaseInsensitiveStringMap)
   }
 }
 
-/** Regular scan: filtered/limited flattened grid, partitioned along
+/** Chunk scan of one store or a UNION ALL of same-schema stores: each
+  * member's filtered/limited flattened grid, partitioned along its
   * outer-dimension chunk boundaries. */
 class ZarrScan(
-    meta: ZarrStoreMeta,
+    metas: Seq[ZarrStoreMeta],
     requiredSchema: StructType,
-    pushdown: ScanPushdown,
+    /** Each member's classified filters. */
+    pushdowns: Seq[ScanPushdown],
+    /** What every partition folds its passing cells into, if anything. */
+    fold: Option[ScanFold],
     limit: Option[Long],
     minRowsPerPartition: Long,
     fillAsNull: Boolean = false,
@@ -939,33 +773,23 @@ class ZarrScan(
     with SupportsRuntimeV2Filtering
     with SupportsReportPartitioning with SupportsReportOrdering {
 
-  /** Store path, for per-member attribution in union diagnostics. */
-  private[graft] def storePath: String = meta.path
+  /** The schema and coordinate names, which every member shares. */
+  private val meta = metas.head
+  private val union = metas.length > 1
 
-  /** Pruning ranges, narrowed on each exactly-filtered dim to its
-    * exact match interval. */
-  private val staticRanges: Option[GridMath.Ranges] =
-    GridMath.coordRangesPred(meta.coords.map(_.doubles), pushdown.coordBounds).flatMap { r =>
-      val n = pushdown.intervals.foldLeft(r) { case (acc, (d, (lo, hi))) =>
-        acc.updated(d, (math.max(acc(d)._1, lo), math.min(acc(d)._2, hi)))
-      }
-      if (n.exists { case (lo, hi) => lo >= hi }) None else Some(n)
-    }
+  /** Member store paths, for per-member attribution in union
+    * diagnostics. */
+  private[graft] def storePaths: Seq[String] = metas.map(_.path)
 
-  private val fold = pushdown.fold
+  /** Partitions of a union carry their member ordinal, so task IO also
+    * lands in the per-member metric counters. */
+  private val members = metas.zip(pushdowns).zipWithIndex.map { case ((m, p), i) =>
+    new Member(m, p, if (union) i else -1)
+  }
+
   /** The partial aggregate the scan folds, if any: [[ZarrFoldMerge]]
     * merges its rows on the driver. */
   private[zarr] val aggFold = fold.collect { case a: AggFold => a }
-  /** Data-variable predicates compact rows away in the reader. */
-  private val cellPreds = pushdown.cellPreds
-  private val varBounds = pushdown.varBounds
-
-  /** Narrowed further by [[filter]] at runtime (DSv2 dynamic pruning:
-    * Spark pushes the build side's join-key values before re-planning
-    * partitions). */
-  @volatile private var ranges: Option[GridMath.Ranges] = staticRanges
-
-  private def filteredRows: Long = ranges.map(GridMath.totalRows).getOrElse(0L)
 
   /** Join-driven runtime pruning: accept IN/= predicates on coordinate
     * columns and shrink each dimension to the bounding index range of
@@ -998,20 +822,8 @@ class ZarrScan(
           }
       }.flatten
       if ((p.name() == "IN" || p.name() == "=") && dimOpt.isDefined &&
-          values.length == children.length - 1) {
-        val d = dimOpt.get
-        ranges = ranges.flatMap { r =>
-          val hits = values.map(v =>
-            GridMath.findCoordIndex(meta.coords(d).doubles, v)).filter(_ >= 0)
-          if (hits.isEmpty) None
-          else {
-            val lo = math.max(r(d)._1, hits.min)
-            val hi = math.min(r(d)._2, hits.max + 1)
-            if (lo >= hi) None
-            else Some(r.updated(d, (lo, hi)))
-          }
-        }
-      }
+          values.length == children.length - 1)
+        members.foreach(_.narrow(dimOpt.get, values))
     }
     invalidatePlannedPartitions() // ranges changed — re-plan
   }
@@ -1039,12 +851,12 @@ class ZarrScan(
     * needs neither (its partial rows merge on the driver,
     * [[ZarrFoldMerge]]); what still needs it is a GROUP BY the scan
     * cannot fold — `z1_zarr_group_agg`'s integral SUM — and same-grid
-    * joins. Guards:
+    * joins. Guards: one store (a union's members may repeat a key),
     * the outer coordinate must be projected (it is the key), strictly
     * increasing (distinct key per partition), numeric, and no
     * limit/offset (their row clipping crosses partition keys). */
   private val keyGrouped: Boolean =
-    keyByOuter && limit.isEmpty && offset == 0L && fold.isEmpty && meta.coords.nonEmpty &&
+    keyByOuter && !union && limit.isEmpty && offset == 0L && fold.isEmpty && meta.coords.nonEmpty &&
       requiredSchema.fieldNames.contains(meta.coordNames.head) &&
       meta.coords.head.meta.dtype.kind != 'S' && {
         val d = meta.coords.head.doubles
@@ -1054,12 +866,13 @@ class ZarrScan(
   private lazy val plannedPartitionCount: Int = planInputPartitions().length
 
   override def outputPartitioning(): org.apache.spark.sql.connector.read.partitioning.Partitioning =
-    if (keyGrouped && ranges.isDefined) {
-      val (o0, o1) = ranges.get.head
-      new org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning(
-        Array(Expressions.identity(meta.coordNames.head)), o1 - o0)
-    } else new org.apache.spark.sql.connector.read.partitioning.UnknownPartitioning(
-      plannedPartitionCount)
+    members.head.ranges match {
+      case Some(r) if keyGrouped =>
+        new org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning(
+          Array(Expressions.identity(meta.coordNames.head)), r.head._2 - r.head._1)
+      case _ => new org.apache.spark.sql.connector.read.partitioning.UnknownPartitioning(
+        plannedPartitionCount)
+    }
 
   /** The flattened grid enumerates rows in row-major order, so within
     * every partition rows are sorted by the coordinate columns in
@@ -1068,7 +881,8 @@ class ZarrScan(
     * duplicate value makes the deeper tuple sequence re-start and the
     * prefix is no longer sorted); the last declared key alone may be
     * merely non-decreasing, so compute the strict prefix and extend it
-    * by one non-strict coordinate when possible. */
+    * by one non-strict coordinate when possible. A partition reads one
+    * member, so a union declares the shortest prefix of its members. */
   override def outputOrdering(): Array[org.apache.spark.sql.connector.expressions.SortOrder] = {
     if (fold.nonEmpty) return Array.empty
     val names = requiredSchema.fieldNames.toSet
@@ -1078,13 +892,11 @@ class ZarrScan(
         (1 until d.length).forall(i =>
           if (strict) d(i - 1) < d(i) else d(i - 1) <= d(i))
       }
-    val strictPrefix = meta.coords.takeWhile(eligible(_, strict = true))
-    val withTail =
-      if (strictPrefix.length < meta.coords.length &&
-        eligible(meta.coords(strictPrefix.length), strict = false))
-        strictPrefix :+ meta.coords(strictPrefix.length)
-      else strictPrefix
-    withTail.map(c => Expressions.sort(Expressions.column(c.meta.name),
+    val keys = metas.map { m =>
+      val strict = m.coords.takeWhile(eligible(_, strict = true)).length
+      if (strict < m.coords.length && eligible(m.coords(strict), strict = false)) strict + 1 else strict
+    }.min
+    meta.coordNames.take(keys).map(n => Expressions.sort(Expressions.column(n),
       org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING)).toArray
   }
 
@@ -1098,10 +910,12 @@ class ZarrScan(
     * re-evaluated per batch against the grown coordinate arrays. An
     * exact filter would have left Spark without its Filter, which the
     * micro-batch does not evaluate, so it is refused. Limit/offset/agg
-    * pushdown don't arise on streaming plans. Option
-    * `startingOffset=latest` skips the pre-existing grid. */
+    * pushdown don't arise on streaming plans, nor unions (their table
+    * reads in batch only). Option `startingOffset=latest` skips the
+    * pre-existing grid. */
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
+    val pushdown = pushdowns.head
     if (pushdown.exact.nonEmpty)
       throw new IllegalStateException(s"Exact filters pushed into a micro-batch scan: ${pushdown.exact}")
     new ZarrMicroBatchStream(meta.path, requiredSchema, pushdown.coordBounds,
@@ -1111,30 +925,21 @@ class ZarrScan(
       maxSlabsPerTrigger = maxSlabsPerTrigger)
   }
 
-  /** `rows=F of T`: the grid rows the planned partitions cover (after
-    * range, `.zstats`, limit/offset and runtime pruning) of the whole
-    * grid's — the reference's per-scan `reduction_pct`. */
+  /** Each member's `ZarrScan path=…` line; a union's are joined as
+    * `ZarrUnionScan(… UNION …)`. */
   override def description(): String = {
-    val r = ranges.map(_.map { case (s, e) => s"[$s,$e)" }.mkString(",")).getOrElse("EMPTY")
     val covered = planInputPartitions().map {
-      case p: ZarrInputPartition => p.rowEnd - p.rowStart
-      case k: ZarrKeyedInputPartition => k.p.rowEnd - k.p.rowStart
-      case _ => 0L
-    }.sum
-    val total = meta.totalRows
-    val pruned = if (total == 0) 0.0 else 100.0 * (total - covered) / total
-    val folded = fold.map(f => s" $f").getOrElse("")
-    val statsTopN = topNVar.map(_ => " (.zstats pruned)").getOrElse("")
-    f"ZarrScan path=${meta.path} rows=$covered of $total ($pruned%.1f%% pruned) ranges=$r " +
-      s"limit=${limit.getOrElse(-1L)} offset=$offset$folded$statsTopN " +
-      s"pruneFilters=[${pushdown.pruning.mkString(", ")}] " +
-      s"exactFilters=[${pushdown.exact.mkString(", ")}] postScan=[${pushdown.postScan.mkString(", ")}]"
+      case p: ZarrInputPartition => p
+      case k: ZarrKeyedInputPartition => k.p
+    }.groupMapReduce(_.memberIdx)(p => p.rowEnd - p.rowStart)(_ + _)
+    val each = members.map(m => m.description(covered.getOrElse(m.idx, 0L)))
+    if (union) s"ZarrUnionScan(${each.mkString(" UNION ")})" else each.head
   }
 
   /** Planned partitions are cached: Spark asks for the partition list
     * more than once (outputPartitioning sizing + the actual plan),
     * and each planning pass re-runs slice merging plus per-slice
-    * chunk-stats pruning. Runtime filtering mutates `ranges`, so
+    * chunk-stats pruning. Runtime filtering mutates the ranges, so
     * [[filter]] invalidates the cache. */
   @transient private var cachedPartitions: Array[InputPartition] = _
 
@@ -1145,39 +950,97 @@ class ZarrScan(
     cachedPartitions
   }
 
-  /** Columns each partition reads: the emitted ones first (none for a
-    * partial aggregate, which emits its own), then those only the
-    * predicates and the fold need. */
-  private lazy val readNames: Seq[String] = {
-    val out = if (aggFold.isDefined) Nil else requiredSchema.fieldNames.toSeq
-    val foldCols = fold.toSeq.flatMap {
-      case a: AggFold => a.aggs.flatMap(_.col)
-      case t: TopNFold => Seq(t.col)
-    }
-    out ++ (foldCols ++ cellPreds.map(_._1)).distinct.filterNot(out.contains)
-  }
-
-  /** The partition template carrying the pushdown: the slice bounds are
-    * filled in per partition. */
-  private def partition(r: GridMath.Ranges): ZarrInputPartition = {
-    ZarrInputPartition(meta.path, 0L, 0L, r, meta.coords, meta.projection(readNames),
-      fillAsNull, chunkCacheEntries, prefetch,
-      preds = cellPreds.map { case (n, cr) => CellPred(n, cr) },
-      fold = fold,
-      outCols = if (aggFold.isDefined) 0 else requiredSchema.length,
-      rowLimit = if (cellPreds.nonEmpty) limit.getOrElse(-1L) else -1L)
-  }
-
   private def computePartitions(): Array[InputPartition] = {
-    val parts = ranges.map(slices).getOrElse(Array.empty[InputPartition])
+    val parts = members.flatMap(_.partitions).toArray
     // an ungrouped aggregate has exactly one row even over no rows:
     // Spark merges partial COUNTs with SUM, which no rows would make NULL
     if (parts.isEmpty && aggFold.exists(_.groupBy.isEmpty))
-      Array(partition(meta.coords.map(c => (0, c.length)).toArray))
+      Array(members.head.partition(meta.coords.map(c => (0, c.length)).toArray))
     else parts
   }
 
-  private def slices(r: GridMath.Ranges): Array[InputPartition] = {
+  /** Logical (edge-clipped) cell count of a chunk. */
+  private def logicalCells(m: ZarrArrayMeta, ci: Seq[Int]): Long =
+    m.shape.zip(m.chunks).zip(ci).map { case ((s, c), i) =>
+      math.max(0L, math.min(c.toLong, s - i.toLong * c))
+    }.product
+
+  /** One member store's share of the scan: its ranges and its
+    * partitions, tagged `idx` (−1 for a lone store). */
+  private final class Member(val meta: ZarrStoreMeta, pushdown: ScanPushdown, val idx: Int) {
+
+    /** Pruning ranges, narrowed on each exactly-filtered dim to its
+      * exact match interval, and at runtime by [[narrow]] (DSv2
+      * dynamic pruning: Spark pushes the build side's join-key values
+      * before re-planning partitions). */
+    @volatile var ranges: Option[GridMath.Ranges] =
+      GridMath.coordRangesPred(meta.coords.map(_.doubles), pushdown.coordBounds).flatMap { r =>
+        val n = pushdown.intervals.foldLeft(r) { case (acc, (d, (lo, hi))) =>
+          acc.updated(d, (math.max(acc(d)._1, lo), math.min(acc(d)._2, hi)))
+        }
+        if (n.exists { case (lo, hi) => lo >= hi }) None else Some(n)
+      }
+
+    def filteredRows: Long = ranges.map(GridMath.totalRows).getOrElse(0L)
+
+    /** Data-variable predicates compact rows away in the reader. */
+    private val cellPreds = pushdown.cellPreds
+    private val varBounds = pushdown.varBounds
+
+    /** Shrink dim `d` to the bounding index range of `values`. */
+    def narrow(d: Int, values: Seq[Double]): Unit = ranges = ranges.flatMap { r =>
+      val hits = values.map(v =>
+        GridMath.findCoordIndex(meta.coords(d).doubles, v)).filter(_ >= 0)
+      if (hits.isEmpty) None
+      else {
+        val lo = math.max(r(d)._1, hits.min)
+        val hi = math.min(r(d)._2, hits.max + 1)
+        if (lo >= hi) None
+        else Some(r.updated(d, (lo, hi)))
+      }
+    }
+
+    /** `rows=F of T`: the grid rows the planned partitions cover (after
+      * range, `.zstats`, limit/offset and runtime pruning) of the whole
+      * grid's — the reference's per-scan `reduction_pct`. */
+    def description(covered: Long): String = {
+      val r = ranges.map(_.map { case (s, e) => s"[$s,$e)" }.mkString(",")).getOrElse("EMPTY")
+      val total = meta.totalRows
+      val pruned = if (total == 0) 0.0 else 100.0 * (total - covered) / total
+      val folded = fold.map(f => s" $f").getOrElse("")
+      val statsTopN = topNVar.map(_ => " (.zstats pruned)").getOrElse("")
+      f"ZarrScan path=${meta.path} rows=$covered of $total ($pruned%.1f%% pruned) ranges=$r " +
+        s"limit=${limit.getOrElse(-1L)} offset=$offset$folded$statsTopN " +
+        s"pruneFilters=[${pushdown.pruning.mkString(", ")}] " +
+        s"exactFilters=[${pushdown.exact.mkString(", ")}] postScan=[${pushdown.postScan.mkString(", ")}]"
+    }
+
+    /** Columns each partition reads: the emitted ones first (none for a
+      * partial aggregate, which emits its own), then those only the
+      * predicates and the fold need. */
+    private lazy val readNames: Seq[String] = {
+      val out = if (aggFold.isDefined) Nil else requiredSchema.fieldNames.toSeq
+      val foldCols = fold.toSeq.flatMap {
+        case a: AggFold => a.aggs.flatMap(_.col)
+        case t: TopNFold => Seq(t.col)
+      }
+      out ++ (foldCols ++ cellPreds.map(_._1)).distinct.filterNot(out.contains)
+    }
+
+    /** The partition template carrying the pushdown: the slice bounds
+      * are filled in per partition. */
+    def partition(r: GridMath.Ranges): ZarrInputPartition =
+      ZarrInputPartition(meta.path, 0L, 0L, r, meta.coords, meta.projection(readNames),
+        fillAsNull, chunkCacheEntries, prefetch,
+        memberIdx = idx,
+        preds = cellPreds.map { case (n, cr) => CellPred(n, cr) },
+        fold = fold,
+        outCols = if (aggFold.isDefined) 0 else requiredSchema.length,
+        rowLimit = if (cellPreds.nonEmpty) limit.getOrElse(-1L) else -1L)
+
+    def partitions: Array[InputPartition] = ranges.map(slices).getOrElse(Array.empty[InputPartition])
+
+    private def slices(r: GridMath.Ranges): Array[InputPartition] = {
       val template = partition(r)
       if (keyGrouped) {
         // one partition per outer index, tagged with its coordinate
@@ -1226,106 +1089,102 @@ class ZarrScan(
         .map(s => template.copy(rowStart = s._1, rowEnd = s._2): InputPartition)
         .toArray
       }
-  }
-
-  /** Logical (edge-clipped) cell count of a chunk. */
-  private def logicalCells(m: ZarrArrayMeta, ci: Seq[Int]): Long =
-    m.shape.zip(m.chunks).zip(ci).map { case ((s, c), i) =>
-      math.max(0L, math.min(c.toLong, s - i.toLong * c))
-    }.product
-
-  /** For ORDER BY v [DESC] LIMIT n: the pruning threshold τ = the
-    * largest x such that chunks wholly ≥ x (min ≥ x under DESC; the
-    * sign flip below makes ASC the same "largest first" problem) hold
-    * ≥ n logical cells. The global n-th best value is then ≥ τ, so a
-    * chunk whose BEST cell is strictly below τ cannot contribute —
-    * and the kept chunks alone still guarantee n cells ≥ τ, so ties
-    * at τ are safe (no mutual elimination: a tied chunk has
-    * best = τ, not < τ, and is kept). */
-  private lazy val topNThreshold: Option[(ZarrArrayMeta, Double, Boolean)] =
-    topNVar.flatMap { case (name, desc, n) =>
-      meta.dataVars.find(_.name == name).map { m =>
-        val entries = m.chunkStats.toArray.map { case (key, (mn, mx)) =>
-          val g = if (desc) mn else -mx // guarantee key (worst cell, flipped)
-          (g, logicalCells(m, ZarrSums.chunkIdxOf(m, key)))
-        }.filter(e => !e._1.isNaN).sortBy(-_._1)
-        var tau = Double.NegativeInfinity
-        var cells = 0L
-        var i = 0
-        while (i < entries.length && tau.isNegInfinity) {
-          cells += entries(i)._2
-          if (cells >= n) tau = entries(i)._1
-          i += 1
-        }
-        (m, tau, desc)
-      }
     }
 
-  /** A slice survives unless EVERY chunk it covers is provably outside
-    * the top-n (unknown chunks always keep the slice — never prune
-    * blind; >1024 covered chunks skips the check, same cap as
-    * sliceMayMatch). */
-  private def sliceMayReachTopN(rowStart: Long, rowEnd: Long, r: GridMath.Ranges): Boolean =
-    topNThreshold match {
-      case None => true
-      case Some((_, tau, _)) if tau.isNegInfinity => true
-      case Some((m, tau, desc)) =>
-        val idx = new Array[Int](r.length)
-        GridMath.rowToIndices(rowStart, r, idx); val o0 = idx(0)
-        GridMath.rowToIndices(rowEnd - 1, r, idx); val o1 = idx(0)
-        val innerGrid = m.chunkGrid.drop(1)
-        val coveredOuter = (o0 / m.chunks.head) to (o1 / m.chunks.head)
-        val nChunks = coveredOuter.size.toLong * innerGrid.product
-        if (nChunks > 1024) return true
-        def anyReaches(prefix: List[Long], dims: Seq[Long]): Boolean = dims match {
-          case Nil =>
-            m.chunkStats.get(m.chunkKey(prefix.reverse)) match {
-              case Some((mn, mx)) =>
-                val best = if (desc) mx else -mn // candidate's best, flipped
-                !(best < tau) // NaN compares false — kept
-              case None => true // unknown chunk — keep
-            }
-          case d +: rest => (0L until d).exists(i => anyReaches(i :: prefix, rest))
-        }
-        coveredOuter.exists(co => anyReaches(List(co.toLong), innerGrid))
-    }
-
-  /** Statistics-based partition pruning for pushed data-variable
-    * predicates: a slice is dropped only if, for some predicated
-    * variable, EVERY chunk the slice covers provably fails the
-    * predicate conjunction by its `.zstats` [min,max]. Chunks without
-    * a stats entry are assumed possible (never prune blind). */
-  private def sliceMayMatch(rowStart: Long, rowEnd: Long, r: GridMath.Ranges): Boolean = {
-    if (varBounds.isEmpty) return true
-    // NaN stats (a chunk holding NaN cells) prove nothing
-    def possible(p: GridMath.CoordPred, mn: Double, mx: Double): Boolean = mn.isNaN || mx.isNaN || (p match {
-      case GridMath.CoordPred.Eq(t) => t >= mn - 1e-9 && t <= mx + 1e-9
-      case GridMath.CoordPred.Gt(t, orEq) => if (orEq) mx >= t else mx > t
-      case GridMath.CoordPred.Lt(t, orEq) => if (orEq) mn <= t else mn < t
-      case GridMath.CoordPred.InSet(vs) => vs.exists(t => t >= mn - 1e-9 && t <= mx + 1e-9)
-    })
-    val idx = new Array[Int](r.length)
-    GridMath.rowToIndices(rowStart, r, idx); val o0 = idx(0)
-    GridMath.rowToIndices(rowEnd - 1, r, idx); val o1 = idx(0)
-    varBounds.forall { case (name, preds) =>
-      meta.dataVars.find(_.name == name).forall { m =>
-        val innerGrid = m.chunkGrid.drop(1)
-        val coveredOuter = (o0 / m.chunks.head) to (o1 / m.chunks.head)
-        val nChunks = coveredOuter.size.toLong * innerGrid.product
-        if (nChunks > 1024) true // too many to enumerate; don't prune
-        else {
-          // any covered chunk whose stats allow the predicates keeps the slice
-          def anyPossible(prefix: List[Long], dims: Seq[Long]): Boolean = dims match {
-            case Nil =>
-              val key = m.chunkKey(prefix.reverse)
-              m.chunkStats.get(key) match {
-                case Some((mn, mx)) => preds.forall(p => possible(p, mn, mx))
-                case None => true // unknown chunk (absent or unstatted)
-              }
-            case d +: rest =>
-              (0L until d).exists(i => anyPossible(i :: prefix, rest))
+    /** For ORDER BY v [DESC] LIMIT n: the pruning threshold τ = the
+      * largest x such that chunks wholly ≥ x (min ≥ x under DESC; the
+      * sign flip below makes ASC the same "largest first" problem) hold
+      * ≥ n logical cells. The global n-th best value is then ≥ τ, so a
+      * chunk whose BEST cell is strictly below τ cannot contribute —
+      * and the kept chunks alone still guarantee n cells ≥ τ, so ties
+      * at τ are safe (no mutual elimination: a tied chunk has
+      * best = τ, not < τ, and is kept). Over a union each member's τ
+      * bounds the union's n-th best too. */
+    private lazy val topNThreshold: Option[(ZarrArrayMeta, Double, Boolean)] =
+      topNVar.flatMap { case (name, desc, n) =>
+        meta.dataVars.find(_.name == name).map { m =>
+          val entries = m.chunkStats.toArray.map { case (key, (mn, mx)) =>
+            val g = if (desc) mn else -mx // guarantee key (worst cell, flipped)
+            (g, logicalCells(m, ZarrSums.chunkIdxOf(m, key)))
+          }.filter(e => !e._1.isNaN).sortBy(-_._1)
+          var tau = Double.NegativeInfinity
+          var cells = 0L
+          var i = 0
+          while (i < entries.length && tau.isNegInfinity) {
+            cells += entries(i)._2
+            if (cells >= n) tau = entries(i)._1
+            i += 1
           }
-          coveredOuter.exists(co => anyPossible(List(co.toLong), innerGrid))
+          (m, tau, desc)
+        }
+      }
+
+    /** A slice survives unless EVERY chunk it covers is provably outside
+      * the top-n (unknown chunks always keep the slice — never prune
+      * blind; >1024 covered chunks skips the check, same cap as
+      * sliceMayMatch). */
+    private def sliceMayReachTopN(rowStart: Long, rowEnd: Long, r: GridMath.Ranges): Boolean =
+      topNThreshold match {
+        case None => true
+        case Some((_, tau, _)) if tau.isNegInfinity => true
+        case Some((m, tau, desc)) =>
+          val idx = new Array[Int](r.length)
+          GridMath.rowToIndices(rowStart, r, idx); val o0 = idx(0)
+          GridMath.rowToIndices(rowEnd - 1, r, idx); val o1 = idx(0)
+          val innerGrid = m.chunkGrid.drop(1)
+          val coveredOuter = (o0 / m.chunks.head) to (o1 / m.chunks.head)
+          val nChunks = coveredOuter.size.toLong * innerGrid.product
+          if (nChunks > 1024) return true
+          def anyReaches(prefix: List[Long], dims: Seq[Long]): Boolean = dims match {
+            case Nil =>
+              m.chunkStats.get(m.chunkKey(prefix.reverse)) match {
+                case Some((mn, mx)) =>
+                  val best = if (desc) mx else -mn // candidate's best, flipped
+                  !(best < tau) // NaN compares false — kept
+                case None => true // unknown chunk — keep
+              }
+            case d +: rest => (0L until d).exists(i => anyReaches(i :: prefix, rest))
+          }
+          coveredOuter.exists(co => anyReaches(List(co.toLong), innerGrid))
+      }
+
+    /** Statistics-based partition pruning for pushed data-variable
+      * predicates: a slice is dropped only if, for some predicated
+      * variable, EVERY chunk the slice covers provably fails the
+      * predicate conjunction by its `.zstats` [min,max]. Chunks without
+      * a stats entry are assumed possible (never prune blind). */
+    private def sliceMayMatch(rowStart: Long, rowEnd: Long, r: GridMath.Ranges): Boolean = {
+      if (varBounds.isEmpty) return true
+      // NaN stats (a chunk holding NaN cells) prove nothing
+      def possible(p: GridMath.CoordPred, mn: Double, mx: Double): Boolean = mn.isNaN || mx.isNaN || (p match {
+        case GridMath.CoordPred.Eq(t) => t >= mn - 1e-9 && t <= mx + 1e-9
+        case GridMath.CoordPred.Gt(t, orEq) => if (orEq) mx >= t else mx > t
+        case GridMath.CoordPred.Lt(t, orEq) => if (orEq) mn <= t else mn < t
+        case GridMath.CoordPred.InSet(vs) => vs.exists(t => t >= mn - 1e-9 && t <= mx + 1e-9)
+      })
+      val idx = new Array[Int](r.length)
+      GridMath.rowToIndices(rowStart, r, idx); val o0 = idx(0)
+      GridMath.rowToIndices(rowEnd - 1, r, idx); val o1 = idx(0)
+      varBounds.forall { case (name, preds) =>
+        meta.dataVars.find(_.name == name).forall { m =>
+          val innerGrid = m.chunkGrid.drop(1)
+          val coveredOuter = (o0 / m.chunks.head) to (o1 / m.chunks.head)
+          val nChunks = coveredOuter.size.toLong * innerGrid.product
+          if (nChunks > 1024) true // too many to enumerate; don't prune
+          else {
+            // any covered chunk whose stats allow the predicates keeps the slice
+            def anyPossible(prefix: List[Long], dims: Seq[Long]): Boolean = dims match {
+              case Nil =>
+                val key = m.chunkKey(prefix.reverse)
+                m.chunkStats.get(key) match {
+                  case Some((mn, mx)) => preds.forall(p => possible(p, mn, mx))
+                  case None => true // unknown chunk (absent or unstatted)
+                }
+              case d +: rest =>
+                (0L until d).exists(i => anyPossible(i :: prefix, rest))
+            }
+            coveredOuter.exists(co => anyPossible(List(co.toLong), innerGrid))
+          }
         }
       }
     }
@@ -1335,22 +1194,23 @@ class ZarrScan(
 
   /** Exact statistics from metadata
     * (/root/reference/src/datasource/zarr.rs:191-254): filtered row
-    * count; per-coordinate min/max/distinct/nullCount. */
+    * count; per-coordinate min/max/distinct/nullCount of a lone store. */
   override def estimateStatistics(): Statistics = {
     val rowWidth = math.max(8,
       readSchema().fields.map(_.dataType.defaultSize).sum)
-    val scanned = math.max(0L,
-      limit.map(math.min(_, filteredRows)).getOrElse(filteredRows) - offset)
+    val scanned = members.map(m => math.max(0L,
+      limit.map(math.min(_, m.filteredRows)).getOrElse(m.filteredRows) - offset)).sum
     // a fold emits at most its groups (or n rows) per partition
     val rows = fold match {
       case Some(a: AggFold) =>
-        val groups = a.groupBy.map(n => meta.coords(meta.coordNames.indexOf(n)).length.toLong).product
+        val groups = metas.map(m =>
+          a.groupBy.map(n => m.coords(m.coordNames.indexOf(n)).length.toLong).product).max
         math.max(1L, math.min(scanned, groups * plannedPartitionCount))
       case Some(t: TopNFold) => math.min(scanned, t.n.toLong * plannedPartitionCount)
       case None => scanned
     }
     val colStats = new java.util.HashMap[NamedReference, ColumnStatistics]()
-    meta.coords.zipWithIndex.foreach { case (c, _) =>
+    if (!union) meta.coords.foreach { c =>
       if (requiredSchema.fieldNames.contains(c.meta.name) && c.meta.dtype.kind != 'S') {
         colStats.put(Expressions.column(c.meta.name), new ZarrColumnStats(c))
       }
@@ -1363,7 +1223,10 @@ class ZarrScan(
   }
 
   override def supportedCustomMetrics(): Array[CustomMetric] =
-    Array(new ZarrBytesReadMetric, new ZarrChunksDecodedMetric, new ZarrRowsOutMetric)
+    Array[CustomMetric](new ZarrBytesReadMetric, new ZarrChunksDecodedMetric, new ZarrRowsOutMetric) ++
+      members.filter(_.idx >= 0).flatMap(m => Seq(
+        new ZarrMemberMetric("zarrBytesRead", m.idx),
+        new ZarrMemberMetric("zarrChunksDecoded", m.idx)))
 }
 
 private class ZarrColumnStats(c: CoordData) extends ColumnStatistics {
@@ -1522,113 +1385,24 @@ private[zarr] object ZarrSums {
   }
 }
 
-/** Metadata-only scan for completely-pushed aggregates: emits a single
-  * row computed from statistics — zero chunk IO, the DSv2 equivalent
-  * of the reference's CountStatisticsRule / MinMaxStatisticsRule. */
-class ZarrAggScan(meta: ZarrStoreMeta, agg: Aggregation) extends Scan with Batch {
+/** Metadata-only scan for the aggregates metadata answers — zero chunk
+  * IO, the DSv2 equivalent of the reference's CountStatisticsRule /
+  * MinMaxStatisticsRule, generalized to GROUP BY coordinates (no group
+  * keys is the ungrouped case). One row per combination of the grouped
+  * coordinates' values, answered from grid arithmetic (see
+  * [[ZarrScanBuilder]]): zero chunk IO for `SELECT time, COUNT(*) …
+  * GROUP BY time`-shaped queries at any grid size, partitioned along
+  * the first grouped dimension so even a million-group dimension emits
+  * in parallel. One store's answer is complete, and so is an ungrouped
+  * union's, combined from the member answers. A grouped union emits
+  * every member's group rows (keys may repeat across members — stores
+  * need not partition the key domain) and Spark's final aggregate
+  * merges them by key. */
+class ZarrAggScan(metas: Seq[ZarrStoreMeta], agg: Aggregation) extends Scan with Batch {
 
-  override def readSchema(): StructType = StructType(
-    agg.aggregateExpressions().zipWithIndex.map {
-      case (_: CountStar, i) => StructField(s"count_$i", LongType, nullable = false)
-      case (_: Count, i) => StructField(s"count_$i", LongType, nullable = false)
-      case (m: Min, i) =>
-        StructField(s"min_$i", meta.schema(pushedCol(m.column)).dataType, nullable = true)
-      case (m: Max, i) =>
-        StructField(s"max_$i", meta.schema(pushedCol(m.column)).dataType, nullable = true)
-      case (s: Sum, i) =>
-        val t = if (ZarrSums.isIntegral(meta, pushedCol(s.column))) LongType else DoubleType
-        StructField(s"sum_$i", t, nullable = true)
-      case (_: Avg, i) => StructField(s"avg_$i", DoubleType, nullable = true)
-      case (other, _) => throw new IllegalStateException(s"Unexpected pushed agg: $other")
-    })
-
-  override def description(): String =
-    s"ZarrAggScan path=${meta.path} (metadata-only) " +
-      s"aggs=[${agg.aggregateExpressions().mkString(", ")}]"
-
-  override def toBatch: Batch = this
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    val coordByName = meta.coords.map(c => c.meta.name -> c).toMap
-    val values: Array[Any] = agg.aggregateExpressions().map {
-      case _: CountStar => meta.totalRows
-      case c: Count if !c.isDistinct => meta.totalRows // null_count is 0 for every column
-      case c: Count => coordByName(pushedCol(c.column)).length.toLong
-      case m: Min =>
-        val c = coordByName(pushedCol(m.column))
-        ChunkCodec.elementAt(c.raw, GridMath.findCoordIndex(c.doubles, c.min))
-      case m: Max =>
-        val c = coordByName(pushedCol(m.column))
-        ChunkCodec.elementAt(c.raw, GridMath.findCoordIndex(c.doubles, c.max))
-      case s: Sum =>
-        val n = pushedCol(s.column)
-        val total = ZarrSums.totalFor(meta, n).get
-        if (ZarrSums.isIntegral(meta, n)) total.longValueExact() else total.doubleValue()
-      case a: Avg =>
-        // double division of the exact total — identical to Spark's
-        // sum.toDouble / count and to the oracle's CAST(s AS DOUBLE)/n
-        ZarrSums.totalFor(meta, pushedCol(a.column)).get.doubleValue() / meta.totalRows
-      case other => throw new IllegalStateException(s"Unexpected pushed agg: $other")
-    }
-    Array(ZarrAggPartition(values))
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory = new ZarrAggReaderFactory
-}
-
-/** Metadata-only GROUPED aggregate scan: one output row per
-  * combination of the grouped coordinates' values, each answered from
-  * grid arithmetic (see ZarrScanBuilder.supportCompletePushDown) —
-  * zero chunk IO for `SELECT time, COUNT(*) … GROUP BY time`-shaped
-  * queries at any grid size. Partitioned along the first grouped
-  * dimension, so even a million-group dimension emits in parallel. */
-class ZarrGroupAggScan(meta: ZarrStoreMeta, agg: Aggregation) extends Scan with Batch {
-
+  /** The schema and coordinate names, which every member shares. */
+  private val meta = metas.head
   private val groupNames: Seq[String] = agg.groupByExpressions().map(pushedCol).toSeq
-  private val groupDims: Seq[Int] = groupNames.map(meta.coordNames.indexOf)
-  private val groupedSet = groupNames.toSet
-  private val coordByName = meta.coords.map(c => c.meta.name -> c).toMap
-
-  /** Rows per group = Π lengths of the NON-grouped coordinates. */
-  private val rowsPerGroup: Long = meta.coords.zipWithIndex
-    .collect { case (c, d) if !groupDims.contains(d) => c.length.toLong }
-    .product
-
-  /** One entry per aggregate: a constant, the j-th grouped
-    * coordinate's value, or a per-group sidecar total. Lazy: building
-    * the sidecar group totals folds the per-chunk map, which callers
-    * that only need the schema must not pay for. */
-  private lazy val specs: Seq[ZarrGroupAggSpec] = agg.aggregateExpressions().toSeq.map {
-    case _: CountStar => ZarrAggConst(rowsPerGroup)
-    case c: Count if !c.isDistinct => ZarrAggConst(rowsPerGroup) // null_count 0 everywhere
-    case c: Count => ZarrAggConst(coordByName(pushedCol(c.column)).length.toLong)
-    case m: Min =>
-      val n = pushedCol(m.column)
-      if (groupedSet(n)) ZarrAggGroupVal(groupNames.indexOf(n))
-      else { val c = coordByName(n)
-        ZarrAggConst(ChunkCodec.elementAt(c.raw, GridMath.findCoordIndex(c.doubles, c.min))) }
-    case m: Max =>
-      val n = pushedCol(m.column)
-      if (groupedSet(n)) ZarrAggGroupVal(groupNames.indexOf(n))
-      else { val c = coordByName(n)
-        ZarrAggConst(ChunkCodec.elementAt(c.raw, GridMath.findCoordIndex(c.doubles, c.max))) }
-    case s: Sum =>
-      val n = pushedCol(s.column)
-      val (totals, dflt) = ZarrSums.groupTotals(meta, n, groupDims).get
-      if (ZarrSums.isIntegral(meta, n))
-        ZarrAggGroupTotal(totals.map { case (k, v) => k -> (v.longValueExact(): Any) },
-          dflt.longValueExact())
-      else
-        ZarrAggGroupTotal(totals.map { case (k, v) => k -> (v.doubleValue(): Any) },
-          dflt.doubleValue())
-    case a: Avg =>
-      val n = pushedCol(a.column)
-      val (totals, dflt) = ZarrSums.groupTotals(meta, n, groupDims).get
-      ZarrAggGroupTotal(
-        totals.map { case (k, v) => k -> (v.doubleValue() / rowsPerGroup: Any) },
-        dflt.doubleValue() / rowsPerGroup)
-    case other => throw new IllegalStateException(s"Unexpected pushed agg: $other")
-  }
 
   override def readSchema(): StructType = StructType(
     groupNames.map(n => StructField(n, meta.schema(n).dataType, nullable = false)) ++
@@ -1646,25 +1420,108 @@ class ZarrGroupAggScan(meta: ZarrStoreMeta, agg: Aggregation) extends Scan with 
         case (other, _) => throw new IllegalStateException(s"Unexpected pushed agg: $other")
       })
 
-  override def description(): String =
-    s"ZarrGroupAggScan path=${meta.path} (metadata-only) groups=[${groupNames.mkString(",")}] " +
-      s"aggs=[${agg.aggregateExpressions().mkString(", ")}]"
+  override def description(): String = {
+    val groups = s"groups=[${groupNames.mkString(",")}] "
+    val aggs = s"aggs=[${agg.aggregateExpressions().mkString(", ")}]"
+    (metas, groupNames) match {
+      case (Seq(m), Seq()) => s"ZarrAggScan path=${m.path} (metadata-only) $aggs"
+      case (Seq(m), _) => s"ZarrGroupAggScan path=${m.path} (metadata-only) $groups$aggs"
+      case (_, Seq()) => s"ZarrUnionAggScan members=${metas.size} (metadata-only) $aggs"
+      case _ => s"ZarrUnionGroupAggScan members=${metas.size} (metadata-only, " +
+        s"partial: Spark merges member answers by group key) $groups$aggs"
+    }
+  }
 
   override def toBatch: Batch = this
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    val lens = groupDims.map(d => meta.coords(d).length).toArray
-    val raws = groupDims.map(d => meta.coords(d).raw)
-    val ranges: GridMath.Ranges = lens.map(l => (0, l))
-    GridMath.partitionSlices(ranges, 1, None, 65536)
-      .map(s => ZarrGroupAggPartition(s._1, s._2, lens, raws, specs): InputPartition)
-      .toArray
+  /** Built when Spark plans, not at pushdown: folding the sidecar's
+    * per-chunk map into group totals costs driver time that optimizer
+    * probes on discarded plans must not pay. */
+  private lazy val partitions: Array[InputPartition] =
+    if (groupNames.isEmpty)
+      Array(ZarrAggPartition(0L, 1L, Array.empty, Nil, ungrouped.map(ZarrAggConst)))
+    else metas.flatMap(grouped).toArray
+
+  override def planInputPartitions(): Array[InputPartition] = partitions
+
+  /** The one ungrouped row, combined over the members: counts and sums
+    * add, bounds combine, AVG = Σ totals / Σ rows. */
+  private def ungrouped: Seq[Any] = {
+    val totalRows = metas.map(_.totalRows).sum
+    def bound(n: String, min: Boolean): Any = {
+      val each = metas.map { m =>
+        val c = m.coords.find(_.meta.name == n).get
+        val v = if (min) c.min else c.max
+        (v, ChunkCodec.elementAt(c.raw, GridMath.findCoordIndex(c.doubles, v)))
+      }
+      (if (min) each.minBy(_._1) else each.maxBy(_._1))._2
+    }
+    def total(n: String) =
+      metas.map(ZarrSums.totalFor(_, n).get).foldLeft(java.math.BigDecimal.ZERO)(_.add(_))
+    agg.aggregateExpressions().toSeq.map {
+      case _: CountStar => totalRows
+      case c: Count if !c.isDistinct => totalRows // null_count is 0 for every column
+      // one store only: values overlap across members
+      case c: Count => meta.coords.find(_.meta.name == pushedCol(c.column)).get.length.toLong
+      case m: Min => bound(pushedCol(m.column), min = true)
+      case m: Max => bound(pushedCol(m.column), min = false)
+      case s: Sum =>
+        val n = pushedCol(s.column)
+        if (ZarrSums.isIntegral(meta, n)) total(n).longValueExact() else total(n).doubleValue()
+      // double division of the exact total — identical to Spark's
+      // sum.toDouble / count and to the oracle's CAST(s AS DOUBLE)/n
+      case a: Avg => total(pushedCol(a.column)).doubleValue() / totalRows
+      case other => throw new IllegalStateException(s"Unexpected pushed agg: $other")
+    }
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = new ZarrGroupAggReaderFactory
+  /** One member's group rows. Per group: COUNT = Π lengths of the
+    * NON-grouped coordinates, MIN/MAX of a grouped coordinate is the
+    * group value and of a non-grouped one its global bound, SUM/AVG a
+    * per-group sidecar total. */
+  private def grouped(m: ZarrStoreMeta): Seq[InputPartition] = {
+    val groupDims = groupNames.map(m.coordNames.indexOf)
+    val coordByName = m.coords.map(c => c.meta.name -> c).toMap
+    val rowsPerGroup: Long = m.coords.zipWithIndex
+      .collect { case (c, d) if !groupDims.contains(d) => c.length.toLong }
+      .product
+    def bound(n: String, v: CoordData => Double): ZarrGroupAggSpec =
+      if (groupNames.contains(n)) ZarrAggGroupVal(groupNames.indexOf(n))
+      else { val c = coordByName(n)
+        ZarrAggConst(ChunkCodec.elementAt(c.raw, GridMath.findCoordIndex(c.doubles, v(c)))) }
+    val specs: Seq[ZarrGroupAggSpec] = agg.aggregateExpressions().toSeq.map {
+      case _: CountStar => ZarrAggConst(rowsPerGroup)
+      case c: Count if !c.isDistinct => ZarrAggConst(rowsPerGroup) // null_count 0 everywhere
+      case c: Count => ZarrAggConst(coordByName(pushedCol(c.column)).length.toLong)
+      case a: Min => bound(pushedCol(a.column), _.min)
+      case a: Max => bound(pushedCol(a.column), _.max)
+      case s: Sum =>
+        val n = pushedCol(s.column)
+        val (totals, dflt) = ZarrSums.groupTotals(m, n, groupDims).get
+        if (ZarrSums.isIntegral(m, n))
+          ZarrAggGroupTotal(totals.map { case (k, v) => k -> (v.longValueExact(): Any) },
+            dflt.longValueExact())
+        else
+          ZarrAggGroupTotal(totals.map { case (k, v) => k -> (v.doubleValue(): Any) },
+            dflt.doubleValue())
+      case a: Avg =>
+        val n = pushedCol(a.column)
+        val (totals, dflt) = ZarrSums.groupTotals(m, n, groupDims).get
+        ZarrAggGroupTotal(
+          totals.map { case (k, v) => k -> (v.doubleValue() / rowsPerGroup: Any) },
+          dflt.doubleValue() / rowsPerGroup)
+      case other => throw new IllegalStateException(s"Unexpected pushed agg: $other")
+    }
+    val lens = groupDims.map(d => m.coords(d).length).toArray
+    val raws = groupDims.map(d => m.coords(d).raw)
+    GridMath.partitionSlices(lens.map(l => (0, l)), 1, None, 65536)
+      .map(s => ZarrAggPartition(s._1, s._2, lens, raws, specs))
+  }
+
+  override def createReaderFactory(): PartitionReaderFactory = new ZarrReaderFactory
 }
 
-/** How a grouped-aggregate output column is produced per group row. */
+/** How an aggregate output column is produced per group row. */
 sealed trait ZarrGroupAggSpec extends Serializable
 /** A group-independent constant (counts, global coordinate bounds). */
 final case class ZarrAggConst(v: Any) extends ZarrGroupAggSpec
@@ -1675,55 +1532,12 @@ final case class ZarrAggGroupVal(j: Int) extends ZarrGroupAggSpec
 final case class ZarrAggGroupTotal(totals: Map[Seq[Int], Any], default: Any)
     extends ZarrGroupAggSpec
 
-final case class ZarrGroupAggPartition(
+/** Group rows `[rowStart, rowEnd)` of a metadata answer, in row-major
+  * order over the grouped coordinates of lengths `lens` (none: the one
+  * ungrouped row). */
+final case class ZarrAggPartition(
     rowStart: Long, rowEnd: Long, lens: Array[Int],
     raws: Seq[AnyRef], specs: Seq[ZarrGroupAggSpec]) extends InputPartition
-
-class ZarrGroupAggReaderFactory extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[ZarrGroupAggPartition]
-    val ranges: GridMath.Ranges = p.lens.map(l => (0, l))
-    val idx = new Array[Int](p.lens.length)
-    new PartitionReader[InternalRow] {
-      private var row = p.rowStart
-      private var current: InternalRow = _
-      private def internal(v: Any): Any = v match {
-        case s: String => org.apache.spark.unsafe.types.UTF8String.fromString(s)
-        case other => other
-      }
-      override def next(): Boolean = {
-        if (row >= p.rowEnd) return false
-        GridMath.rowToIndices(row, ranges, idx)
-        val groupVals = p.raws.indices.map(j => internal(ChunkCodec.elementAt(p.raws(j), idx(j))))
-        val aggVals = p.specs.map {
-          case ZarrAggConst(const) => internal(const)
-          case ZarrAggGroupVal(j) => groupVals(j)
-          case ZarrAggGroupTotal(totals, dflt) =>
-            internal(totals.getOrElse(idx.toSeq, dflt))
-        }
-        current = new GenericInternalRow((groupVals ++ aggVals).toArray)
-        row += 1
-        true
-      }
-      override def get(): InternalRow = current
-      override def close(): Unit = {}
-    }
-  }
-}
-
-final case class ZarrAggPartition(values: Array[Any]) extends InputPartition
-
-class ZarrAggReaderFactory extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val vals = partition.asInstanceOf[ZarrAggPartition].values
-    new PartitionReader[InternalRow] {
-      private var done = false
-      override def next(): Boolean = if (done) false else { done = true; true }
-      override def get(): InternalRow = new GenericInternalRow(vals.clone())
-      override def close(): Unit = {}
-    }
-  }
-}
 
 /** A projected output column: either the `dim`-th coordinate (computed
   * from the row index — the lazy form of the reference's dictionary
@@ -1771,19 +1585,47 @@ final case class ZarrKeyedInputPartition(p: ZarrInputPartition, key: InternalRow
 }
 
 class ZarrReaderFactory extends PartitionReaderFactory {
-  private def unwrap(partition: InputPartition): ZarrInputPartition = partition match {
-    case k: ZarrKeyedInputPartition => k.p
-    case p: ZarrInputPartition => p
+
+  /** Chunk partitions read columnar: an empty projection (bare counts)
+    * emits zero-column batches carrying `numRows`. Metadata answers
+    * read as rows; no scan mixes the two. */
+  override def supportColumnarReads(partition: InputPartition): Boolean =
+    !partition.isInstanceOf[ZarrAggPartition]
+
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
+    val p = partition.asInstanceOf[ZarrAggPartition]
+    val ranges: GridMath.Ranges = p.lens.map(l => (0, l))
+    val idx = new Array[Int](p.lens.length)
+    new PartitionReader[InternalRow] {
+      private var row = p.rowStart
+      private var current: InternalRow = _
+      private def internal(v: Any): Any = v match {
+        case s: String => org.apache.spark.unsafe.types.UTF8String.fromString(s)
+        case other => other
+      }
+      override def next(): Boolean = {
+        if (row >= p.rowEnd) return false
+        GridMath.rowToIndices(row, ranges, idx)
+        val groupVals = p.raws.indices.map(j => internal(ChunkCodec.elementAt(p.raws(j), idx(j))))
+        val aggVals = p.specs.map {
+          case ZarrAggConst(const) => internal(const)
+          case ZarrAggGroupVal(j) => groupVals(j)
+          case ZarrAggGroupTotal(totals, dflt) =>
+            internal(totals.getOrElse(idx.toSeq, dflt))
+        }
+        current = new GenericInternalRow((groupVals ++ aggVals).toArray)
+        row += 1
+        true
+      }
+      override def get(): InternalRow = current
+      override def close(): Unit = {}
+    }
   }
-
-  /** Every partition reads columnar: an empty projection (bare
-    * counts) emits zero-column batches carrying `numRows`. */
-  override def supportColumnarReads(partition: InputPartition): Boolean = true
-
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    throw new UnsupportedOperationException("zarr partitions are read columnar only")
 
   override def createColumnarReader(
       partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    new ZarrColumnarReader(unwrap(partition))
+    new ZarrColumnarReader(partition match {
+      case k: ZarrKeyedInputPartition => k.p
+      case p: ZarrInputPartition => p
+    })
 }

@@ -11,6 +11,7 @@ import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.execution.{SQLExecution, SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
+import org.apache.spark.sql.graftbridge.DriverCollect
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
@@ -56,13 +57,14 @@ object ZarrFoldMerge extends SparkStrategy {
   * per group key in partition order, and projects the aggregate's own
   * result expressions, so AVG = SUM / COUNT comes out as Spark computes
   * it. `executeCollect` and `executeTake` answer a root collect or a
-  * LIMIT; `doExecute` serves the merged rows as one partition to any
-  * other parent operator. */
+  * LIMIT, and through [[DriverCollect]] a broadcast exchange;
+  * `doExecute` serves the merged rows as one partition to any other
+  * parent operator. */
 case class ZarrFoldMergeExec(
     groups: Seq[NamedExpression],
     aggs: Seq[AggregateExpression],
     results: Seq[NamedExpression],
-    child: SparkPlan) extends UnaryExecNode {
+    child: SparkPlan) extends UnaryExecNode with DriverCollect {
 
   override def output: Seq[Attribute] = results.map(_.toAttribute)
   override def outputPartitioning: Partitioning = SinglePartition

@@ -155,7 +155,7 @@ final case class ColumnFilters(
     exact: List[Filter] = Nil,
     interval: Option[(Int, Int)] = None)
 
-/** What the scan does with the filters and the fold Spark pushed.
+/** What the scan of one store does with the filters Spark pushed.
   * `exact` are the filters Spark dropped: the scan answers them by
   * coordinate intervals and per-cell predicates. `pruning` are the ones
   * whose bounds narrow the ranges or drop `.zstats` partitions.
@@ -164,10 +164,23 @@ final case class ScanPushdown(
     columns: Seq[ColumnFilters] = Nil,
     exact: Seq[Filter] = Nil,
     pruning: Seq[Filter] = Nil,
-    postScan: Seq[Filter] = Nil,
-    fold: Option[ScanFold] = None) {
+    postScan: Seq[Filter] = Nil) {
 
   def unfiltered: Boolean = exact.isEmpty && pruning.isEmpty
+
+  /** This pushdown answering exactly only the filters in `keep` (those
+    * every member of a union answers exactly); a column with any other
+    * exact filter goes back post-scan whole. Only a coordinate's
+    * contiguity differs between members, and it holds for a column's
+    * conjunction as a whole, so no kept filter is dropped. */
+  def keepExact(keep: Set[Filter]): ScanPushdown =
+    if (exact.forall(keep)) this
+    else {
+      val cols = columns.map(c =>
+        if (c.exact.forall(keep)) c else c.copy(cells = CellRange.all, exact = Nil, interval = None))
+      val kept = cols.flatMap(_.exact).toSet
+      copy(columns = cols, exact = exact.filter(kept), postScan = postScan ++ exact.filterNot(kept))
+    }
 
   def coordBounds: Map[Int, Seq[GridMath.CoordPred]] =
     columns.filter(c => c.dim >= 0 && c.bounds.nonEmpty).map(c => c.dim -> c.bounds).toMap

@@ -95,6 +95,18 @@ class ZarrFoldMergeSpec extends AnyFunSuite {
     assert(rowsOf(ungrouped(z).limit(1)) == rowsOf(ungrouped(l)))
   }
 
+  test("a broadcast build side takes the merged rows without a second job") {
+    val z = zarr(v2)
+    def folded(d: DataFrame) = d.where(col("v") > -3.0f).groupBy("t").agg(count(lit(1)).as("n"), max("w").as("m"))
+    def joined(d: DataFrame) = d.groupBy("t").agg(sum("k").as("sk")).join(broadcast(folded(d)), "t")
+    val q = joined(z)
+    assert(merges(q).length == 1, q.queryExecution.executedPlan)
+    assert(jobs(q.collect()) == 3, q.queryExecution.executedPlan)
+    val unmerged = withThreshold("-1")(rowsOf(joined(z)))
+    assert(rowsOf(q) == unmerged)
+    assert(unmerged == rowsOf(joined(local(z))))
+  }
+
   test("above the driver-collect bound Spark's aggregate comes back") {
     val z = zarr(v2)
     def q(d: DataFrame) = d.where(col("v") > -3.0f).groupBy("x", "t").agg(count(lit(1)), sum("v"))

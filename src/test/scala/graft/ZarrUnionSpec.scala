@@ -1,9 +1,16 @@
 package graft
 
+import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.sources.zarr.ZarrFoldMergeExec
 
 /** Multi-store UNION read: `load(p1, p2, …)` over same-schema stores —
   * the year-per-store archive layout. Filters prune per member, so a
@@ -187,7 +194,8 @@ class ZarrUnionSpec extends AnyFunSuite {
       case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
         r.scan
     }
-    assert(scans.exists(_.isInstanceOf[graft.sources.zarr.ZarrUnionGroupAggScan]),
+    assert(scans.exists(s => s.isInstanceOf[graft.sources.zarr.ZarrAggScan] &&
+      s.description().contains("ZarrUnionGroupAggScan")),
       scans.map(_.getClass.getName).mkString(","))
     // PARTIAL pushdown: Spark's own final aggregate stays in the plan
     // ABOVE the scan — the member answers merge by group key in an
@@ -198,11 +206,99 @@ class ZarrUnionSpec extends AnyFunSuite {
     // the scan itself emits one answer row per member × group (keys
     // repeat across members); both members contribute partitions
     val unionScan = scans.collectFirst {
-      case s: graft.sources.zarr.ZarrUnionGroupAggScan => s }.get
+      case s: graft.sources.zarr.ZarrAggScan if s.description().contains("ZarrUnionGroupAggScan") => s }.get
     assert(unionScan.toBatch.planInputPartitions().length >= 2)
     val rows = df.orderBy("x").collect()
     assert(rows.map(_.toSeq).toSeq == Seq(
       Seq(0L, 6L, 0L), Seq(1L, 6L, 0L), Seq(2L, 6L, 0L)))
+  }
+
+  /** Every node of the executed plan, through AQE's wrappers. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case s: QueryStageExec => s +: nodes(s.plan)
+    case o => o +: o.children.flatMap(nodes)
+  }
+
+  private def descOf(df: DataFrame): String = scansOf(df.queryExecution.executedPlan).mkString(" ; ")
+
+  /** Rows as sorted strings: equal results in any order. */
+  private def rows(df: DataFrame): Seq[String] =
+    df.select("t", "x", "v").collect().map(_.mkString("|")).sorted.toSeq
+
+  /** A v2 store written byte by byte: coordinate t holds `ts` in the
+    * given, possibly unsorted, order; x = 0..2; v = t * 10 + x. */
+  private def rawStore(ts: Seq[Long]): String = {
+    val root = Files.createTempDirectory("zarr_union_raw")
+    def write(rel: String, b: Array[Byte]): Unit = {
+      val p = root.resolve(rel); Files.createDirectories(p.getParent); Files.write(p, b)
+    }
+    def meta(shape: Seq[Int], dtype: String) =
+      s"""{"zarr_format":2,"shape":[${shape.mkString(",")}],"chunks":[${shape.mkString(",")}],
+          "dtype":"$dtype","fill_value":0,"order":"C","filters":null,
+          "dimension_separator":".","compressor":null}""".getBytes
+    def le(n: Int) = ByteBuffer.allocate(n).order(ByteOrder.LITTLE_ENDIAN)
+    write(".zgroup", """{"zarr_format":2}""".getBytes)
+    write("t/.zarray", meta(Seq(ts.length), "<i8"))
+    write("t/0", { val b = le(8 * ts.length); ts.foreach(b.putLong); b.array() })
+    write("t/.zattrs", """{"_ARRAY_DIMENSIONS":["t"]}""".getBytes)
+    write("x/.zarray", meta(Seq(3), "<i8"))
+    write("x/0", { val b = le(24); (0L until 3L).foreach(b.putLong); b.array() })
+    write("x/.zattrs", """{"_ARRAY_DIMENSIONS":["x"]}""".getBytes)
+    write("v/.zarray", meta(Seq(ts.length, 3), "<f8"))
+    write("v/0.0", { val b = le(24 * ts.length); for (t <- ts; x <- 0 until 3) b.putDouble(t * 10.0 + x); b.array() })
+    write("v/.zattrs", """{"_ARRAY_DIMENSIONS":["t","x"]}""".getBytes)
+    root.toString
+  }
+
+  private val (ta, tb) = (Seq(0L, 1L, 2L, 3L), Seq(10L, 11L, 12L))
+
+  test("a filtered union aggregate is answered exactly, folded and merged on the driver") {
+    val df = spark.read.format("zarr").load(store(ta), store(tb))
+    def q(d: DataFrame) = d.where(col("t") >= 10L && col("v") > 101.5)
+      .groupBy("x").agg(count(lit(1)).as("n"), sum("v").as("s"), max("v").as("m"))
+    val got = q(df)
+    val desc = descOf(got)
+    val members = desc.stripPrefix("ZarrUnionScan(").split(" UNION ")
+    assert(desc.startsWith("ZarrUnionScan(") && members.length == 2, desc)
+    assert(members.forall(m => m.contains("partialAgg=") && m.contains("postScan=[]") &&
+      !m.contains("exactFilters=[]")), desc)
+    val plan = nodes(got.queryExecution.executedPlan)
+    assert(plan.exists(_.isInstanceOf[ZarrFoldMergeExec]) && !plan.exists(_.isInstanceOf[Exchange]),
+      got.queryExecution.executedPlan)
+    val want = q(grid(ta ++ tb)).collect().map(_.mkString("|")).sorted.toSeq
+    assert(got.collect().map(_.mkString("|")).sorted.toSeq == want)
+  }
+
+  test("ORDER BY a variable LIMIT n over a union folds a top-N in every partition") {
+    val df = spark.read.format("zarr").load(store(ta), store(tb))
+    val top = df.orderBy(desc("v")).limit(4)
+    assert(descOf(top).contains("topN=v DESC 4"), descOf(top))
+    assert(top.collect().toSeq == grid(ta ++ tb).orderBy(desc("v")).limit(4).collect().toSeq)
+  }
+
+  test("ORDER BY the outer coordinate LIMIT n and OFFSET n over a union return the union's rows") {
+    val df = spark.read.format("zarr").load(store(ta), store(tb))
+    val all = grid(ta ++ tb)
+    // the latest time step's three rows: a tie-free answer
+    assert(rows(df.orderBy(desc("t")).limit(3)) == rows(all.orderBy(desc("t")).limit(3)))
+    assert(df.orderBy(desc("t"), desc("x")).limit(4).collect().toSeq ==
+      all.orderBy(desc("t"), desc("x")).limit(4).collect().toSeq)
+    assert(df.orderBy("t", "x").limit(4).collect().toSeq == all.orderBy("t", "x").limit(4).collect().toSeq)
+    // member after member, each in row-major order
+    assert(df.offset(4).collect().toSeq == all.offset(4).collect().toSeq)
+  }
+
+  test("a member whose coordinate matches are not contiguous keeps the filter post-scan for the whole read") {
+    val df = spark.read.format("zarr").load(rawStore(Seq(0L, 1L, 2L, 3L)), rawStore(Seq(11L, 10L, 12L)))
+    val q = df.where(col("t") >= 11L)
+    val desc = descOf(q)
+    val members = desc.stripPrefix("ZarrUnionScan(").split(" UNION ")
+    assert(members.length == 2 && members.forall(m =>
+      m.contains("exactFilters=[]") && m.contains("postScan=[GreaterThanOrEqual(t,11)]")), desc)
+    assert(nodes(q.queryExecution.executedPlan).exists(_.isInstanceOf[FilterExec]), q.queryExecution.executedPlan)
+    assert(rows(q) == rows(grid(Seq(11L, 12L))))
+    assert(q.agg(sum("v")).collect().head.getDouble(0) == grid(Seq(11L, 12L)).agg(sum("v")).collect().head.getDouble(0))
   }
 
   test("schema mismatch and missing member refuse loudly") {
