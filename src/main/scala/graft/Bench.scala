@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 object Bench {
 
@@ -50,45 +49,10 @@ object Bench {
       finally src.close()
     } catch { case _: Exception => "" }
 
-  /** `SPARK_GRAFT_CPUS` as the `local[N]` worker count (`default`, 4
-    * for the bench, when unset). It lands in the master URL and as a
-    * bare number in the headline JSON, so anything but a positive
-    * integer is refused up front. */
-  private[graft] def cpusOf(raw: Option[String], default: Int = 4): Int = raw.fold(default) { s =>
-    s.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
-      s"SPARK_GRAFT_CPUS must be a positive integer, got '$s'"))
-  }
-
-  /** The bench session: `local[cpus]`, UTC, graft's extensions, AQE
-    * and V2 bucketing. [[BenchOne]] and the zarr fuzz runners use it
-    * too, so a single-query timing or a fuzz lane plans what the bench
-    * plans.
-    * SPARK_GRAFT_SHUFFLE: shuffle-partition override for scale probes.
-    * The default (= cores) is right at gate scale, but partition count
-    * must track DATA volume, not core count: at sf10p the minhash band
-    * join's 32-partition shuffle put ~0.5 GB single allocations in 32
-    * concurrent tasks and OOM'd a 32 GB heap. On a real cluster this is
-    * the spark.sql.shuffle.partitions sizing every deployment tunes. */
-  private[graft] def session(cpus: Int): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus.toString))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   def main(args: Array[String]): Unit = {
     val loadAtStart = loadavg()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = cpusOf(sys.env.get("SPARK_GRAFT_CPUS"))
+    val cpus = GraftSession.cpus(4)
     // SPARK_GRAFT_ONLY: comma-separated query-name prefixes — targeted
     // scale probes (e.g. "d,c5,s" benches just the dedup/editdist/
     // similarity families at sf10 without paying the full suite).
@@ -97,7 +61,7 @@ object Bench {
     def selected = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (n, _) =>
       only.forall(_.exists(n.startsWith))
     }
-    val spark = session(cpus)
+    val spark = GraftSession(cpus)
     silenceJobGroupCancelWarn()
     // Warmup pass: JVM/codegen/catalog warm, parquet footers cached —
     // the timed pass then measures steady-state plan execution rather

@@ -1,9 +1,8 @@
 package graft
 
 /** Dev-loop single-query timer: two untimed warm-ups, then N timed
-  * runs of one query, in the bench's own session ([[Bench.session]]:
-  * same `SPARK_GRAFT_CPUS` parsing and default, UTC,
-  * `SPARK_GRAFT_SHUFFLE`). One warm-up is not enough: the first run
+  * runs of one query, in the bench's session ([[GraftSession]], with
+  * the bench's default of 4 workers). One warm-up is not enough: the first run
   * after it still pays JIT and codegen warm-up. Each run prints a
   * `[benchone] <name> runN` line, and the last line is
   * `[benchone] <name> median <s> s over <N> timed runs`. Usage:
@@ -17,7 +16,7 @@ object BenchOne {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val runs = if (args.length > 2) args(2).toInt else 3
     require(runs >= 1, s"runs must be at least 1, got $runs")
-    val spark = Bench.session(Bench.cpusOf(sys.env.get("SPARK_GRAFT_CPUS")))
+    val spark = GraftSession(GraftSession.cpus(4))
     val fn = SparkEntry.queries(name)
     val timed = (1 to warmups + runs).map { i =>
       val t0 = System.nanoTime()

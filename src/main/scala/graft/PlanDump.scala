@@ -1,15 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
-/** Dev tool: dump formatted plans for every query to stdout. */
+/** Dev tool: dump formatted plans for every query to stdout, planned
+  * in the bench's session (its default of 4 workers). */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(GraftSession.cpus(4))
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filterNot(q => q._1.startsWith("st")) // streaming plans print per-batch
       .foreach { case (name, fn) =>

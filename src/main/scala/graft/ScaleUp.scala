@@ -66,15 +66,7 @@ object ScaleUp {
     // the duplication RATE stays at the source corpus's rate at every
     // scale — the realistic profile for sketch-family scale probes.
     val perturb = args.length > 3 && args(3) == "perturb"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName("graft-scaleup")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(GraftSession.cpus(8))
 
     copyAsIs(spark, src, dst, "region")
     copyAsIs(spark, src, dst, "nation")

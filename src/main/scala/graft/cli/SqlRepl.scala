@@ -7,6 +7,8 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.sql.SparkSession
 
+import graft.GraftSession
+
 /** Interactive SQL shell over the graft engine — the rebuild of the
   * reference's `zarr-cli` (/root/reference/src/bin/zarr_cli/main.rs):
   * line loop, DDL-vs-query dispatch with `OK (t)` acknowledgements,
@@ -27,21 +29,7 @@ object SqlRepl {
   private val historyPath = Paths.get(sys.props("user.home"), ".graft_sql_history")
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-sql")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // config parity with Bench/Verify (storage-partitioned joins,
-      // engine-reproducible timestamps) — the three session builders
-      // must not drift
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(GraftSession.cpus(Runtime.getRuntime.availableProcessors))
     // typed Aggregators register per-session (they carry encoders the
     // extension-injection path can't): heavy_hitters(col) → array of
     // (token, est_count, max_count) structs, ≤32 entries

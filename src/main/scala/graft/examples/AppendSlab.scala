@@ -1,7 +1,6 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
-
+import graft.GraftSession
 import graft.sources.zarr.ZarrWriter
 
 /** Cross-PROCESS append driver for the writer-lease tests: appends a
@@ -24,12 +23,7 @@ object AppendSlab {
     val nT = args(2).toLong
     if (args.length > 3) ZarrWriter.leaseTtlMillis = args(3).toLong
     if (args.length > 4) ZarrWriter.leaseHeartbeatMillis = args(4).toLong
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(GraftSession.cpus(4))
     val rc =
       try {
         import spark.implicits._

@@ -1,7 +1,6 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
-
+import graft.GraftSession
 import graft.sources.zarr.KerchunkParquetRefs
 
 /** Tool: virtually CONCATENATE existing Zarr stores along a dimension
@@ -34,13 +33,7 @@ object CombineStores {
     println(f"combined ${stores.length} stores along '$concatDim' into $out " +
       f"in ${(System.nanoTime() - t0) / 1e9}%.2fs")
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName("graft-combine-stores")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(GraftSession.cpus(4))
     try {
       import org.apache.spark.sql.functions._
       def sig(df: org.apache.spark.sql.DataFrame): (Long, String) = {

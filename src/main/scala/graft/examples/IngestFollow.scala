@@ -1,7 +1,8 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.GraftSession
 
 /** Example: the time-series ingest pairing end to end — one job
   * appends arriving time slabs to a Zarr store (outer-dimension
@@ -19,13 +20,7 @@ object IngestFollow {
   def main(args: Array[String]): Unit = {
     val store = args.headOption.getOrElse(
       java.nio.file.Files.createTempDirectory("ingest").resolve("w.zarr").toString)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-example-ingest-follow")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(GraftSession.cpus(4))
     import spark.implicits._
 
     def slab(ts: Range): org.apache.spark.sql.DataFrame =

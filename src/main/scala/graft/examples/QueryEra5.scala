@@ -3,8 +3,9 @@ package graft.examples
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.GraftSession
 
 /** Example: query an ERA5-shaped reanalysis grid — the Spark rebuild
   * of the reference's `examples/query_era5.rs`
@@ -58,13 +59,7 @@ object QueryEra5 {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-example-era5")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(GraftSession.cpus(4))
 
     println("Generating ERA5-shaped store (3 × 2 × 721 × 1440)…")
     val store = buildStore()

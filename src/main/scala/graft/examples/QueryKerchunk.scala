@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Example: query archival data through a kerchunk / fsspec
   * ReferenceFileSystem document — the reference's roadmap
@@ -23,13 +23,7 @@ import org.apache.spark.sql.SparkSession
 object QueryKerchunk {
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName("graft-query-kerchunk")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(GraftSession.cpus(4))
     try {
       val refs = args.headOption.getOrElse(buildRefs())
       println("Zarr-Spark Kerchunk Example")

@@ -6,6 +6,8 @@ import java.nio.file.{Files, Path, Paths}
 import com.sun.net.httpserver.HttpServer
 import org.apache.spark.sql.SparkSession
 
+import graft.GraftSession
+
 /** Example: query a REMOTE Zarr store by URL — the Spark rebuild of the
   * reference's `examples/query_gcs.rs`
   * (/root/reference/examples/query_gcs.rs), which registers a public
@@ -26,13 +28,7 @@ import org.apache.spark.sql.SparkSession
 object QueryRemote {
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName("graft-query-remote")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(GraftSession.cpus(4))
     try {
       args.headOption match {
         case Some(url) => run(spark, url)

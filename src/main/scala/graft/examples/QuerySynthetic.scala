@@ -1,6 +1,6 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Example: query the synthetic weather store with SQL — the Spark
   * rebuild of the reference's `examples/query_synthetic.rs`
@@ -16,14 +16,7 @@ object QuerySynthetic {
   def main(args: Array[String]): Unit = {
     val store = args.headOption.getOrElse(
       "src/test/resources/zarr/synthetic_v3.zarr")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-example-synthetic")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(GraftSession.cpus(4))
 
     val df = spark.read.format("zarr").load(store)
     println("Synthetic Weather Data Schema:")

@@ -1,8 +1,9 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
+
+import graft.GraftSession
 
 /** Dev probe (not a declared query): bucket the streaming family's
   * fixed cost — stateless source→sink floor vs stateful machinery —
@@ -12,13 +13,7 @@ import org.apache.spark.sql.streaming.OutputMode
 object StProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(GraftSession.cpus(4))
     val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
 
     def streamDir(dir: String): String = {

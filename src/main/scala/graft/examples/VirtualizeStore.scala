@@ -1,7 +1,6 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
-
+import graft.GraftSession
 import graft.sources.zarr.KerchunkParquetRefs
 
 /** Tool: virtualize an EXISTING Zarr store as kerchunk parquet refs —
@@ -41,13 +40,7 @@ object VirtualizeStore {
     val kind = if (snapshotMode) "snapshot refs" else "parquet refs"
     println(f"wrote $kind for $src to $out in ${(System.nanoTime() - t0) / 1e9}%.2fs")
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName("graft-virtualize-store")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(GraftSession.cpus(4))
     try {
       def sig(path: String): (Long, Seq[String]) = {
         val df = spark.read.format("zarr").load(path)

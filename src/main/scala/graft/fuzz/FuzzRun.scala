@@ -1,64 +1,20 @@
 package graft.fuzz
 
-import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
-
-/** Differential-fuzz dump: run N seeded [[SqlFuzz]] queries on Spark,
-  * write each result to `<outDir>/<name>` parquet and the query texts
-  * to `<outDir>/oracle_sql.json` — the same layout as [[graft.Verify]],
-  * so `tools/compare.py <sfDir> <outDir>` hash-compares every one
-  * against DuckDB unchanged.
+/** Differential-fuzz dump: run N seeded [[SqlFuzz]] queries on Spark
+  * and write each result to `<outDir>/<name>` parquet, so
+  * `tools/compare.py <sfDir> <outDir>` hash-compares every one against
+  * DuckDB ([[FuzzRunner]]).
   *
   * Usage: graft.fuzz.FuzzRun <sfDir> <outDir> [nSeeds] [seed0]
   */
-object FuzzRun {
-  def main(args: Array[String]): Unit = {
-    if (args.length < 2) {
-      System.err.println("usage: graft.fuzz.FuzzRun <sfDir> <outDir> [nSeeds] [seed0]")
-      sys.exit(2)
-    }
-    val Array(sfDir, outDir) = args.take(2)
-    val nSeeds = if (args.length > 2) args(2).toInt else 250
-    val seed0 = if (args.length > 3) args(3).toLong else 0L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+object FuzzRun extends FuzzRunner("fuzz", SqlFuzz.grammarVersion) {
+  protected def lane(spark: org.apache.spark.sql.SparkSession, sfDir: String, outDir: String,
+      nSeeds: Int): FuzzLane = {
     graft.operators.Tables.views(spark, sfDir, graft.operators.Tables.all: _*)
-    new java.io.File(outDir).mkdirs()
-    var failed = 0
-    val sqls = (seed0 until seed0 + nSeeds).map { seed =>
+    seed => {
       val name = SqlFuzz.name(seed)
       val sql = SqlFuzz.gen(seed)
-      try
-        spark.sql(sql).write.mode("overwrite").parquet(s"$outDir/$name")
-      catch { case e: Exception =>
-        failed += 1
-        System.err.println(s"[fuzz] $name FAILED on spark: ${e.getMessage}\n$sql")
-      }
-      name -> sql
+      FuzzCase(name, sql, sql, () => spark.sql(sql).write.mode("overwrite").parquet(s"$outDir/$name"))
     }
-    val json = sqls.map { case (n, s) =>
-      "\"" + n + "\": " + "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
-        .replace("\n", "\\n") + "\""
-    }.mkString("{", ",\n", "}")
-    Files.write(Paths.get(s"$outDir/oracle_sql.json"), json.getBytes("UTF-8"))
-    // grammar-version stamp: recorded corpora/hash claims are only
-    // valid within one grammar version — seeds remap across versions
-    // (ADVICE r7). Comparing tooling/readers should refuse mixed-
-    // version comparisons instead of silently comparing remapped seeds.
-    Files.write(Paths.get(s"$outDir/fuzz_meta.json"),
-      s"""{"grammar_version": ${SqlFuzz.grammarVersion}, "seed0": $seed0, "n_seeds": $nSeeds}"""
-        .getBytes("UTF-8"))
-    println(s"[fuzz] ${nSeeds - failed}/$nSeeds queries ran " +
-      s"(grammar v${SqlFuzz.grammarVersion}); sql + results in $outDir")
-    spark.stop()
-    if (failed > 0) sys.exit(1)
   }
 }

@@ -1,12 +1,14 @@
 package graft.fuzz
 
-import java.nio.file.{Files, Paths}
+import scala.collection.mutable
 
 import org.apache.spark.sql.SparkSession
 
-/** Differential-fuzz dump for [[PipeFuzz]] — same output layout as
-  * [[graft.Verify]]/[[FuzzRun]], so `tools/compare.py <sfDir> <outDir>`
-  * hash-compares every seed against DuckDB unchanged.
+import graft.pipeline.{Dedup, TextAnalysis}
+
+/** Differential-fuzz dump for [[PipeFuzz]] — the [[FuzzRunner]]
+  * layout, so `tools/compare.py <sfDir> <outDir>` hash-compares every
+  * seed against DuckDB unchanged.
   *
   * Exits nonzero when the seed range failed to exercise the space:
   * any family unseen, either side of the d5 LSH/tiled dispatch or of
@@ -16,163 +18,95 @@ import org.apache.spark.sql.SparkSession
   *
   * Usage: graft.fuzz.PipeFuzzRun <sfDir> <outDir> [nSeeds] [seed0]
   */
-object PipeFuzzRun {
-  def main(args: Array[String]): Unit = {
-    if (args.length < 2) {
-      System.err.println("usage: graft.fuzz.PipeFuzzRun <sfDir> <outDir> [nSeeds] [seed0]")
-      sys.exit(2)
-    }
-    val Array(sfDir, outDir) = args.take(2)
-    val nSeeds = if (args.length > 2) args(2).toInt else 250
-    val seed0 = if (args.length > 3) args(3).toLong else 0L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
-    var failed = 0
-    val famCount = scala.collection.mutable.Map[String, Int]().withDefaultValue(0)
-    val famNonEmpty = scala.collection.mutable.Map[String, Int]().withDefaultValue(0)
-    var lshSide = 0
-    var tiledSide = 0
-    var nullLane = 0
-    var nullNonEmpty = 0
-    var semFlat = 0
-    var semHier = 0
-    var bpeBcast = 0
-    var bpeShuffle = 0
-    var incrBcast = 0
-    var incrShuffle = 0
-    var qualBcast = 0
-    var qualShuffle = 0
-    val sqls = (seed0 until seed0 + nSeeds).map { seed =>
-      val name = PipeFuzz.name(seed)
-      val g = PipeFuzz.gen(seed)
-      famCount(g.family) += 1
-      if (g.nullLane) nullLane += 1
-      if (g.family == "emb_pairs") {
-        val theta = g.tag.split(" ").head.stripPrefix("theta=").toDouble
-        if (theta >= graft.pipeline.Dedup.d5LshThreshold) lshSide += 1
-        else tiledSide += 1
+object PipeFuzzRun extends FuzzRunner("pipefuzz", PipeFuzz.grammarVersion) {
+
+  private val families = Seq("span_detect", "span_apply", "exact_dedup",
+    "ngram_pairs", "minhash_pairs", "simhash_pairs", "emb_pairs", "ann_topk",
+    "sem_dedup", "kmeans", "ann_ivf", "decon", "bpe_apply",
+    "incr_dedup", "quality")
+
+  protected def lane(spark: SparkSession, sfDir: String, outDir: String, nSeeds: Int): FuzzLane =
+    new FuzzLane {
+      val famCount = mutable.Map[String, Int]().withDefaultValue(0)
+      val famNonEmpty = mutable.Map[String, Int]().withDefaultValue(0)
+      // seeds per side of each dispatch
+      val sides = mutable.LinkedHashMap(Seq("lsh_side", "tiled_side", "sem_flat", "sem_hier",
+        "bpe_bcast", "bpe_shuffle", "incr_bcast", "incr_shuffle", "qual_bcast", "qual_shuffle")
+        .map(_ -> 0): _*)
+      var nullLane = 0
+      var nullNonEmpty = 0
+
+      def draw(seed: Long): FuzzCase = {
+        val name = PipeFuzz.name(seed)
+        val g = PipeFuzz.gen(seed)
+        famCount(g.family) += 1
+        if (g.nullLane) nullLane += 1
+        if (g.family == "emb_pairs") {
+          val theta = g.tag.split(" ").head.stripPrefix("theta=").toDouble
+          sides(if (theta >= Dedup.d5LshThreshold) "lsh_side" else "tiled_side") += 1
+        }
+        FuzzCase(name, g.sql, s"${g.family} ${g.tag}", () => try {
+          // write FIRST, then count the written output — parquet footer
+          // metadata answers the count without re-running the plan (an
+          // unpersisted fuzz pipeline would otherwise execute twice)
+          g.fn(spark, sfDir).write.mode("overwrite").parquet(s"$outDir/$name")
+          if (spark.read.parquet(s"$outDir/$name").count() > 0) {
+            famNonEmpty(g.family) += 1
+            if (g.nullLane) nullNonEmpty += 1
+          }
+          // which side of a data-dependent dispatch (d8's flat/hier cut,
+          // t13's vocab and the incremental-dedup and quality joins'
+          // broadcast/shuffle cuts) this seed's slice landed on — the
+          // slice's row count is data, not grammar, so only the engine
+          // knows; read it back post-run
+          g.family match {
+            case "sem_dedup" => sides(if (Dedup.lastSemanticDispatch == "hier") "sem_hier" else "sem_flat") += 1
+            case "bpe_apply" => sides(if (TextAnalysis.lastBpeDispatch == "shuffle") "bpe_shuffle" else "bpe_bcast") += 1
+            case "incr_dedup" =>
+              sides(if (Dedup.lastIncrementalDispatch == "shuffle") "incr_shuffle" else "incr_bcast") += 1
+            case "quality" => sides(if (TextAnalysis.lastQualityDispatch == "shuffle") "qual_shuffle" else "qual_bcast") += 1
+            case _ =>
+          }
+        } finally {
+          // clear persisted candidate frames between seeds: every span
+          // seed persists its own cand frame keyed by its parameters —
+          // 250 of them would pile up in the block store otherwise
+          spark.catalog.clearCache()
+        })
       }
-      try {
-        // write FIRST, then count the written output — parquet footer
-        // metadata answers the count without re-running the plan (an
-        // unpersisted fuzz pipeline would otherwise execute twice)
-        g.fn(spark, sfDir).write.mode("overwrite").parquet(s"$outDir/$name")
-        if (spark.read.parquet(s"$outDir/$name").count() > 0) {
-          famNonEmpty(g.family) += 1
-          if (g.nullLane) nullNonEmpty += 1
+
+      private def famJson = famCount.toSeq.sortBy(_._1)
+        .map { case (f, c) => s""""$f": [$c, ${famNonEmpty(f)}]""" }.mkString("{", ", ", "}")
+
+      override def meta(failed: Int): Seq[(String, String)] =
+        ("families_count_nonempty" -> famJson) +: sides.toSeq.map { case (k, v) => k -> v.toString } :+
+          ("null_lane" -> s"[$nullLane, $nullNonEmpty]")
+
+      override def summary: String =
+        s"families $famJson; dispatch ${sides.map { case (k, v) => s"$k=$v" }.mkString(" ")}; " +
+          s"null lane $nullLane seeds/$nullNonEmpty nonempty"
+
+      // Space coverage is a property of a FULL lane: 15 families at
+      // 1-2% tail shares need ~150+ seeds before absence means anything.
+      // The 250-seed base lane enforces it; short scale lanes (the +40
+      // sf0.1 / 15 sf1p extensions) enforce zero failures and report
+      // coverage informationally — a 40-seed window provably cannot
+      // contain every family, and failing on that would ban short lanes.
+      override def unmet: Seq[String] = {
+        val missing = families.filter(famCount(_) == 0) ++
+          families.filter(f => famCount(f) > 0 && famNonEmpty(f) == 0).map(_ + ":all-empty") ++
+          Seq("lsh_side", "tiled_side", "sem_flat", "sem_hier", "bpe_bcast", "bpe_shuffle")
+            .filter(sides(_) == 0) ++
+          // the NULL-text lane must be drawn AND produce output on nulled
+          // corpora (an all-empty null lane would compare green vacuously)
+          (if (nullLane == 0) Seq("null_lane") else Nil) ++
+          (if (nullLane > 0 && nullNonEmpty == 0) Seq("null_lane:all-empty") else Nil)
+        if (nSeeds >= 150) missing
+        else {
+          if (missing.nonEmpty) System.err.println(s"[pipefuzz] short-lane coverage note (not " +
+            s"enforced at n=$nSeeds): unexercised ${missing.mkString(", ")}")
+          Nil
         }
-        // which side of the d8FlatMaxK dispatch this seed's sliced
-        // corpus count landed on — only the engine knows (the slice's
-        // row count is data, not grammar), so read it back post-run
-        if (g.family == "sem_dedup") {
-          if (graft.pipeline.Dedup.lastSemanticDispatch == "hier") semHier += 1
-          else semFlat += 1
-        }
-        // same read-back for t13's vocab broadcast/shuffle cut: the
-        // vocab count is data (the slice moves it), only the engine
-        // knows which join plan the seed actually took
-        if (g.family == "bpe_apply") {
-          if (graft.pipeline.TextAnalysis.lastBpeDispatch == "shuffle") bpeShuffle += 1
-          else bpeBcast += 1
-        }
-        if (g.family == "incr_dedup") {
-          if (graft.pipeline.Dedup.lastIncrementalDispatch == "shuffle") incrShuffle += 1
-          else incrBcast += 1
-        }
-        if (g.family == "quality") {
-          if (graft.pipeline.TextAnalysis.lastQualityDispatch == "shuffle") qualShuffle += 1
-          else qualBcast += 1
-        }
-      } catch { case e: Exception =>
-        failed += 1
-        System.err.println(s"[pipefuzz] $name (${g.family} ${g.tag}) FAILED on spark: ${e.getMessage}")
       }
-      // clear persisted candidate frames between seeds: every span seed
-      // persists its own cand frame keyed by its parameters — 250 of
-      // them would pile up in the block store otherwise
-      spark.catalog.clearCache()
-      name -> g.sql
     }
-    // Full JSON string escaping (backslash, quote, and EVERY control
-    // character, not just \n): a future grammar change that puts a tab
-    // or CR into an oracle SQL string must not silently produce invalid
-    // JSON that fails the whole compare run at parse time instead of
-    // pointing at the offending seed (round 11 ADVICE).
-    def jsonStr(s: String): String = {
-      val b = new StringBuilder("\"")
-      s.foreach {
-        case '\\' => b.append("\\\\")
-        case '"'  => b.append("\\\"")
-        case '\n' => b.append("\\n")
-        case '\r' => b.append("\\r")
-        case '\t' => b.append("\\t")
-        case c if c < 0x20 => b.append(f"\\u${c.toInt}%04x")
-        case c    => b.append(c)
-      }
-      b.append("\"").toString
-    }
-    val json = sqls.map { case (n, s) => jsonStr(n) + ": " + jsonStr(s) }
-      .mkString("{", ",\n", "}")
-    Files.write(Paths.get(s"$outDir/oracle_sql.json"), json.getBytes("UTF-8"))
-    val famJson = famCount.toSeq.sortBy(_._1)
-      .map { case (f, c) => s""""$f": [$c, ${famNonEmpty(f)}]""" }
-      .mkString("{", ", ", "}")
-    Files.write(Paths.get(s"$outDir/fuzz_meta.json"),
-      (s"""{"grammar_version": ${PipeFuzz.grammarVersion}, "seed0": $seed0, """ +
-        s""""n_seeds": $nSeeds, "families_count_nonempty": $famJson, """ +
-        s""""lsh_side": $lshSide, "tiled_side": $tiledSide, """ +
-        s""""sem_flat": $semFlat, "sem_hier": $semHier, """ +
-        s""""bpe_bcast": $bpeBcast, "bpe_shuffle": $bpeShuffle, """ +
-        s""""incr_bcast": $incrBcast, "incr_shuffle": $incrShuffle, """ +
-        s""""qual_bcast": $qualBcast, "qual_shuffle": $qualShuffle, """ +
-        s""""null_lane": [$nullLane, $nullNonEmpty]}""").getBytes("UTF-8"))
-    println(s"[pipefuzz] ${nSeeds - failed}/$nSeeds ran (grammar " +
-      s"v${PipeFuzz.grammarVersion}); families $famJson; " +
-      s"emb dispatch lsh=$lshSide tiled=$tiledSide; " +
-      s"sem dispatch flat=$semFlat hier=$semHier; " +
-      s"bpe dispatch bcast=$bpeBcast shuffle=$bpeShuffle; " +
-      s"incr dispatch bcast=$incrBcast shuffle=$incrShuffle; " +
-      s"qual dispatch bcast=$qualBcast shuffle=$qualShuffle; " +
-      s"null lane $nullLane seeds/$nullNonEmpty nonempty; results in $outDir")
-    val families = Seq("span_detect", "span_apply", "exact_dedup",
-      "ngram_pairs", "minhash_pairs", "simhash_pairs", "emb_pairs", "ann_topk",
-      "sem_dedup", "kmeans", "ann_ivf", "decon", "bpe_apply",
-      "incr_dedup", "quality")
-    val missing = families.filter(famCount(_) == 0) ++
-      families.filter(f => famCount(f) > 0 && famNonEmpty(f) == 0).map(_ + ":all-empty")
-    val dispatchMiss = (if (lshSide == 0) Seq("lsh_side") else Nil) ++
-      (if (tiledSide == 0) Seq("tiled_side") else Nil) ++
-      (if (semFlat == 0) Seq("sem_flat") else Nil) ++
-      (if (semHier == 0) Seq("sem_hier") else Nil) ++
-      (if (bpeBcast == 0) Seq("bpe_bcast") else Nil) ++
-      (if (bpeShuffle == 0) Seq("bpe_shuffle") else Nil) ++
-      // the NULL-text lane must be drawn AND produce output on nulled
-      // corpora (an all-empty null lane would compare green vacuously)
-      (if (nullLane == 0) Seq("null_lane") else Nil) ++
-      (if (nullLane > 0 && nullNonEmpty == 0) Seq("null_lane:all-empty") else Nil)
-    spark.stop()
-    // Space-coverage is a property of a FULL lane: 15 families at 1-2%
-    // tail shares need ~150+ seeds before absence means anything. The
-    // 250-seed base lane enforces it; short scale lanes (the +40 sf0.1
-    // / 15 sf1p extensions) enforce zero failures and report coverage
-    // informationally — a 40-seed window provably cannot contain every
-    // family, and exiting 1 on that would just ban short lanes.
-    val enforceCoverage = nSeeds >= 150
-    if (failed > 0 || (enforceCoverage && (missing.nonEmpty || dispatchMiss.nonEmpty))) {
-      System.err.println(s"[pipefuzz] UNEXERCISED: ${(missing ++ dispatchMiss).mkString(", ")}; failed=$failed")
-      sys.exit(1)
-    }
-    if (missing.nonEmpty || dispatchMiss.nonEmpty)
-      System.err.println(s"[pipefuzz] short-lane coverage note (not enforced at " +
-        s"n=$nSeeds): unexercised ${(missing ++ dispatchMiss).mkString(", ")}")
-  }
 }

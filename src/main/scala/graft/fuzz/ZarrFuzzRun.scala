@@ -1,14 +1,17 @@
 package graft.fuzz
 
+import java.nio.file.{Files, Paths}
+
+import scala.collection.mutable
+
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-import java.nio.file.{Files, Paths}
 
 /** Zarr-connector differential fuzz dump: run N seeded [[ZarrFuzz]]
   * queries on Spark (zarr grid tables + parquet dimensions), write each
-  * result to `<outDir>/<name>` parquet and the texts to
-  * `<outDir>/oracle_sql.json` — the [[graft.Verify]] layout, so
+  * result to `<outDir>/<name>` parquet ([[FuzzRunner]]'s layout), so
   * `tools/compare.py <tablesDir> <outDir>` hash-compares against DuckDB
   * unchanged. `<tablesDir>` (= `<outDir>_tables`) is populated with the
   * grids' parquet exports plus links to the sf corpus, so the oracle
@@ -22,7 +25,7 @@ import java.nio.file.{Files, Paths}
   *
   * Usage: graft.fuzz.ZarrFuzzRun <sfDir> <outDir> [nSeeds] [seed0]
   */
-object ZarrFuzzRun {
+object ZarrFuzzRun extends FuzzRunner("zarr-fuzz", ZarrFuzz.grammarVersion, Some("zarr")) {
 
   /** A scan description naming filters that prune its coordinate
     * ranges or its `.zstats` partitions. */
@@ -45,19 +48,9 @@ object ZarrFuzzRun {
     here
   }
 
-  def main(args: Array[String]): Unit = {
-    if (args.length < 2) {
-      System.err.println("usage: graft.fuzz.ZarrFuzzRun <sfDir> <outDir> [nSeeds] [seed0]")
-      sys.exit(2)
-    }
-    val Array(sfDir, outDir) = args.take(2)
-    val nSeeds = if (args.length > 2) args(2).toInt else 250
-    val seed0 = if (args.length > 3) args(3).toLong else 0L
-    val spark = graft.Bench.session(graft.Bench.cpusOf(sys.env.get("SPARK_GRAFT_CPUS"), 8))
-
+  protected def lane(spark: SparkSession, sfDir: String, outDir: String, nSeeds: Int): FuzzLane = {
     // oracle relations: grid exports + the sf corpus under one dir
     val tablesDir = s"${outDir}_tables"
-    new java.io.File(outDir).mkdirs()
     ZarrFuzz.buildFixtures(spark, tablesDir)
     graft.operators.Tables.all.foreach { t =>
       val link = Paths.get(tablesDir, s"$t.parquet")
@@ -66,7 +59,7 @@ object ZarrFuzzRun {
     }
     graft.operators.Tables.views(spark, sfDir, "nation", "region", "orders")
 
-    val markers = scala.collection.mutable.Map(
+    val markers = mutable.Map(
       "coord_range" -> 0, "topn" -> 0, "limit" -> 0,
       "agg_meta" -> 0, "group_agg_meta" -> 0,
       // grammar v3: pushdown composition over the sharded-v3 fixture
@@ -75,61 +68,44 @@ object ZarrFuzzRun {
       // grammar v4: partial aggregates and top-N folded in the scan;
       // union reads that answer filters exactly or fold
       "scan_fold" -> 0, "union_fold" -> 0)
-      .withDefaultValue(0)
-    var failed = 0
-    val sqls = (seed0 until seed0 + nSeeds).map { seed =>
-      val name = ZarrFuzz.name(seed)
-      val sql = ZarrFuzz.gen(seed)
-      try {
-        val df = spark.sql(sql)
-        df.write.mode("overwrite").parquet(s"$outDir/$name")
-        val descs = scanDescs(df.queryExecution.executedPlan)
-        if (descs.exists(rangePruned)) markers("coord_range") += 1
-        if (descs.exists(statsTopN)) markers("topn") += 1
-        // a partial aggregate or top-N folded inside the scan
-        if (descs.exists(d => d.contains(" partialAgg=") || d.contains(" topN="))) markers("scan_fold") += 1
-        if (descs.exists(d => d.startsWith("ZarrUnionScan(") && (d.contains(" partialAgg=") ||
-            d.contains(" topN=") || "exactFilters=\\[[^\\]]".r.findFirstIn(d).isDefined)))
-          markers("union_fold") += 1
-        // coordinate-prefix TopN pushes as either limit (ASC) or
-        // offset (DESC) — both count as the limit-subset family
-        val off = "offset=(\\d+)".r
-        if (descs.exists(d => (d.contains("limit=") && !d.contains("limit=-1")) ||
-            off.findFirstMatchIn(d).exists(_.group(1) != "0")))
-          markers("limit") += 1
-        if (descs.exists(_.contains("ZarrGroupAggScan"))) markers("group_agg_meta") += 1
-        else if (descs.exists(_.contains("ZarrAggScan"))) markers("agg_meta") += 1
-        if (descs.exists(_.contains("ZarrUnionGroupAggScan"))) markers("union_group_agg") += 1
-        else if (descs.exists(_.contains("ZarrUnionAggScan"))) markers("union_agg") += 1
-        // coordinate pushdown composed over the sharded-v3 read path
-        if (sql.contains("grid_e") && descs.exists(rangePruned))
-          markers("shard_range") += 1
-      } catch { case e: Exception =>
-        failed += 1
-        System.err.println(s"[zarr-fuzz] $name FAILED on spark: ${e.getMessage}\n$sql")
+    new FuzzLane {
+      def draw(seed: Long): FuzzCase = {
+        val name = ZarrFuzz.name(seed)
+        val sql = ZarrFuzz.gen(seed)
+        FuzzCase(name, sql, sql, () => {
+          val df = spark.sql(sql)
+          df.write.mode("overwrite").parquet(s"$outDir/$name")
+          val descs = scanDescs(df.queryExecution.executedPlan)
+          if (descs.exists(rangePruned)) markers("coord_range") += 1
+          if (descs.exists(statsTopN)) markers("topn") += 1
+          // a partial aggregate or top-N folded inside the scan
+          if (descs.exists(d => d.contains(" partialAgg=") || d.contains(" topN="))) markers("scan_fold") += 1
+          if (descs.exists(d => d.startsWith("ZarrUnionScan(") && (d.contains(" partialAgg=") ||
+              d.contains(" topN=") || "exactFilters=\\[[^\\]]".r.findFirstIn(d).isDefined)))
+            markers("union_fold") += 1
+          // coordinate-prefix TopN pushes as either limit (ASC) or
+          // offset (DESC) — both count as the limit-subset family
+          val off = "offset=(\\d+)".r
+          if (descs.exists(d => (d.contains("limit=") && !d.contains("limit=-1")) ||
+              off.findFirstMatchIn(d).exists(_.group(1) != "0")))
+            markers("limit") += 1
+          if (descs.exists(_.contains("ZarrGroupAggScan"))) markers("group_agg_meta") += 1
+          else if (descs.exists(_.contains("ZarrAggScan"))) markers("agg_meta") += 1
+          if (descs.exists(_.contains("ZarrUnionGroupAggScan"))) markers("union_group_agg") += 1
+          else if (descs.exists(_.contains("ZarrUnionAggScan"))) markers("union_agg") += 1
+          // coordinate pushdown composed over the sharded-v3 read path
+          if (sql.contains("grid_e") && descs.exists(rangePruned))
+            markers("shard_range") += 1
+        })
       }
-      name -> sql
-    }
-    val json = sqls.map { case (n, s) =>
-      "\"" + n + "\": " + "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
-        .replace("\n", "\\n") + "\""
-    }.mkString("{", ",\n", "}")
-    Files.write(Paths.get(s"$outDir/oracle_sql.json"), json.getBytes("UTF-8"))
-    val stats = markers.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""$k": $v""" }.mkString("{", ", ", "}")
-    Files.write(Paths.get(s"$outDir/fuzz_meta.json"),
-      (s"""{"grammar": "zarr", "grammar_version": ${ZarrFuzz.grammarVersion}, """ +
-        s""""seed0": $seed0, "n_seeds": $nSeeds, "pushdowns": $stats}""").getBytes("UTF-8"))
-    println(s"[zarr-fuzz] ${nSeeds - failed}/$nSeeds queries ran " +
-      s"(grammar v${ZarrFuzz.grammarVersion}); pushdown seeds: $stats; results in $outDir")
-    // every pushdown family must have been exercised by SOME seed —
-    // thresholds are deliberately low (shape mix is random) but nonzero
-    val unexercised = markers.filter(_._2 == 0).keys.toSeq.sorted
-    spark.stop()
-    if (failed > 0 || unexercised.nonEmpty) {
-      if (unexercised.nonEmpty)
-        System.err.println(s"[zarr-fuzz] pushdown families never exercised: ${unexercised.mkString(", ")}")
-      sys.exit(1)
+
+      private def stats = markers.toSeq.sortBy(_._1)
+        .map { case (k, v) => s""""$k": $v""" }.mkString("{", ", ", "}")
+      override def meta(failed: Int): Seq[(String, String)] = Seq("pushdowns" -> stats)
+      override def summary: String = s"pushdown seeds: $stats"
+      // every pushdown family must have been exercised by SOME seed —
+      // thresholds are deliberately low (shape mix is random) but nonzero
+      override def unmet: Seq[String] = markers.filter(_._2 == 0).keys.toSeq.sorted
     }
   }
 }

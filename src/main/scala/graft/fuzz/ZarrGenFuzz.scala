@@ -337,41 +337,20 @@ object ZarrGenFuzz {
   * `<outDir>/fuzz_meta.json`, exits nonzero on any divergence OR if a
   * required stateful case was never generated (a run that never reads
   * through a redirect would silently test only the append path). */
-object ZarrGenFuzzRun {
-  def main(args: Array[String]): Unit = {
-    val outDir = if (args.nonEmpty) args(0) else "/tmp/genfuzz_out"
-    val nSeeds = if (args.length > 1) args(1).toInt else 250
-    val seed0 = if (args.length > 2) args(2).toLong else 0L
-    val spark = graft.Bench.session(graft.Bench.cpusOf(sys.env.get("SPARK_GRAFT_CPUS"), 8))
-    spark.sparkContext.setLogLevel("ERROR")
-    val c = new ZarrGenFuzz.Counters
-    var failed = 0
-    (seed0 until seed0 + nSeeds).foreach { seed =>
-      ZarrGenFuzz.runSeed(spark, seed, c).foreach { err =>
-        failed += 1
-        System.err.println(s"[gen-fuzz] $err")
-      }
-      if ((seed - seed0 + 1) % 50 == 0)
-        println(s"[gen-fuzz] ${seed - seed0 + 1}/$nSeeds done, $failed failed")
+object ZarrGenFuzzRun extends FuzzRunner("gen-fuzz", ZarrGenFuzz.grammarVersion, Some("zarr-gen"),
+    corpus = false) {
+  protected def lane(spark: SparkSession, sfDir: String, outDir: String, nSeeds: Int): FuzzLane =
+    new FuzzLane {
+      val c = new ZarrGenFuzz.Counters
+      def draw(seed: Long): FuzzCase = FuzzCase(f"gen_$seed%04d", "", "", () =>
+        ZarrGenFuzz.runSeed(spark, seed, c).foreach(e => throw new IllegalStateException(e)))
+      override def meta(failed: Int): Seq[(String, String)] =
+        Seq("failed" -> failed.toString, "cases" -> c.toJson)
+      override def summary: String = s"cases: ${c.toJson}"
+      override def unmet: Seq[String] = Seq(
+        "redirect_read" -> c.redirectRead, "chained_overwrite" -> c.chainedOverwrite,
+        "gc_while_live" -> c.gcWhileLive, "gc_reclaim" -> c.gcReclaim,
+        "append_after_snap" -> c.appendAfterSnap, "plain_overwrite" -> c.plainOverwrite,
+        "lease_contention" -> c.leaseContention).collect { case (k, 0) => k }
     }
-    Files.createDirectories(Paths.get(outDir))
-    Files.write(Paths.get(s"$outDir/fuzz_meta.json"),
-      (s"""{"grammar": "zarr-gen", "grammar_version": ${ZarrGenFuzz.grammarVersion}, """ +
-        s""""seed0": $seed0, "n_seeds": $nSeeds, "failed": $failed, """ +
-        s""""cases": ${c.toJson}}""").getBytes("UTF-8"))
-    println(s"[gen-fuzz] ${nSeeds - failed}/$nSeeds sequences verified " +
-      s"(grammar v${ZarrGenFuzz.grammarVersion}); cases: ${c.toJson}")
-    val required = Seq(
-      "redirect_read" -> c.redirectRead, "chained_overwrite" -> c.chainedOverwrite,
-      "gc_while_live" -> c.gcWhileLive, "gc_reclaim" -> c.gcReclaim,
-      "append_after_snap" -> c.appendAfterSnap, "plain_overwrite" -> c.plainOverwrite,
-      "lease_contention" -> c.leaseContention)
-    val missing = required.collect { case (k, 0) => k }
-    spark.stop()
-    if (failed > 0 || missing.nonEmpty) {
-      if (missing.nonEmpty)
-        System.err.println(s"[gen-fuzz] cases never generated: ${missing.mkString(", ")}")
-      sys.exit(1)
-    }
-  }
 }

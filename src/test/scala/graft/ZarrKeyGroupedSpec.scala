@@ -20,8 +20,10 @@ class ZarrKeyGroupedSpec extends AnyFunSuite {
   private val store = "src/test/resources/zarr/synthetic_v3.zarr"
 
   private def withBucketing[A](f: => A): A = {
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    try f finally spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "false")
+    val key = "spark.sql.sources.v2.bucketing.enabled"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try f finally spark.conf.set(key, prev)
   }
 
   private def shuffles(df: DataFrame): Int = {
