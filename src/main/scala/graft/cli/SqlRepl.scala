@@ -317,9 +317,10 @@ object SqlRepl {
     try {
       val df = spark.sql(sql)
       // first WORD, not a regex over the whole text — a multi-line
-      // DDL statement must still dispatch as DDL
+      // DDL statement must still dispatch as DDL. A SET without `=`
+      // shows settings, so its rows print like a query's.
       val isDdl = sql.trim.toLowerCase.split("\\s+").headOption
-        .exists(Set("create", "drop", "alter", "set", "use"))
+        .exists(w => Set("create", "drop", "alter", "use")(w) || (w == "set" && sql.contains("=")))
       if (isDdl) {
         withTicker(t0) { df.collect() }
         out(f"OK (${(System.nanoTime() - t0) / 1e9}%.3fs)")

@@ -75,8 +75,11 @@ object PipeFuzz {
     * v8: incr_dedup family (d13 theta x batch modulus x broadcast
     * cut — the persisted-index ingest join) and quality family (t14
     * weight-table size x slice x broadcast cut); the ann_ivf/decon
-    * tail rolls shrink to make room (seeds ≥ roll 90 remap). */
-  val grammarVersion = 8
+    * tail rolls shrink to make room (seeds ≥ roll 90 remap).
+    * v9: the quality cut pairs with the slice draw instead of a coin
+    * (unsliced → shuffle side, sliced → broadcast side); the oracle
+    * SQL of every seed is unchanged. */
+  val grammarVersion = 9
 
   def name(seed: Long): String = f"pf_$seed%04d"
 
@@ -318,10 +321,14 @@ object PipeFuzz {
     } else {
       // t14: the table size moves which grams carry weight (and every
       // downstream score); slices move the corpus the table derives
-      // from; the cut exercises the broadcast/shuffle score join
+      // from; the cut exercises the broadcast/shuffle score join. The
+      // cut PAIRS with the slice draw (whole corpus → cut 0 → shuffled
+      // plan; a slice → default cut → broadcast plan), as bpe_apply's
+      // does with its merge-table draw: a coin left qual_shuffle
+      // unexercised on the 250-seed base lane. Same rows either way.
       val k = Seq(20, 100, 500)(r.nextInt(3))
       val where = docSlice(r)
-      val cut = if (r.nextBoolean()) 0L
+      val cut = if (where.isEmpty) 0L
         else graft.pipeline.TextAnalysis.t14BcastMaxTable
       Gen("quality", s"k=$k where=[$where] cut=$cut",
         (s, dir) => graft.pipeline.TextAnalysis.qualityClassify(s, dir, k, where, cut),

@@ -11,10 +11,10 @@ import graft.pipeline.{Dedup, TextAnalysis}
   * seed against DuckDB unchanged.
   *
   * Exits nonzero when the seed range failed to exercise the space:
-  * any family unseen, either side of the d5 LSH/tiled dispatch or of
-  * the d8 flat/hierarchical dispatch unseen, or a family that only
-  * ever produced empty outputs (an all-empty family compares green
-  * vacuously — that's no coverage).
+  * any family unseen, either side of a dispatch unseen (d5 LSH/tiled,
+  * d8 flat/hierarchical, and the broadcast/shuffle joins of t13, d13
+  * and t14), or a family that only ever produced empty outputs (an
+  * all-empty family compares green vacuously — that's no coverage).
   *
   * Usage: graft.fuzz.PipeFuzzRun <sfDir> <outDir> [nSeeds] [seed0]
   */
@@ -95,8 +95,7 @@ object PipeFuzzRun extends FuzzRunner("pipefuzz", PipeFuzz.grammarVersion) {
       override def unmet: Seq[String] = {
         val missing = families.filter(famCount(_) == 0) ++
           families.filter(f => famCount(f) > 0 && famNonEmpty(f) == 0).map(_ + ":all-empty") ++
-          Seq("lsh_side", "tiled_side", "sem_flat", "sem_hier", "bpe_bcast", "bpe_shuffle")
-            .filter(sides(_) == 0) ++
+          sides.keys.filter(sides(_) == 0) ++
           // the NULL-text lane must be drawn AND produce output on nulled
           // corpora (an all-empty null lane would compare green vacuously)
           (if (nullLane == 0) Seq("null_lane") else Nil) ++

@@ -2,6 +2,9 @@ package graft.sources.zarr
 
 import java.nio.{ByteBuffer, ByteOrder}
 
+import scala.collection.mutable
+
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -82,32 +85,8 @@ object ZarrWriter {
       case None => dtypeOf(t)
     }
 
-  /** Serialize one element as unsigned little-endian of `w` bytes.
-    * Range-checked, so a read (which widens back to the signed Spark
-    * type) returns exactly the written value. */
-  private def putUint(buf: ByteBuffer, offset: Int, w: Int, v: Any): Unit = {
-    val x = v match {
-      case n: java.lang.Number => n.longValue()
-      case other => throw new IllegalArgumentException(s"not an integer: $other")
-    }
-    val max = if (w == 8) Long.MaxValue else (1L << (8 * w)) - 1
-    require(x >= 0 && x <= max, s"value $x out of range for uint${8 * w}")
-    w match {
-      case 1 => buf.put(offset, x.toByte)
-      case 2 => buf.putShort(offset * 2, x.toShort)
-      case 4 => buf.putInt(offset * 4, x.toInt)
-      case _ => buf.putLong(offset * 8, x)
-    }
-  }
-
-  /** Parse a `[sum, count]` JSON fragment produced by the stat
-    * emitters (exact: integral sums stay BigDecimal-precise). */
-  private def parseSumJson(sj: String): (java.math.BigDecimal, Long) = {
-    val body = sj.trim.stripPrefix("[").stripSuffix("]").split(",")
-    (new java.math.BigDecimal(body(0).trim), body(1).trim.toLong)
-  }
-
   private def epochMicros(v: Any): Long = v match {
+    case micros: Long => micros
     case t: java.sql.Timestamp =>
       Math.addExact(Math.multiplyExact(Math.floorDiv(t.getTime, 1000L), 1000000L),
         (t.getNanos / 1000).toLong)
@@ -287,23 +266,300 @@ object ZarrWriter {
     body.toByteArray
   }
 
-  private def putValue(buf: ByteBuffer, offset: Int, elem: Int, t: DataType, v: Any): Unit =
-    t match {
-      case LongType => buf.putLong(offset * elem, v.asInstanceOf[Long])
-      case IntegerType => buf.putInt(offset * elem, v.asInstanceOf[Int])
-      case ShortType => buf.putShort(offset * elem, v.asInstanceOf[Short])
-      case ByteType => buf.put(offset * elem, v.asInstanceOf[Byte])
-      case DoubleType => buf.putDouble(offset * elem, v.asInstanceOf[Double])
-      case FloatType => buf.putFloat(offset * elem, v.asInstanceOf[Float])
-      case BooleanType => buf.put(offset * elem, if (v.asInstanceOf[Boolean]) 1.toByte else 0.toByte)
-      case TimestampType => buf.putLong(offset * elem, epochMicros(v))
-      case StringType =>
+  /** Serialize one element at cell `offset` in the store dtype's
+    * little-endian layout. Takes row-domain values (timestamps as
+    * `Timestamp`/`Instant`) and raw-domain ones (epoch micros, as
+    * [[ChunkCodec.elementAt]] returns them). Unsigned dtypes carry a
+    * WIDENED Spark type (u4 → Long), so they are written at the dtype's
+    * width, never the Spark type's, and range-checked: a read (which
+    * widens back) returns exactly the written value. Fixed-width
+    * strings are NUL-padded like numpy. */
+  private def putElement(buf: ByteBuffer, offset: Int, dt: ZarrDType, v: Any): Unit = {
+    val at = offset * dt.size
+    (dt.kind, dt.size) match {
+      case ('u', w) =>
+        val x = v match {
+          case n: java.lang.Number => n.longValue()
+          case other => throw new IllegalArgumentException(s"not an integer: $other")
+        }
+        val max = if (w == 8) Long.MaxValue else (1L << (8 * w)) - 1
+        require(x >= 0 && x <= max, s"value $x out of range for uint${8 * w}")
+        w match {
+          case 1 => buf.put(at, x.toByte)
+          case 2 => buf.putShort(at, x.toShort)
+          case 4 => buf.putInt(at, x.toInt)
+          case _ => buf.putLong(at, x)
+        }
+      case ('i', 8) => buf.putLong(at, v.asInstanceOf[Long])
+      case ('i', 4) => buf.putInt(at, v.asInstanceOf[Int])
+      case ('i', 2) => buf.putShort(at, v.asInstanceOf[Short])
+      case ('i', 1) => buf.put(at, v.asInstanceOf[Byte])
+      case ('f', 8) => buf.putDouble(at, v.asInstanceOf[Double])
+      case ('f', 4) => buf.putFloat(at, v.asInstanceOf[Float])
+      case ('b', _) => buf.put(at, if (v.asInstanceOf[Boolean]) 1.toByte else 0.toByte)
+      case ('M', _) => buf.putLong(at, epochMicros(v))
+      case ('S', w) =>
         val b = v.asInstanceOf[String].getBytes(java.nio.charset.StandardCharsets.US_ASCII)
-        require(b.length <= elem, s"string '$v' exceeds coordinate width $elem")
-        var i = 0
-        while (i < elem) { buf.put(offset * elem + i, if (i < b.length) b(i) else 0.toByte); i += 1 }
-      case other => throw new IllegalArgumentException(other.toString)
+        require(b.length <= w, s"string '$v' exceeds coordinate width $w")
+        buf.put(at, b)
+      case other => throw new UnsupportedOperationException(s"cannot serialize dtype $other")
     }
+  }
+
+  /** One chunk's stored bytes from its raw little-endian cells, as the
+    * array's own metadata declares them: a v3 shard of inner chunks, or
+    * the delta filter then the compressor. */
+  private def encodeChunk(raw: Array[Byte], m: ZarrArrayMeta): Array[Byte] = m.sharding match {
+    case Some(s) =>
+      shardify(raw, m.chunks.head / s.innerChunks.head, codecNameOf(s.innerComp, m.name), m.dtype.size)
+    case None =>
+      compressPayload(if (m.deltaFilter) deltaEncode(raw, m.dtype.size) else raw,
+        codecNameOf(m.compressor, m.name), m.dtype.size)
+  }
+
+  /** Write chunk `cc` of the 1-D array `m`, whose axis holds `len`
+    * values `valueAt(0 until len)`. Cells past `len` are zero padding;
+    * readers truncate at shape. */
+  private def writeCoordChunk(store: ZarrStore, m: ZarrArrayMeta, cc: Int, len: Int,
+      valueAt: Int => Any): Unit = {
+    val c = m.chunks.head
+    val buf = ByteBuffer.allocate(c * m.dtype.size).order(ByteOrder.LITTLE_ENDIAN)
+    (0 until math.min(c, len - cc * c)).foreach(i => putElement(buf, i, m.dtype, valueAt(cc * c + i)))
+    store.writeBytes(s"${m.name}/${m.chunkKey(Seq(cc.toLong))}", encodeChunk(buf.array(), m))
+  }
+
+  /** How a variable's `.zstats` sums accumulate: 1 = exact long
+    * (integrals), 2 = double (floats), 0 = no sums (datetime / bool —
+    * SUM is not meaningful there). */
+  private def sumKind(dt: ZarrDType): Int = dt.kind match {
+    case 'i' | 'u' => 1
+    case 'f' => 2
+    case _ => 0
+  }
+
+  /** A value in the stats space: chunk min/max, pruning comparisons and
+    * the append order check all compare doubles, datetimes as epoch
+    * micros (what they decode to). */
+  private def doubleOf(v: Any): Double = v match {
+    case n: java.lang.Number => n.doubleValue()
+    case b: Boolean => if (b) 1.0 else 0.0
+    case other => epochMicros(other).toDouble
+  }
+
+  /** One encoded chunk's sidecar partial: its [min, max] (widened by
+    * the fill value when some cells were never written) and its
+    * (exact sum, written-cell count), None when the variable carries no
+    * sums, no cell was written or the sum overflowed. */
+  private final case class ChunkPartial(min: Double, max: Double,
+      sum: Option[(java.math.BigDecimal, Long)])
+
+  /** The stats/sums accumulator of one (chunk, variable). Null cells
+    * are written as fill and not counted. A long overflow or a
+    * non-finite double sum poisons the chunk's sum, which drops the
+    * whole variable's sums: the sidecar's sums are all-or-nothing, so
+    * the complete-coverage attestation can hold. */
+  private final class ChunkAcc(kind: Int) {
+    private var min = Double.PositiveInfinity
+    private var max = Double.NegativeInfinity
+    private var n = 0L
+    private var longSum = 0L
+    private var doubleSum = 0.0
+    private var poisoned = false
+
+    def add(value: Any): Unit = if (value != null) {
+      val d = doubleOf(value)
+      min = math.min(min, d)
+      max = math.max(max, d)
+      n += 1
+      if (kind == 1)
+        try longSum = Math.addExact(longSum, value.asInstanceOf[java.lang.Number].longValue())
+        catch { case _: ArithmeticException => poisoned = true }
+      else if (kind == 2) {
+        doubleSum += d
+        poisoned ||= !java.lang.Double.isFinite(doubleSum)
+      }
+    }
+
+    def partial(cells: Long, fill: Double): ChunkPartial = {
+      val (mn, mx) = if (n >= cells) (min, max) else (math.min(min, fill), math.max(max, fill))
+      val sum =
+        if (kind == 0 || poisoned || n == 0) None
+        else if (kind == 1) Some((java.math.BigDecimal.valueOf(longSum), n))
+        else Some((java.math.BigDecimal.valueOf(doubleSum), n))
+      ChunkPartial(mn, mx, sum)
+    }
+  }
+
+  /** The input check of write and append, ONE aggregation action: row
+    * count, distinct cells, and per coordinate its nulls, its NaNs and
+    * its sorted distinct values. Returns those values per coordinate.
+    *
+    * Duplicate cells would write nondeterministically (whichever
+    * partition's value lands last) and can MASK a missing cell,
+    * silently replacing user data with fill; a partial grid (missing
+    * cells → fill_value) stays legal. Null and NaN coordinates cannot
+    * index a grid. Coordinate arrays are Zarr metadata that live whole
+    * on the driver, so each set is capped executor-side at
+    * `maxDimLen + 1` values: the driver never receives more, and a set
+    * at the cap is refused. The executors still build each full set. */
+  private def validateGrid(df: DataFrame, coords: Seq[String], maxDimLen: Int): Seq[Array[Any]] = {
+    val cap = math.min(maxDimLen.toLong + 1, Int.MaxValue).toInt
+    val aggs: Seq[Column] =
+      Seq(count(lit(1)), count_distinct(struct(coords.map(col): _*))) ++
+        coords.flatMap { c =>
+          val nans = df.schema(c).dataType match {
+            case FloatType | DoubleType => sum(when(isnan(col(c)), 1L).otherwise(0L))
+            case _ => lit(0L)
+          }
+          Seq(sum(when(col(c).isNull, 1L).otherwise(0L)), nans,
+            slice(sort_array(collect_set(col(c))), 1, cap))
+        }
+    val v = df.agg(aggs.head, aggs.tail: _*).head()
+    val n = v.getLong(0)
+    require(n > 0,
+      "cannot write an empty DataFrame to a Zarr store: a grid needs at " +
+        "least one value per dimension")
+    require(v.getLong(1) == n,
+      s"input has ${n - v.getLong(1)} duplicate coordinate cell(s): each " +
+        s"(${coords.mkString(", ")}) tuple may appear at most once")
+    coords.zipWithIndex.map { case (name, i) =>
+      require(v.getLong(2 + 3 * i) == 0L,
+        s"coordinate '$name' contains null — coordinate values must be non-null")
+      require(v.getLong(3 + 3 * i) == 0L,
+        s"coordinate '$name' contains NaN — grid coordinates must be " +
+          "orderable finite values")
+      val vals = v.getSeq[Any](4 + 3 * i).toArray
+      require(vals.length <= maxDimLen,
+        s"coordinate '$name' has more than $maxDimLen distinct values (the " +
+          "maxDimLen bound): coordinate arrays are driver-materialized Zarr " +
+          "metadata; raise the maxDimLen option only if the driver has memory " +
+          "for the full coordinate array")
+      vals
+    }
+  }
+
+  /** `df` with each row's outer-chunk id, repartitioned so that every
+    * chunk (all inner chunks of an outer slab included) lands in exactly
+    * one task. `vals` are the outer values in grid order, the first at
+    * grid index `first`. The id comes from a BROADCAST equi-join against
+    * the (value → chunk) table: a chained CASE per outer value would
+    * build an expression tree as deep as the outer extent (a 50k-step
+    * time dimension then stack-overflows the analyzer), while the join
+    * has O(1) expression depth at any extent. */
+  private def byOuterChunk(df: DataFrame, outer: String, vals: Array[Any], first: Int,
+      chunkOuter: Int): DataFrame = {
+    val spark = df.sparkSession
+    val rows = vals.toSeq.zipWithIndex.map { case (v, i) => Row(v, ((first + i) / chunkOuter).toLong) }
+    val mapDf = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 1),
+      StructType(Seq(
+        StructField("__ov", df.schema(outer).dataType, nullable = false),
+        StructField("__chunk", LongType, nullable = false))))
+    val nChunks = (vals.length + chunkOuter - 1) / chunkOuter
+    df.join(broadcast(mapDf), df(outer) === mapDf("__ov")).drop("__ov")
+      .repartition(math.min(nChunks, math.max(1, spark.sparkContext.defaultParallelism)),
+        col("__chunk"))
+  }
+
+  /** The executor encode pass of write and append. Each task buffers its
+    * rows' cells per (chunk, variable) in the layout the variables'
+    * metadata declares, writes every chunk it owns through the store
+    * and returns one [[ChunkPartial]] per chunk. `idx(d)` maps
+    * dimension d's raw-domain coordinate values to grid indices. */
+  private def encodeChunks(rows: DataFrame, coords: Seq[String], idx: Seq[Map[Any, Int]],
+      metas: Seq[ZarrArrayMeta], store: ZarrStore): RDD[((Seq[Long], Int), ChunkPartial)] = {
+    val bIdx = rows.sparkSession.sparkContext.broadcast(idx)
+    // the prior sidecar maps are not needed to encode: ship the layout only
+    val ms = metas.map(_.copy(chunkStats = Map.empty, chunkSums = Map.empty))
+    val grid = ms.head.chunks
+    rows.rdd.mapPartitions { it =>
+      val index = bIdx.value
+      val slots = mutable.Map.empty[(Seq[Long], Int), (ByteBuffer, ChunkAcc)]
+      it.foreach { row =>
+        // grid indices → (chunk index vector, C-order offset in chunk)
+        val ci = new Array[Long](coords.length)
+        var local = 0L
+        var d = 0
+        while (d < coords.length) {
+          val gi = index(d)(rawOf(row.getAs[Any](coords(d))))
+          ci(d) = gi / grid(d)
+          local = local * grid(d) + gi % grid(d)
+          d += 1
+        }
+        val key = ci.toSeq
+        var v = 0
+        while (v < ms.length) {
+          val m = ms(v)
+          // edge chunks are stored at FULL chunk shape (the overhang is
+          // fill): readers size buffers from the chunk shape
+          val (buf, acc) = slots.getOrElseUpdate((key, v),
+            (ByteBuffer.allocate(m.chunks.product * m.dtype.size).order(ByteOrder.LITTLE_ENDIAN),
+              new ChunkAcc(sumKind(m.dtype))))
+          val value = row.getAs[Any](m.name)
+          putElement(buf, local.toInt, m.dtype, value)
+          acc.add(value)
+          v += 1
+        }
+      }
+      slots.iterator.map { case ((ci, v), (buf, acc)) =>
+        val m = ms(v)
+        store.writeBytes(s"${m.name}/${m.chunkKey(ci)}", encodeChunk(buf.array(), m))
+        ((ci, v), acc.partial(m.chunks.map(_.toLong).product, m.fillValue))
+      }
+    }
+  }
+
+  /** Route every chunk's partial to the one task that owns its
+    * variable's sidecar. */
+  private def byVar(partials: RDD[((Seq[Long], Int), ChunkPartial)],
+      nVars: Int): RDD[(Int, (Seq[Long], ChunkPartial))] =
+    partials.map { case ((ci, v), p) => (v, (ci, p)) }.partitionBy(new VarPartitioner(nVars))
+
+  /** The `.zstats` sidecar of variable `m`: the fresh per-chunk
+    * partials merged over the prior sidecar state `m` carries (empty and
+    * vacuously complete for a fresh write). Entries sort in canonical
+    * C-order, so a write-then-append store is byte-identical to the
+    * equivalent fresh write. A chunk whose min or max is not finite
+    * gets no entry: strict JSON has no NaN or Infinity, and readers
+    * never prune a chunk without one. Sums, with the O(1) "total" and
+    * the "complete" attestation, are written only when the prior state
+    * attests complete sums and every fresh chunk produced one; chunks
+    * with no entry are then provably all-fill, so readers can answer
+    * SUM/AVG from the sidecar alone. */
+  private def zstats(m: ZarrArrayMeta, fresh: Seq[(Seq[Long], ChunkPartial)]): String = {
+    import scala.math.Ordering.Implicits._
+    def canonical[V](kv: Iterable[(String, V)]): Seq[(String, V)] =
+      kv.toSeq.sortBy(e => chunkKeyOrder(e._1))
+    val byKey = fresh.map { case (ci, p) => m.chunkKey(ci) -> p }
+    val keys = byKey.map(_._1)
+    val chunks = canonical((m.chunkStats -- keys) ++ byKey.collect {
+      case (k, p) if java.lang.Double.isFinite(p.min) && java.lang.Double.isFinite(p.max) =>
+        k -> (p.min, p.max)
+    }).map { case (k, (mn, mx)) => s""""$k": [$mn, $mx]""" }.mkString(",")
+    val sums =
+      if (!m.sumsComplete || byKey.isEmpty || byKey.exists(_._2.sum.isEmpty)) ""
+      else {
+        val all = canonical((m.chunkSums -- keys) ++ byKey.map { case (k, p) => k -> p.sum.get })
+        val (s, c) = all.foldLeft((java.math.BigDecimal.ZERO, 0L)) {
+          case ((s, c), (_, (s2, c2))) => (s.add(s2), c + c2)
+        }
+        all.map { case (k, (s, c)) => s""""$k": [${s.toPlainString}, $c]""" }
+          .mkString(""", "sums": {""", ",",
+            s"""}, "total": [${s.toPlainString}, $c], "complete": true""")
+      }
+    s"""{"chunks": {$chunks}$sums}"""
+  }
+
+  /** EXECUTORS write the sidecars, one task per variable reading its
+    * partials from the shuffle `byVar` planned (the shuffle boundary
+    * guarantees every chunk is written first); the driver receives one
+    * row per variable, never the per-chunk partials. */
+  private def writeSidecars(keyed: RDD[(Int, (Seq[Long], ChunkPartial))],
+      metas: Seq[ZarrArrayMeta], store: ZarrStore): Unit =
+    lastStatsDriverRows = keyed.mapPartitionsWithIndex { (v, it) =>
+      store.writeBytes(s"${metas(v).name}/.zstats", zstats(metas(v), it.map(_._2).toSeq).getBytes)
+      Iterator.single(v)
+    }.collect().length
 
   /** Write `df` as a Zarr v2 store at `path` (created fresh).
     *
@@ -333,75 +589,10 @@ object ZarrWriter {
     uintColumns.keys.foreach(k => require(varCols.contains(k),
       s"uintColumns names '$k', which is not a data-variable column"))
 
-    // 1. ONE aggregation pass — row count, distinct cells (duplicate
-    // guard), per-coordinate distinct/null/NaN counts, AND the sorted
-    // coordinate values themselves. Until r16 the coordinate collect
-    // was a SECOND action so the max-dimension guard could refuse a
-    // pathological dimension before any driver-sized collect; fusing
-    // them saves a full re-execution of the (possibly expensive,
-    // uncached) input plan per write. The guard survives the fusion
-    // because each collected set is CAPPED executor-side with
-    // slice(…, 1, maxDimLen): the driver never receives more than
-    // maxDimLen values per coordinate, and the uncapped count_distinct
-    // in the same row still detects the overflow and refuses. (The
-    // trade: executors now build the full distinct set even on a
-    // refused input — the guard protects the DRIVER, which is where
-    // the coordinate arrays would otherwise materialize unbounded.)
-    //
-    // Duplicate cells would write nondeterministically (whichever
-    // partition's value lands last) and can MASK a missing cell when
-    // n still fits the grid — silently replacing user data with fill.
-    // A partial grid (missing cells → fill_value) remains legal.
-    // Null/NaN coordinates cannot index a grid (NaN breaks ordering and
-    // the executor-side cell lookup dies with a bare "key not found").
-    val validationAggs: Seq[Column] =
-      Seq(count(lit(1)), count_distinct(struct(coords.map(col): _*))) ++
-      coords.flatMap { c =>
-        val nans = schema(c).dataType match {
-          case FloatType | DoubleType => sum(when(isnan(col(c)), 1L).otherwise(0L))
-          case _ => lit(0L)
-        }
-        Seq(count_distinct(col(c)),
-          sum(when(col(c).isNull, 1L).otherwise(0L)), nans)
-      } ++
-      coords.map(c => slice(sort_array(collect_set(col(c))), 1, maxDimLen))
-    val v = df.agg(validationAggs.head, validationAggs.tail: _*).head()
-    val n = v.getLong(0)
-    require(n > 0,
-      "cannot write an empty DataFrame as a Zarr store: a grid needs at " +
-        "least one value per dimension")
-    val nDistinct = v.getLong(1)
-    require(nDistinct == n,
-      s"input has ${n - nDistinct} duplicate coordinate cell(s): each " +
-        s"(${coords.mkString(", ")}) tuple may appear at most once")
-    coords.zipWithIndex.foreach { case (name, i) =>
-      require(v.getLong(3 + 3 * i) == 0L,
-        s"coordinate '$name' contains null — coordinate values must be non-null")
-      require(v.getLong(4 + 3 * i) == 0L,
-        s"coordinate '$name' contains NaN — grid coordinates must be " +
-          "orderable finite values")
-      val dimLen = v.getLong(2 + 3 * i)
-      // Zarr metadata materializes every coordinate value on the driver
-      // (the reference loads all coordinates eagerly at schema inference
-      // the same way, /root/reference/src/reader/schema_inference.rs:214-302);
-      // grid dimensions are small by construction, so an oversized one is
-      // almost always a mis-specified coords list. Refuse loudly here,
-      // before the collect, instead of OOMing the driver.
-      require(dimLen <= maxDimLen,
-        s"coordinate '$name' has $dimLen distinct values, above the " +
-          s"maxDimLen bound ($maxDimLen): coordinate arrays are " +
-          "driver-materialized Zarr metadata; raise the maxDimLen option " +
-          "only if the driver has memory for the full coordinate array")
-    }
-    // coordinate values from the same fused row (each capped at
-    // maxDimLen; the guard above proved dimLen <= maxDimLen, so the
-    // capped slice IS the complete sorted dimension)
-    val coordVals: Seq[Array[Any]] = coords.indices
-      .map(i => v.getSeq[Any](2 + 3 * coords.length + i).toArray)
+    // 1. one aggregation pass validates the input and yields the
+    // sorted coordinate values
+    val coordVals = validateGrid(df, coords, maxDimLen)
     val shape = coordVals.map(_.length.toLong)
-    val totalRows = shape.product
-    require(n <= totalRows,
-      s"input has $n rows but the coordinate grid only has $totalRows cells")
 
     // Effective data-variable chunk shape: explicit `chunkShape` (full
     // N-dim control — at scale inner dims need chunking too, so one
@@ -418,7 +609,7 @@ object ZarrWriter {
     require(shardInner == 0 || (version == 3 && outerChunk % shardInner == 0),
       s"shardInner requires zarrVersion=3 and outer chunk extent ($outerChunk) divisible by shardInner ($shardInner)")
 
-    // 2. driver writes group + coordinate arrays + variable metadata
+    // 2. driver writes the group and every array's metadata
     val store = ZarrStore.open(path)
     if (version == 2)
       store.writeBytes(".zgroup", """{"zarr_format":2}""".getBytes)
@@ -472,21 +663,8 @@ object ZarrWriter {
       // chunk 0 in a window racing the metadata flip (the torn-store
       // hazard on the legacy single-chunk layout). Inner coordinates
       // never grow, so they stay a single chunk.
-      val cChunk = if (name == coords.head && vals.nonEmpty) outerChunk else vals.length
+      val cChunk = if (name == coords.head) outerChunk else vals.length
       writeArrayMeta(name, Seq(vals.length.toLong), Seq(cChunk), dtypeStr, elem)
-      val nCC = if (cChunk <= 0) 1 else ((vals.length.toLong + cChunk - 1) / cChunk).toInt
-      (0 until math.max(1, nCC)).foreach { cc =>
-        val start = cc * cChunk
-        val n = math.max(0, math.min(cChunk, vals.length - start))
-        // tail cells past the axis length are zero padding — readers
-        // truncate at shape (same layout the append path writes)
-        val buf = ByteBuffer.allocate(math.max(cChunk, 0) * elem).order(ByteOrder.LITTLE_ENDIAN)
-        (0 until n).foreach(i => putValue(buf, i, elem, t, vals(start + i)))
-        val payload =
-          if (deltaFilter && deltaEligible(t)) deltaEncode(buf.array(), elem) else buf.array()
-        store.writeBytes(if (version == 2) s"$name/$cc" else s"$name/c/$cc",
-          compressPayload(payload, compressor, elem))
-      }
     }
     varCols.foreach { name =>
       val (dtypeStr, elem) = varDtype(name, schema(name).dataType, uintColumns)
@@ -515,223 +693,27 @@ object ZarrWriter {
           s""""consolidated_metadata":{"metadata":{$entries}}}""").getBytes)
     }
 
-    // 3. executors write chunk slabs: repartition by outer-chunk id so
-    // every chunk (including all inner chunks of an outer slab) lands
-    // in exactly one task
-    val idxMaps: Seq[Map[Any, Int]] =
-      coordVals.map(_.zipWithIndex.toMap)
-    val spark = df.sparkSession
-    val bIdx = spark.sparkContext.broadcast(idxMaps)
-    val varTypes = varCols.map(schema(_).dataType)
-    // (element width, unsigned?) per data variable — the serialized
-    // layout, which under uintColumns differs from the Spark type's
-    val varEnc: Seq[(Int, Boolean)] = varCols.map { n =>
-      val (ds, e) = varDtype(n, schema(n).dataType, uintColumns)
-      (e, ds.drop(1).startsWith("u"))
+    // 3. every chunk is encoded from the metadata just written, read
+    // back the way a reader parses it, so write and append share one
+    // encoder and both encode exactly what the reader decodes. A fresh
+    // write has no prior sidecar: empty, vacuously complete.
+    val arrays = ZarrMeta.discoverArrays(store).map(a => a.name -> a).toMap
+    coords.zip(coordVals).foreach { case (name, vals) =>
+      val m = arrays(name)
+      (0 until m.chunkGrid.head.toInt).foreach(cc => writeCoordChunk(store, m, cc, vals.length, vals(_)))
     }
-    val nOuterChunks = ((shape.head + outerChunk - 1) / outerChunk).toInt
-
-    val outerName = coords.head
-    val rows = withChunkId(df, outerName, idxMaps.head, outerChunk)
-      .repartition(math.min(nOuterChunks, math.max(1, spark.sparkContext.defaultParallelism)),
-        col("__chunk"))
-
-    val coordNames = coords
-    val wVersion = version
-    val wShardInner = shardInner
-    val wShardCompress = shardCompress
-    val wStore = store // serializable descriptor; executors open lazily
-    val wCompressor = compressor
-    val wChunks = chunks
-    val wDelta = deltaFilter
-    val wVarEnc = varEnc
-    def chunkRel(v: Int, ci: Seq[Int]): String =
-      if (wVersion == 2) varCols(v) + "/" + ci.mkString(".")
-      else (Seq(varCols(v), "c") ++ ci.map(_.toString)).mkString("/")
-    // Executors write their chunk slabs and return per-chunk min/max —
-    // the driver persists them as `<var>/.zstats` sidecars powering
-    // statistics-based chunk pruning (the reference's roadmap
-    // "statistics-based chunk pruning" / "data-variable filter
-    // pushdown", README.md:289-337; zarr itself has no chunk stats, so
-    // this is a sidecar extension readers may ignore).
-    // sum kind per var: 1 = exact long accumulation (integrals),
-    // 2 = double accumulation (floats), 0 = no sums (timestamp /
-    // bool / string — SUM is not meaningful there)
-    val varSumKind: Array[Int] = varTypes.map {
-      case ByteType | ShortType | IntegerType | LongType => 1
-      case FloatType | DoubleType => 2
-      case _ => 0
-    }.toArray
-    val partials: org.apache.spark.rdd.RDD[((Seq[Int], Int), (Double, Double, String))] =
-      rows.rdd.mapPartitions { it: Iterator[Row] =>
-      val idx = bIdx.value
-      val nDims = coordNames.length
-      val chunkCells = wChunks.map(_.toLong).product
-      val buffers = scala.collection.mutable.Map.empty[(Seq[Int], Int), ByteBuffer]
-      val stats = scala.collection.mutable.Map.empty[(Seq[Int], Int), (Double, Double, Long)]
-      // per-chunk sum partials: (longSum, doubleSum, poisoned) —
-      // poisoned on long overflow or non-finite doubles; a poisoned
-      // chunk drops the WHOLE variable's sums (the sidecar must stay
-      // all-or-nothing for the complete-coverage attestation)
-      val sums = scala.collection.mutable.Map.empty[(Seq[Int], Int), (Long, Double, Boolean)]
-      def trackStat(ci: Seq[Int], v: Int, value: Any): Unit = {
-        val d = value match {
-          case n: java.lang.Number => n.doubleValue()
-          case b: Boolean => if (b) 1.0 else 0.0
-          // datetime values decode to epoch micros, so stats (and the
-          // pruning comparisons) live in micro space too
-          case t: java.sql.Timestamp => epochMicros(t).toDouble
-          case i: java.time.Instant => epochMicros(i).toDouble
-          case _ => return
-        }
-        val cur = stats.getOrElse((ci, v), (d, d, 0L))
-        stats((ci, v)) = (math.min(cur._1, d), math.max(cur._2, d), cur._3 + 1)
-        varSumKind(v) match {
-          case 1 =>
-            val (sl, sd, bad) = sums.getOrElse((ci, v), (0L, 0.0, false))
-            val next =
-              try (Math.addExact(sl, value.asInstanceOf[java.lang.Number].longValue()), sd, bad)
-              catch { case _: ArithmeticException => (sl, sd, true) }
-            sums((ci, v)) = next
-          case 2 =>
-            val (sl, sd, bad) = sums.getOrElse((ci, v), (0L, 0.0, false))
-            val nd = sd + d
-            sums((ci, v)) = (sl, nd, bad || !java.lang.Double.isFinite(nd))
-          case _ =>
-        }
-      }
-      def bufFor(ci: Seq[Int], v: Int): ByteBuffer =
-        buffers.getOrElseUpdate((ci, v), {
-          // Zarr v2 edge chunks are stored at FULL chunk shape (the
-          // overhang is fill padding) — readers size buffers from the
-          // chunk shape, not the array shape
-          val (elem, _) = wVarEnc(v)
-          ByteBuffer.allocate(chunkCells.toInt * elem)
-            .order(ByteOrder.LITTLE_ENDIAN)
-        })
-      it.foreach { row =>
-        // grid indices → (chunk index vector, C-order offset in chunk)
-        val ci = new Array[Int](nDims)
-        var local = 0L
-        var d = 0
-        while (d < nDims) {
-          val gi = idx(d)(row.getAs[Any](coordNames(d)))
-          ci(d) = gi / wChunks(d)
-          local = local * wChunks(d) + (gi % wChunks(d))
-          d += 1
-        }
-        val key = ci.toSeq
-        var v = 0
-        while (v < varCols.length) {
-          val (elem, isU) = wVarEnc(v)
-          val value = row.getAs[Any](varCols(v))
-          if (isU) putUint(bufFor(key, v), local.toInt, elem, value)
-          else putValue(bufFor(key, v), local.toInt, elem, varTypes(v), value)
-          trackStat(key, v, value)
-          v += 1
-        }
-      }
-      buffers.toSeq.map { case ((ci, v), buf) =>
-        val (elem, _) = wVarEnc(v)
-        val payload =
-          if (wShardInner > 0)
-            shardify(buf.array(), wChunks.head / wShardInner, wShardCompress, elem)
-          else {
-            val t = varTypes(v)
-            val raw =
-              if (wDelta && deltaEligible(t)) deltaEncode(buf.array(), elem) else buf.array()
-            compressPayload(raw, wCompressor, elem)
-          }
-        wStore.writeBytes(chunkRel(v, ci), payload)
-        // widen by fill_value (0) ONLY for partially-filled chunks —
-        // their unwritten cells hold fill, so stats must cover it;
-        // fully-covered chunks keep their tight range
-        val (mn0, mx0, cnt) = stats.getOrElse((ci, v), (0.0, 0.0, 0L))
-        val (mn, mx) =
-          if (cnt >= chunkCells) (mn0, mx0)
-          else (math.min(mn0, 0.0), math.max(mx0, 0.0))
-        // sum partial as a JSON fragment [sum, written-count]; null
-        // when the variable carries no sums or this chunk poisoned
-        val sumJson = sums.get((ci, v)) match {
-          case Some((sl, _, false)) if varSumKind(v) == 1 => s"[$sl, $cnt]"
-          case Some((_, sd, false)) if varSumKind(v) == 2 => s"[$sd, $cnt]"
-          case _ => null
-        }
-        ((ci, v), (mn, mx, sumJson))
-      }.iterator
-    }
-
-    // EXECUTORS assemble and write the stats sidecars (one JSON per
-    // variable): the per-chunk partials shuffle to one assembly task
-    // per variable (same single job — the shuffle boundary guarantees
-    // every chunk slab is written before assembly starts), each task
-    // sorts its entries into canonical C-order and writes
-    // `<var>/.zstats` through the store, and the driver receives ONE
-    // summary row per variable. Until round 13 the driver collect()'ed
-    // every (chunk, var) partial before writing sidecars — metadata-
-    // sized, but a driver-memory hotspot at 10^7 chunks × many
-    // variables. Sums (+ the complete-coverage attestation) only when
-    // EVERY written chunk produced a sum partial — chunks with no
-    // entry are then provably all-fill, so readers can answer SUM/AVG
-    // from the sidecar alone (chunk-level aggregate pushdown).
-    val wVarSumKind = varSumKind
-    val summaries = partials
-      .map { case ((ci, v), t) => (v, (ci, t)) }
-      .partitionBy(new VarPartitioner(math.max(1, varCols.length)))
-      .mapPartitionsWithIndex { (v, it) =>
-        if (v >= varCols.length) { require(it.isEmpty); Iterator.empty }
-        else {
-          import scala.math.Ordering.Implicits._
-          val mine = it.map(_._2).toVector.sortBy(_._1)
-          def keyOf(ci: Seq[Int]): String =
-            if (wVersion == 2) ci.mkString(".")
-            else ("c" +: ci.map(_.toString)).mkString("/")
-          val entries = mine.map { case (ci, (mn, mx, _)) =>
-            s""""${keyOf(ci)}": [$mn, $mx]"""
-          }.mkString(",")
-          val sumsOk = wVarSumKind(v) != 0 && mine.nonEmpty && mine.forall(_._2._3 != null)
-          val sumsJson =
-            if (!sumsOk) ""
-            else {
-              // the "total" record answers ungrouped SUM/AVG in O(1) —
-              // a fleet-scale variable has millions of chunk entries
-              // the reader must not need to fold
-              val sumParts = mine.map(_._2._3).map(parseSumJson)
-              val total = sumParts.foldLeft((java.math.BigDecimal.ZERO, 0L)) {
-                case ((s, c), (s2, c2)) => (s.add(s2), c + c2)
-              }
-              mine.map { case (ci, (_, _, sj)) => s""""${keyOf(ci)}": $sj""" }
-                .mkString(""", "sums": {""", ",",
-                  s"""}, "total": [${total._1.toPlainString}, ${total._2}], "complete": true""")
-            }
-          wStore.writeBytes(s"${varCols(v)}/.zstats",
-            s"""{"chunks": {$entries}$sumsJson}""".getBytes)
-          Iterator.single(v -> mine.size)
-        }
-      }.collect()
-    lastStatsDriverRows = summaries.length
+    val metas = varCols.map(n =>
+      arrays(n).copy(chunkStats = Map.empty, chunkSums = Map.empty, sumsComplete = true))
+    // 4. one job: executors write the chunk slabs, then (after the
+    // per-variable shuffle) the `.zstats` sidecars that power
+    // statistics-based chunk pruning and SUM/AVG pushdown (zarr itself
+    // has no chunk stats, so this is a sidecar extension readers may
+    // ignore)
+    val idx = coordVals.map(_.iterator.map(rawOf).zipWithIndex.toMap)
+    val rows = byOuterChunk(df, coords.head, coordVals.head, 0, outerChunk)
+    writeSidecars(byVar(encodeChunks(rows, coords, idx, metas, store), metas.length), metas, store)
     // a rewrite at this path must not serve chunks cached before it
     ChunkIO.invalidatePath(store.path)
-  }
-
-  /** Attach the outer-chunk id via a BROADCAST equi-join against the
-    * (value → chunk) table. A chained CASE per outer value would
-    * build an expression tree as deep as the outer extent — a 50k-step
-    * time dimension then stack-overflows the analyzer and busts the
-    * codegen method limit; the join is O(1) expression depth at any
-    * extent. */
-  private def withChunkId(df: DataFrame, outer: String,
-      idx: Map[Any, Int], chunkOuter: Int): DataFrame = {
-    val spark = df.sparkSession
-    val rows = idx.toSeq.map { case (v, i) =>
-      org.apache.spark.sql.Row(v, (i / chunkOuter).toLong)
-    }
-    val mapDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1),
-      StructType(Seq(
-        StructField("__ov", df.schema(outer).dataType, nullable = false),
-        StructField("__chunk", LongType, nullable = false))))
-    df.join(broadcast(mapDf), df(outer) === mapDf("__ov")).drop("__ov")
   }
 
   /** Row-domain value → the coordinate raw domain ([[ChunkCodec
@@ -743,30 +725,13 @@ object ZarrWriter {
     case other => other
   }
 
-  /** Serialize one raw-domain value at `offset` (little-endian). */
-  private def putRaw(buf: ByteBuffer, offset: Int, dtype: ZarrDType, v: Any): Unit = {
-    val elem = dtype.size
-    (dtype.kind, dtype.size) match {
-      case ('i', 8) | ('M', _) => buf.putLong(offset * elem, v.asInstanceOf[Long])
-      case ('i', 4) => buf.putInt(offset * elem, v.asInstanceOf[Int])
-      case ('i', 2) => buf.putShort(offset * elem, v.asInstanceOf[Short])
-      case ('i', 1) => buf.put(offset * elem, v.asInstanceOf[Byte])
-      case ('u', w) => putUint(buf, offset, w, v)
-      case ('f', 8) => buf.putDouble(offset * elem, v.asInstanceOf[Double])
-      case ('f', 4) => buf.putFloat(offset * elem, v.asInstanceOf[Float])
-      case ('b', _) => buf.put(offset * elem, if (v.asInstanceOf[Boolean]) 1.toByte else 0.toByte)
-      case other => throw new UnsupportedOperationException(
-        s"append cannot serialize coordinate dtype $other")
-    }
-  }
-
   /** Back-map a store's parsed compressor to this writer's codec name;
     * refuses combinations the writer cannot reproduce. */
   private def codecNameOf(c: ZarrCompressor, what: String): String = c.id match {
     case "none" | "zstd" | "gzip" | "zlib" => c.id
     case "blosc" if c.cname == "lz4" || c.cname.isEmpty => "blosc"
     case other => throw new UnsupportedOperationException(
-      s"append cannot re-encode $what compressed with '$other" +
+      s"the writer cannot encode $what compressed with '$other" +
         (if (c.cname.nonEmpty) s"/${c.cname}" else "") + "'")
   }
 
@@ -958,10 +923,9 @@ object ZarrWriter {
   }
 
   /** Test seam: how many rows the last sidecar-assembly job returned
-    * to the driver. The round-13 distribution contract — pinned by
-    * ZarrWriterSpec at 10^4 chunks — is that this is the VARIABLE
-    * count (one summary row each), never the per-chunk partial count
-    * the pre-round-13 driver collect() materialized. */
+    * to the driver. The distribution contract, pinned by
+    * ZarrWriterSpec at 10^4 chunks, is that this is the VARIABLE
+    * count (one summary row each), never the per-chunk partial count. */
   @volatile private[graft] var lastStatsDriverRows: Int = -1
 
   /** Largest single driver-side buffer the last append's outer-
@@ -982,11 +946,8 @@ object ZarrWriter {
   @volatile private[graft] var coordRewriteTestHook: String => Unit = _ => ()
 
   /** Numeric C-order sort key for a chunk-key STRING ("10.0" v2,
-    * "c/10/0" v3): append-merged sidecar entries must sort by parsed
-    * chunk indices like the fresh-write path sorts its Seq[Int] keys,
-    * or a write-then-append store is never byte-identical to the
-    * equivalent fresh write (string sort puts "10.0" before "2.0" —
-    * r13 ADVICE canonical-bytes fix). */
+    * "c/10/0" v3): sidecar entries sort by parsed chunk indices (a
+    * string sort puts "10.0" before "2.0"). */
   private def chunkKeyOrder(k: String): Seq[Int] =
     k.split("[./]").toSeq.filter(s => s.nonEmpty && s.forall(_.isDigit)).map(_.toInt)
 
@@ -1003,78 +964,46 @@ object ZarrWriter {
 
   private def appendLocked(df: DataFrame, path: String, store: ZarrStore): Unit = {
     val meta0 = ZarrMeta.readStore(path)
-    require(meta0.dataVars.forall(_.sharding.isEmpty),
+    val outer = meta0.coords.head
+    val varMetas = meta0.dataVars
+    require((outer.meta +: varMetas).forall(_.sharding.isEmpty),
       "append to sharded stores is not supported")
     val coordNames = meta0.coordNames
-    val varNames = meta0.dataVars.map(_.name)
+    val varNames = varMetas.map(_.name)
     val schema = df.schema
     require(schema.fieldNames.toSet == (coordNames ++ varNames).toSet,
       s"append input columns ${schema.fieldNames.mkString(",")} must be exactly " +
         s"the store's columns ${(coordNames ++ varNames).mkString(",")}")
     (meta0.coords.map(c => c.meta.name -> c.meta.dtype.sparkType) ++
-      meta0.dataVars.map(v => v.name -> v.dtype.sparkType)).foreach { case (n, t) =>
+      varMetas.map(v => v.name -> v.dtype.sparkType)).foreach { case (n, t) =>
       require(schema(n).dataType == t,
         s"append column $n has type ${schema(n).dataType}, store expects $t")
     }
 
-    val outer = meta0.coords.head
     val outerName = outer.meta.name
-    require("iuM".contains(outer.meta.dtype.kind) || outer.meta.dtype.kind == 'f',
+    require("iufM".contains(outer.meta.dtype.kind),
       s"append outer coordinate must be numeric or datetime, got dtype ${outer.meta.dtype}")
-    val outerChunk = meta0.dataVars.head.chunks.head
-    require(meta0.dataVars.forall(_.chunks == meta0.dataVars.head.chunks),
+    val outerChunk = varMetas.head.chunks.head
+    require(varMetas.forall(_.chunks == varMetas.head.chunks),
       "append requires all data variables to share one chunk shape")
     require(outer.length % outerChunk == 0,
       s"existing outer extent ${outer.length} is not a multiple of the outer chunk " +
         s"extent $outerChunk — append would straddle a chunk; rewrite the store instead")
-    meta0.dataVars.foreach(v => codecNameOf(v.compressor, v.name)) // validate early
+    (outer.meta +: varMetas).foreach(m => codecNameOf(m.compressor, m.name)) // validate early
 
-    // same duplicate-cell guard as the full write, fused with the new
-    // outer-coordinate collection into ONE action (the former three —
-    // count, distinct-cells count, outer distinct collect — each
-    // re-executed an uncached input plan). The outer dimension grows
-    // without bound across appends, but each BATCH's new outer values
-    // are batch-sized; the full-write maxDimLen guard still bounds the
-    // per-batch driver collect.
-    val appendAggs: Seq[Column] =
-      Seq(count(lit(1)),
-        count_distinct(struct(coordNames.map(col): _*)),
-        sum(when(col(outerName).isNull, 1L).otherwise(0L))) ++
-      coordNames.map(c => sort_array(collect_set(col(c))))
-    val aRow = df.agg(appendAggs.head, appendAggs.tail: _*).head()
-    val nRows = aRow.getLong(0)
-    require(nRows > 0, "append input has no rows")
-    val nCells = aRow.getLong(1)
-    require(nCells == nRows,
-      s"append input has ${nRows - nCells} duplicate coordinate cell(s): each " +
-        s"(${coordNames.mkString(", ")}) tuple may appear at most once")
-    // collect_set silently drops nulls, so refuse them explicitly — a
-    // null outer value can never index the grid
-    require(aRow.getLong(2) == 0L,
-      s"append outer coordinate '$outerName' contains null")
-
-    // new outer values: distinct, sorted, strictly after the existing max
-    val newOuterVals: Array[Any] = aRow.getSeq[Any](3).toArray
-    require(newOuterVals.length <= ZarrWriter.defaultMaxDimLen,
-      s"append batch adds ${newOuterVals.length} outer values, above the " +
-        s"per-batch driver bound (${ZarrWriter.defaultMaxDimLen})")
+    // the write path's input check; the bound admits the store's own
+    // inner extents, which the batch must repeat exactly
+    val sets = validateGrid(df, coordNames,
+      (defaultMaxDimLen +: meta0.coords.tail.map(_.length)).max)
+    // new outer values: sorted, strictly after the existing max
+    val newOuterVals = sets.head
     val existingMax = outer.doubles.max
-    val newMins = newOuterVals.map {
-      case t: java.sql.Timestamp => epochMicros(t).toDouble
-      case i: java.time.Instant => epochMicros(i).toDouble
-      case n: java.lang.Number => n.doubleValue()
-      case other => throw new UnsupportedOperationException(
-        s"append outer value $other is not numeric/datetime")
-    }
-    require(newMins.head > existingMax,
+    require(doubleOf(newOuterVals.head) > existingMax,
       s"append outer values must sort strictly after the existing maximum " +
-        s"($existingMax); got ${newMins.head}")
-
-    // inner coordinates must match the store exactly (values come from
-    // the same fused aggregation — collect_set drops nulls, but a null
-    // makes the sets differ from the null-free store, which fails here)
-    meta0.coords.tail.zipWithIndex.foreach { case (c, i) =>
-      val dfVals = aRow.getSeq[Any](4 + i).map(rawOf).toSeq
+        s"($existingMax); got ${doubleOf(newOuterVals.head)}")
+    // inner coordinates must match the store exactly
+    meta0.coords.tail.zip(sets.tail).foreach { case (c, vals) =>
+      val dfVals = vals.toSeq.map(rawOf)
       val stored = (0 until c.length).map(j => ChunkCodec.elementAt(c.raw, j))
       require(dfVals == stored,
         s"append inner coordinate ${c.meta.name} does not match the store " +
@@ -1083,113 +1012,10 @@ object ZarrWriter {
 
     val oldLen = outer.length
     // global grid index per dimension, raw-domain keys
-    val outerIdx: Map[Any, Int] =
-      newOuterVals.zipWithIndex.map { case (v, i) => (v, oldLen + i) }.toMap
-    val innerIdx: Seq[Map[Any, Int]] = meta0.coords.tail.map { c =>
-      (0 until c.length).map(i => ChunkCodec.elementAt(c.raw, i) -> i).toMap
-    }
-
-    val spark = df.sparkSession
-    val bInner = spark.sparkContext.broadcast(innerIdx)
-    val varMetas = meta0.dataVars
-    val nNewOuterChunks = (newOuterVals.length + outerChunk - 1) / outerChunk
-    val rows = withChunkId(df, outerName, outerIdx, outerChunk)
-      .repartition(math.min(nNewOuterChunks,
-        math.max(1, spark.sparkContext.defaultParallelism)), col("__chunk"))
-
-    val wStore = store
-    val coordNamesL = coordNames
-    // same sum-kind classification as the full write path (the merged
-    // sidecar must stay exact across appends)
-    val appendSumKind: Array[Int] = varMetas.map(_.dtype.sparkType match {
-      case ByteType | ShortType | IntegerType | LongType => 1
-      case FloatType | DoubleType => 2
-      case _ => 0
-    }).toArray
-    val partialsRdd: org.apache.spark.rdd.RDD[((Seq[Long], Int), (Double, Double, String))] =
-      rows.rdd.mapPartitions { (it: Iterator[Row]) =>
-        val inner = bInner.value
-        val nDims = coordNamesL.length
-        val buffers = scala.collection.mutable.Map.empty[(Seq[Long], Int), ByteBuffer]
-        val stats = scala.collection.mutable.Map.empty[(Seq[Long], Int), (Double, Double, Long)]
-        val sums = scala.collection.mutable.Map.empty[(Seq[Long], Int), (Long, Double, Boolean)]
-        def trackStat(ci: Seq[Long], v: Int, value: Any): Unit = {
-          val d = value match {
-            case n: java.lang.Number => n.doubleValue()
-            case b: Boolean => if (b) 1.0 else 0.0
-            case t: java.sql.Timestamp => epochMicros(t).toDouble
-            case i: java.time.Instant => epochMicros(i).toDouble
-            case _ => return
-          }
-          val cur = stats.getOrElse((ci, v), (d, d, 0L))
-          stats((ci, v)) = (math.min(cur._1, d), math.max(cur._2, d), cur._3 + 1)
-          appendSumKind(v) match {
-            case 1 =>
-              val (sl, sd, bad) = sums.getOrElse((ci, v), (0L, 0.0, false))
-              val next =
-                try (Math.addExact(sl, value.asInstanceOf[java.lang.Number].longValue()), sd, bad)
-                catch { case _: ArithmeticException => (sl, sd, true) }
-              sums((ci, v)) = next
-            case 2 =>
-              val (sl, sd, bad) = sums.getOrElse((ci, v), (0L, 0.0, false))
-              val nd = sd + d
-              sums((ci, v)) = (sl, nd, bad || !java.lang.Double.isFinite(nd))
-            case _ =>
-          }
-        }
-        it.foreach { row =>
-          val ci = new Array[Long](nDims)
-          var local = 0L
-          var d = 0
-          var gi = 0
-          while (d < nDims) {
-            val m = varMetas.head.chunks(d)
-            gi =
-              if (d == 0) outerIdx(row.getAs[Any](coordNamesL(0)))
-              else inner(d - 1)(rawOf(row.getAs[Any](coordNamesL(d))))
-            ci(d) = gi / m
-            local = local * m + (gi % m)
-            d += 1
-          }
-          val key = ci.toSeq
-          var v = 0
-          while (v < varMetas.length) {
-            val m = varMetas(v)
-            val buf = buffers.getOrElseUpdate((key, v),
-              ByteBuffer.allocate(m.chunks.product * m.dtype.size)
-                .order(ByteOrder.LITTLE_ENDIAN))
-            val value = row.getAs[Any](m.name)
-            // unsigned dtypes carry a WIDENED Spark type (u4 → Long):
-            // serialize by the store dtype's width, never the Spark
-            // type's, or an 8-byte put at a 4-byte stride corrupts
-            // neighboring cells
-            if (m.dtype.kind == 'u') putUint(buf, local.toInt, m.dtype.size, value)
-            else putValue(buf, local.toInt, m.dtype.size, m.dtype.sparkType, value)
-            trackStat(key, v, value)
-            v += 1
-          }
-        }
-        buffers.toSeq.map { case ((ci, v), buf) =>
-          val m = varMetas(v)
-          val raw =
-            if (m.deltaFilter) deltaEncode(buf.array(), m.dtype.size) else buf.array()
-          val payload = compressPayload(raw, codecNameOf(m.compressor, m.name), m.dtype.size)
-          wStore.writeBytes(s"${m.name}/${m.chunkKey(ci)}", payload)
-          val chunkCells = m.chunks.map(_.toLong).product
-          val (mn0, mx0, cnt) = stats.getOrElse((ci, v), (0.0, 0.0, 0L))
-          val fv = m.fillValue
-          val (mn, mx) =
-            if (cnt >= chunkCells) (mn0, mx0)
-            else if (java.lang.Double.isFinite(fv)) (math.min(mn0, fv), math.max(mx0, fv))
-            else (Double.NaN, Double.NaN) // partial + non-finite fill: no stats entry
-          val sumJson = sums.get((ci, v)) match {
-            case Some((sl, _, false)) if appendSumKind(v) == 1 => s"[$sl, $cnt]"
-            case Some((_, sd, false)) if appendSumKind(v) == 2 => s"[$sd, $cnt]"
-            case _ => null
-          }
-          ((ci, v), (mn, mx, sumJson))
-        }.iterator
-      }
+    val idx: Seq[Map[Any, Int]] =
+      newOuterVals.iterator.map(rawOf).zipWithIndex.map { case (v, i) => (v, oldLen + i) }.toMap +:
+        meta0.coords.tail.map(c => (0 until c.length).map(i => ChunkCodec.elementAt(c.raw, i) -> i).toMap)
+    val rows = byOuterChunk(df, outerName, newOuterVals, oldLen, outerChunk)
     // Materialize the chunk-slab writes NOW, keyed and pre-shuffled to
     // one partition per variable and CACHED post-shuffle: the
     // coordinate/shape edits below must only happen once every slab is
@@ -1198,8 +1024,8 @@ object ZarrWriter {
     // persisted RDD instead of a driver collect() (the driver never
     // materializes the per-chunk partial set; at 10^7 chunks × many
     // variables that collect was a driver-memory hotspot).
-    // localCheckpoint TRUNCATES LINEAGE, not just caches (r13 ADVICE):
-    // computing partialsRdd performs the chunk-slab writes as a side
+    // localCheckpoint TRUNCATES LINEAGE, not just caches:
+    // computing the partials performs the chunk-slab writes as a side
     // effect, and a lost cached partition after the coordinate/shape
     // edits below would otherwise lineage-recompute — re-executing
     // slab writes mid-append. The slab bytes are independent of the
@@ -1207,9 +1033,7 @@ object ZarrWriter {
     // the invariant is implicit; with a truncated lineage a lost
     // partition fails the job loudly instead (metadata-sized data, one
     // partition per variable — losing it means the JVM died anyway).
-    val keyedPartials = partialsRdd
-      .map { case ((ci, v), t) => (v, (ci, t)) }
-      .partitionBy(new VarPartitioner(math.max(1, varMetas.length)))
+    val keyedPartials = byVar(encodeChunks(rows, coordNames, idx, varMetas, store), varMetas.length)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     keyedPartials.localCheckpoint()
     keyedPartials.count()
@@ -1251,20 +1075,11 @@ object ZarrWriter {
       if (rechunkCoord) ((oldLen.toLong + cmeta.chunks.head - 1) / cmeta.chunks.head).toInt
       else 0
     lastCoordRewriteMaxAllocBytes = outerChunk.toLong * cmeta.dtype.size
-    def writeCoordChunk(cc: Int): Unit = {
-      val start = cc * outerChunk
-      val n = math.min(outerChunk, newLen - start)
-      val cbuf = ByteBuffer.allocate(outerChunk * cmeta.dtype.size)
-        .order(ByteOrder.LITTLE_ENDIAN)
-      (0 until n).foreach(i => putRaw(cbuf, i, cmeta.dtype, outerRawAt(start + i)))
-      val craw = if (cmeta.deltaFilter) deltaEncode(cbuf.array(), cmeta.dtype.size)
-        else cbuf.array()
-      store.writeBytes(s"$outerName/${cmeta.chunkKey(Seq(cc.toLong))}",
-        compressPayload(craw, codecNameOf(cmeta.compressor, outerName), cmeta.dtype.size))
-    }
+    val grainMeta = cmeta.copy(chunks = Seq(outerChunk))
+    def writeOuterChunk(cc: Int): Unit = writeCoordChunk(store, grainMeta, cc, newLen, outerRawAt)
     (firstCoordChunk until nCoordChunks)
       .filter(cc => cc >= nLegacyCoordChunks)
-      .foreach(writeCoordChunk)
+      .foreach(writeOuterChunk)
     coordRewriteTestHook("preflip")
 
     // 1.5) REVOKE the sum attestation before the shape grows: a reader
@@ -1275,12 +1090,8 @@ object ZarrWriter {
     // time (absent chunks are never pruned), so only sums must drop;
     // a crash here leaves pushdown disabled until the next successful
     // write, which is safe.
-    varMetas.foreach { m =>
-      if (m.sumsComplete && m.chunkStats.nonEmpty) {
-        val entries = m.chunkStats
-          .map { case (k, (mn, mx)) => s""""$k": [$mn, $mx]""" }.mkString(",")
-        store.writeBytes(s"${m.name}/.zstats", s"""{"chunks": {$entries}}""".getBytes)
-      }
+    varMetas.filter(_.sumsComplete).foreach { m =>
+      store.writeBytes(s"${m.name}/.zstats", zstats(m.copy(sumsComplete = false), Nil).getBytes)
     }
 
     // 2) metadata shape edits (coordinate first: a reader racing the
@@ -1311,61 +1122,15 @@ object ZarrWriter {
     // files in this window; those fail loudly as corrupt chunks until
     // the ascending rewrite below converges.)
     if (rechunkCoord)
-      (0 until math.min(nLegacyCoordChunks, nCoordChunks)).foreach(writeCoordChunk)
+      (0 until math.min(nLegacyCoordChunks, nCoordChunks)).foreach(writeOuterChunk)
 
-    // 3) merge + rewrite .zstats sidecars (min/max entries AND sum
-    // partials; the complete-coverage attestation survives an append
-    // only if the pre-append sidecar was complete and every fresh
-    // chunk produced a sum partial). EXECUTOR-side, one task per
-    // variable, reading the fresh partials from the persisted shuffle
-    // (never re-running the slab writes) and the pre-append sidecar
-    // state from varMetas — which already ships to executors for the
-    // slab writes above. Entries are key-sorted so the merged sidecar
-    // bytes are deterministic.
-    val wVarMetas = varMetas
-    val wAppendSumKind = appendSumKind
-    val mergeSummaries = keyedPartials.mapPartitionsWithIndex { (v, it) =>
-      if (v >= wVarMetas.length) { require(it.isEmpty); Iterator.empty }
-      else {
-        val m = wVarMetas(v)
-        val mine = it.map(_._2).toVector
-        val fresh = mine.collect {
-          case (ci, (mn, mx, _)) if !mn.isNaN => m.chunkKey(ci) -> (mn, mx)
-        }.toMap
-        val merged = m.chunkStats ++ fresh
-        if (merged.nonEmpty) {
-          import scala.math.Ordering.Implicits._
-          val entries = merged.toSeq.sortBy(e => chunkKeyOrder(e._1))
-            .map { case (k, (mn, mx)) => s""""$k": [$mn, $mx]""" }.mkString(",")
-          val sumsOk = m.sumsComplete && wAppendSumKind(v) != 0 &&
-            mine.forall(_._2._3 != null)
-          val sumsJson =
-            if (!sumsOk) ""
-            else {
-              val freshSums = mine.map { case (ci, (_, _, sj)) => m.chunkKey(ci) -> sj }.toMap
-              val old = (m.chunkSums -- freshSums.keys).map { case (k, (s, c)) =>
-                k -> s"[${s.toPlainString}, $c]"
-              }
-              // merged total = fold of the merged per-chunk partials
-              // (appended chunk keys are disjoint from the old ones)
-              val total = (old.values ++ freshSums.values).map(parseSumJson)
-                .foldLeft((java.math.BigDecimal.ZERO, 0L)) {
-                  case ((s, c), (s2, c2)) => (s.add(s2), c + c2)
-                }
-              (old ++ freshSums).toSeq.sortBy(e => chunkKeyOrder(e._1))
-                .map { case (k, sj) => s""""$k": $sj""" }
-                .mkString(""", "sums": {""", ",",
-                  s"""}, "total": [${total._1.toPlainString}, ${total._2}], "complete": true""")
-            }
-          wStore.writeBytes(s"${m.name}/.zstats",
-            s"""{"chunks": {$entries}$sumsJson}""".getBytes)
-        }
-        Iterator.single(v -> mine.size)
-      }
-    }.collect()
+    // 3) merge + rewrite the .zstats sidecars from the persisted
+    // partials (never re-running the slab writes) over the pre-append
+    // sidecar state the variables' metadata carries: the attestation
+    // survives only if that sidecar was complete and every fresh chunk
+    // produced a sum partial
+    writeSidecars(keyedPartials, varMetas, store)
     keyedPartials.unpersist(false)
-    lastStatsDriverRows = mergeSummaries.length
-
     ChunkIO.invalidatePath(store.path)
   }
 

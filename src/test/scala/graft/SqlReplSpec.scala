@@ -250,4 +250,14 @@ class SqlReplSpec extends AnyFunSuite {
     assert(out.contains("repl_t2"), out.mkString("\n"))
     assert(out.exists(_.startsWith("unknown command:")), out.mkString("\n"))
   }
+
+  test("SET without = prints the setting; SET key=value acknowledges") {
+    val out = drive(
+      "SET spark.graft.repl.probe=7;",
+      "\\format csv",
+      "SET spark.graft.repl.probe;",
+      "quit")
+    assert(out.exists(_.startsWith("OK (")), out.mkString("\n"))
+    assert(out.contains("spark.graft.repl.probe,7"), out.mkString("\n"))
+  }
 }

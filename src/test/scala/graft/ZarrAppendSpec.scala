@@ -110,6 +110,15 @@ class ZarrAppendSpec extends AnyFunSuite {
       Seq((4L, 0L, 1.0, 9L)).toDF("t", "x", "v", "extra")
         .write.format("zarr").mode("append").save(out)
     }
+    // a NaN outer value is refused by name, before any chunk is written
+    import spark.implicits._
+    val dOut = Files.createTempDirectory("zarr_append").resolve("d.zarr").toString
+    graft.sources.zarr.ZarrWriter.write(Seq((0.0, 0L, 1.0)).toDF("t", "x", "v"), dOut,
+      coords = Seq("t", "x"))
+    val e = intercept[IllegalArgumentException](graft.sources.zarr.ZarrWriter.append(
+      Seq((1.0, 0L, 2.0), (Double.NaN, 0L, 3.0)).toDF("t", "x", "v"), dOut))
+    assert(e.getMessage.contains("contains NaN"), e.getMessage)
+    assert(spark.read.format("zarr").load(dOut).count() == 1)
   }
 
   test("appends are single-writer: a held lock refuses loudly, release recovers") {

@@ -70,6 +70,20 @@ class ZarrWriterPropSpec extends AnyFunSuite {
     assert(res.passed, res.status.toString)
   }
 
+  /** Every object of a store but its metadata documents (an append
+    * re-serializes those through Jackson): data-chunk and
+    * coordinate-chunk objects and `.zstats` sidecars, path → bytes. */
+  private def objects(store: String): Map[String, Seq[Byte]] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(store)
+    val metaDocs = Set(".zarray", ".zattrs", ".zgroup", ".zmetadata", "zarr.json")
+    val walk = Files.walk(root)
+    try walk.iterator().asScala.filter(Files.isRegularFile(_))
+      .filterNot(p => metaDocs(p.getFileName.toString))
+      .map(p => root.relativize(p).toString -> Files.readAllBytes(p).toSeq).toMap
+    finally walk.close()
+  }
+
   private val genAppend = for {
     chunkOuter <- Gen.choose(1, 4)
     nChunksA <- Gen.choose(1, 4) // first write: whole chunks
@@ -83,15 +97,17 @@ class ZarrWriterPropSpec extends AnyFunSuite {
       case (chunkOuter, nChunksA, nChunksB, nInner, version) =>
         val nA = chunkOuter * nChunksA
         val nTotal = nA + chunkOuter * nChunksB
+        // w's chunk sums reach 1e7, where a double prints in E notation
         def grid(lo: Int, hi: Int) = {
           val rows = for (o <- lo until hi; i <- 0 until nInner) yield
-            Row(o.toLong, i.toLong, (o * 17 + i * 3).toLong)
+            Row(o.toLong, i.toLong, (o * 17 + i * 3).toLong, (o * 17 + i * 3) * 1.0e6)
           spark.createDataFrame(
             spark.sparkContext.parallelize(rows, 2),
             StructType(Seq(
               StructField("t", LongType, nullable = false),
               StructField("x", LongType, nullable = false),
-              StructField("v", LongType, nullable = true))))
+              StructField("v", LongType, nullable = true),
+              StructField("w", DoubleType, nullable = true))))
         }
         val out = Files.createTempDirectory("zarr_app").resolve("g.zarr").toString
         grid(0, nA).write.format("zarr")
@@ -102,8 +118,14 @@ class ZarrWriterPropSpec extends AnyFunSuite {
         val back = spark.read.format("zarr").load(out)
           .orderBy("t", "x").collect().map(_.toSeq).toSeq
         val want = grid(0, nTotal).orderBy("t", "x").collect().map(_.toSeq).toSeq
+        val oneShot = Files.createTempDirectory("zarr_app").resolve("g.zarr").toString
+        grid(0, nTotal).write.format("zarr")
+          .option("coords", "t,x").option("chunkOuter", chunkOuter.toString)
+          .option("zarrVersion", version).mode("overwrite").save(oneShot)
+        val (a, b) = (objects(out), objects(oneShot))
         Prop(back == want) :|
-          s"chunk=$chunkOuter a=$nA total=$nTotal inner=$nInner v$version"
+          s"chunk=$chunkOuter a=$nA total=$nTotal inner=$nInner v$version" &&
+          Prop(a == b) :| s"objects differ: ${(a.toSet diff b.toSet).map(_._1)}"
     }
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(16), prop)
     assert(res.passed, res.status.toString)

@@ -480,4 +480,32 @@ class ZarrWriterSpec extends AnyFunSuite {
     assert(spark.read.format("zarr").load(a).agg(sum("v")).collect().head.getLong(0)
       == (0L until 52L).map(t => t * 4 + 1).sum)
   }
+
+  test("non-finite data values: no sidecar entry, every cell reads back, filters stay exact") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("zarr_nonfinite")
+    // x = 1 of outer steps 1, 3 and 5 (one chunk each) holds NaN, +Inf, -Inf
+    val bad = Map(1L -> Double.NaN, 3L -> Double.PositiveInfinity, 5L -> Double.NegativeInfinity)
+    def frame(ts: Range) = ts.flatMap(t => Seq(0L, 1L).map(x =>
+      (t.toLong, x, if (x == 1L) bad.getOrElse(t.toLong, t * 2.0 + x) else t * 2.0 + x)))
+      .toDF("t", "x", "v")
+    val written = base.resolve("w.zarr").toString
+    ZarrWriter.write(frame(0 until 6), written, coords = Seq("t", "x"), chunkOuter = 1)
+    val appended = base.resolve("a.zarr").toString
+    ZarrWriter.write(frame(0 until 2), appended, coords = Seq("t", "x"), chunkOuter = 1)
+    ZarrWriter.append(frame(2 until 6), appended)
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val want = frame(0 until 6).collect().map(_.toString).sorted.toSeq
+    for (out <- Seq(written, appended)) {
+      val chunks = mapper.readTree(Files.readAllBytes(Paths.get(out, "v", ".zstats"))).get("chunks")
+      assert(Seq("1.0", "3.0", "5.0").forall(k => !chunks.has(k)), chunks.toString)
+      assert(Seq("0.0", "2.0", "4.0").forall(chunks.has), chunks.toString)
+      val back = spark.read.format("zarr").option("minRowsPerPartition", "1").load(out)
+      val rows = back.collect()
+      assert(rows.map(_.toString).sorted.toSeq == want)
+      val again = spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq), back.schema)
+      assert(back.where(col("v") > 1).collect().map(_.toString).sorted.toSeq ==
+        again.where(col("v") > 1).collect().map(_.toString).sorted.toSeq)
+    }
+  }
 }
