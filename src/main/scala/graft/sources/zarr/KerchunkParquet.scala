@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 
 import scala.collection.mutable
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.example.data.Group
@@ -15,16 +15,15 @@ import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport
 import org.apache.parquet.schema.{MessageType, MessageTypeParser}
 
 /** Shared machinery for [[KerchunkParquetStore]]: the record-file LRU,
-  * the chunk-key → linear-index math, and the JSON→parquet converter
-  * (also the test fixture generator — ZarrKerchunkSpec converts its
-  * JSON refs and asserts read parity). */
+  * the parquet refs writer, and the refs tools — the JSON→parquet
+  * converter (also the test fixture generator — ZarrKerchunkSpec
+  * converts its JSON refs and asserts read parity), the store→refs
+  * generator, snapshots and the multi-store combine. Array layouts,
+  * chunk keys and `.zstats` come from [[ZarrMeta]] / [[ZarrArrayMeta]]
+  * and are rendered by [[ZarrWriter]]. */
 object KerchunkParquetRefs {
 
   val defaultRecordSize = 10000
-
-  /** One decoded parquet ref row. */
-  final case class RefRow(path: Option[String], offset: Long, size: Long,
-                          raw: Option[Array[Byte]])
 
   private val schema: MessageType = MessageTypeParser.parseMessageType(
     """message kerchunk_refs {
@@ -34,39 +33,6 @@ object KerchunkParquetRefs {
       |  optional binary raw;
       |}""".stripMargin)
 
-  /** C-order chunk grid (ceil(shape/chunks) per dim) of variable `v`,
-    * from its v2 `.zarray` or v3 `zarr.json` metadata document. */
-  private[zarr] def chunkGridOf(metadata: Map[String, Array[Byte]],
-      v: String): Option[Array[Long]] = {
-    val mapper = new ObjectMapper()
-    def dims(node: JsonNode): Array[Long] = {
-      val it = node.elements(); val b = Array.newBuilder[Long]
-      while (it.hasNext) b += it.next().asLong()
-      b.result()
-    }
-    metadata.get(s"$v/.zarray").map { bytes =>
-      val n = mapper.readTree(bytes)
-      dims(n.get("shape")).zip(dims(n.get("chunks")))
-        .map { case (s, c) => (s + c - 1) / c }
-    }.orElse(metadata.get(s"$v/zarr.json").map { bytes =>
-      val n = mapper.readTree(bytes)
-      val cs = dims(n.at("/chunk_grid/configuration/chunk_shape"))
-      dims(n.get("shape")).zip(cs).map { case (s, c) => (s + c - 1) / c }
-    })
-  }
-
-  /** Linear C-order index of a chunk key tail ("0.1", "0/1", or v3
-    * "c/0/1") within `grid`; None when the tail is not a chunk key
-    * (e.g. ".zattrs") or indices fall outside the grid. */
-  private[zarr] def chunkLinear(tail: String, grid: Array[Long]): Option[Long] = {
-    val parts = tail.split("[./]").filter(_ != "c")
-    if (parts.length != grid.length || parts.exists(p => !p.forall(_.isDigit)))
-      return None
-    val idx = parts.map(_.toLong)
-    if (idx.zip(grid).exists { case (i, g) => i >= g }) return None
-    Some(idx.zip(grid).foldLeft(0L) { case (acc, (i, g)) => acc * g + i })
-  }
-
   // ------------------------------------------------- record-file LRU
 
   /** Decoded record files, keyed (storePath, var, record). One entry
@@ -74,14 +40,14 @@ object KerchunkParquetRefs {
     * bounds executor memory regardless of the archive's total ref
     * count. */
   private val recCache = new java.util.LinkedHashMap[(String, String, Long),
-      Option[IndexedSeq[RefRow]]](32, 0.75f, true) {
-    override def removeEldestEntry(
-        e: java.util.Map.Entry[(String, String, Long), Option[IndexedSeq[RefRow]]]): Boolean =
+      Option[IndexedSeq[Option[KerchunkRef]]]](32, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[(String, String, Long),
+        Option[IndexedSeq[Option[KerchunkRef]]]]): Boolean =
       size() > 16
   }
 
   private[zarr] def rowsOf(storePath: String, v: String,
-      rec: Long): Option[IndexedSeq[RefRow]] = {
+      rec: Long): Option[IndexedSeq[Option[KerchunkRef]]] = {
     val key = (storePath, v, rec)
     recCache.synchronized {
       val hit = recCache.get(key)
@@ -92,7 +58,9 @@ object KerchunkParquetRefs {
     loaded
   }
 
-  private def readRecordFile(file: String): Option[IndexedSeq[RefRow]] = {
+  /** A record file's rows: `raw` → inline; else `path` with `size > 0`
+    * → byte range, `size <= 0` → whole object; all-null → absent. */
+  private def readRecordFile(file: String): Option[IndexedSeq[Option[KerchunkRef]]] = {
     val local = !file.contains("://")
     if (local && !Files.exists(Paths.get(file))) return None
     val reader =
@@ -100,15 +68,16 @@ object KerchunkParquetRefs {
         new org.apache.hadoop.fs.Path(file)).withConf(new Configuration()).build()
       catch { case _: java.io.FileNotFoundException => return None }
     try {
-      val rows = IndexedSeq.newBuilder[RefRow]
+      val rows = IndexedSeq.newBuilder[Option[KerchunkRef]]
       var g: Group = reader.read()
       while (g != null) {
         def has(f: String): Boolean = g.getFieldRepetitionCount(f) > 0
-        rows += RefRow(
-          if (has("path")) Some(g.getString("path", 0)).filter(_.nonEmpty) else None,
-          if (has("offset")) g.getLong("offset", 0) else 0L,
-          if (has("size")) g.getLong("size", 0) else 0L,
-          if (has("raw")) Some(g.getBinary("raw", 0).getBytes) else None)
+        val size = if (has("size")) g.getLong("size", 0) else 0L
+        rows += (
+          if (has("raw")) Some(KerchunkRef.Inline(g.getBinary("raw", 0).getBytes))
+          else (if (has("path")) Some(g.getString("path", 0)) else None).filter(_.nonEmpty).map(p =>
+            if (size > 0) KerchunkRef.Range(p, if (has("offset")) g.getLong("offset", 0) else 0L, size)
+            else KerchunkRef.Whole(p)))
         g = reader.read()
       }
       Some(rows.result())
@@ -124,11 +93,12 @@ object KerchunkParquetRefs {
   // ------------------------------------------------- refs emission
 
   /** Write the parquet refs layout: `.zmetadata` (metadata docs parsed
-    * to JSON where they are JSON) + per-variable dense record files.
-    * Shared by the JSON converter and the store scanner. */
+    * to JSON where they are JSON) + per-variable dense record files,
+    * each variable's refs keyed by chunk ordinal. Shared by the JSON
+    * converter, the store scanner and the combine. */
   private def writeRefs(outDir: String, recordSize: Int,
       metaDocs: Seq[(String, Array[Byte])],
-      perVar: collection.Map[String, collection.Map[Long, RefRow]]): Unit = {
+      perVar: collection.Map[String, collection.Map[Long, KerchunkRef]]): Unit = {
     val mapper = new ObjectMapper()
     val root = mapper.createObjectNode()
     val metaNode = root.putObject("metadata")
@@ -156,12 +126,13 @@ object KerchunkParquetRefs {
           val maxIn = lins.max % recordSize
           (0L to maxIn).foreach { i =>
             val g = factory.newGroup()
-            rows.get(rec * recordSize + i).foreach { r =>
-              r.path.foreach(p => g.append("path", p))
-              g.append("offset", r.offset)
-              g.append("size", r.size)
-              r.raw.foreach(b => g.append("raw",
-                org.apache.parquet.io.api.Binary.fromConstantByteArray(b)))
+            rows.get(rec * recordSize + i).foreach {
+              case KerchunkRef.Inline(b) =>
+                g.append("raw", org.apache.parquet.io.api.Binary.fromConstantByteArray(b))
+              case KerchunkRef.Range(url, off, len) =>
+                g.append("path", url).append("offset", off).append("size", len)
+              case KerchunkRef.Whole(url) =>
+                g.append("path", url).append("offset", 0L).append("size", 0L)
             }
             w.write(g)
           }
@@ -179,38 +150,66 @@ object KerchunkParquetRefs {
     * conversion is metadata-sized, not archive-sized. */
   def fromJson(jsonPath: String, outDir: String,
       recordSize: Int = defaultRecordSize): Unit = {
-    val src = KerchunkStore(jsonPath)
-    val entries = src.resolvedRefs
-    val (metaKeys, chunkKeys) = entries.keys.toSeq.partition(k =>
+    val refs = KerchunkStore(jsonPath).refs
+    val (metaKeys, chunkKeys) = refs.keys.toSeq.partition(k =>
       !k.contains("/") || k.endsWith(".zarray") || k.endsWith(".zattrs") ||
-        k.endsWith(".zgroup") || k.endsWith("zarr.json") || k == ".zmetadata")
-    def bytesOf(k: String): Array[Byte] = entries(k) match {
-      case KerchunkStore.Inline(b) => b
-      case KerchunkStore.Range(url, off, len) => KerchunkUrlIO.readRange(url, off, len)
-      case KerchunkStore.Whole(url) => KerchunkUrlIO.readAll(url)
-    }
-    val metaDocs = metaKeys.map(k => k -> bytesOf(k))
-    val metaMap = metaDocs.toMap
-    // chunk refs grouped per variable, placed at their linear index
-    val perVar = mutable.Map[String, mutable.Map[Long, RefRow]]()
-    chunkKeys.foreach { k =>
-      val v = k.takeWhile(_ != '/')
-      val grid = chunkGridOf(metaMap, v).getOrElse(
-        throw new IllegalArgumentException(
-          s"$jsonPath: chunk key '$k' but no array metadata for '$v'"))
-      val lin = chunkLinear(k.substring(v.length + 1), grid).getOrElse(
-        throw new IllegalArgumentException(s"$jsonPath: unparseable chunk key '$k'"))
-      val row = entries(k) match {
-        case KerchunkStore.Inline(b) => RefRow(None, 0L, 0L, Some(b))
-        case KerchunkStore.Range(url, off, len) => RefRow(Some(url), off, len, None)
-        case KerchunkStore.Whole(url) => RefRow(Some(url), 0L, 0L, None)
-      }
-      perVar.getOrElseUpdate(v, mutable.Map.empty) += (lin -> row)
+        k.endsWith(".zgroup") || k.endsWith("zarr.json") || k.endsWith(".zstats") ||
+        k == ".zmetadata")
+    val metaDocs = metaKeys.map(k => k -> KerchunkUrlIO.read(refs(k)))
+    val arrays = ZarrMeta.layoutsOf(metaDocs.toMap)
+    // chunk refs grouped per variable, placed at their chunk ordinal
+    val perVar = chunkKeys.groupBy(_.takeWhile(_ != '/')).map { case (v, keys) =>
+      val m = arrays.getOrElse(v, throw new IllegalArgumentException(
+        s"$jsonPath: chunk key '${keys.head}' but no array metadata for '$v'"))
+      v -> keys.map { k =>
+        m.chunkIndex(k.substring(v.length + 1)).map(m.chunkOrdinal).getOrElse(
+          throw new IllegalArgumentException(s"$jsonPath: unparseable chunk key '$k'")) -> refs(k)
+      }.toMap
     }
     writeRefs(outDir, recordSize, metaDocs, perVar)
   }
 
   // ------------------------------------------------- store → parquet
+
+  /** A source store as the refs tools read it: its metadata documents
+    * verbatim (re-emitted into the refs), its arrays' layouts with
+    * their `.zstats` sidecars, and the absolute base its chunk refs
+    * point at. */
+  private final case class Source(path: String, store: ZarrStore, isV3: Boolean,
+      docs: Map[String, Array[Byte]], arrays: Seq[ZarrArrayMeta], base: String) {
+    def array(v: String): ZarrArrayMeta = arrays.find(_.name == v).get
+  }
+
+  private def source(p: String): Source = {
+    val st = ZarrStore.open(p)
+    val isV3 = ZarrMeta.detectVersion(st) == 3
+    val vars = st.listDirs().filter(d =>
+      st.sizeOf(s"$d/.zarray").isDefined || st.sizeOf(s"$d/zarr.json").isDefined).sorted
+    require(vars.nonEmpty, s"$p: no Zarr arrays found")
+    val rootDocs = if (isV3) Seq("zarr.json") else Seq(".zgroup", ".zattrs")
+    val docKeys = rootDocs ++ vars.flatMap(v =>
+      if (isV3) Seq(s"$v/zarr.json", s"$v/.zstats")
+      else Seq(s"$v/.zarray", s"$v/.zattrs", s"$v/.zstats"))
+    val arrays = vars.map(v => ZarrMeta.arrayAt(st, v, isV3, layoutOnly = true).getOrElse(
+      throw new IllegalArgumentException(s"$p/$v: unreadable array metadata")))
+    Source(p, st, isV3, docKeys.flatMap(k => st.readBytes(k).map(k -> _)).toMap, arrays, absBase(p))
+  }
+
+  /** The present chunks of array `m` of `s` in C order (one `sizeOf`
+    * probe per grid cell — no listing API needed; absent cells, fill,
+    * yield nothing): at or under `inlineThreshold` bytes inline, larger
+    * ones a byte range over the whole object at the source's absolute
+    * location. */
+  private def chunkRefs(s: Source, m: ZarrArrayMeta,
+      inlineThreshold: Long): Iterator[(Seq[Long], KerchunkRef)] =
+    m.chunkIndices().flatMap { idx =>
+      val key = s"${m.name}/${m.chunkKey(idx)}"
+      s.store.sizeOf(key).map { sz =>
+        idx -> (if (sz > inlineThreshold) KerchunkRef.Range(s"${s.base}/$key", 0L, sz)
+          else KerchunkRef.Inline(s.store.readBytes(key).getOrElse(
+            throw new java.io.IOException(s"${s.base}/$key vanished during scan"))))
+      }
+    }
 
   /** Scan an EXISTING Zarr store (any backend `ZarrStore.open` can
     * dispatch — local, s3a/gs/hdfs, http) and emit parquet refs at
@@ -237,32 +236,12 @@ object KerchunkParquetRefs {
   def fromStore(storePath: String, outDir: String,
       recordSize: Int = defaultRecordSize, inlineThreshold: Long = 512L,
       inlineVars: Set[String] = Set.empty): Unit = {
-    val store = ZarrStore.open(storePath)
-    val version = ZarrMeta.detectVersion(store)
-    val mapper = new ObjectMapper()
-    val vars = store.listDirs().filter(d =>
-      store.sizeOf(s"$d/.zarray").isDefined || store.sizeOf(s"$d/zarr.json").isDefined)
-    require(vars.nonEmpty, s"$storePath: no Zarr arrays found to virtualize")
-    val rootDocs = if (version == 3) Seq("zarr.json") else Seq(".zgroup", ".zattrs")
-    val docKeys = rootDocs ++ vars.flatMap(v =>
-      if (version == 3) Seq(s"$v/zarr.json", s"$v/.zstats")
-      else Seq(s"$v/.zarray", s"$v/.zattrs", s"$v/.zstats"))
-    val metaDocs = docKeys.flatMap(k => store.readBytes(k).map(k -> _))
-    val metaMap = metaDocs.toMap
-    val base =
-      if (storePath.contains("://")) storePath.stripSuffix("/")
-      else Paths.get(storePath).toAbsolutePath.toString
-    val perVar = vars.map { v =>
-      val grid = chunkGridOf(metaMap, v).getOrElse(
-        throw new IllegalArgumentException(s"$storePath/$v: unreadable array metadata"))
-      val rows = mutable.Map[Long, RefRow]()
-      val thr = if (inlineVars.contains(v)) Long.MaxValue else inlineThreshold
-      scanVarChunks(store, base, metaMap, v, version, grid, thr) {
-        case (idx, lin, row) => rows += (lin -> row)
-      }
-      v -> rows
+    val s = source(storePath)
+    val perVar = s.arrays.map { m =>
+      val thr = if (inlineVars.contains(m.name)) Long.MaxValue else inlineThreshold
+      m.name -> chunkRefs(s, m, thr).map { case (idx, ref) => m.chunkOrdinal(idx) -> ref }.toMap
     }.toMap
-    writeRefs(outDir, recordSize, metaDocs, perVar)
+    writeRefs(outDir, recordSize, s.docs.toSeq.sortBy(_._1), perVar)
   }
 
   /** Point-in-time SNAPSHOT of a store as parquet refs — fromStore
@@ -414,52 +393,6 @@ object KerchunkParquetRefs {
     }
   }
 
-  /** Chunk-key naming mirrors the store's own encoding: v2 indices
-    * joined by dimension_separator (default "."), v3 "c/" prefix +
-    * chunk_key_encoding separator (default "/"). */
-  private def chunkSepOf(metaMap: Map[String, Array[Byte]], v: String,
-      version: Int): String = {
-    val mapper = new ObjectMapper()
-    if (version == 3)
-      Option(mapper.readTree(metaMap(s"$v/zarr.json"))
-        .at("/chunk_key_encoding/configuration/separator").asText(""))
-        .filter(_.nonEmpty).getOrElse("/")
-    else
-      Option(mapper.readTree(metaMap(s"$v/.zarray")).get("dimension_separator"))
-        .filterNot(_.isNull).map(_.asText).getOrElse(".")
-  }
-
-  private def chunkTail(version: Int, sep: String, idx: Seq[Long]): String =
-    if (version == 3) "c" + idx.map(i => s"$sep$i").mkString
-    else if (idx.isEmpty) "0" else idx.mkString(sep)
-
-  /** Enumerate `v`'s chunk grid (one `sizeOf` probe per cell — no
-    * listing API needed), calling `f(perDimIdx, linearIdx, row)` for
-    * every PRESENT chunk; absent cells (fill) are skipped. */
-  private def scanVarChunks(store: ZarrStore, base: String,
-      metaMap: Map[String, Array[Byte]], v: String, version: Int,
-      grid: Array[Long], inlineThreshold: Long)(
-      f: (Array[Long], Long, RefRow) => Unit): Unit = {
-    val sep = chunkSepOf(metaMap, v, version)
-    val n = grid.product
-    var lin = 0L
-    while (lin < n) {
-      // linear C-order index → per-dim chunk indices
-      var rem = lin
-      val idx = new Array[Long](grid.length)
-      var d = grid.length - 1
-      while (d >= 0) { idx(d) = rem % grid(d); rem /= grid(d); d -= 1 }
-      val key = s"$v/${chunkTail(version, sep, idx.toSeq)}"
-      store.sizeOf(key).foreach { sz =>
-        f(idx, lin, if (sz <= inlineThreshold)
-          RefRow(None, 0L, 0L, Some(store.readBytes(key).getOrElse(
-            throw new java.io.IOException(s"$base/$key vanished during scan"))))
-        else RefRow(Some(s"$base/$key"), 0L, sz, None))
-      }
-      lin += 1
-    }
-  }
-
   // ------------------------------------------------- multi-store combine
 
   /** Virtually CONCATENATE existing Zarr stores along `concatDim` into
@@ -481,9 +414,10 @@ object KerchunkParquetRefs {
     *    (an interior ragged chunk would corrupt the combined grid —
     *    a ragged tail on the final store is fine);
     *  - `.zstats` sidecars survive: per-chunk min/max and sum entries
-    *    are key-remapped by the chunk offset and merged; the O(1)
-    *    "total"/"complete" record is re-derived only when EVERY store
-    *    attests complete sums (else readers fold the chunk entries).
+    *    are key-remapped by the chunk offset and merged; sums, with
+    *    their O(1) total and completeness attestation, are kept only
+    *    when EVERY store attests complete sums (readers ignore sums
+    *    that are not attested complete).
     *
     * Chunk refs are ranged against each SOURCE store (or inlined at or
     * under `inlineThreshold`), so the combine is metadata-sized work:
@@ -492,75 +426,31 @@ object KerchunkParquetRefs {
       recordSize: Int = defaultRecordSize, inlineThreshold: Long = 512L): Unit = {
     require(storePaths.length >= 2, "combineStores needs at least two stores")
     val mapper = new ObjectMapper()
-    final case class Src(path: String, store: ZarrStore, version: Int,
-        vars: Seq[String], metaMap: Map[String, Array[Byte]], base: String)
-    val srcs = storePaths.map { p =>
-      val st = ZarrStore.open(p)
-      val ver = ZarrMeta.detectVersion(st)
-      val vars = st.listDirs().filter(d =>
-        st.sizeOf(s"$d/.zarray").isDefined || st.sizeOf(s"$d/zarr.json").isDefined).sorted
-      require(vars.nonEmpty, s"$p: no Zarr arrays found")
-      val rootDocs = if (ver == 3) Seq("zarr.json") else Seq(".zgroup", ".zattrs")
-      val docKeys = rootDocs ++ vars.flatMap(v =>
-        if (ver == 3) Seq(s"$v/zarr.json", s"$v/.zstats")
-        else Seq(s"$v/.zarray", s"$v/.zattrs", s"$v/.zstats"))
-      val metaMap = docKeys.flatMap(k => st.readBytes(k).map(k -> _)).toMap
-      val base = if (p.contains("://")) p.stripSuffix("/")
-                 else Paths.get(p).toAbsolutePath.toString
-      Src(p, st, ver, vars, metaMap, base)
-    }
-    val version = srcs.head.version
-    require(srcs.forall(_.version == version),
-      s"mixed zarr versions across stores: ${srcs.map(s => s"${s.path}=v${s.version}").mkString(", ")}")
-    val vars = srcs.head.vars
-    srcs.tail.foreach(s => require(s.vars == vars,
-      s"variable sets differ: ${srcs.head.path} has $vars, ${s.path} has ${s.vars}"))
+    val srcs = storePaths.map(source)
+    val isV3 = srcs.head.isV3
+    require(srcs.forall(_.isV3 == isV3), "mixed zarr versions across stores: " +
+      srcs.map(s => s"${s.path}=v${if (s.isV3) 3 else 2}").mkString(", "))
+    val vars = srcs.head.arrays.map(_.name)
+    srcs.tail.foreach(s => require(s.arrays.map(_.name) == vars,
+      s"variable sets differ: ${srcs.head.path} has $vars, ${s.path} has ${s.arrays.map(_.name)}"))
 
-    def arrayDocKey(v: String) = if (version == 3) s"$v/zarr.json" else s"$v/.zarray"
-    def arrayNode(s: Src, v: String): JsonNode = mapper.readTree(s.metaMap(arrayDocKey(v)))
-    def longs(n: JsonNode): Array[Long] = {
-      val it = n.elements(); val b = Array.newBuilder[Long]
-      while (it.hasNext) b += it.next().asLong()
-      b.result()
-    }
-    def shapeOf(s: Src, v: String): Array[Long] = longs(arrayNode(s, v).get("shape"))
-    def chunksOf(s: Src, v: String): Array[Long] = {
-      val n = arrayNode(s, v)
-      if (version == 3) longs(n.at("/chunk_grid/configuration/chunk_shape"))
-      else longs(n.get("chunks"))
-    }
+    def arrayDocKey(v: String) = if (isV3) s"$v/zarr.json" else s"$v/.zarray"
     // decoded store metadata, computed at most once per store (used by
     // the dims fallback and the coordinate materialization)
     val storeMeta = mutable.Map[String, ZarrStoreMeta]()
-    def metaOf(s: Src): ZarrStoreMeta =
+    def metaOf(s: Source): ZarrStoreMeta =
       storeMeta.getOrElseUpdate(s.path, ZarrMeta.readStore(s.path))
-    /** Dimension names: v3 `dimension_names`, v2 xarray
-      * `_ARRAY_DIMENSIONS`; a 1-D array named like the dim is its own
-      * coordinate even without attributes; otherwise fall back to the
-      * reader's inferred coordinate order (stores written without
-      * naming conventions). */
-    def dimsOf(s: Src, v: String): Seq[String] = {
-      val named: Option[Seq[String]] =
-        if (version == 3)
-          Option(arrayNode(s, v).get("dimension_names")).filter(_.isArray).map { dn =>
-            val it = dn.elements(); val b = Seq.newBuilder[String]
-            while (it.hasNext) b += it.next().asText()
-            b.result()
-          }
-        else s.metaMap.get(s"$v/.zattrs").flatMap { bytes =>
-          Option(mapper.readTree(bytes).get("_ARRAY_DIMENSIONS"))
-            .filter(_.isArray).map { dn =>
-              val it = dn.elements(); val b = Seq.newBuilder[String]
-              while (it.hasNext) b += it.next().asText()
-              b.result()
-            }
-        }
-      named.getOrElse {
-        val rank = shapeOf(s, v).length
-        if (rank == 1) Seq(v)
+    /** Dimension names: declared ([[ZarrMeta.declaredDims]]); a 1-D
+      * array named like the dim is its own coordinate even without
+      * them; otherwise fall back to the reader's inferred coordinate
+      * order (stores written without naming conventions). */
+    def dimsOf(s: Source, v: String): Seq[String] = {
+      val a = s.array(v)
+      ZarrMeta.declaredDims(a).getOrElse {
+        if (a.nDims == 1) Seq(v)
         else {
           val order = metaOf(s).coordNames
-          if (rank == order.length) order else Seq.empty
+          if (a.nDims == order.length) order else Seq.empty
         }
       }
     }
@@ -578,32 +468,36 @@ object KerchunkParquetRefs {
     val coordSelf = concatVars.filter(v => dimsOf(srcs.head, v) == Seq(concatDim))
     val gridVars = concatVars.filterNot(coordSelf.contains)
 
-    // validate geometry; per concat var: axis, chunk extent, per-store
-    // chunk-grid extents along the axis (→ offsets)
+    // validate geometry; per concat var: axis, each store's chunk offset
+    // along it, and the combined layout
     val geometry = gridVars.map { v =>
       val d0 = dimsOf(srcs.head, v)
       val axis = d0.indexOf(concatDim)
-      val ch0 = chunksOf(srcs.head, v)
-      val sh0 = shapeOf(srcs.head, v)
+      val a0 = srcs.head.array(v)
       srcs.tail.foreach { s =>
+        val a = s.array(v)
         require(dimsOf(s, v) == d0, s"${s.path}/$v: dimension names differ")
-        require(java.util.Arrays.equals(chunksOf(s, v), ch0),
-          s"${s.path}/$v: chunk shape differs")
-        val sh = shapeOf(s, v)
-        require(sh.length == sh0.length && sh.indices.forall(i =>
-          i == axis || sh(i) == sh0(i)),
+        require(a.chunks == a0.chunks, s"${s.path}/$v: chunk shape differs")
+        require(a.nDims == a0.nDims && a.shape.indices.forall(i =>
+          i == axis || a.shape(i) == a0.shape(i)),
           s"${s.path}/$v: non-concat extents differ")
       }
       srcs.init.foreach { s =>
-        val ext = shapeOf(s, v)(axis)
-        require(ext % ch0(axis) == 0,
+        val ext = s.array(v).shape(axis)
+        require(ext % a0.chunks(axis) == 0,
           s"${s.path}/$v: extent $ext along '$concatDim' is not a multiple of " +
-            s"chunk ${ch0(axis)} — an interior ragged chunk would corrupt the " +
+            s"chunk ${a0.chunks(axis)} — an interior ragged chunk would corrupt the " +
             "combined grid (only the LAST store may be ragged)")
       }
-      val gridExts = srcs.map(s => (shapeOf(s, v)(axis) + ch0(axis) - 1) / ch0(axis))
-      v -> (axis, ch0(axis), gridExts)
+      val offs = srcs.map(_.array(v).chunkGrid(axis)).scanLeft(0L)(_ + _)
+      val out = a0.copy(shape = a0.shape.updated(axis, srcs.map(_.array(v).shape(axis)).sum))
+      v -> (axis, offs, out)
     }.toMap
+    /** Source chunk index `idx` of store `si` in the combined grid of `v`. */
+    def shifted(v: String, si: Int, idx: Seq[Long]): Seq[Long] = {
+      val (axis, offs, _) = geometry(v)
+      idx.updated(axis, idx(axis) + offs(si))
+    }
     // static vars: array metadata must be byte-identical across
     // stores, AND the chunk DATA must match — matching shapes/dtypes
     // with different values (e.g. two stores on different lat grids)
@@ -613,22 +507,15 @@ object KerchunkParquetRefs {
     // concat dim), so a per-chunk byte compare is cheap; mismatch
     // fails loudly like the ragged-extent check.
     vars.filterNot(concatVars.contains).foreach { v =>
-      srcs.tail.foreach(s => require(java.util.Arrays.equals(
-        s.metaMap(arrayDocKey(v)), srcs.head.metaMap(arrayDocKey(v))),
-        s"static variable '$v': array metadata differs between " +
-          s"${srcs.head.path} and ${s.path} — only '$concatDim'-bearing " +
-          "variables may vary across combined stores"))
       val s0 = srcs.head
-      val grid = chunkGridOf(s0.metaMap, v).get
-      val sep = chunkSepOf(s0.metaMap, v, version)
-      val n = grid.product
-      var lin = 0L
-      while (lin < n) {
-        var rem = lin
-        val idx = new Array[Long](grid.length)
-        var d = grid.length - 1
-        while (d >= 0) { idx(d) = rem % grid(d); rem /= grid(d); d -= 1 }
-        val key = s"$v/${chunkTail(version, sep, idx.toSeq)}"
+      srcs.tail.foreach(s => require(java.util.Arrays.equals(
+        s.docs(arrayDocKey(v)), s0.docs(arrayDocKey(v))),
+        s"static variable '$v': array metadata differs between " +
+          s"${s0.path} and ${s.path} — only '$concatDim'-bearing " +
+          "variables may vary across combined stores"))
+      val a0 = s0.array(v)
+      a0.chunkIndices().foreach { idx =>
+        val key = s"$v/${a0.chunkKey(idx)}"
         val ref = s0.store.readBytes(key)
         srcs.tail.foreach { s =>
           val other = s.store.readBytes(key)
@@ -638,61 +525,59 @@ object KerchunkParquetRefs {
               s"${s0.path} and ${s.path} — the stores disagree on " +
               s"non-'$concatDim' content and cannot be combined")
         }
-        lin += 1
       }
     }
 
     // materialize the concat coordinate: decoded values concatenated,
     // re-encoded raw little-endian as ONE inline chunk
     val coordBytes: Map[String, (Array[Byte], Long)] = coordSelf.map { v =>
-      val perStore = srcs.map { s =>
-        val cd = metaOf(s).coords.find(_.meta.name == v)
-          .getOrElse(throw new IllegalArgumentException(
-            s"${s.path}: cannot materialize coordinate '$v'"))
-        (cd.meta.dtype, cd.raw, cd.length)
-      }
-      val dt = perStore.head._1
-      require(perStore.forall(_._1 == dt), s"coordinate '$v': dtype differs across stores")
+      val perStore = srcs.map(s => metaOf(s).coords.find(_.meta.name == v)
+        .getOrElse(throw new IllegalArgumentException(
+          s"${s.path}: cannot materialize coordinate '$v'")))
+      val dt = perStore.head.meta.dtype
+      require(perStore.forall(_.meta.dtype == dt), s"coordinate '$v': dtype differs across stores")
       require("iuf".contains(dt.kind),
         s"coordinate '$v': cannot materialize non-numeric dtype '${dt.kind}${dt.size}' for combining")
-      val total = perStore.map(_._3.toLong).sum
-      val buf = java.nio.ByteBuffer.allocate((total * dt.size).toInt)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      perStore.foreach { case (_, raw, n) =>
-        (dt.kind, dt.size) match {
-          case ('i', 1) => buf.put(raw.asInstanceOf[Array[Byte]], 0, n)
-          case ('i', 2) => val a = raw.asInstanceOf[Array[Short]]; (0 until n).foreach(i => buf.putShort(a(i)))
-          case ('i', 4) => val a = raw.asInstanceOf[Array[Int]]; (0 until n).foreach(i => buf.putInt(a(i)))
-          case ('i', 8) | ('u', 8) => val a = raw.asInstanceOf[Array[Long]]; (0 until n).foreach(i => buf.putLong(a(i)))
-          case ('u', 1) => val a = raw.asInstanceOf[Array[Short]]; (0 until n).foreach(i => buf.put(a(i).toByte))
-          case ('u', 2) => val a = raw.asInstanceOf[Array[Int]]; (0 until n).foreach(i => buf.putShort(a(i).toShort))
-          case ('u', 4) => val a = raw.asInstanceOf[Array[Long]]; (0 until n).foreach(i => buf.putInt(a(i).toInt))
-          case ('f', 4) => val a = raw.asInstanceOf[Array[Float]]; (0 until n).foreach(i => buf.putFloat(a(i)))
-          case ('f', 8) => val a = raw.asInstanceOf[Array[Double]]; (0 until n).foreach(i => buf.putDouble(a(i)))
-          case other => throw new IllegalArgumentException(
-            s"coordinate '$v': unsupported dtype $other")
-        }
-      }
-      v -> (buf.array(), total)
+      val le = dt.copy(littleEndian = true)
+      val total = perStore.map(_.length).sum
+      val buf = ZarrWriter.cellBuffer(le, total)
+      perStore.flatMap(c => (0 until c.length).map(ChunkCodec.elementAt(c.raw, _))).zipWithIndex
+        .foreach { case (x, i) => ZarrWriter.putElement(buf, i, le, x) }
+      v -> (buf.array(), total.toLong)
     }.toMap
+
+    /** The combined `.zstats` of grid variable `v`: every store's chunk
+      * entries under their shifted keys; sums stay attested complete
+      * only when every store attests them and every key parses. */
+    def mergedStats(v: String): ZarrArrayMeta = {
+      val out = geometry(v)._3
+      val parts = srcs.zipWithIndex.map { case (s, si) =>
+        val a = s.array(v)
+        def shift[X](m: Map[String, X]): Map[String, X] = m.flatMap { case (k, x) =>
+          a.chunkIndex(k).map(idx => out.chunkKey(shifted(v, si, idx)) -> x)
+        }
+        val sums = shift(a.chunkSums)
+        (shift(a.chunkStats), sums, a.sumsComplete && sums.size == a.chunkSums.size)
+      }
+      out.copy(chunkStats = parts.flatMap(_._1).toMap, chunkSums = parts.flatMap(_._2).toMap,
+        sumsComplete = parts.forall(_._3))
+    }
 
     // combined metadata: first store's docs, with concat vars' shape
     // rewritten, the materialized coord re-declared (single raw
     // chunk), and .zstats remapped+merged
-    val metaDocs = srcs.head.metaMap.toSeq.sortBy(_._1).flatMap {
+    val metaDocs = srcs.head.docs.toSeq.sortBy(_._1).flatMap {
       case (k, bytes) if k.endsWith("/.zstats") =>
         val v = k.stripSuffix("/.zstats")
         if (coordSelf.contains(v)) None // re-derivable; values are inline anyway
         else if (!gridVars.contains(v)) Some(k -> bytes)
-        else mergedZstats(srcs.map(s => s.metaMap.get(k)), v, geometry(v)._1,
-          geometry(v)._3, version, mapper,
-          chunkSepOf(srcs.head.metaMap, v, version)).map(k -> _)
+        else if (srcs.exists(s => !s.docs.contains(k))) None
+        else Some(k -> ZarrWriter.zstatsDoc(mergedStats(v)))
       case (k, bytes) if coordSelf.exists(v => k == arrayDocKey(v)) =>
-        val v = coordSelf.find(v2 => k == arrayDocKey(v2)).get
-        val total = coordBytes(v)._2
+        val total = coordBytes(k.substring(0, k.lastIndexOf('/')))._2
         val node = mapper.readTree(bytes).asInstanceOf[ObjectNode]
         node.putArray("shape").add(total)
-        if (version == 3) {
+        if (isV3) {
           node.`with`("chunk_grid").`with`("configuration")
             .putArray("chunk_shape").add(total)
           val codecs = node.putArray("codecs")
@@ -712,13 +597,9 @@ object KerchunkParquetRefs {
         }
         Some(k -> mapper.writeValueAsBytes(node))
       case (k, bytes) if gridVars.exists(v => k == arrayDocKey(v)) =>
-        val v = gridVars.find(v2 => k == arrayDocKey(v2)).get
-        val (axis, _, _) = geometry(v)
         val node = mapper.readTree(bytes).asInstanceOf[ObjectNode]
-        val total = srcs.map(s => shapeOf(s, v)(axis)).sum
-        val sh = shapeOf(srcs.head, v)
         val shapeArr = node.putArray("shape")
-        sh.indices.foreach(i => shapeArr.add(if (i == axis) total else sh(i)))
+        geometry(k.substring(0, k.lastIndexOf('/')))._3.shape.foreach(n => shapeArr.add(n))
         Some(k -> mapper.writeValueAsBytes(node))
       case (k, bytes) => Some(k -> bytes)
     }
@@ -727,7 +608,7 @@ object KerchunkParquetRefs {
     // so its entries must be the REWRITTEN docs, not store 0's stale
     // copies (shape/codecs would silently disagree)
     val metaDocsOut =
-      if (version != 3) metaDocs
+      if (!isV3) metaDocs
       else metaDocs.map {
         case ("zarr.json", bytes) =>
           val root = mapper.readTree(bytes).asInstanceOf[ObjectNode]
@@ -749,91 +630,16 @@ object KerchunkParquetRefs {
     // inline chunk; grid vars from every store with the axis index
     // shifted by the store's chunk offset
     val perVar = vars.map { v =>
-      val rows = mutable.Map[Long, RefRow]()
-      if (coordSelf.contains(v)) {
-        rows += (0L -> RefRow(None, 0L, 0L, Some(coordBytes(v)._1)))
-      } else if (!gridVars.contains(v)) {
-        val s = srcs.head
-        val grid = chunkGridOf(s.metaMap, v).get
-        scanVarChunks(s.store, s.base, s.metaMap, v, version, grid,
-          inlineThreshold) { case (_, lin, row) => rows += (lin -> row) }
-      } else {
-        val (axis, _, gridExts) = geometry(v)
-        val grid0 = chunkGridOf(srcs.head.metaMap, v).get
-        val outGrid = grid0.clone(); outGrid(axis) = gridExts.sum
-        var off = 0L
-        srcs.zip(gridExts).foreach { case (s, ext) =>
-          val grid = chunkGridOf(s.metaMap, v).get
-          val o = off
-          scanVarChunks(s.store, s.base, s.metaMap, v, version, grid,
-            inlineThreshold) { case (idx, _, row) =>
-            val shifted = idx.clone(); shifted(axis) += o
-            val lin = shifted.zip(outGrid).foldLeft(0L) {
-              case (acc, (i, g)) => acc * g + i
-            }
-            rows += (lin -> row)
-          }
-          off += ext
+      v -> (if (coordSelf.contains(v)) Map(0L -> (KerchunkRef.Inline(coordBytes(v)._1): KerchunkRef))
+      else if (!gridVars.contains(v)) {
+        val a = srcs.head.array(v)
+        chunkRefs(srcs.head, a, inlineThreshold).map { case (idx, r) => a.chunkOrdinal(idx) -> r }.toMap
+      } else srcs.zipWithIndex.flatMap { case (s, si) =>
+        chunkRefs(s, s.array(v), inlineThreshold).map { case (idx, r) =>
+          geometry(v)._3.chunkOrdinal(shifted(v, si, idx)) -> r
         }
-      }
-      v -> rows
+      }.toMap)
     }.toMap
     writeRefs(outDir, recordSize, metaDocsOut, perVar)
-  }
-
-  /** Merge per-store `.zstats` sidecars for a concatenating variable:
-    * chunk keys shifted by each store's chunk offset along `axis`;
-    * the O(1) total re-derived only when every store attests complete
-    * sums. Any store missing its sidecar → no merged sidecar (readers
-    * then scan, which is always correct). */
-  private def mergedZstats(docs: Seq[Option[Array[Byte]]], v: String,
-      axis: Int, gridExts: Seq[Long], version: Int,
-      mapper: ObjectMapper, sep: String): Option[Array[Byte]] = {
-    if (docs.exists(_.isEmpty)) return None
-    // rebuild shifted keys with the store's DECLARED separator (v2
-    // dimension_separator / v3 chunk_key_encoding), not a hardcoded
-    // one: merged sidecar keys must match ZarrArrayMeta.chunkKey
-    // lookups or pruning is silently lost (and groupTotals' index
-    // parse throws at query time)
-    def shift(key: String, off: Long): String = {
-      val parts = key.split("[./]").filter(_ != "c").map(_.toLong)
-      parts(axis) += off
-      chunkTail(version, sep, parts.toSeq)
-    }
-    val parsed = docs.map(d => mapper.readTree(d.get))
-    val offs = gridExts.scanLeft(0L)(_ + _)
-    val chunks = mutable.LinkedHashMap[String, String]()
-    val sums = mutable.LinkedHashMap[String, String]()
-    parsed.zip(offs).foreach { case (n, off) =>
-      Option(n.get("chunks")).filter(_.isObject).foreach { c =>
-        val it = c.properties().iterator()
-        while (it.hasNext) { val e = it.next()
-          chunks += (shift(e.getKey, off) -> e.getValue.toString) }
-      }
-      Option(n.get("sums")).filter(_.isObject).foreach { c =>
-        val it = c.properties().iterator()
-        while (it.hasNext) { val e = it.next()
-          sums += (shift(e.getKey, off) -> e.getValue.toString) }
-      }
-    }
-    val allComplete = parsed.forall(n =>
-      Option(n.get("complete")).exists(_.asBoolean(false)) && n.get("total") != null)
-    val chunksJson = chunks.map { case (k, j) => s""""$k": $j""" }.mkString(",")
-    val sumsJson =
-      if (sums.isEmpty) ""
-      else {
-        val totalTail =
-          if (!allComplete) ""
-          else {
-            val total = parsed.map(_.get("total")).foldLeft(
-              (java.math.BigDecimal.ZERO, 0L)) { case ((ts, tc), t) =>
-              (ts.add(t.get(0).decimalValue()), tc + t.get(1).asLong())
-            }
-            s""", "total": [${total._1.toPlainString}, ${total._2}], "complete": true"""
-          }
-        sums.map { case (k, j) => s""""$k": $j""" }
-          .mkString(""", "sums": {""", ",", s"}$totalTail")
-      }
-    Some(s"""{"chunks": {$chunksJson}$sumsJson}""".getBytes(StandardCharsets.UTF_8))
   }
 }

@@ -490,12 +490,7 @@ class ZarrScanBuilder(metas: Seq[ZarrStoreMeta], options: CaseInsensitiveStringM
     * clipped window could miss true top-n rows. */
   private def prefixTopN(orders: Array[SortOrderV2], n: Int): Boolean = {
     val prefixOk = orders.zip(meta.coords).zipWithIndex.forall { case ((o, c), i) =>
-      colName(o.expression()).contains(c.meta.name) && c.meta.dtype.kind != 'S' && {
-        val d = c.doubles
-        val strict = i < orders.length - 1
-        (1 until d.length).forall(j =>
-          if (strict) d(j - 1) < d(j) else d(j - 1) <= d(j))
-      }
+      colName(o.expression()).contains(c.meta.name) && c.ascending(strict = i < orders.length - 1)
     }
     val dirs = orders.map(_.direction()).distinct
     if (!prefixOk || dirs.length != 1) false
@@ -858,10 +853,7 @@ class ZarrScan(
   private val keyGrouped: Boolean =
     keyByOuter && !union && limit.isEmpty && offset == 0L && fold.isEmpty && meta.coords.nonEmpty &&
       requiredSchema.fieldNames.contains(meta.coordNames.head) &&
-      meta.coords.head.meta.dtype.kind != 'S' && {
-        val d = meta.coords.head.doubles
-        (1 until d.length).forall(i => d(i - 1) < d(i))
-      }
+      meta.coords.head.ascending(strict = true)
 
   private lazy val plannedPartitionCount: Int = planInputPartitions().length
 
@@ -887,11 +879,7 @@ class ZarrScan(
     if (fold.nonEmpty) return Array.empty
     val names = requiredSchema.fieldNames.toSet
     def eligible(c: CoordData, strict: Boolean): Boolean =
-      names.contains(c.meta.name) && c.meta.dtype.kind != 'S' && {
-        val d = c.doubles
-        (1 until d.length).forall(i =>
-          if (strict) d(i - 1) < d(i) else d(i - 1) <= d(i))
-      }
+      names.contains(c.meta.name) && c.ascending(strict)
     val keys = metas.map { m =>
       val strict = m.coords.takeWhile(eligible(_, strict = true)).length
       if (strict < m.coords.length && eligible(m.coords(strict), strict = false)) strict + 1 else strict
@@ -960,9 +948,9 @@ class ZarrScan(
   }
 
   /** Logical (edge-clipped) cell count of a chunk. */
-  private def logicalCells(m: ZarrArrayMeta, ci: Seq[Int]): Long =
+  private def logicalCells(m: ZarrArrayMeta, ci: Seq[Long]): Long =
     m.shape.zip(m.chunks).zip(ci).map { case ((s, c), i) =>
-      math.max(0L, math.min(c.toLong, s - i.toLong * c))
+      math.max(0L, math.min(c.toLong, s - i * c))
     }.product
 
   /** One member store's share of the scan: its ranges and its
@@ -1103,9 +1091,10 @@ class ZarrScan(
     private lazy val topNThreshold: Option[(ZarrArrayMeta, Double, Boolean)] =
       topNVar.flatMap { case (name, desc, n) =>
         meta.dataVars.find(_.name == name).map { m =>
-          val entries = m.chunkStats.toArray.map { case (key, (mn, mx)) =>
+          // an entry whose key is not one of m's chunks counts no cells
+          val entries = m.chunkStats.toArray.flatMap { case (key, (mn, mx)) =>
             val g = if (desc) mn else -mx // guarantee key (worst cell, flipped)
-            (g, logicalCells(m, ZarrSums.chunkIdxOf(m, key)))
+            m.chunkIndex(key).map(ci => (g, logicalCells(m, ci)))
           }.filter(e => !e._1.isNaN).sortBy(-_._1)
           var tau = Double.NegativeInfinity
           var cells = 0L
@@ -1120,41 +1109,23 @@ class ZarrScan(
       }
 
     /** A slice survives unless EVERY chunk it covers is provably outside
-      * the top-n (unknown chunks always keep the slice — never prune
-      * blind; >1024 covered chunks skips the check, same cap as
-      * sliceMayMatch). */
+      * the top-n. */
     private def sliceMayReachTopN(rowStart: Long, rowEnd: Long, r: GridMath.Ranges): Boolean =
       topNThreshold match {
         case None => true
         case Some((_, tau, _)) if tau.isNegInfinity => true
         case Some((m, tau, desc)) =>
-          val idx = new Array[Int](r.length)
-          GridMath.rowToIndices(rowStart, r, idx); val o0 = idx(0)
-          GridMath.rowToIndices(rowEnd - 1, r, idx); val o1 = idx(0)
-          val innerGrid = m.chunkGrid.drop(1)
-          val coveredOuter = (o0 / m.chunks.head) to (o1 / m.chunks.head)
-          val nChunks = coveredOuter.size.toLong * innerGrid.product
-          if (nChunks > 1024) return true
-          def anyReaches(prefix: List[Long], dims: Seq[Long]): Boolean = dims match {
-            case Nil =>
-              m.chunkStats.get(m.chunkKey(prefix.reverse)) match {
-                case Some((mn, mx)) =>
-                  val best = if (desc) mx else -mn // candidate's best, flipped
-                  !(best < tau) // NaN compares false — kept
-                case None => true // unknown chunk — keep
-              }
-            case d +: rest => (0L until d).exists(i => anyReaches(i :: prefix, rest))
+          anyCoveredChunk(m, rowStart, rowEnd, r) { case (mn, mx) =>
+            val best = if (desc) mx else -mn // candidate's best, flipped
+            !(best < tau) // NaN compares false — kept
           }
-          coveredOuter.exists(co => anyReaches(List(co.toLong), innerGrid))
       }
 
     /** Statistics-based partition pruning for pushed data-variable
       * predicates: a slice is dropped only if, for some predicated
       * variable, EVERY chunk the slice covers provably fails the
-      * predicate conjunction by its `.zstats` [min,max]. Chunks without
-      * a stats entry are assumed possible (never prune blind). */
+      * predicate conjunction by its `.zstats` [min,max]. */
     private def sliceMayMatch(rowStart: Long, rowEnd: Long, r: GridMath.Ranges): Boolean = {
-      if (varBounds.isEmpty) return true
       // NaN stats (a chunk holding NaN cells) prove nothing
       def possible(p: GridMath.CoordPred, mn: Double, mx: Double): Boolean = mn.isNaN || mx.isNaN || (p match {
         case GridMath.CoordPred.Eq(t) => t >= mn - 1e-9 && t <= mx + 1e-9
@@ -1162,31 +1133,26 @@ class ZarrScan(
         case GridMath.CoordPred.Lt(t, orEq) => if (orEq) mn <= t else mn < t
         case GridMath.CoordPred.InSet(vs) => vs.exists(t => t >= mn - 1e-9 && t <= mx + 1e-9)
       })
+      varBounds.forall { case (name, preds) =>
+        meta.dataVars.find(_.name == name).forall(m => anyCoveredChunk(m, rowStart, rowEnd, r) {
+          case (mn, mx) => preds.forall(p => possible(p, mn, mx))
+        })
+      }
+    }
+
+    /** Whether some chunk of `m` covered by the slice `[rowStart,
+      * rowEnd)` may hold wanted cells by its `.zstats` [min,max]
+      * (`keep`). A chunk without a stats entry (absent or unstatted)
+      * is always kept — never prune blind — and a slice covering more
+      * than 1024 chunks is kept without enumerating them. */
+    private def anyCoveredChunk(m: ZarrArrayMeta, rowStart: Long, rowEnd: Long,
+        r: GridMath.Ranges)(keep: ((Double, Double)) => Boolean): Boolean = {
       val idx = new Array[Int](r.length)
       GridMath.rowToIndices(rowStart, r, idx); val o0 = idx(0)
       GridMath.rowToIndices(rowEnd - 1, r, idx); val o1 = idx(0)
-      varBounds.forall { case (name, preds) =>
-        meta.dataVars.find(_.name == name).forall { m =>
-          val innerGrid = m.chunkGrid.drop(1)
-          val coveredOuter = (o0 / m.chunks.head) to (o1 / m.chunks.head)
-          val nChunks = coveredOuter.size.toLong * innerGrid.product
-          if (nChunks > 1024) true // too many to enumerate; don't prune
-          else {
-            // any covered chunk whose stats allow the predicates keeps the slice
-            def anyPossible(prefix: List[Long], dims: Seq[Long]): Boolean = dims match {
-              case Nil =>
-                val key = m.chunkKey(prefix.reverse)
-                m.chunkStats.get(key) match {
-                  case Some((mn, mx)) => preds.forall(p => possible(p, mn, mx))
-                  case None => true // unknown chunk (absent or unstatted)
-                }
-              case d +: rest =>
-                (0L until d).exists(i => anyPossible(i :: prefix, rest))
-            }
-            coveredOuter.exists(co => anyPossible(List(co.toLong), innerGrid))
-          }
-        }
-      }
+      val (c0, c1) = (o0 / m.chunks.head, o1 / m.chunks.head + 1)
+      (c1 - c0).toLong * m.chunkGrid.tail.product > 1024 ||
+        m.chunkIndices(c0, c1).exists(ci => m.chunkStats.get(m.chunkKey(ci)).forall(keep))
     }
   }
 
@@ -1298,13 +1264,6 @@ private[zarr] object ZarrSums {
     case _ => false // timestamps/strings/bools: SUM is not meaningful
   }
 
-  /** Chunk key → chunk index vector (inverse of ZarrArrayMeta.chunkKey). */
-  private[zarr] def chunkIdxOf(m: ZarrArrayMeta, key: String): Seq[Int] = {
-    val sep = java.util.regex.Pattern.quote(m.separator)
-    if (m.isV3) key.stripPrefix("c").split(sep).filter(_.nonEmpty).map(_.toInt).toSeq
-    else key.split(sep).map(_.toInt).toSeq
-  }
-
   /** Per-group exact SUMs of a data variable for GROUP BY over the
     * given coordinate dims. Answerable only when the variable's chunk
     * extent is 1 along every grouped dim — each chunk then belongs to
@@ -1322,8 +1281,8 @@ private[zarr] object ZarrSums {
       .collect { case (s, d) if !groupDims.contains(d) => s }.product
     val acc = scala.collection.mutable.Map.empty[Seq[Int], (BigDecimal, Long)]
     m.chunkSums.foreach { case (key, (s, c)) =>
-      val ci = chunkIdxOf(m, key)
-      val g = groupDims.map(ci(_))
+      val ci = m.chunkIndex(key).getOrElse(return None) // a key of no chunk — refuse
+      val g = groupDims.map(ci(_).toInt)
       val (s0, c0) = acc.getOrElse(g, (BigDecimal.ZERO, 0L))
       acc(g) = (s0.add(s), c0 + c)
     }

@@ -129,13 +129,15 @@ final case class ZarrArrayMeta(
       * instead of folding the per-chunk map (a 100 TB variable has
       * millions of chunk entries; grouped answers and pruning still
       * use the map). */
-    sumTotal: Option[(java.math.BigDecimal, Long)] = None) extends Serializable {
+    sumTotal: Option[(java.math.BigDecimal, Long)] = None,
+    /** v3 `dimension_names`, when the document declares them. */
+    dimNames: Option[Seq[String]] = None) extends Serializable {
 
   def nDims: Int = shape.length
   def totalElements: Long = shape.product
 
   /** Chunk counts per dimension. */
-  def chunkGrid: Seq[Long] = shape.zip(chunks).map { case (s, c) => (s + c - 1) / c }
+  @transient lazy val chunkGrid: Seq[Long] = shape.zip(chunks).map { case (s, c) => (s + c - 1) / c }
 
   /** Relative path of the chunk file for the given chunk indices:
     * v2 `"0.0.0"` (configured separator), v3 default encoding
@@ -144,6 +146,58 @@ final case class ZarrArrayMeta(
     if (isV3) "c" + idx.map(i => s"$separator$i").mkString
     else if (idx.isEmpty) "0"
     else idx.mkString(separator)
+
+  /** Inverse of [[chunkKey]]: the chunk indices `key` names, or None
+    * when `key` is not one of this array's chunk keys (another
+    * separator or rank, a non-digit part, an index outside the grid). */
+  def chunkIndex(key: String): Option[Seq[Long]] = {
+    if (nDims == 0) return if (key == chunkKey(Nil)) Some(Nil) else None
+    val head = if (isV3) "c" + separator else ""
+    if (!key.startsWith(head)) return None
+    val idx = new Array[Long](nDims)
+    var from = head.length
+    var d = 0
+    while (d < nDims) {
+      val end = if (d == nDims - 1) key.length else key.indexOf(separator, from)
+      if (end <= from || end - from > 18) return None // empty, or past a Long
+      var v = 0L
+      var i = from
+      while (i < end) {
+        val ch = key.charAt(i)
+        if (ch < '0' || ch > '9') return None
+        v = v * 10 + (ch - '0')
+        i += 1
+      }
+      if (v >= chunkGrid(d)) return None
+      idx(d) = v
+      from = end + separator.length
+      d += 1
+    }
+    Some(scala.collection.immutable.ArraySeq.unsafeWrapArray(idx))
+  }
+
+  /** Position of chunk `idx` in the C-order walk of the grid. */
+  def chunkOrdinal(idx: Seq[Long]): Long =
+    idx.zip(chunkGrid).foldLeft(0L) { case (acc, (i, g)) => acc * g + i }
+
+  /** Every chunk index of the grid in C order, the outer index limited
+    * to `[outerFrom, outerUntil)`. */
+  def chunkIndices(outerFrom: Long = 0L, outerUntil: Long = Long.MaxValue): Iterator[Seq[Long]] =
+    if (nDims == 0) Iterator.single(Nil)
+    else {
+      val grid = chunkGrid
+      val inner = grid.tail.product
+      (math.max(0L, outerFrom) until math.min(grid.head, outerUntil)).iterator.flatMap { o =>
+        (0L until inner).iterator.map { lin =>
+          val idx = new Array[Long](nDims)
+          idx(0) = o
+          var rem = lin
+          var d = nDims - 1
+          while (d >= 1) { idx(d) = rem % grid(d); rem /= grid(d); d -= 1 }
+          scala.collection.immutable.ArraySeq.unsafeWrapArray(idx): Seq[Long]
+        }
+      }
+    }
 }
 
 /** A coordinate array with its eagerly-loaded values — coordinates are
@@ -159,6 +213,13 @@ final case class CoordData(meta: ZarrArrayMeta, raw: AnyRef, doubles: Array[Doub
   def length: Int = doubles.length
   def min: Double = if (doubles.isEmpty) Double.NaN else doubles.min
   def max: Double = if (doubles.isEmpty) Double.NaN else doubles.max
+
+  /** True when the values are numeric and increase, strictly when
+    * `strict` (a string coordinate has no value order). */
+  def ascending(strict: Boolean): Boolean =
+    meta.dtype.kind != 'S' &&
+      (1 until doubles.length).forall(i =>
+        if (strict) doubles(i - 1) < doubles(i) else doubles(i - 1) <= doubles(i))
 }
 
 /** Full store metadata: coordinates in inferred dimension order, data
@@ -235,7 +296,7 @@ object ZarrMeta {
     }
   }
 
-  private def jsonAt(store: ZarrStore, rel: String): Option[JsonNode] =
+  private[zarr] def jsonAt(store: ZarrStore, rel: String): Option[JsonNode] =
     store.readBytes(rel).map { bytes =>
       try mapper.readTree(bytes)
       catch {
@@ -258,10 +319,34 @@ object ZarrMeta {
     }
     else n.asDouble()
 
+  /** The layout of one array document (v2 `.zarray`, v3 `zarr.json`):
+    * shape, chunk shape, chunk-key separator, v3 dimension names,
+    * element type and fill value. The one parse of these fields, for
+    * the reader and the refs tools alike; it refuses no codec, since
+    * refs conversion is metadata-only and carries arrays the reader
+    * would refuse. The codec chain is left as none. */
+  private[zarr] def layoutOf(name: String, node: JsonNode, isV3: Boolean): ZarrArrayMeta = {
+    def longs(n: JsonNode): Seq[Long] = n.elements().asScala.map(_.asLong()).toSeq
+    val shape = longs(node.get("shape"))
+    val chunks = longs(if (isV3) node.at("/chunk_grid/configuration/chunk_shape")
+                       else node.get("chunks")).map(_.toInt)
+    require(chunks.length == shape.length,
+      s"$name: chunk shape $chunks does not match array shape $shape")
+    val (dtype, sep, dims) =
+      if (isV3) (ZarrDType.parseV3(node.get("data_type").asText(), littleEndian = true),
+        Option(node.at("/chunk_key_encoding/configuration/separator").textValue()).getOrElse("/"),
+        Option(node.get("dimension_names")).filter(_.isArray)
+          .map(_.elements().asScala.map(_.asText()).toSeq))
+      else (ZarrDType.parseV2(node.get("dtype").asText()),
+        Option(node.get("dimension_separator")).filterNot(_.isNull).map(_.asText()).getOrElse("."),
+        None)
+    ZarrArrayMeta(name, shape, chunks, dtype, ZarrCompressor("none"), sep,
+      parseFill(node.get("fill_value")), isV3, dimNames = dims)
+  }
+
   private def parseArrayV2(name: String, node: JsonNode): ZarrArrayMeta = {
-    val shape = node.get("shape").elements().asScala.map(_.asLong()).toSeq
-    val chunks = node.get("chunks").elements().asScala.map(_.asInt()).toSeq
-    val dtype = ZarrDType.parseV2(node.get("dtype").asText())
+    val layout = layoutOf(name, node, isV3 = false)
+    val dtype = layout.dtype
     // Filters transform values BEFORE the compressor. The common
     // single `delta` filter (integer coordinates) is implemented
     // (decode = cumulative sum, numcodecs semantics); anything else
@@ -287,10 +372,7 @@ object ZarrMeta {
         Option(c.get("cname")).map(_.asText()).getOrElse(""),
         Option(c.get("shuffle")).map(_.asInt()).getOrElse(0))
     }.getOrElse(ZarrCompressor("none"))
-    val sep = Option(node.get("dimension_separator")).filterNot(_.isNull)
-      .map(_.asText()).getOrElse(".")
-    ZarrArrayMeta(name, shape, chunks, dtype, comp, sep,
-      parseFill(node.get("fill_value")), isV3 = false, deltaFilter = delta)
+    layout.copy(compressor = comp, deltaFilter = delta)
   }
 
   /** Endianness of the `bytes` codec in a v3 codec list (default
@@ -323,9 +405,8 @@ object ZarrMeta {
   private val supportedV3Codecs = Set("bytes", "blosc", "zstd", "gzip", "sharding_indexed")
 
   private def parseArrayV3(name: String, node: JsonNode): ZarrArrayMeta = {
-    val shape = node.get("shape").elements().asScala.map(_.asLong()).toSeq
-    val chunks = node.get("chunk_grid").get("configuration").get("chunk_shape")
-      .elements().asScala.map(_.asInt()).toSeq
+    val layout = layoutOf(name, node, isV3 = true)
+    val chunks = layout.chunks
     val codecs = Option(node.get("codecs")).map(_.elements().asScala.toSeq).getOrElse(Nil)
     def checkCodecs(cs: Seq[JsonNode], where: String): Unit = {
       val unknown = cs.map(_.get("name").asText()).filterNot(supportedV3Codecs)
@@ -344,7 +425,6 @@ object ZarrMeta {
         inner
       case None => codecs
     }
-    val dtype = ZarrDType.parseV3(node.get("data_type").asText(), endianOf(elemCodecs))
     val sharding = shardingCfg.map { cfg =>
       val inner = cfg.get("chunk_shape").elements().asScala.map(_.asInt()).toSeq
       require(chunks.zip(inner).forall { case (c, i) => i > 0 && c % i == 0 },
@@ -357,20 +437,40 @@ object ZarrMeta {
         indexChecksum = idxCodecs.exists(_.get("name").asText() == "crc32c"),
         indexAtEnd = Option(cfg.get("index_location")).map(_.asText()).forall(_ == "end"))
     }
-    val comp = if (sharding.isDefined) ZarrCompressor("none") else compOf(codecs)
-    val sep = Option(node.get("chunk_key_encoding"))
-      .flatMap(e => Option(e.get("configuration")))
-      .flatMap(c => Option(c.get("separator"))).map(_.asText()).getOrElse("/")
-    ZarrArrayMeta(name, shape, chunks, dtype, comp, sep,
-      parseFill(node.get("fill_value")), isV3 = true, sharding = sharding)
+    layout.copy(dtype = layout.dtype.copy(littleEndian = endianOf(elemCodecs)),
+      compressor = if (sharding.isDefined) ZarrCompressor("none") else compOf(codecs),
+      sharding = sharding)
   }
 
-  /** Discover arrays. Zarr v2 stores with consolidated metadata
-    * (`.zmetadata`, one JSON document holding every `.zarray`) are
-    * read with a single fetch — the object-store fast path (a
-    * directory walk costs one round trip per array on s3/gs).
-    * Otherwise walk subdirectories for `.zarray` / array-typed
-    * `zarr.json`. */
+  /** Layouts of the arrays in a refs metadata map (`<v>/.zarray` and
+    * array-typed `<v>/zarr.json` documents), by array name. */
+  private[zarr] def layoutsOf(docs: collection.Map[String, Array[Byte]]): Map[String, ZarrArrayMeta] =
+    docs.iterator.flatMap { case (k, bytes) =>
+      val isV3 = k.endsWith("/zarr.json")
+      if (!isV3 && !k.endsWith("/.zarray")) None
+      else Some(mapper.readTree(bytes))
+        .filter(n => !isV3 || Option(n.get("node_type")).exists(_.asText() == "array"))
+        .map(n => layoutOf(k.substring(0, k.lastIndexOf('/')), n, isV3))
+    }.map(a => a.name -> a).toMap
+
+  /** Array `name` of `store` from its own documents: the v2 `.zarray`
+    * or v3 `zarr.json` (None when absent or not an array), its
+    * attributes and its `.zstats` sidecar. `layoutOnly` parses the
+    * layout without the codec chain ([[layoutOf]]). */
+  private[zarr] def arrayAt(store: ZarrStore, name: String, isV3: Boolean,
+      layoutOnly: Boolean = false): Option[ZarrArrayMeta] = {
+    val doc =
+      if (isV3) jsonAt(store, s"$name/zarr.json")
+        .filter(n => Option(n.get("node_type")).exists(_.asText() == "array"))
+      else jsonAt(store, s"$name/.zarray")
+    doc.map { n =>
+      val a = if (layoutOnly) layoutOf(name, n, isV3)
+              else if (isV3) parseArrayV3(name, n) else parseArrayV2(name, n)
+      val attrs = if (isV3) Option(n.get("attributes")) else jsonAt(store, s"$name/.zattrs")
+      withSidecar(a.copy(attrs = attrsOf(attrs)), store)
+    }
+  }
+
   /** Per-chunk stats sidecar (`<name>/.zstats`):
     * {"chunks": {key: [min,max]}, "sums": {key: [sum, count]},
     *  "complete": true}. "sums"/"complete" are written by
@@ -413,6 +513,12 @@ object ZarrMeta {
       }.toMap
     }.getOrElse(Map.empty)
 
+  /** Discover arrays. Zarr v2 stores with consolidated metadata
+    * (`.zmetadata`, one JSON document holding every `.zarray`) are
+    * read with a single fetch — the object-store fast path (a
+    * directory walk costs one round trip per array on s3/gs).
+    * Otherwise walk subdirectories for `.zarray` / array-typed
+    * `zarr.json`. */
   def discoverArrays(store: ZarrStore): Seq[ZarrArrayMeta] = {
     jsonAt(store, ".zmetadata")
       .filter(n => Option(n.get("metadata")).exists(_.isObject))
@@ -448,17 +554,8 @@ object ZarrMeta {
           }
       }
       .getOrElse {
-        val version = detectVersion(store)
-        store.listDirs().flatMap { name =>
-          if (version == 2)
-            jsonAt(store, s"$name/.zarray").map(m => withSidecar(parseArrayV2(name, m)
-              .copy(attrs = attrsOf(jsonAt(store, s"$name/.zattrs"))), store))
-          else
-            jsonAt(store, s"$name/zarr.json")
-              .filter(n => Option(n.get("node_type")).exists(_.asText() == "array"))
-              .map(n => withSidecar(parseArrayV3(name, n)
-                .copy(attrs = attrsOf(Option(n.get("attributes")))), store))
-        }
+        val isV3 = detectVersion(store) == 3
+        store.listDirs().flatMap(arrayAt(store, _, isV3))
       }
   }
 
@@ -493,6 +590,11 @@ object ZarrMeta {
         if (n.isArray) Some((0 until n.size).map(n.get(_).asText())) else None
       } catch { case _: Exception => None }
     }
+
+  /** Dimension names an array declares: v3 `dimension_names`, else
+    * the `_ARRAY_DIMENSIONS` attribute. */
+  private[zarr] def declaredDims(a: ZarrArrayMeta): Option[Seq[String]] =
+    a.dimNames.orElse(explicitDims(a))
 
   def inferCoordOrder(coords: Seq[ZarrArrayMeta], dataVars: Seq[ZarrArrayMeta]): Seq[ZarrArrayMeta] = {
     val byName = coords.map(c => c.name -> c).toMap

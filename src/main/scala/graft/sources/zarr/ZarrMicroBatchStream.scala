@@ -140,24 +140,19 @@ class ZarrMicroBatchStream(
   private def currentOuterExtent(): Long = {
     val (doc, outer) = pollSource
     val store = ZarrStore.open(path)
-    val bytes = store.readBytes(doc).getOrElse(
-      throw new IllegalStateException(s"missing metadata document $doc under $path"))
-    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(bytes)
-    val shape = doc match {
-      case ".zmetadata" => node.get("metadata").get(s"$outer/.zarray").get("shape")
-      case "zarr.json" =>
-        // consolidated block when present (matches readStore), else
-        // this store is discovered by walking per-array docs
-        Option(node.get("consolidated_metadata"))
-          .flatMap(c => Option(c.get("metadata"))).map(_.get(outer).get("shape"))
-          .getOrElse {
-            val b = store.readBytes(s"$outer/zarr.json").getOrElse(
-              throw new IllegalStateException(s"missing $outer/zarr.json under $path"))
-            new com.fasterxml.jackson.databind.ObjectMapper().readTree(b).get("shape")
-          }
-      case arrDoc => node.get("shape")
+    def json(rel: String) = ZarrMeta.jsonAt(store, rel).getOrElse(
+      throw new IllegalStateException(s"missing metadata document $rel under $path"))
+    val node = json(doc)
+    val (arrayDoc, isV3) = doc match {
+      case ".zmetadata" => (node.get("metadata").get(s"$outer/.zarray"), false)
+      // consolidated block when present (matches readStore), else this
+      // store is discovered by walking per-array docs
+      case "zarr.json" => (Option(node.get("consolidated_metadata"))
+        .flatMap(c => Option(c.get("metadata"))).map(_.get(outer))
+        .getOrElse(json(s"$outer/zarr.json")), true)
+      case _ => (node, false)
     }
-    shape.get(0).asLong()
+    ZarrMeta.layoutOf(outer, arrayDoc, isV3).shape.head
   }
 
   override def initialOffset(): Offset =

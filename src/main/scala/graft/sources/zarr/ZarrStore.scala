@@ -65,6 +65,16 @@ sealed trait ZarrStore extends Serializable {
   def deleteObject(rel: String): Unit
 }
 
+/** A store that only reads: every write refuses with [[readOnly]]. */
+sealed trait ReadOnlyStore extends ZarrStore {
+  protected def readOnly: String
+  private def refuse: Nothing = throw new UnsupportedOperationException(readOnly)
+  override def writeBytes(rel: String, data: Array[Byte]): Unit = refuse
+  override def moveTo(destPath: String): Unit = refuse
+  override def deleteRecursively(): Unit = refuse
+  override def deleteObject(rel: String): Unit = refuse
+}
+
 object ZarrStore {
   /** Scheme dispatch: `http(s)://` uses the JDK HttpClient (read-only,
     * consolidated-metadata stores — plain HTTP cannot list), other
@@ -304,13 +314,11 @@ final case class HadoopStore(path: String) extends ZarrStore {
   * one GET) or a root `zarr.json`; chunk reads are ranged to whole
   * objects (one GET each). Executors open their own clients lazily —
   * the store crosses the wire as just the URL. */
-final case class HttpStore(path: String) extends ZarrStore {
-  import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+final case class HttpStore(path: String) extends ReadOnlyStore {
+  import java.net.http.{HttpRequest, HttpResponse}
+  import HttpStore.client
 
-  @transient private lazy val client: HttpClient =
-    HttpClient.newBuilder()
-      .followRedirects(HttpClient.Redirect.NORMAL)
-      .build()
+  protected def readOnly = "HTTP Zarr stores are read-only"
 
   private def uri(rel: String) = java.net.URI.create(s"$path/$rel")
 
@@ -341,18 +349,15 @@ final case class HttpStore(path: String) extends ZarrStore {
     else throw new java.io.IOException(
       s"HTTP ${resp.statusCode()} probing ${uri(rel)}") // 5xx is an error, not not-found
   }
+}
 
-  override def writeBytes(rel: String, data: Array[Byte]): Unit =
-    throw new UnsupportedOperationException("HTTP Zarr stores are read-only")
-
-  override def moveTo(destPath: String): Unit =
-    throw new UnsupportedOperationException("HTTP Zarr stores are read-only")
-
-  override def deleteRecursively(): Unit =
-    throw new UnsupportedOperationException("HTTP Zarr stores are read-only")
-
-  override def deleteObject(rel: String): Unit =
-    throw new UnsupportedOperationException("HTTP Zarr stores are read-only")
+object HttpStore {
+  /** The JVM's one HTTP client, shared by every HTTP store and every
+    * kerchunk URL read; the stores cross the wire as just their URL. */
+  private[zarr] lazy val client: java.net.http.HttpClient =
+    java.net.http.HttpClient.newBuilder()
+      .followRedirects(java.net.http.HttpClient.Redirect.NORMAL)
+      .build()
 }
 
 /** Read-only Zarr store over a kerchunk / fsspec ReferenceFileSystem
@@ -378,13 +383,14 @@ final case class HttpStore(path: String) extends ZarrStore {
   * [[KerchunkParquetRefs.fromJson]]) — per-chunk lookups touch one
   * record file, so executor memory no longer scales with the
   * archive's ref count. */
-final case class KerchunkStore(path: String) extends ZarrStore {
-  import com.fasterxml.jackson.databind.JsonNode
+final case class KerchunkStore(path: String) extends ReadOnlyStore {
 
-  @transient private lazy val doc: JsonNode =
-    new com.fasterxml.jackson.databind.ObjectMapper().readTree(readAll(path))
+  protected def readOnly = "kerchunk reference stores are read-only"
 
-  @transient private lazy val (refs, templates) = {
+  /** Every ref, resolved once: templates expanded, relative URLs
+    * rooted at the refs file's parent. */
+  @transient private[zarr] lazy val refs: Map[String, KerchunkRef] = {
+    val doc = new ObjectMapper().readTree(KerchunkUrlIO.readAll(path))
     val (refsNode, tmplNode) =
       if (doc.has("version") || doc.has("refs"))
         (Option(doc.get("refs")).getOrElse(
@@ -394,104 +400,67 @@ final case class KerchunkStore(path: String) extends ZarrStore {
     if (doc.has("gen"))
       throw new UnsupportedZarrFeatureException(
         s"$path: kerchunk 'gen' (generated keys) is not supported — materialize the refs")
-    val t = tmplNode.filter(_.isObject).map { n =>
-      val it = n.fields()
-      val b = Map.newBuilder[String, String]
-      while (it.hasNext) { val e = it.next(); b += (e.getKey -> e.getValue.asText()) }
-      b.result()
-    }.getOrElse(Map.empty[String, String])
-    val it = refsNode.fields()
-    val b = Map.newBuilder[String, JsonNode]
-    while (it.hasNext) { val e = it.next(); b += (e.getKey -> e.getValue) }
-    (b.result(), t)
-  }
-
-  /** Parent of the refs file, for resolving relative target URLs. */
-  private def parent: String = {
+    val templates = tmplNode.filter(_.isObject).toSeq
+      .flatMap(_.properties().asScala.iterator.map(e => e.getKey -> e.getValue.asText()))
     val norm = path.stripSuffix("/")
-    val i = norm.lastIndexOf('/')
-    if (i > 0) norm.substring(0, i) else "."
-  }
-
-  private def expand(url: String): String = {
-    val sub = templates.foldLeft(url) { case (u, (k, v)) => u.replace(s"{{$k}}", v) }
-    if (sub.contains("://") || sub.startsWith("/") || sub.startsWith("file:")) sub
-    else s"$parent/$sub"
+    val parent = if (norm.lastIndexOf('/') > 0) norm.substring(0, norm.lastIndexOf('/')) else "."
+    def expand(url: String): String = {
+      val sub = templates.foldLeft(url) { case (u, (k, v)) => u.replace(s"{{$k}}", v) }
+      if (sub.contains("://") || sub.startsWith("/") || sub.startsWith("file:")) sub
+      else s"$parent/$sub"
+    }
+    refsNode.properties().asScala.iterator.map { e =>
+      val n = e.getValue
+      e.getKey -> (
+        if (n.isTextual) {
+          val s = n.asText()
+          KerchunkRef.Inline(
+            if (s.startsWith("base64:")) java.util.Base64.getDecoder.decode(s.stripPrefix("base64:"))
+            else s.getBytes(StandardCharsets.UTF_8))
+        } else if (n.isArray && n.size() >= 3)
+          KerchunkRef.Range(expand(n.get(0).asText()), n.get(1).asLong(), n.get(2).asLong())
+        else if (n.isArray && n.size() >= 1) KerchunkRef.Whole(expand(n.get(0).asText()))
+        else throw new IllegalArgumentException(s"$path: malformed ref for key ${e.getKey}: $n"))
+    }.toMap
   }
 
   override def listDirs(): Seq[String] =
     refs.keysIterator.filter(_.contains("/")).map(k => k.takeWhile(_ != '/'))
       .toSeq.distinct.sorted
 
-  override def readBytes(rel: String): Option[Array[Byte]] = refs.get(rel).map { n =>
-    if (n.isTextual) {
-      val s = n.asText()
-      if (s.startsWith("base64:")) java.util.Base64.getDecoder.decode(s.stripPrefix("base64:"))
-      else s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    } else if (n.isArray && n.size() >= 1) {
-      val url = expand(n.get(0).asText())
-      if (n.size() >= 3) readRange(url, n.get(1).asLong(), n.get(2).asLong())
-      else readAll(url)
-    } else throw new IllegalArgumentException(s"$path: malformed ref for key $rel: $n")
-  }
+  override def readBytes(rel: String): Option[Array[Byte]] = refs.get(rel).map(KerchunkUrlIO.read(_))
 
-  override def sizeOf(rel: String): Option[Long] = refs.get(rel).map { n =>
-    if (n.isTextual) {
-      val s = n.asText()
-      if (s.startsWith("base64:")) (s.length - 7L) * 3 / 4 // close enough for existence probes
-      else s.getBytes(java.nio.charset.StandardCharsets.UTF_8).length.toLong
-    } else if (n.isArray && n.size() >= 3) n.get(2).asLong()
-    else readBytes(rel).map(_.length.toLong).getOrElse(0L)
-  }
-
-  /** Whole-object read, any scheme (the refs file itself + `[url]` refs). */
-  private def readAll(url: String): Array[Byte] = KerchunkUrlIO.readAll(url)
-
-  /** Ranged read — delegates to [[KerchunkUrlIO]]. */
-  private def readRange(url: String, offset: Long, length: Long): Array[Byte] =
-    KerchunkUrlIO.readRange(url, offset, length)
-
-  override def writeBytes(rel: String, data: Array[Byte]): Unit =
-    throw new UnsupportedOperationException("kerchunk reference stores are read-only")
-
-  override def moveTo(destPath: String): Unit =
-    throw new UnsupportedOperationException("kerchunk reference stores are read-only")
-
-  override def deleteRecursively(): Unit =
-    throw new UnsupportedOperationException("kerchunk reference stores are read-only")
-
-  override def deleteObject(rel: String): Unit =
-    throw new UnsupportedOperationException("kerchunk reference stores are read-only")
-
-  /** Every ref, resolved (templates expanded, relative URLs rooted) —
-    * the JSON→parquet converter's input ([[KerchunkParquetRefs]]). */
-  private[zarr] def resolvedRefs: Map[String, KerchunkStore.RefEntry] =
-    refs.map { case (k, n) =>
-      k -> (if (n.isTextual) {
-        val s = n.asText()
-        if (s.startsWith("base64:"))
-          KerchunkStore.Inline(java.util.Base64.getDecoder.decode(s.stripPrefix("base64:")))
-        else KerchunkStore.Inline(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      } else if (n.isArray && n.size() >= 3)
-        KerchunkStore.Range(expand(n.get(0).asText()), n.get(1).asLong(), n.get(2).asLong())
-      else if (n.isArray && n.size() >= 1)
-        KerchunkStore.Whole(expand(n.get(0).asText()))
-      else throw new IllegalArgumentException(s"$path: malformed ref for key $k: $n"))
-    }
+  override def sizeOf(rel: String): Option[Long] = refs.get(rel).map(KerchunkUrlIO.size(_))
 }
 
-object KerchunkStore {
-  /** A resolved kerchunk reference. */
-  sealed trait RefEntry
-  final case class Inline(bytes: Array[Byte]) extends RefEntry
-  final case class Range(url: String, offset: Long, length: Long) extends RefEntry
-  final case class Whole(url: String) extends RefEntry
+/** One kerchunk reference, the model both refs stores share: inline
+  * bytes, a byte range of an object, or a whole object (an absent
+  * reference is None). */
+sealed trait KerchunkRef
+object KerchunkRef {
+  final case class Inline(bytes: Array[Byte]) extends KerchunkRef
+  final case class Range(url: String, offset: Long, length: Long) extends KerchunkRef
+  final case class Whole(url: String) extends KerchunkRef
 }
 
 /** URL IO shared by the kerchunk stores (JSON and parquet refs): any
   * scheme, whole-object and ranged reads (ranged GETs on HTTP/object
   * stores — no whole-archive transfer for a chunk). */
 object KerchunkUrlIO {
+
+  /** The bytes `ref` names, its URL mapped through `resolve`. */
+  def read(ref: KerchunkRef, resolve: String => String = identity): Array[Byte] = ref match {
+    case KerchunkRef.Inline(b) => b
+    case KerchunkRef.Range(url, off, len) => readRange(resolve(url), off, len)
+    case KerchunkRef.Whole(url) => readAll(resolve(url))
+  }
+
+  /** Size in bytes of what `ref` names (a whole object is read). */
+  def size(ref: KerchunkRef, resolve: String => String = identity): Long = ref match {
+    case KerchunkRef.Inline(b) => b.length.toLong
+    case KerchunkRef.Range(_, _, len) => len
+    case KerchunkRef.Whole(url) => readAll(resolve(url)).length.toLong
+  }
 
   /** Whole-object read, any scheme. */
   def readAll(url: String): Array[Byte] =
@@ -510,20 +479,25 @@ object KerchunkUrlIO {
     } else Files.readAllBytes(Paths.get(url))
 
   /** Ranged read — one seek + readFully, no whole-object transfer.
-    * (On object stores a positioned read maps to a ranged GET.) */
+    * (On object stores a positioned read maps to a ranged GET.) Over
+    * HTTP a 206 body is the range; a 200 body is the whole object (a
+    * server may ignore `Range`), sliced here. */
   def readRange(url: String, offset: Long, length: Long): Array[Byte] = {
     val out = new Array[Byte](length.toInt)
     if (url.startsWith("http://") || url.startsWith("https://")) {
-      import java.net.http.{HttpClient, HttpRequest, HttpResponse}
-      val resp = HttpClient.newBuilder().followRedirects(HttpClient.Redirect.NORMAL).build()
-        .send(HttpRequest.newBuilder(java.net.URI.create(url))
+      import java.net.http.{HttpRequest, HttpResponse}
+      val resp = HttpStore.client.send(HttpRequest.newBuilder(java.net.URI.create(url))
           .header("Range", s"bytes=$offset-${offset + length - 1}").GET().build(),
           HttpResponse.BodyHandlers.ofByteArray())
-      if (resp.statusCode() / 100 != 2)
-        throw new java.io.IOException(s"HTTP ${resp.statusCode()} reading range of $url")
       val body = resp.body()
-      require(body.length >= length, s"short range read from $url")
-      System.arraycopy(body, 0, out, 0, length.toInt)
+      val start = resp.statusCode() match {
+        case 206 => 0L
+        case 200 => offset
+        case other => throw new java.io.IOException(s"HTTP $other reading range of $url")
+      }
+      if (body.length < start + length) throw new java.io.EOFException(
+        s"$url: range $offset+$length past the end of a ${body.length}-byte HTTP ${resp.statusCode()} body")
+      System.arraycopy(body, start.toInt, out, 0, length.toInt)
     } else if (url.contains("://") && !url.startsWith("file:")) {
       val p = new org.apache.hadoop.fs.Path(url)
       val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
@@ -573,9 +547,11 @@ object KerchunkUrlIO {
   * at [[KerchunkStore]] and ZarrKerchunkSpec proves this form reads
   * byte-identically to the same refs in JSON.
   */
-final case class KerchunkParquetStore(path: String) extends ZarrStore {
+final case class KerchunkParquetStore(path: String) extends ReadOnlyStore {
 
   import KerchunkParquetRefs._
+
+  protected def readOnly = "kerchunk reference stores are read-only"
 
   @transient private lazy val mapper = new ObjectMapper()
 
@@ -597,15 +573,8 @@ final case class KerchunkParquetStore(path: String) extends ZarrStore {
     (b.result(), rs)
   }
 
-  /** (chunkGrid dims) per variable, parsed once from the metadata map. */
-  @transient private lazy val grids: Map[String, Array[Long]] = {
-    metadata.keysIterator.collect {
-      case k if k.endsWith("/.zarray") => k.stripSuffix("/.zarray")
-      case k if k.endsWith("/zarr.json") => k.stripSuffix("/zarr.json")
-    }.toSeq.distinct.flatMap { v =>
-      chunkGridOf(metadata, v).map(v -> _)
-    }.toMap
-  }
+  /** Array layouts per variable, parsed once from the metadata map. */
+  @transient private lazy val arrays: Map[String, ZarrArrayMeta] = ZarrMeta.layoutsOf(metadata)
 
   override def listDirs(): Seq[String] =
     metadata.keysIterator.filter(_.contains("/")).map(_.takeWhile(_ != '/'))
@@ -633,49 +602,22 @@ final case class KerchunkParquetStore(path: String) extends ZarrStore {
     }.getOrElse(p)
 
   override def readBytes(rel: String): Option[Array[Byte]] =
-    metadata.get(rel).map(Some(_)).getOrElse {
-      lookup(rel).flatMap {
-        case RefRow(_, _, _, Some(raw)) => Some(raw)
-        case RefRow(Some(p0), off, size, None) =>
-          val p = resolveUrl(p0)
-          Some(if (size <= 0) KerchunkUrlIO.readAll(p)
-               else KerchunkUrlIO.readRange(p, off, size))
-        case _ => None // all-null row: absent chunk
-      }
-    }
+    metadata.get(rel).orElse(lookup(rel).map(KerchunkUrlIO.read(_, resolveUrl)))
 
   override def sizeOf(rel: String): Option[Long] =
-    metadata.get(rel).map(_.length.toLong).orElse {
-      lookup(rel).flatMap {
-        case RefRow(_, _, _, Some(raw)) => Some(raw.length.toLong)
-        case RefRow(Some(p0), _, size, None) =>
-          if (size > 0) Some(size)
-          else Some(KerchunkUrlIO.readAll(resolveUrl(p0)).length.toLong)
-        case _ => None
-      }
-    }
+    metadata.get(rel).map(_.length.toLong).orElse(lookup(rel).map(KerchunkUrlIO.size(_, resolveUrl)))
 
-  /** Resolve a chunk key to its parquet record row (None = key outside
-    * any variable, or record file absent, or row out of range). */
-  private def lookup(rel: String): Option[RefRow] = {
+  /** The ref of a chunk key, from its record file (None: a key outside
+    * any variable, an absent record file or row, an all-null row). */
+  private def lookup(rel: String): Option[KerchunkRef] = {
     val slash = rel.indexOf('/')
     if (slash <= 0) return None
     val v = rel.substring(0, slash)
-    grids.get(v).flatMap { grid =>
-      chunkLinear(rel.substring(slash + 1), grid).flatMap { lin =>
-        val rec = lin / recordSize
-        val row = (lin % recordSize).toInt
-        rowsOf(path, v, rec).flatMap(rows => rows.lift(row))
+    arrays.get(v).flatMap { m =>
+      m.chunkIndex(rel.substring(slash + 1)).flatMap { idx =>
+        val lin = m.chunkOrdinal(idx)
+        rowsOf(path, v, lin / recordSize).flatMap(_.lift((lin % recordSize).toInt).flatten)
       }
     }
   }
-
-  override def writeBytes(rel: String, data: Array[Byte]): Unit =
-    throw new UnsupportedOperationException("kerchunk reference stores are read-only")
-  override def moveTo(destPath: String): Unit =
-    throw new UnsupportedOperationException("kerchunk reference stores are read-only")
-  override def deleteRecursively(): Unit =
-    throw new UnsupportedOperationException("kerchunk reference stores are read-only")
-  override def deleteObject(rel: String): Unit =
-    throw new UnsupportedOperationException("kerchunk reference stores are read-only")
 }

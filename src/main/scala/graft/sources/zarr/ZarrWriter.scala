@@ -140,15 +140,15 @@ object ZarrWriter {
     case _ => false
   }
 
-  /** numcodecs `delta` encode over a serialized LE chunk payload:
-    * first element kept, each later element replaced by its difference
-    * from the previous (the read side integrates — ChunkCodec
-    * .deltaDecode). Regular grids (time steps, sequential ids) become
-    * near-constant streams, which is where the compressor ratio comes
-    * from. */
-  private def deltaEncode(raw: Array[Byte], width: Int): Array[Byte] = {
-    val buf = ByteBuffer.wrap(raw).order(ByteOrder.LITTLE_ENDIAN)
-    width match {
+  /** numcodecs `delta` encode over a serialized chunk payload in
+    * `dt`'s byte order: first element kept, each later element
+    * replaced by its difference from the previous (the read side
+    * integrates — ChunkCodec.deltaDecode). Regular grids (time steps,
+    * sequential ids) become near-constant streams, which is where the
+    * compressor ratio comes from. */
+  private def deltaEncode(raw: Array[Byte], dt: ZarrDType): Array[Byte] = {
+    val buf = ByteBuffer.wrap(raw).order(orderOf(dt))
+    dt.size match {
       case 8 =>
         val n = raw.length / 8
         var prev = if (n > 0) buf.getLong(0) else 0L
@@ -266,15 +266,23 @@ object ZarrWriter {
     body.toByteArray
   }
 
-  /** Serialize one element at cell `offset` in the store dtype's
-    * little-endian layout. Takes row-domain values (timestamps as
+  private def orderOf(dt: ZarrDType): ByteOrder =
+    if (dt.littleEndian) ByteOrder.LITTLE_ENDIAN else ByteOrder.BIG_ENDIAN
+
+  /** A zeroed buffer of `cells` elements of `dt`, in its byte order. */
+  private[zarr] def cellBuffer(dt: ZarrDType, cells: Int): ByteBuffer =
+    ByteBuffer.allocate(cells * dt.size).order(orderOf(dt))
+
+  /** Serialize one element at cell `offset` of a [[cellBuffer]] in the
+    * store dtype's layout. Takes row-domain values (timestamps as
     * `Timestamp`/`Instant`) and raw-domain ones (epoch micros, as
-    * [[ChunkCodec.elementAt]] returns them). Unsigned dtypes carry a
+    * [[ChunkCodec.elementAt]] returns them); a datetime is stored in
+    * the dtype's unit, exactly, or refused. Unsigned dtypes carry a
     * WIDENED Spark type (u4 → Long), so they are written at the dtype's
     * width, never the Spark type's, and range-checked: a read (which
     * widens back) returns exactly the written value. Fixed-width
     * strings are NUL-padded like numpy. */
-  private def putElement(buf: ByteBuffer, offset: Int, dt: ZarrDType, v: Any): Unit = {
+  private[zarr] def putElement(buf: ByteBuffer, offset: Int, dt: ZarrDType, v: Any): Unit = {
     val at = offset * dt.size
     (dt.kind, dt.size) match {
       case ('u', w) =>
@@ -297,7 +305,13 @@ object ZarrWriter {
       case ('f', 8) => buf.putDouble(at, v.asInstanceOf[Double])
       case ('f', 4) => buf.putFloat(at, v.asInstanceOf[Float])
       case ('b', _) => buf.put(at, if (v.asInstanceOf[Boolean]) 1.toByte else 0.toByte)
-      case ('M', _) => buf.putLong(at, epochMicros(v))
+      case ('M', _) =>
+        val us = epochMicros(v)
+        val held = try Some(Math.multiplyExact(us, dt.tsDivUs)).filter(_ % dt.tsMulUs == 0)
+                   catch { case _: ArithmeticException => None }
+        buf.putLong(at, held.getOrElse(throw new IllegalArgumentException(
+          s"timestamp $us µs since the epoch cannot be held exactly by the store's " +
+            s"datetime64 unit (one step = ${dt.tsMulUs}/${dt.tsDivUs} µs)")) / dt.tsMulUs)
       case ('S', w) =>
         val b = v.asInstanceOf[String].getBytes(java.nio.charset.StandardCharsets.US_ASCII)
         require(b.length <= w, s"string '$v' exceeds coordinate width $w")
@@ -313,7 +327,7 @@ object ZarrWriter {
     case Some(s) =>
       shardify(raw, m.chunks.head / s.innerChunks.head, codecNameOf(s.innerComp, m.name), m.dtype.size)
     case None =>
-      compressPayload(if (m.deltaFilter) deltaEncode(raw, m.dtype.size) else raw,
+      compressPayload(if (m.deltaFilter) deltaEncode(raw, m.dtype) else raw,
         codecNameOf(m.compressor, m.name), m.dtype.size)
   }
 
@@ -323,7 +337,7 @@ object ZarrWriter {
   private def writeCoordChunk(store: ZarrStore, m: ZarrArrayMeta, cc: Int, len: Int,
       valueAt: Int => Any): Unit = {
     val c = m.chunks.head
-    val buf = ByteBuffer.allocate(c * m.dtype.size).order(ByteOrder.LITTLE_ENDIAN)
+    val buf = cellBuffer(m.dtype, c)
     (0 until math.min(c, len - cc * c)).foreach(i => putElement(buf, i, m.dtype, valueAt(cc * c + i)))
     store.writeBytes(s"${m.name}/${m.chunkKey(Seq(cc.toLong))}", encodeChunk(buf.array(), m))
   }
@@ -493,8 +507,7 @@ object ZarrWriter {
           // edge chunks are stored at FULL chunk shape (the overhang is
           // fill): readers size buffers from the chunk shape
           val (buf, acc) = slots.getOrElseUpdate((key, v),
-            (ByteBuffer.allocate(m.chunks.product * m.dtype.size).order(ByteOrder.LITTLE_ENDIAN),
-              new ChunkAcc(sumKind(m.dtype))))
+            (cellBuffer(m.dtype, m.chunks.product), new ChunkAcc(sumKind(m.dtype))))
           val value = row.getAs[Any](m.name)
           putElement(buf, local.toInt, m.dtype, value)
           acc.add(value)
@@ -515,31 +528,40 @@ object ZarrWriter {
       nVars: Int): RDD[(Int, (Seq[Long], ChunkPartial))] =
     partials.map { case ((ci, v), p) => (v, (ci, p)) }.partitionBy(new VarPartitioner(nVars))
 
-  /** The `.zstats` sidecar of variable `m`: the fresh per-chunk
-    * partials merged over the prior sidecar state `m` carries (empty and
-    * vacuously complete for a fresh write). Entries sort in canonical
-    * C-order, so a write-then-append store is byte-identical to the
-    * equivalent fresh write. A chunk whose min or max is not finite
-    * gets no entry: strict JSON has no NaN or Infinity, and readers
-    * never prune a chunk without one. Sums, with the O(1) "total" and
-    * the "complete" attestation, are written only when the prior state
-    * attests complete sums and every fresh chunk produced one; chunks
-    * with no entry are then provably all-fill, so readers can answer
-    * SUM/AVG from the sidecar alone. */
-  private def zstats(m: ZarrArrayMeta, fresh: Seq[(Seq[Long], ChunkPartial)]): String = {
-    import scala.math.Ordering.Implicits._
-    def canonical[V](kv: Iterable[(String, V)]): Seq[(String, V)] =
-      kv.toSeq.sortBy(e => chunkKeyOrder(e._1))
+  /** Variable `m` with the fresh per-chunk partials merged over the
+    * prior sidecar state it carries (empty and vacuously complete for
+    * a fresh write). The sums stay attested complete only when the
+    * prior state was and every fresh chunk produced a sum. */
+  private def withPartials(m: ZarrArrayMeta, fresh: Seq[(Seq[Long], ChunkPartial)]): ZarrArrayMeta = {
     val byKey = fresh.map { case (ci, p) => m.chunkKey(ci) -> p }
     val keys = byKey.map(_._1)
-    val chunks = canonical((m.chunkStats -- keys) ++ byKey.collect {
-      case (k, p) if java.lang.Double.isFinite(p.min) && java.lang.Double.isFinite(p.max) =>
-        k -> (p.min, p.max)
-    }).map { case (k, (mn, mx)) => s""""$k": [$mn, $mx]""" }.mkString(",")
+    m.copy(chunkStats = (m.chunkStats -- keys) ++ byKey.map { case (k, p) => k -> (p.min, p.max) },
+      chunkSums = (m.chunkSums -- keys) ++ byKey.flatMap { case (k, p) => p.sum.map(k -> _) },
+      sumsComplete = m.sumsComplete && byKey.nonEmpty && byKey.forall(_._2.sum.isDefined))
+  }
+
+  /** The `.zstats` document of `m`'s chunk stats and sums — the one
+    * renderer, for write, append and the refs combine (ZarrMeta parses
+    * it). Entries sort in canonical C-order, so a write-then-append
+    * store is byte-identical to the equivalent fresh write. A chunk
+    * whose min or max is not finite gets no entry: strict JSON has no
+    * NaN or Infinity, and readers never prune a chunk without one.
+    * Sums, with the O(1) "total" and the "complete" attestation, are
+    * written only when `m` attests complete sums; chunks with no entry
+    * are then provably all-fill, so readers can answer SUM/AVG from
+    * the sidecar alone. */
+  private[zarr] def zstatsDoc(m: ZarrArrayMeta): Array[Byte] = {
+    import scala.math.Ordering.Implicits._
+    def canonical[V](kv: Map[String, V]): Seq[(String, V)] =
+      kv.toSeq.sortBy(e => m.chunkIndex(e._1).getOrElse(Nil))
+    val chunks = canonical(m.chunkStats).collect {
+      case (k, (mn, mx)) if java.lang.Double.isFinite(mn) && java.lang.Double.isFinite(mx) =>
+        s""""$k": [$mn, $mx]"""
+    }.mkString(",")
     val sums =
-      if (!m.sumsComplete || byKey.isEmpty || byKey.exists(_._2.sum.isEmpty)) ""
+      if (!m.sumsComplete || m.chunkSums.isEmpty) ""
       else {
-        val all = canonical((m.chunkSums -- keys) ++ byKey.map { case (k, p) => k -> p.sum.get })
+        val all = canonical(m.chunkSums)
         val (s, c) = all.foldLeft((java.math.BigDecimal.ZERO, 0L)) {
           case ((s, c), (_, (s2, c2))) => (s.add(s2), c + c2)
         }
@@ -547,7 +569,7 @@ object ZarrWriter {
           .mkString(""", "sums": {""", ",",
             s"""}, "total": [${s.toPlainString}, $c], "complete": true""")
       }
-    s"""{"chunks": {$chunks}$sums}"""
+    s"""{"chunks": {$chunks}$sums}""".getBytes(java.nio.charset.StandardCharsets.UTF_8)
   }
 
   /** EXECUTORS write the sidecars, one task per variable reading its
@@ -557,7 +579,7 @@ object ZarrWriter {
   private def writeSidecars(keyed: RDD[(Int, (Seq[Long], ChunkPartial))],
       metas: Seq[ZarrArrayMeta], store: ZarrStore): Unit =
     lastStatsDriverRows = keyed.mapPartitionsWithIndex { (v, it) =>
-      store.writeBytes(s"${metas(v).name}/.zstats", zstats(metas(v), it.map(_._2).toSeq).getBytes)
+      store.writeBytes(s"${metas(v).name}/.zstats", zstatsDoc(withPartials(metas(v), it.map(_._2).toSeq)))
       Iterator.single(v)
     }.collect().length
 
@@ -945,12 +967,6 @@ object ZarrWriter {
     * production. */
   @volatile private[graft] var coordRewriteTestHook: String => Unit = _ => ()
 
-  /** Numeric C-order sort key for a chunk-key STRING ("10.0" v2,
-    * "c/10/0" v3): sidecar entries sort by parsed chunk indices (a
-    * string sort puts "10.0" before "2.0"). */
-  private def chunkKeyOrder(k: String): Seq[Int] =
-    k.split("[./]").toSeq.filter(s => s.nonEmpty && s.forall(_.isDigit)).map(_.toInt)
-
   /** Lease TTL: a lock whose last heartbeat is older than this is a
     * crashed holder and may be broken. Var (not val) so tests can
     * shrink the clock; production default trades prompt self-healing
@@ -989,14 +1005,24 @@ object ZarrWriter {
     require(outer.length % outerChunk == 0,
       s"existing outer extent ${outer.length} is not a multiple of the outer chunk " +
         s"extent $outerChunk — append would straddle a chunk; rewrite the store instead")
-    (outer.meta +: varMetas).foreach(m => codecNameOf(m.compressor, m.name)) // validate early
+    (outer.meta +: varMetas).foreach { m =>
+      codecNameOf(m.compressor, m.name) // validate early
+      // deltaEncode subtracts integers, the reader integrates floats
+      require(!(m.deltaFilter && m.dtype.kind == 'f'),
+        s"append cannot encode ${m.name}: the writer does not produce a 'delta' filter on " +
+          "float dtypes (float deltas do not round-trip bit-exactly)")
+    }
 
     // the write path's input check; the bound admits the store's own
     // inner extents, which the batch must repeat exactly
     val sets = validateGrid(df, coordNames,
       (defaultMaxDimLen +: meta0.coords.tail.map(_.length)).max)
-    // new outer values: sorted, strictly after the existing max
+    // new outer values: sorted, strictly after the existing max, and
+    // each one encodable in the outer dtype (a datetime unit may not
+    // hold it) before any chunk is written
     val newOuterVals = sets.head
+    val probe = cellBuffer(outer.meta.dtype, 1)
+    newOuterVals.foreach(v => putElement(probe, 0, outer.meta.dtype, rawOf(v)))
     val existingMax = outer.doubles.max
     require(doubleOf(newOuterVals.head) > existingMax,
       s"append outer values must sort strictly after the existing maximum " +
@@ -1091,7 +1117,7 @@ object ZarrWriter {
     // a crash here leaves pushdown disabled until the next successful
     // write, which is safe.
     varMetas.filter(_.sumsComplete).foreach { m =>
-      store.writeBytes(s"${m.name}/.zstats", zstats(m.copy(sumsComplete = false), Nil).getBytes)
+      store.writeBytes(s"${m.name}/.zstats", zstatsDoc(m.copy(sumsComplete = false)))
     }
 
     // 2) metadata shape edits (coordinate first: a reader racing the
@@ -1126,10 +1152,10 @@ object ZarrWriter {
 
     // 3) merge + rewrite the .zstats sidecars from the persisted
     // partials (never re-running the slab writes) over the pre-append
-    // sidecar state the variables' metadata carries: the attestation
-    // survives only if that sidecar was complete and every fresh chunk
-    // produced a sum partial
-    writeSidecars(keyedPartials, varMetas, store)
+    // sidecar state the variables' metadata carries, at the grown
+    // shape: the attestation survives only if that sidecar was
+    // complete and every fresh chunk produced a sum partial
+    writeSidecars(keyedPartials, varMetas.map(m => m.copy(shape = newLen.toLong +: m.shape.tail)), store)
     keyedPartials.unpersist(false)
     ChunkIO.invalidatePath(store.path)
   }

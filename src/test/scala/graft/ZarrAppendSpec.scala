@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
@@ -24,6 +25,35 @@ class ZarrAppendSpec extends AnyFunSuite {
     opts.foldLeft(w) { case (ww, (k, v)) => ww.option(k, v) }
       .mode("overwrite").save(out)
     out
+  }
+
+  /** Rewrite array `name`'s `.zarray`, in place and in `.zmetadata`. */
+  private def relabel(out: String, name: String)(
+      edit: com.fasterxml.jackson.databind.node.ObjectNode => Unit): Unit = {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val za = java.nio.file.Paths.get(out, name, ".zarray")
+    val node = mapper.readTree(za.toFile).asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    edit(node)
+    Files.write(za, mapper.writeValueAsBytes(node))
+    val zm = java.nio.file.Paths.get(out, ".zmetadata")
+    val root = mapper.readTree(zm.toFile)
+    root.get("metadata").asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+      .set[com.fasterxml.jackson.databind.JsonNode](s"$name/.zarray", node)
+    Files.write(zm, mapper.writeValueAsBytes(root))
+  }
+
+  /** Rewrite every 8-byte cell of array `name`'s (uncompressed) chunks. */
+  private def recodeCells(out: String, name: String)(f: Array[Byte] => Array[Byte]): Unit =
+    Files.list(java.nio.file.Paths.get(out, name)).toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filterNot(_.getFileName.toString.startsWith(".")).foreach { p =>
+        Files.write(p, Files.readAllBytes(p).grouped(8).flatMap(c => f(c).toSeq).toArray)
+      }
+
+  /** Every object of the store, by relative path. */
+  private def objects(out: String): Map[String, Seq[Byte]] = {
+    val root = java.nio.file.Paths.get(out)
+    Files.walk(root).toArray.map(_.asInstanceOf[java.nio.file.Path]).filter(Files.isRegularFile(_))
+      .map(p => root.relativize(p).toString -> Files.readAllBytes(p).toSeq).toMap
   }
 
   test("append extends the grid with whole new chunks; values and stats intact") {
@@ -119,6 +149,48 @@ class ZarrAppendSpec extends AnyFunSuite {
       Seq((1.0, 0L, 2.0), (Double.NaN, 0L, 3.0)).toDF("t", "x", "v"), dOut))
     assert(e.getMessage.contains("contains NaN"), e.getMessage)
     assert(spark.read.format("zarr").load(dOut).count() == 1)
+    // a float 'delta' filter is refused by name (the writer's delta is
+    // integer subtraction, the reader's float addition); nothing changes
+    val fOut = fresh(Seq(0L, 1L))
+    relabel(fOut, "v")(_.putArray("filters").addObject().put("id", "delta").put("dtype", "<f8"))
+    val before = objects(fOut)
+    val fe = intercept[IllegalArgumentException](
+      graft.sources.zarr.ZarrWriter.append(grid(Seq(2L, 3L)), fOut))
+    assert(fe.getMessage.contains("'delta' filter") && fe.getMessage.contains("v"), fe.getMessage)
+    assert(objects(fOut) == before)
+  }
+
+  test("append encodes the store's declared datetime unit and byte order") {
+    import spark.implicits._
+    val t0 = java.time.Instant.parse("2023-11-14T22:13:20Z")
+    def steps(hours: Seq[Long]) = hours.flatMap(h => (0L until 2L).map(x =>
+      (java.sql.Timestamp.from(t0.plusSeconds(3600L * h)), x, h * 10.0 + x))).toDF("t", "x", "v")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.orderBy("t", "x").collect().map(_.toSeq).toSeq
+    // a <M8[us] time axis relabelled <M8[ns], its stored values ×1000
+    val ns = Files.createTempDirectory("zarr_append").resolve("ns.zarr").toString
+    graft.sources.zarr.ZarrWriter.write(steps(0L to 1L), ns, coords = Seq("t", "x"), chunkOuter = 2)
+    relabel(ns, "t")(_.put("dtype", "<M8[ns]"))
+    recodeCells(ns, "t") { b =>
+      val bb = ByteBuffer.wrap(b).order(ByteOrder.LITTLE_ENDIAN)
+      bb.putLong(0, bb.getLong(0) * 1000L).array()
+    }
+    assert(rows(spark.read.format("zarr").load(ns)) == rows(steps(0L to 1L)))
+    graft.sources.zarr.ZarrWriter.append(steps(2L to 3L), ns)
+    assert(rows(spark.read.format("zarr").load(ns)) == rows(steps(0L to 3L)))
+    // a step past the nanosecond range (year 2262) is refused by name
+    val late = java.sql.Timestamp.from(java.time.Instant.parse("2300-01-01T00:00:00Z"))
+    val before = objects(ns)
+    val e = intercept[IllegalArgumentException](graft.sources.zarr.ZarrWriter.append(
+      Seq((late, 0L, 1.0), (late, 1L, 2.0)).toDF("t", "x", "v"), ns))
+    assert(e.getMessage.contains("cannot be held exactly"), e.getMessage)
+    assert(objects(ns) == before)
+    // a <f8 variable relabelled >f8, its stored cells byte-swapped
+    val be = fresh(Seq(0L, 1L))
+    relabel(be, "v")(_.put("dtype", ">f8"))
+    recodeCells(be, "v")(_.reverse)
+    assert(rows(spark.read.format("zarr").load(be)) == rows(grid(Seq(0L, 1L))))
+    grid(Seq(2L, 3L)).write.format("zarr").mode("append").save(be)
+    assert(rows(spark.read.format("zarr").load(be)) == rows(grid(0L to 3L)))
   }
 
   test("appends are single-writer: a held lock refuses loudly, release recovers") {

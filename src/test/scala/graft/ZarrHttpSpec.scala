@@ -113,4 +113,38 @@ class ZarrHttpSpec extends AnyFunSuite {
       assert(chain(ex).exists(_.contains("consolidated")))
     }
   }
+
+  test("kerchunk refs ranged into one blob read right from a server that ignores Range") {
+    // every chunk is a [url, offset, length] range into one blob behind
+    // 16 junk bytes; the spec's server answers each ranged GET with 200
+    // and the WHOLE blob, as HTTP allows
+    val src = Paths.get("src/test/resources/zarr/synthetic_v2.zarr")
+    val root = Files.createTempDirectory("http_refs")
+    val files = Files.walk(src).filter(Files.isRegularFile(_)).toArray.map(_.asInstanceOf[Path])
+      .sortBy(_.toString)
+    withServer(root) { url =>
+      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+      val doc = mapper.createObjectNode()
+      doc.put("version", 1)
+      val refs = doc.putObject("refs")
+      val blob = new java.io.ByteArrayOutputStream()
+      blob.write(Array.fill[Byte](16)(0x5a))
+      files.foreach { f =>
+        val key = src.relativize(f).toString
+        val bytes = Files.readAllBytes(f)
+        if (f.getFileName.toString.startsWith(".")) refs.put(key, new String(bytes, "UTF-8"))
+        else {
+          refs.putArray(key).add(s"$url/blob.bin").add(blob.size().toLong).add(bytes.length.toLong)
+          blob.write(bytes)
+        }
+      }
+      Files.write(root.resolve("blob.bin"), blob.toByteArray)
+      Files.write(root.resolve("refs.json"), mapper.writeValueAsBytes(doc))
+      val http = spark.read.format("zarr").load(s"$url/refs.json")
+      val local = spark.read.format("zarr").load(src.toString)
+      assert(http.schema == local.schema)
+      assert(http.orderBy("time", "lon", "lat").collect().map(_.toSeq).toSeq ==
+        local.orderBy("time", "lon", "lat").collect().map(_.toSeq).toSeq)
+    }
+  }
 }

@@ -338,7 +338,7 @@ class ZarrKerchunkSpec extends AnyFunSuite {
     assert(readAllSorted(out) == direct && direct.size == 24)
     // inline means the refs record files carry the bytes: the read must
     // survive the SOURCE STORE being deleted
-    // (the record-file LRU caches RefRow structs, never chunk bytes —
+    // (the record-file LRU caches KerchunkRef rows, never ranged chunk bytes —
     // a lingering RANGED ref would still hit the deleted source here)
     graft.sources.zarr.ZarrStore.open(src).deleteRecursively()
     assert(readAllSorted(out) == direct)
@@ -374,6 +374,27 @@ class ZarrKerchunkSpec extends AnyFunSuite {
     (pa, pb)
   }
 
+  /** The combined `.zstats` of `v` holds exactly every source's chunk
+    * stats and sums, keys shifted by the source's chunk offset along
+    * `a` (keys `<a>.0` in v2, `c/<a>/0` in v3), still attested complete. */
+  private def assertMergedStats(out: String, srcs: Seq[String], v3: Boolean): Unit = {
+    def vOf(p: String) = graft.sources.zarr.ZarrMeta.readStore(p).dataVars.find(_.name == "v").get
+    val head = if (v3) "c/" else ""
+    val tail = if (v3) "/0" else ".0"
+    val offs = srcs.map(vOf(_).chunkGrid.head).scanLeft(0L)(_ + _)
+    def shifted[X](pick: graft.sources.zarr.ZarrArrayMeta => Map[String, X]): Map[String, X] =
+      srcs.zip(offs).flatMap { case (p, off) =>
+        pick(vOf(p)).map { case (k, x) =>
+          assert(k.startsWith(head) && k.endsWith(tail), k)
+          s"$head${k.stripPrefix(head).stripSuffix(tail).toLong + off}$tail" -> x
+        }
+      }.toMap
+    val merged = vOf(out)
+    assert(merged.chunkStats.size == offs.last && merged.chunkStats == shifted(_.chunkStats))
+    assert(merged.chunkSums.size == offs.last && merged.chunkSums == shifted(_.chunkSums))
+    assert(merged.sumsComplete)
+  }
+
   test("multi-store combine: concatenated refs ≡ union of the source stores (v2)") {
     val dir = Files.createTempDirectory("kerchunk_combine_v2")
     val (pa, pb) = writeSlices(dir, 2)
@@ -392,6 +413,7 @@ class ZarrKerchunkSpec extends AnyFunSuite {
       spark.read.format("zarr").load(pb).agg(sum("v")).head().getDouble(0)
     val sumCombined = spark.read.format("zarr").load(out).agg(sum("v")).head().getDouble(0)
     assert(sumCombined == sumDirect)
+    assertMergedStats(out, Seq(pa, pb), v3 = false)
   }
 
   test("multi-store combine: v3 stores concatenate identically") {
@@ -401,6 +423,7 @@ class ZarrKerchunkSpec extends AnyFunSuite {
     graft.sources.zarr.KerchunkParquetRefs.combineStores(Seq(pa, pb), "a", out)
     assert(readAllSorted(out).toSet == (readAllSorted(pa) ++ readAllSorted(pb)).toSet)
     assert(readAllSorted(out).size == 28)
+    assertMergedStats(out, Seq(pa, pb), v3 = true)
   }
 
   test("multi-store combine: coordinate filters prune through the combined grid") {
