@@ -342,21 +342,21 @@ object ChunkCodec {
   * arrays. */
 object ChunkIO {
 
-  /** Executor-local decoded-chunk LRU, shared across tasks and queries
-    * in this JVM — the reference's roadmap "prefetching/LRU cache"
-    * (README.md:289-337). Off unless a scan requests it
+  /** Executor-local decoded-chunk cache, shared across tasks and
+    * queries in this JVM — the reference's roadmap "prefetching/LRU
+    * cache" (README.md:289-337). Off unless a scan requests it
     * (`chunkCacheEntries` read option); entries are whole decoded
     * decode units — chunks, or for a sharded array its inner chunks —
-    * so capacity × unit size bounds the memory. Hot use case:
-    * repeated interactive queries (REPL) and remote stores, where a
-    * chunk re-fetch costs an object-store round trip. */
-  private val chunkCache =
-    new java.util.LinkedHashMap[(String, String, Seq[Long]), AnyRef](64, 0.75f, true) {
-      @volatile var cap = 0
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String, Seq[Long]), AnyRef]): Boolean =
-        size() > cap
-    }
+    * each weighing its decoded bytes. A read asking for N entries asks
+    * for N of its own units' bytes, and the budget is the largest ask
+    * so far. Hot use case: repeated interactive queries (REPL) and
+    * remote stores, where a chunk re-fetch costs an object-store round
+    * trip. */
+  private val chunkCache = new ByteLru[(String, String, Seq[Long]), AnyRef](0L)
+
+  /** Bytes the decoded-chunk cache holds now, and its budget. */
+  def cacheBytes: Long = chunkCache.bytes
+  def cacheBudget: Long = chunkCache.budget
 
   /** Drop every cached chunk for `path` — called when a store at that
     * path is rewritten or deleted in this JVM, so later scans with
@@ -364,9 +364,7 @@ object ChunkIO {
     * cluster each executor purges its own cache via the same hooks;
     * rewriting a live store path concurrently with readers is
     * undefined regardless, as with any file format.) */
-  def invalidatePath(path: String): Unit = chunkCache.synchronized {
-    chunkCache.keySet().removeIf(_._1 == path)
-  }
+  def invalidatePath(path: String): Unit = chunkCache.removeIf(_._1 == path)
 
   /** The decode unit `unitIdx` of `meta` through [[chunkCache]]:
     * `load` runs only on a miss (or when the cache is off). */
@@ -374,16 +372,14 @@ object ChunkIO {
       cacheEntries: Int)(load: => AnyRef): AnyRef =
     if (cacheEntries <= 0) load
     else {
-      val key = (store.path, meta.name, unitIdx)
-      chunkCache.synchronized {
-        if (chunkCache.cap < cacheEntries) chunkCache.cap = cacheEntries
-        val hit = chunkCache.get(key)
-        if (hit != null) return hit
-      }
-      val a = load
-      chunkCache.synchronized { chunkCache.put(key, a) }
-      a
+      val weight = unitBytes(meta.sharding.fold(meta.chunks)(_.innerChunks), meta.dtype.size)
+      chunkCache.raiseBudget(cacheEntries * weight)
+      chunkCache.getOrLoad((store.path, meta.name, unitIdx))((load, weight))
     }
+
+  /** Decoded bytes of one `unit`-shaped block of `elemSize`-byte cells. */
+  def unitBytes(unit: Seq[Int], elemSize: Int): Long =
+    unit.foldLeft(math.max(1, elemSize).toLong)(_ * _)
 
   /** Decode units (chunks; inner chunks of a sharded array) produced in
     * this JVM, absent ones read as fill included — a test/diagnostic
@@ -402,18 +398,19 @@ object ChunkIO {
       t
     })
 
-  /** Per-variable LRU capacity sized so one "row band" of `unit`-shaped
-    * blocks — every block the row-major odometer revisits while
-    * sweeping the inner dimensions of one outer position — stays
-    * held. Without this a store with multi-chunk INNER dimensions
+  /** Per-variable LRU budget in bytes, sized so one "row band" of
+    * `unit`-shaped blocks — every block the row-major odometer
+    * revisits while sweeping the inner dimensions of one outer
+    * position — stays held. Without this a store with multi-chunk INNER dimensions
     * re-decodes each inner chunk once per grid row (chunk-extent×
     * amplification; the ERA5 chunking (1, lat-block, lon-block) is the
     * canonical case). Bounded by a 64 MiB per-variable budget so task
     * memory stays predictable when blocks are large; dim 0 is excluded
     * because the outer walk never returns to a finished outer block.
-    * The reader sizes its decoded band with the decode unit and, for a
-    * sharded array, its encoded-shard band with the shard shape. */
-  def bandCacheCap(unit: Seq[Int], elemSize: Int, ranges: Array[(Int, Int)]): Int = {
+    * The budget is a whole number of units, each entry weighing one
+    * unit. The reader sizes its decoded band with the decode unit and,
+    * for a sharded array, its encoded-shard band with the shard shape. */
+  def bandBudget(unit: Seq[Int], elemSize: Int, ranges: Array[(Int, Int)]): Long = {
     var inner = 1L
     var d = 1
     while (d < ranges.length) {
@@ -422,9 +419,8 @@ object ChunkIO {
       inner = math.min(inner * (hi - lo + 1), 1L << 20)
       d += 1
     }
-    val unitBytes = unit.foldLeft(math.max(1, elemSize).toLong)(_ * _)
-    val budgetEntries = math.max(1L, (64L << 20) / math.max(1L, unitBytes))
-    math.max(1L, math.min(inner, budgetEntries)).toInt
+    val bytes = unitBytes(unit, elemSize)
+    math.max(1L, math.min(inner, math.max(1L, (64L << 20) / bytes))) * bytes
   }
 
   /** Read + decode one chunk file; absent chunk files yield the

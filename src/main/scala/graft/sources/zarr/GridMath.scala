@@ -30,27 +30,6 @@ object GridMath {
     -1
   }
 
-  /** Effective ranges from coordinate-equality filters
-    * (dimIdx → value). `None` ⇒ provably empty result (a filter value
-    * absent from its coordinate — filter.rs:222-230). */
-  def coordRanges(
-      coordValues: Seq[Array[Double]],
-      eqFilters: Map[Int, Double]): Option[Ranges] = {
-    val ranges = new Array[(Int, Int)](coordValues.length)
-    var d = 0
-    while (d < coordValues.length) {
-      eqFilters.get(d) match {
-        case Some(target) =>
-          val i = findCoordIndex(coordValues(d), target)
-          if (i < 0) return None
-          ranges(d) = (i, i + 1)
-        case None => ranges(d) = (0, coordValues(d).length)
-      }
-      d += 1
-    }
-    Some(ranges)
-  }
-
   /** A pushed-down predicate on one coordinate dimension. Matching is
     * epsilon-widened (superset semantics): the scan may return extra
     * rows near the boundary, and Spark re-applies the exact filter

@@ -35,28 +35,25 @@ object KerchunkParquetRefs {
 
   // ------------------------------------------------- record-file LRU
 
-  /** Decoded record files, keyed (storePath, var, record). One entry
-    * is ≤ record_size small rows (~1 MB at the default 10k); the cap
-    * bounds executor memory regardless of the archive's total ref
-    * count. */
-  private val recCache = new java.util.LinkedHashMap[(String, String, Long),
-      Option[IndexedSeq[Option[KerchunkRef]]]](32, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[(String, String, Long),
-        Option[IndexedSeq[Option[KerchunkRef]]]]): Boolean =
-      size() > 16
-  }
+  /** Decoded record files, keyed (storePath, `.zmetadata` stamp, var,
+    * record) and weighed by an estimate of their rows' heap bytes. One
+    * entry is ≤ record_size small rows (~1.5 MB at the default 10k);
+    * the 32 MiB budget bounds executor memory regardless of the
+    * archive's total ref count. */
+  private val recCache =
+    new ByteLru[(String, String, String, Long), Option[IndexedSeq[Option[KerchunkRef]]]](32L << 20)
 
-  private[zarr] def rowsOf(storePath: String, v: String,
-      rec: Long): Option[IndexedSeq[Option[KerchunkRef]]] = {
-    val key = (storePath, v, rec)
-    recCache.synchronized {
-      val hit = recCache.get(key)
-      if (hit != null) return hit
+  private[zarr] def rowsOf(storePath: String, stamp: String, v: String,
+      rec: Long): Option[IndexedSeq[Option[KerchunkRef]]] =
+    recCache.getOrLoad((storePath, stamp, v, rec)) {
+      val rows = readRecordFile(s"$storePath/$v/refs.$rec.parq")
+      (rows, rows.fold(0L)(_.map {
+        case Some(KerchunkRef.Inline(b)) => 32L + b.length
+        case Some(KerchunkRef.Range(url, _, _)) => 64L + url.length
+        case Some(KerchunkRef.Whole(url)) => 64L + url.length
+        case None => 8L
+      }.sum))
     }
-    val loaded = readRecordFile(s"$storePath/$v/refs.$rec.parq")
-    recCache.synchronized { recCache.put(key, loaded) }
-    loaded
-  }
 
   /** A record file's rows: `raw` → inline; else `path` with `size > 0`
     * → byte range, `size <= 0` → whole object; all-null → absent. */
@@ -84,10 +81,11 @@ object KerchunkParquetRefs {
     } finally reader.close()
   }
 
-  /** Drop cached record files for a store path (tests). */
-  private[zarr] def invalidate(storePath: String): Unit = recCache.synchronized {
-    val it = recCache.keySet().iterator()
-    while (it.hasNext) if (it.next()._1 == storePath) it.remove()
+  /** Drop the record files and documents of a refs dir this JVM read
+    * before rewriting it. */
+  private def invalidate(storePath: String): Unit = {
+    recCache.removeIf(_._1 == storePath)
+    KerchunkUrlIO.forget(s"$storePath/")
   }
 
   // ------------------------------------------------- refs emission
@@ -313,18 +311,14 @@ object KerchunkParquetRefs {
       st.writeBytes(reg, (prev + abs + "\n").getBytes(StandardCharsets.UTF_8))
   }
 
-  /** Registered snapshot dirs that still exist (a deleted snapshot
-    * releases its claim). */
-  private def liveSnapshots(storePath: String): Seq[String] = {
-    val (parent, name) = parentAndName(storePath)
-    ZarrStore.open(parent).readBytes(registryName(name))
-      .map(new String(_, StandardCharsets.UTF_8)).getOrElse("")
+  /** The snapshot dirs listed in `store`'s object `list` (a registry
+    * or a generation manifest) that still exist: a deleted snapshot
+    * releases its claim. */
+  private def liveRefs(store: ZarrStore, list: String): Seq[String] =
+    store.readBytes(list).map(new String(_, StandardCharsets.UTF_8)).getOrElse("")
       .linesIterator.map(_.trim).filter(_.nonEmpty)
-      .filter(refs =>
-        try { KerchunkUrlIO.readAll(s"$refs/.zmetadata"); true }
-        catch { case _: Exception => false })
+      .filter(refs => KerchunkUrlIO.stat(s"$refs/.zmetadata").length.isDefined)
       .toSeq.distinct
-  }
 
   /** Add `from -> to` to the snapshot's `redirects.json` (first
     * redirect for a base wins: the snapshot was taken against the
@@ -351,9 +345,9 @@ object KerchunkParquetRefs {
     * (caller deletes as before — no behavior change for stores that
     * were never snapshotted). */
   def retireGeneration(storePath: String): Boolean = {
-    val snaps = liveSnapshots(storePath)
     val (parent, name) = parentAndName(storePath)
     val parentStore = ZarrStore.open(parent)
+    val snaps = liveRefs(parentStore, registryName(name))
     if (snaps.isEmpty) {
       parentStore.deleteObject(registryName(name))
       return false
@@ -378,13 +372,7 @@ object KerchunkParquetRefs {
     val parentStore = ZarrStore.open(parent)
     parentStore.listDirs().filter(_.startsWith(s"$name.__graft_gen_")).flatMap { gen =>
       val manifest = s"$gen.__graft_refs"
-      val anyLive = parentStore.readBytes(manifest)
-        .map(new String(_, StandardCharsets.UTF_8)).getOrElse("")
-        .linesIterator.map(_.trim).filter(_.nonEmpty)
-        .exists(refs =>
-          try { KerchunkUrlIO.readAll(s"$refs/.zmetadata"); true }
-          catch { case _: Exception => false })
-      if (anyLive) None
+      if (liveRefs(parentStore, manifest).nonEmpty) None
       else {
         ZarrStore.open(s"$parent/$gen").deleteRecursively()
         parentStore.deleteObject(manifest)
@@ -607,24 +595,11 @@ object KerchunkParquetRefs {
     // consolidated_metadata — readers prefer it over per-array docs,
     // so its entries must be the REWRITTEN docs, not store 0's stale
     // copies (shape/codecs would silently disagree)
-    val metaDocsOut =
-      if (!isV3) metaDocs
-      else metaDocs.map {
-        case ("zarr.json", bytes) =>
-          val root = mapper.readTree(bytes).asInstanceOf[ObjectNode]
-          Option(root.get("consolidated_metadata")).foreach { cm =>
-            val m = cm.asInstanceOf[ObjectNode].`with`("metadata")
-            metaDocs.foreach { case (k2, b2) =>
-              if (k2.endsWith("/zarr.json"))
-                m.set[ObjectNode](k2.stripSuffix("/zarr.json"), mapper.readTree(b2))
-            }
-            // coordSelf .zstats were dropped from the per-array docs;
-            // drop any embedded copies too
-            coordSelf.foreach(v => m.remove(s"$v/.zstats"))
-          }
-          "zarr.json" -> mapper.writeValueAsBytes(root)
-        case kv => kv
-      }
+    val metaDocsOut = metaDocs.map {
+      case ("zarr.json", bytes) if isV3 => "zarr.json" ->
+        ZarrWriter.consolidated(isV3, Some(bytes), metaDocs.filter(_._1.endsWith("/zarr.json"))).getOrElse(bytes)
+      case kv => kv
+    }
 
     // chunk refs: static vars from store 0; materialized coords as one
     // inline chunk; grid vars from every store with the axis index

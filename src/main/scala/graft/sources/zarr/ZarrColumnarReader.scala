@@ -111,8 +111,9 @@ class ZarrColumnarReader(p: ZarrInputPartition, batchSize: Int = 4096)
 
     // Row-band LRU: the odometer revisits inner-dimension units once
     // per grid row; holding one band avoids unit-extent× re-decodes
-    // (see ChunkIO.bandCacheCap).
-    private val band = lru[AnyRef](ChunkIO.bandCacheCap(unit, meta.dtype.size, p.ranges))
+    // (see ChunkIO.bandBudget).
+    private val unitBytes = ChunkIO.unitBytes(unit, meta.dtype.size)
+    private val band = new ByteLru[Seq[Long], AnyRef](ChunkIO.bandBudget(unit, meta.dtype.size, p.ranges))
 
     // Sharded arrays: the encoded shards the band spans (null = absent
     // shard object), so each shard is fetched at most once per
@@ -122,7 +123,8 @@ class ZarrColumnarReader(p: ZarrInputPartition, batchSize: Int = 4096)
     // prefetch after.
     private val shards =
       if (meta.sharding.isEmpty) null
-      else lru[ChunkIO.Shard](ChunkIO.bandCacheCap(meta.chunks, meta.dtype.size, p.ranges))
+      else new ByteLru[Seq[Long], ChunkIO.Shard](ChunkIO.bandBudget(meta.chunks, meta.dtype.size, p.ranges))
+    private val shardBytes = ChunkIO.unitBytes(meta.chunks, meta.dtype.size)
     private val innerGrid = if (meta.sharding.isEmpty) null else ChunkIO.innerGrid(meta)
 
     private def load(key: Seq[Long], onBytes: Long => Unit): AnyRef =
@@ -139,9 +141,7 @@ class ZarrColumnarReader(p: ZarrInputPartition, batchSize: Int = 4096)
           d += 1
         }
         val sk = shardIdx.toSeq
-        val shard =
-          if (shards.containsKey(sk)) shards.get(sk)
-          else { val s = ChunkIO.readShard(store, meta, sk, onBytes); shards.put(sk, s); s }
+        val shard = shards.getOrLoad(sk)((ChunkIO.readShard(store, meta, sk, onBytes), shardBytes))
         ChunkIO.decodeInner(store, meta, shard, inner)
       }
 
@@ -217,16 +217,16 @@ class ZarrColumnarReader(p: ZarrInputPartition, batchSize: Int = 4096)
       if (changed) {
         val key = chunkIdx.toSeq
         val hit = band.get(key)
-        if (hit != null) chunk = hit
+        if (hit.isDefined) chunk = hit.get
         else {
           // bytesRead reported from inside the read (no extra sizeOf
           // round trip per chunk on remote stores)
           chunk = fetch(key)
           chunksDecoded += 1
-          band.put(key, chunk)
+          band.put(key, chunk, unitBytes)
           if (p.prefetch && pending == null) {
             val nk = nextChunkKey(key)
-            if (nk != null && band.get(nk) == null) {
+            if (nk != null && band.get(nk).isEmpty) {
               // the pool thread must not touch this task's bytesRead
               // var; it accumulates into an atomic the consumer drains
               val sz = new java.util.concurrent.atomic.AtomicLong()
@@ -248,12 +248,6 @@ class ZarrColumnarReader(p: ZarrInputPartition, batchSize: Int = 4096)
       if (nDims == 0) Int.MaxValue else unit(last) - idx(last) % unit(last)
     }
   }
-
-  /** An access-ordered map keeping its `cap` most recently used entries. */
-  private def lru[V](cap: Int): java.util.LinkedHashMap[Seq[Long], V] =
-    new java.util.LinkedHashMap[Seq[Long], V](8, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[Seq[Long], V]): Boolean = size() > cap
-    }
 
   private val varStates: Array[VarState] = fields.collect { case VarField(m) => new VarState(m) }
   /** Field index → its VarState, or −1 for a coordinate. */

@@ -338,10 +338,7 @@ final case class HttpStore(path: String) extends ReadOnlyStore {
   }
 
   override def sizeOf(rel: String): Option[Long] = {
-    val resp = client.send(
-      HttpRequest.newBuilder(uri(rel))
-        .method("HEAD", HttpRequest.BodyPublishers.noBody()).build(),
-      HttpResponse.BodyHandlers.discarding())
+    val resp = HttpStore.head(uri(rel))
     if (resp.statusCode() == 200) {
       val l = resp.headers().firstValueAsLong("Content-Length")
       Some(if (l.isPresent) l.getAsLong else 0L)
@@ -358,6 +355,12 @@ object HttpStore {
     java.net.http.HttpClient.newBuilder()
       .followRedirects(java.net.http.HttpClient.Redirect.NORMAL)
       .build()
+
+  /** One HEAD request: status and headers, no body. */
+  private[zarr] def head(uri: java.net.URI): java.net.http.HttpResponse[Void] =
+    client.send(java.net.http.HttpRequest.newBuilder(uri)
+        .method("HEAD", java.net.http.HttpRequest.BodyPublishers.noBody()).build(),
+      java.net.http.HttpResponse.BodyHandlers.discarding())
 }
 
 /** Read-only Zarr store over a kerchunk / fsspec ReferenceFileSystem
@@ -377,7 +380,8 @@ object HttpStore {
   * archive it indexes.
   *
   * The descriptor crossing the driver→executor boundary is just the
-  * JSON path; each JVM parses it once, lazily. For refs sets too large
+  * JSON path; each JVM parses each version of it once, lazily (one
+  * stat per open checks the version). For refs sets too large
   * for one JSON document, use the PARQUET refs form
   * ([[KerchunkParquetStore]], converter at
   * [[KerchunkParquetRefs.fromJson]]) — per-chunk lookups touch one
@@ -387,42 +391,44 @@ final case class KerchunkStore(path: String) extends ReadOnlyStore {
 
   protected def readOnly = "kerchunk reference stores are read-only"
 
-  /** Every ref, resolved once: templates expanded, relative URLs
+  /** Every ref, resolved once per version of the document in this JVM
+    * ([[KerchunkUrlIO.document]]): templates expanded, relative URLs
     * rooted at the refs file's parent. */
-  @transient private[zarr] lazy val refs: Map[String, KerchunkRef] = {
-    val doc = new ObjectMapper().readTree(KerchunkUrlIO.readAll(path))
-    val (refsNode, tmplNode) =
-      if (doc.has("version") || doc.has("refs"))
-        (Option(doc.get("refs")).getOrElse(
-           throw new IllegalArgumentException(s"$path: kerchunk document has no refs")),
-         Option(doc.get("templates")))
-      else (doc, None) // version 0: the whole document is the refs map
-    if (doc.has("gen"))
-      throw new UnsupportedZarrFeatureException(
-        s"$path: kerchunk 'gen' (generated keys) is not supported — materialize the refs")
-    val templates = tmplNode.filter(_.isObject).toSeq
-      .flatMap(_.properties().asScala.iterator.map(e => e.getKey -> e.getValue.asText()))
-    val norm = path.stripSuffix("/")
-    val parent = if (norm.lastIndexOf('/') > 0) norm.substring(0, norm.lastIndexOf('/')) else "."
-    def expand(url: String): String = {
-      val sub = templates.foldLeft(url) { case (u, (k, v)) => u.replace(s"{{$k}}", v) }
-      if (sub.contains("://") || sub.startsWith("/") || sub.startsWith("file:")) sub
-      else s"$parent/$sub"
+  @transient private[zarr] lazy val refs: Map[String, KerchunkRef] =
+    KerchunkUrlIO.document(path, KerchunkUrlIO.stat(path).stamp) { bytes =>
+      val doc = new ObjectMapper().readTree(bytes)
+      val (refsNode, tmplNode) =
+        if (doc.has("version") || doc.has("refs"))
+          (Option(doc.get("refs")).getOrElse(
+             throw new IllegalArgumentException(s"$path: kerchunk document has no refs")),
+           Option(doc.get("templates")))
+        else (doc, None) // version 0: the whole document is the refs map
+      if (doc.has("gen"))
+        throw new UnsupportedZarrFeatureException(
+          s"$path: kerchunk 'gen' (generated keys) is not supported — materialize the refs")
+      val templates = tmplNode.filter(_.isObject).toSeq
+        .flatMap(_.properties().asScala.iterator.map(e => e.getKey -> e.getValue.asText()))
+      val norm = path.stripSuffix("/")
+      val parent = if (norm.lastIndexOf('/') > 0) norm.substring(0, norm.lastIndexOf('/')) else "."
+      def expand(url: String): String = {
+        val sub = templates.foldLeft(url) { case (u, (k, v)) => u.replace(s"{{$k}}", v) }
+        if (sub.contains("://") || sub.startsWith("/") || sub.startsWith("file:")) sub
+        else s"$parent/$sub"
+      }
+      refsNode.properties().asScala.iterator.map { e =>
+        val n = e.getValue
+        e.getKey -> (
+          if (n.isTextual) {
+            val s = n.asText()
+            KerchunkRef.Inline(
+              if (s.startsWith("base64:")) java.util.Base64.getDecoder.decode(s.stripPrefix("base64:"))
+              else s.getBytes(StandardCharsets.UTF_8))
+          } else if (n.isArray && n.size() >= 3)
+            KerchunkRef.Range(expand(n.get(0).asText()), n.get(1).asLong(), n.get(2).asLong())
+          else if (n.isArray && n.size() >= 1) KerchunkRef.Whole(expand(n.get(0).asText()))
+          else throw new IllegalArgumentException(s"$path: malformed ref for key ${e.getKey}: $n"))
+      }.toMap
     }
-    refsNode.properties().asScala.iterator.map { e =>
-      val n = e.getValue
-      e.getKey -> (
-        if (n.isTextual) {
-          val s = n.asText()
-          KerchunkRef.Inline(
-            if (s.startsWith("base64:")) java.util.Base64.getDecoder.decode(s.stripPrefix("base64:"))
-            else s.getBytes(StandardCharsets.UTF_8))
-        } else if (n.isArray && n.size() >= 3)
-          KerchunkRef.Range(expand(n.get(0).asText()), n.get(1).asLong(), n.get(2).asLong())
-        else if (n.isArray && n.size() >= 1) KerchunkRef.Whole(expand(n.get(0).asText()))
-        else throw new IllegalArgumentException(s"$path: malformed ref for key ${e.getKey}: $n"))
-    }.toMap
-  }
 
   override def listDirs(): Seq[String] =
     refs.keysIterator.filter(_.contains("/")).map(k => k.takeWhile(_ != '/'))
@@ -455,28 +461,84 @@ object KerchunkUrlIO {
     case KerchunkRef.Whole(url) => readAll(resolve(url))
   }
 
-  /** Size in bytes of what `ref` names (a whole object is read). */
+  /** Size in bytes of what `ref` names: a whole object is sized by
+    * [[stat]], and read only when its backend does not say. */
   def size(ref: KerchunkRef, resolve: String => String = identity): Long = ref match {
     case KerchunkRef.Inline(b) => b.length.toLong
     case KerchunkRef.Range(_, _, len) => len
-    case KerchunkRef.Whole(url) => readAll(resolve(url)).length.toLong
+    case KerchunkRef.Whole(url) =>
+      val u = resolve(url)
+      stat(u).length.getOrElse(readAll(u).length.toLong)
+  }
+
+  /** What one metadata request says of the object at a URL: its
+    * length, and a stamp that changes when its content does. Either is
+    * None when the object is absent or the backend does not say. */
+  final case class UrlStat(length: Option[Long], stamp: Option[String])
+
+  /** Size + mtime of a local or Hadoop file; over HTTP one HEAD, whose
+    * ETag, else Last-Modified, is the stamp (with Content-Length). */
+  def stat(url: String): UrlStat =
+    try {
+      if (isHttp(url)) {
+        val resp = HttpStore.head(java.net.URI.create(url))
+        val h = resp.headers()
+        val length = Option(h.firstValue("Content-Length").orElse(null)).map(_.toLong)
+        val tag = Option(h.firstValue("ETag").orElse(h.firstValue("Last-Modified").orElse(null)))
+        if (resp.statusCode() != 200) UrlStat(None, None)
+        else UrlStat(length, tag.map(t => s"${length.getOrElse("")}|$t"))
+      } else if (isHadoop(url)) {
+        val (fs, p) = hadoop(url)
+        val st = fs.getFileStatus(p)
+        UrlStat(Some(st.getLen), Some(s"${st.getLen}@${st.getModificationTime}"))
+      } else {
+        val a = Files.readAttributes(localPath(url), classOf[java.nio.file.attribute.BasicFileAttributes])
+        UrlStat(Some(a.size), Some(s"${a.size}@${a.lastModifiedTime.to(java.util.concurrent.TimeUnit.NANOSECONDS)}"))
+      }
+    } catch { case scala.util.control.NonFatal(_) => UrlStat(None, None) }
+
+  /** Parsed documents (refs JSON, parquet-refs `.zmetadata` and
+    * `redirects.json`) keyed on (URL, stamp), weighed by their size:
+    * 64 MiB of documents. */
+  private val documents = new ByteLru[(String, String), AnyRef](64L << 20)
+
+  /** `parse` of the document at `url`, read once per `stamp` in this
+    * JVM. A document with no stamp, or one `parse` refuses, is not
+    * kept: it is read (and refused) on every call. */
+  def document[T <: AnyRef](url: String, stamp: Option[String])(parse: Array[Byte] => T): T =
+    stamp match {
+      case None => parse(readAll(url))
+      case Some(st) => documents.getOrLoad((url, st)) {
+        val bytes = readAll(url)
+        (parse(bytes), bytes.length.toLong)
+      }.asInstanceOf[T]
+    }
+
+  /** Forget the documents under `prefix` read in this JVM (their
+    * writer just rewrote them). */
+  def forget(prefix: String): Unit = documents.removeIf(_._1.startsWith(prefix))
+
+  private def isHttp(url: String) = url.startsWith("http://") || url.startsWith("https://")
+  private def isHadoop(url: String) = url.contains("://") && !url.startsWith("file:") && !isHttp(url)
+  private def localPath(url: String) =
+    if (url.startsWith("file:")) Paths.get(java.net.URI.create(url)) else Paths.get(url)
+  private def hadoop(url: String) = {
+    val p = new org.apache.hadoop.fs.Path(url)
+    (p.getFileSystem(new org.apache.hadoop.conf.Configuration()), p)
   }
 
   /** Whole-object read, any scheme. */
   def readAll(url: String): Array[Byte] =
-    if (url.startsWith("http://") || url.startsWith("https://")) {
+    if (isHttp(url)) {
       val u = url.stripSuffix("/")
       val i = u.lastIndexOf('/')
       HttpStore(u.substring(0, i)).readBytes(u.substring(i + 1)).getOrElse(
         throw new java.io.FileNotFoundException(url))
-    } else if (url.startsWith("file:")) {
-      Files.readAllBytes(Paths.get(java.net.URI.create(url)))
-    } else if (url.contains("://")) {
-      val p = new org.apache.hadoop.fs.Path(url)
-      val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    } else if (isHadoop(url)) {
+      val (fs, p) = hadoop(url)
       val in = fs.open(p)
       try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
-    } else Files.readAllBytes(Paths.get(url))
+    } else Files.readAllBytes(localPath(url))
 
   /** Ranged read — one seek + readFully, no whole-object transfer.
     * (On object stores a positioned read maps to a ranged GET.) Over
@@ -484,7 +546,7 @@ object KerchunkUrlIO {
     * server may ignore `Range`), sliced here. */
   def readRange(url: String, offset: Long, length: Long): Array[Byte] = {
     val out = new Array[Byte](length.toInt)
-    if (url.startsWith("http://") || url.startsWith("https://")) {
+    if (isHttp(url)) {
       import java.net.http.{HttpRequest, HttpResponse}
       val resp = HttpStore.client.send(HttpRequest.newBuilder(java.net.URI.create(url))
           .header("Range", s"bytes=$offset-${offset + length - 1}").GET().build(),
@@ -498,14 +560,12 @@ object KerchunkUrlIO {
       if (body.length < start + length) throw new java.io.EOFException(
         s"$url: range $offset+$length past the end of a ${body.length}-byte HTTP ${resp.statusCode()} body")
       System.arraycopy(body, start.toInt, out, 0, length.toInt)
-    } else if (url.contains("://") && !url.startsWith("file:")) {
-      val p = new org.apache.hadoop.fs.Path(url)
-      val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    } else if (isHadoop(url)) {
+      val (fs, p) = hadoop(url)
       val in = fs.open(p)
       try in.readFully(offset, out) finally in.close()
     } else {
-      val lp = if (url.startsWith("file:")) Paths.get(java.net.URI.create(url)) else Paths.get(url)
-      val ch = java.nio.channels.FileChannel.open(lp, java.nio.file.StandardOpenOption.READ)
+      val ch = java.nio.channels.FileChannel.open(localPath(url), java.nio.file.StandardOpenOption.READ)
       try {
         val buf = java.nio.ByteBuffer.wrap(out)
         var pos = offset
@@ -539,8 +599,8 @@ object KerchunkUrlIO {
   * index is C-order over the variable's chunk grid (from its
   * `.zarray`/`zarr.json` in the metadata map), so a chunk lookup
   * touches exactly ONE record file — nothing scales with the total
-  * ref count: per-executor memory is the record-file LRU (≤ record
-  * files × record_size rows), not the archive's ref count.
+  * ref count: per-executor memory is the byte-bounded record-file
+  * cache, not the archive's ref count.
   *
   * The reference's roadmap names kerchunk
   * (/root/reference/README.md:289-337); the JSON form is implemented
@@ -553,25 +613,24 @@ final case class KerchunkParquetStore(path: String) extends ReadOnlyStore {
 
   protected def readOnly = "kerchunk reference stores are read-only"
 
-  @transient private lazy val mapper = new ObjectMapper()
+  /** The `.zmetadata` stamp this instance reads under; record files
+    * are cached under it too, so a rewritten refs dir is never served
+    * stale. An unstamped `.zmetadata` gets a stamp of this instance. */
+  @transient private lazy val stamp: String =
+    KerchunkUrlIO.stat(s"$path/.zmetadata").stamp.getOrElse(java.util.UUID.randomUUID().toString)
 
-  @transient private lazy val (metadata, recordSize): (Map[String, Array[Byte]], Int) = {
-    val doc = mapper.readTree(KerchunkUrlIO.readAll(s"$path/.zmetadata"))
-    val meta = Option(doc.get("metadata")).getOrElse(
-      throw new IllegalArgumentException(s"$path/.zmetadata: no 'metadata' map"))
-    val b = Map.newBuilder[String, Array[Byte]]
-    val it = meta.fields()
-    while (it.hasNext) {
-      val e = it.next()
-      val bytes =
-        if (e.getValue.isTextual) e.getValue.asText().getBytes(StandardCharsets.UTF_8)
-        else e.getValue.toString.getBytes(StandardCharsets.UTF_8)
-      b += (e.getKey -> bytes)
+  @transient private lazy val (metadata, recordSize): (Map[String, Array[Byte]], Int) =
+    KerchunkUrlIO.document(s"$path/.zmetadata", Some(stamp)) { bytes =>
+      val doc = new ObjectMapper().readTree(bytes)
+      val meta = Option(doc.get("metadata")).getOrElse(
+        throw new IllegalArgumentException(s"$path/.zmetadata: no 'metadata' map"))
+      val rs = Option(doc.get("record_size")).map(_.asInt()).getOrElse(defaultRecordSize)
+      require(rs > 0, s"$path/.zmetadata: record_size must be positive, got $rs")
+      (meta.properties().asScala.map { e =>
+        val v = e.getValue
+        e.getKey -> (if (v.isTextual) v.asText() else v.toString).getBytes(StandardCharsets.UTF_8)
+      }.toMap, rs)
     }
-    val rs = Option(doc.get("record_size")).map(_.asInt()).getOrElse(defaultRecordSize)
-    require(rs > 0, s"$path/.zmetadata: record_size must be positive, got $rs")
-    (b.result(), rs)
-  }
 
   /** Array layouts per variable, parsed once from the metadata map. */
   @transient private lazy val arrays: Map[String, ZarrArrayMeta] = ZarrMeta.layoutsOf(metadata)
@@ -586,14 +645,13 @@ final case class KerchunkParquetStore(path: String) extends ReadOnlyStore {
     * to an immutable generation sibling, and ranged refs resolve
     * through this base-path map (longest prefix wins). Absent for
     * ordinary refs dirs. */
-  @transient private lazy val redirects: Seq[(String, String)] =
-    (try {
-      val node = mapper.readTree(KerchunkUrlIO.readAll(s"$path/redirects.json"))
-      val b = Seq.newBuilder[(String, String)]
-      val it = node.fields()
-      while (it.hasNext) { val e = it.next(); b += (e.getKey -> e.getValue.asText()) }
-      b.result()
-    } catch { case _: Exception => Seq.empty }).sortBy(-_._1.length)
+  @transient private lazy val redirects: Seq[(String, String)] = {
+    val url = s"$path/redirects.json"
+    try KerchunkUrlIO.document(url, KerchunkUrlIO.stat(url).stamp)(bytes =>
+      new ObjectMapper().readTree(bytes).properties().asScala
+        .map(e => e.getKey -> e.getValue.asText()).toSeq.sortBy(-_._1.length))
+    catch { case _: Exception => Seq.empty }
+  }
 
   private def resolveUrl(p: String): String =
     redirects.collectFirst {
@@ -616,7 +674,7 @@ final case class KerchunkParquetStore(path: String) extends ReadOnlyStore {
     arrays.get(v).flatMap { m =>
       m.chunkIndex(rel.substring(slash + 1)).flatMap { idx =>
         val lin = m.chunkOrdinal(idx)
-        rowsOf(path, v, lin / recordSize).flatMap(_.lift((lin % recordSize).toInt).flatten)
+        rowsOf(path, stamp, v, lin / recordSize).flatMap(_.lift((lin % recordSize).toInt).flatten)
       }
     }
   }

@@ -59,15 +59,6 @@ class ZarrStreamSink(parameters: Map[String, String]) extends Sink {
 
   private val CommitKey = ".graft_stream_commit"
 
-  private def isStore: Boolean =
-    try { ZarrMeta.detectVersion(ZarrStore.open(path)); true }
-    catch {
-      case _: IllegalArgumentException => false
-      case _: java.io.FileNotFoundException => false
-      case _: java.nio.file.NoSuchFileException => false
-      case _: UnsupportedOperationException => false
-    }
-
   private def committedBatch(): Long =
     ZarrStore.open(path).readBytes(CommitKey) match {
       case Some(bytes) =>
@@ -81,7 +72,7 @@ class ZarrStreamSink(parameters: Map[String, String]) extends Sink {
       batchId.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
   override def addBatch(batchId: Long, data: DataFrame): Unit = {
-    val exists = isStore
+    val exists = ZarrDataSource.isStore(path)
     if (exists && batchId <= committedBatch()) return // replayed, already landed
     // Materialize the micro-batch on the EXECUTORS, exactly once: the
     // DataFrame a V1 sink receives wraps the stream's
@@ -104,7 +95,7 @@ class ZarrStreamSink(parameters: Map[String, String]) extends Sink {
     // it. Replaying an unmarked empty batch is a no-op anyway.
     try { if (!local.isEmpty) addBatchImpl(exists, local) }
     finally local.unpersist()
-    if (isStore) markCommitted(batchId)
+    if (ZarrDataSource.isStore(path)) markCommitted(batchId)
   }
 
   private def addBatchImpl(exists: Boolean, local: DataFrame): Unit = {

@@ -696,24 +696,10 @@ object ZarrWriter {
     // Consolidated metadata: one-fetch discovery (required for
     // listing-less backends like HTTP). v2 → .zmetadata; v3 → embed
     // under the root zarr.json's `consolidated_metadata`.
-    val allNames = coords ++ varCols
-    if (version == 2) {
-      val entries = allNames.flatMap { n =>
-        val za = new String(store.readBytes(s"$n/.zarray").get)
-        val attrs = attrsJson(n).map(a => s""""$n/.zattrs": $a""")
-        Seq(s""""$n/.zarray": $za""") ++ attrs
-      }.mkString(",")
-      store.writeBytes(".zmetadata",
-        s"""{"zarr_consolidated_format": 1, "metadata": {$entries}}""".getBytes)
-    } else {
-      val entries = allNames.map { n =>
-        val zj = new String(store.readBytes(s"$n/zarr.json").get)
-        s""""$n": $zj"""
-      }.mkString(",")
-      store.writeBytes("zarr.json",
-        (s"""{"zarr_format":3,"node_type":"group",""" +
-          s""""consolidated_metadata":{"metadata":{$entries}}}""").getBytes)
-    }
+    val docKeys = (coords ++ varCols).flatMap(n =>
+      if (version == 2) Seq(s"$n/.zarray", s"$n/.zattrs") else Seq(s"$n/zarr.json"))
+    consolidated(version == 3, None, docKeys.flatMap(k => store.readBytes(k).map(k -> _)))
+      .foreach(store.writeBytes(if (version == 2) ".zmetadata" else "zarr.json", _))
 
     // 3. every chunk is encoded from the metadata just written, read
     // back the way a reader parses it, so write and append share one
@@ -1122,7 +1108,8 @@ object ZarrWriter {
 
     // 2) metadata shape edits (coordinate first: a reader racing the
     // append must never see variables longer than their dimensions)
-    val metaRel = (n: String) => if (meta0.coords.head.meta.isV3) s"$n/zarr.json" else s"$n/.zarray"
+    val isV3 = meta0.coords.head.meta.isV3
+    val metaRel = (n: String) => if (isV3) s"$n/zarr.json" else s"$n/.zarray"
     editShape(store, metaRel(outerName), newLen, Some(outerChunk))
     varNames.foreach(n => editShape(store, metaRel(n), newLen, None))
     // Consolidated metadata flips HERE, not at the end of the append:
@@ -1134,7 +1121,10 @@ object ZarrWriter {
     // chunk 0 = an undersized, torn read). After this refresh both
     // discovery paths agree on the new grid and the legacy files are
     // merely oversized — tolerated.
-    refreshConsolidated(store, coordNames ++ varNames, meta0.coords.head.meta.isV3)
+    val docs = (coordNames ++ varNames).flatMap(n => store.readBytes(metaRel(n)).map(metaRel(n) -> _))
+    val consolidatedRel = if (isV3) "zarr.json" else ".zmetadata"
+    store.readBytes(consolidatedRel).flatMap(b => consolidated(isV3, Some(b), docs))
+      .foreach(store.writeBytes(consolidatedRel, _))
 
     coordRewriteTestHook("postflip")
     // 2.5) legacy-layout re-chunk, colliding prefix: only now that the
@@ -1160,36 +1150,31 @@ object ZarrWriter {
     ChunkIO.invalidatePath(store.path)
   }
 
-  /** Re-embed every array's on-store metadata document into the
-    * consolidated copy (v2 `.zmetadata`; v3 root `zarr.json`), if the
-    * store carries one. Called mid-append, immediately after the
-    * per-array shape edits — see the ordering note at the call site. */
-  private def refreshConsolidated(store: ZarrStore, names: Seq[String], isV3: Boolean): Unit = {
+  /** The consolidated metadata document: `base` (a store's v2
+    * `.zmetadata` or v3 root `zarr.json`; None renders a fresh one)
+    * with each per-array document of `docs` (store key → bytes)
+    * embedded — v2 under `metadata` by its key, v3 under
+    * `consolidated_metadata.metadata` by its array name. None when
+    * `base` carries no consolidated block. The one renderer of write,
+    * append and the refs combine. */
+  private[zarr] def consolidated(isV3: Boolean, base: Option[Array[Byte]],
+      docs: Seq[(String, Array[Byte])]): Option[Array[Byte]] = {
+    import com.fasterxml.jackson.databind.JsonNode
+    import com.fasterxml.jackson.databind.node.ObjectNode
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    store.readBytes(".zmetadata").foreach { bytes =>
-      val node = mapper.readTree(bytes)
-        .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-      val md = node.get("metadata")
-        .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-      names.foreach { n =>
-        store.readBytes(s"$n/.zarray").foreach(b =>
-          md.set[com.fasterxml.jackson.databind.JsonNode](s"$n/.zarray", mapper.readTree(b)))
-      }
-      store.writeBytes(".zmetadata", mapper.writeValueAsBytes(node))
-    }
-    if (isV3) store.readBytes("zarr.json").foreach { bytes =>
-      val node = mapper.readTree(bytes)
-        .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-      Option(node.get("consolidated_metadata"))
-        .flatMap(c => Option(c.get("metadata")))
-        .collect { case o: com.fasterxml.jackson.databind.node.ObjectNode => o }
-        .foreach { md =>
-          names.foreach { n =>
-            store.readBytes(s"$n/zarr.json").foreach(b =>
-              md.set[com.fasterxml.jackson.databind.JsonNode](n, mapper.readTree(b)))
-          }
-          store.writeBytes("zarr.json", mapper.writeValueAsBytes(node))
+    val root = base.fold {
+      val r = mapper.createObjectNode()
+      (if (isV3) r.put("zarr_format", 3).put("node_type", "group").putObject("consolidated_metadata")
+       else r.put("zarr_consolidated_format", 1)).putObject("metadata")
+      r
+    }(mapper.readTree(_).asInstanceOf[ObjectNode])
+    Option(if (isV3) root.get("consolidated_metadata") else root)
+      .flatMap(h => Option(h.get("metadata")))
+      .collect { case md: ObjectNode =>
+        docs.foreach { case (k, b) =>
+          md.set[JsonNode](if (isV3) k.stripSuffix("/zarr.json") else k, mapper.readTree(b))
         }
-    }
+        mapper.writeValueAsBytes(root)
+      }
   }
 }

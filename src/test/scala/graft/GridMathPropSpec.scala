@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.zarr.{ChunkCodec, GridMath}
 
 /** Property tests for the pure grid arithmetic (SURVEY.md §7 step 9:
-  * coordKeys / limitedSubset / coordRanges are pure functions, ideal
+  * coordKeys / limitedSubset / coordRangesPred are pure functions, ideal
   * ScalaCheck targets). */
 class GridMathPropSpec extends AnyFunSuite {
 
@@ -127,7 +127,7 @@ class GridMathPropSpec extends AnyFunSuite {
     assert(split.forall { case (s, _) => s % 1440 == 0 })
   }
 
-  test("coordRanges: equality filter yields singleton range or empty result") {
+  test("coordRangesPred: equality filter yields singleton range or empty result") {
     val gen = for {
       values <- Gen.nonEmptyListOf(Gen.choose(-50, 50)).map(_.distinct.map(_.toDouble).toArray)
       pick <- Gen.oneOf(true, false)
@@ -135,7 +135,7 @@ class GridMathPropSpec extends AnyFunSuite {
     } yield (values, pick, target)
     check(Prop.forAll(gen) { case (values, pick, target0) =>
       val target = if (pick && values.nonEmpty) values(0) else target0
-      GridMath.coordRanges(Seq(values), Map(0 -> target)) match {
+      GridMath.coordRangesPred(Seq(values), Map(0 -> Seq(GridMath.CoordPred.Eq(target)))) match {
         case Some(r) =>
           r.length == 1 && r(0)._2 == r(0)._1 + 1 && values(r(0)._1) == target
         case None => !values.contains(target)

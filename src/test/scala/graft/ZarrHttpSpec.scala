@@ -32,7 +32,17 @@ class ZarrHttpSpec extends AnyFunSuite {
     dst
   }
 
-  private def withServer[A](root: Path)(f: String => A): A = {
+  /** GET requests per path that a counting [[withServer]] served. */
+  private final class Gets {
+    private val byPath = new java.util.concurrent.ConcurrentHashMap[String, Int]()
+    def add(rel: String): Unit = { byPath.merge(rel, 1, _ + _); () }
+    def apply(rel: String): Int = byPath.getOrDefault(rel, 0)
+  }
+
+  /** Serve `root`'s files. With `gets`, count each GET there and send
+    * what a stamping server sends: Last-Modified (the file's mtime)
+    * and, on HEAD, Content-Length. */
+  private def withServer[A](root: Path, gets: Option[Gets] = None)(f: String => A): A = {
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
     server.createContext("/", { exchange =>
       val rel = exchange.getRequestURI.getPath.stripPrefix("/")
@@ -40,6 +50,13 @@ class ZarrHttpSpec extends AnyFunSuite {
       if (Files.isRegularFile(file)) {
         val bytes = Files.readAllBytes(file)
         val isHead = exchange.getRequestMethod == "HEAD"
+        gets.foreach { g =>
+          if (!isHead) g.add(rel)
+          val h = exchange.getResponseHeaders
+          h.set("Last-Modified", java.time.format.DateTimeFormatter.RFC_1123_DATE_TIME.format(
+            Files.getLastModifiedTime(file).toInstant.atZone(java.time.ZoneOffset.UTC)))
+          if (isHead) h.set("Content-Length", bytes.length.toString)
+        }
         exchange.sendResponseHeaders(200, if (isHead) -1 else bytes.length.toLong)
         if (!isHead) exchange.getResponseBody.write(bytes)
       } else exchange.sendResponseHeaders(404, -1)
@@ -145,6 +162,62 @@ class ZarrHttpSpec extends AnyFunSuite {
       assert(http.schema == local.schema)
       assert(http.orderBy("time", "lon", "lat").collect().map(_.toSeq).toSeq ==
         local.orderBy("time", "lon", "lat").collect().map(_.toSeq).toSeq)
+    }
+  }
+
+  /** A v1 refs document over the v2 fixture copied under `root/src`:
+    * metadata inline, each chunk a whole-object `[url]` ref. */
+  private def wholeRefs(root: Path, url: String, vars: Set[String]): Array[Byte] = {
+    val src = Paths.get("src/test/resources/zarr/synthetic_v2.zarr")
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val doc = mapper.createObjectNode()
+    doc.put("version", 1)
+    val refs = doc.putObject("refs")
+    Files.walk(src).filter(Files.isRegularFile(_)).forEach { f =>
+      val key = src.relativize(f).toString
+      val copy = root.resolve("src").resolve(key)
+      Files.createDirectories(copy.getParent)
+      Files.copy(f, copy, StandardCopyOption.REPLACE_EXISTING)
+      if (!key.contains("/") || vars(key.takeWhile(_ != '/'))) {
+        if (f.getFileName.toString.startsWith(".")) refs.put(key, new String(Files.readAllBytes(f), "UTF-8"))
+        else refs.putArray(key).add(s"$url/src/$key")
+      }
+    }
+    mapper.writeValueAsBytes(doc)
+  }
+
+  test("a kerchunk refs document is read once per version over HTTP") {
+    val root = Files.createTempDirectory("http_refs_memo")
+    val gets = new Gets
+    withServer(root, Some(gets)) { url =>
+      val all = Set("lat", "lon", "time", "temperature", "humidity")
+      val doc = root.resolve("refs.json")
+      Files.write(doc, wholeRefs(root, url, all))
+      val df = spark.read.format("zarr").load(s"$url/refs.json")
+      assert(df.filter(org.apache.spark.sql.functions.col("time").between(2, 4)).count() == 300)
+      assert(gets("refs.json") == 1)
+      // a rewrite with different content (and a later Last-Modified)
+      // is a new version: the next load reads it
+      Files.write(doc, wholeRefs(root, url, all - "humidity"))
+      Files.setLastModifiedTime(doc, java.nio.file.attribute.FileTime.fromMillis(
+        Files.getLastModifiedTime(doc).toMillis + 60000))
+      val again = spark.read.format("zarr").load(s"$url/refs.json")
+      assert(!again.columns.contains("humidity") && df.columns.contains("humidity"))
+      assert(again.count() == 700)
+      assert(gets("refs.json") == 2)
+    }
+  }
+
+  test("sizing a whole-object kerchunk ref issues no GET") {
+    val root = Files.createTempDirectory("http_refs_size")
+    val gets = new Gets
+    withServer(root, Some(gets)) { url =>
+      Files.write(root.resolve("refs.json"),
+        wholeRefs(root, url, Set("lat", "lon", "time", "temperature", "humidity")))
+      val store = graft.sources.zarr.KerchunkStore(s"$url/refs.json")
+      assert(store.sizeOf("temperature/3.0.0").contains(
+        Files.size(root.resolve("src/temperature/3.0.0"))))
+      assert(gets("src/temperature/3.0.0") == 0)
     }
   }
 }

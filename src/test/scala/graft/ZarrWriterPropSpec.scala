@@ -70,16 +70,14 @@ class ZarrWriterPropSpec extends AnyFunSuite {
     assert(res.passed, res.status.toString)
   }
 
-  /** Every object of a store but its metadata documents (an append
-    * re-serializes those through Jackson): data-chunk and
-    * coordinate-chunk objects and `.zstats` sidecars, path → bytes. */
+  /** Every object of a store, path → bytes: metadata documents,
+    * consolidated metadata, data-chunk and coordinate-chunk objects and
+    * `.zstats` sidecars. */
   private def objects(store: String): Map[String, Seq[Byte]] = {
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get(store)
-    val metaDocs = Set(".zarray", ".zattrs", ".zgroup", ".zmetadata", "zarr.json")
     val walk = Files.walk(root)
     try walk.iterator().asScala.filter(Files.isRegularFile(_))
-      .filterNot(p => metaDocs(p.getFileName.toString))
       .map(p => root.relativize(p).toString -> Files.readAllBytes(p).toSeq).toMap
     finally walk.close()
   }
