@@ -6,12 +6,14 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
 import graft.functions.{FloatVecDot, NfcNormalize}
-import graft.sources.zarr.ZarrFoldMerge
+import graft.sources.zarr.{ZarrDriverRead, ZarrFoldMerge}
 
 /** Session extensions: registers graft's codegen'd kernels
-  * ([[graft.functions.Kernel]]) for SQL use, and the planner strategy
-  * that merges a folded Zarr aggregate's partial rows on the driver
-  * ([[graft.sources.zarr.ZarrFoldMerge]]). Activate with
+  * ([[graft.functions.Kernel]]) for SQL use, and the planner strategies
+  * that merge a folded Zarr aggregate's partial rows on the driver
+  * ([[graft.sources.zarr.ZarrFoldMerge]]) and read a one-partition
+  * Zarr scan there when it is collected
+  * ([[graft.sources.zarr.ZarrDriverRead]]). Activate with
   * `.config("spark.sql.extensions", "graft.GraftExtensions")` or
   * `.withExtensions(new GraftExtensions)` — the
   * SparkSessionExtensions injection slot SURVEY.md §4.3 reserves for
@@ -36,6 +38,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectPlannerStrategy(_ => ZarrFoldMerge)
+    e.injectPlannerStrategy(ZarrDriverRead)
     e.injectFunction((
       new FunctionIdentifier("float_vec_dot"),
       new ExpressionInfo(FloatVecDot.getClass.getName, "float_vec_dot"),

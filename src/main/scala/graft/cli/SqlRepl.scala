@@ -365,7 +365,9 @@ object SqlRepl {
 
   /** `\analyze <sql>` — the runtime-metrics counterpart of EXPLAIN
     * ANALYZE in the reference CLI (docs/CLI_REFERENCE.md:455-472):
-    * execute the query, then report each scan's post-run SQL metrics —
+    * execute the query, then report the Spark jobs and tasks it ran
+    * (none for a one-partition Zarr read, which runs on the driver) and
+    * each scan's post-run SQL metrics —
     * the DSv2 custom metrics (zarrBytesRead / zarrChunksDecoded /
     * zarrRowsOut, the rows the scan handed Spark after its folds) plus
     * output rows, and under a folded aggregate a `merge:` line with the
@@ -376,18 +378,19 @@ object SqlRepl {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    import org.apache.spark.sql.graftbridge.JobCount
     import graft.sources.zarr.ZarrFoldMergeExec
     val t0 = System.nanoTime()
     try {
       val df = spark.sql(sql)
-      // execute the REAL plan (collect would also work but hauls the
-      // whole result to the driver; count() would re-plan as an
-      // aggregate and — for metadata-answered zarr COUNTs — report
-      // zero IO for a query that does scan): run the row RDD and
-      // count on the executors, then read the post-run scan metrics
-      val n = withTicker(t0) {
-        df.queryExecution.toRdd.mapPartitions(
-          it => Iterator.single(it.size.toLong)).collect().sum
+      // execute the REAL plan the way the shell's own collect does
+      // (count() would re-plan as an aggregate and — for
+      // metadata-answered zarr COUNTs — report zero IO for a query
+      // that does scan; the row RDD would run a one-partition read as
+      // a task, which a collect does not), then read the post-run
+      // scan metrics
+      val run = withTicker(t0) {
+        JobCount(spark.sparkContext)(df.queryExecution.executedPlan.executeCollect().length)
       }
       // each scan, with the driver-side merge of its partial rows above it
       def scansOf(p: SparkPlan, merge: Option[ZarrFoldMergeExec]): Seq[(BatchScanExec, Option[ZarrFoldMergeExec])] =
@@ -398,7 +401,7 @@ object SqlRepl {
           case b: BatchScanExec => Seq(b -> merge)
           case o => o.children.flatMap(scansOf(_, merge))
         }
-      out(f"$n rows | ${(System.nanoTime() - t0) / 1e9}%.3f s")
+      out(f"${run.value} rows | jobs=${run.jobs} tasks=${run.tasks} | ${(System.nanoTime() - t0) / 1e9}%.3f s")
       val scans = scansOf(df.queryExecution.executedPlan, None)
       if (scans.isEmpty) out("no v2 scans in plan")
       scans.foreach { case (b, merge) =>

@@ -4,10 +4,12 @@ import java.nio.file.{Files, Paths}
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+
+import graft.sources.zarr.ZarrDriverReadExec
 
 /** Zarr-connector differential fuzz dump: run N seeded [[ZarrFuzz]]
   * queries on Spark (zarr grid tables + parquet dimensions), write each
@@ -20,8 +22,14 @@ import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
   * Beyond pass/fail, the runner counts which seeds' physical plans
   * actually exercised each connector pushdown (coordinate ranges, TopN,
   * limit, whole-grid and grouped metadata aggregates, folds in the
-  * scan) and FAILS if any family went unexercised — a fuzz run that
-  * never pushes anything would silently test only the post-scan engine.
+  * scan, one-partition reads on the driver) and FAILS if any family
+  * went unexercised — a fuzz run that never pushes anything would
+  * silently test only the post-scan engine.
+  *
+  * The parquet write executes the plan as RDDs, so every seed also
+  * `collect()`s its query — the path that reads a one-partition scan on
+  * the driver ([[graft.sources.zarr.ZarrDriverRead]]) — and fails when
+  * those rows differ, as a multiset, from the parquet it just wrote.
   *
   * Usage: graft.fuzz.ZarrFuzzRun <sfDir> <outDir> [nSeeds] [seed0]
   */
@@ -36,17 +44,26 @@ object ZarrFuzzRun extends FuzzRunner("zarr-fuzz", ZarrFuzz.grammarVersion, Some
     * their `.zstats` min/max. */
   private[graft] def statsTopN(desc: String): Boolean = desc.contains("(.zstats pruned)")
 
-  /** All DSv2 scan descriptions in the plan, descending through AQE. */
-  private[graft] def scanDescs(plan: SparkPlan): Seq[String] = {
-    val here = plan.collect {
-      case b: BatchScanExec => Seq(b.scan.description())
-      case a: AdaptiveSparkPlanExec => scanDescs(a.executedPlan)
-    }.flatten
-    // collect() does not descend into AdaptiveSparkPlanExec (leaf-like
-    // wrapper); the recursive case above handles one level, and nested
-    // AQE subplans recurse again.
-    here
+  /** Every node of the plan, descending through AQE and its query stages. */
+  private def planNodes(plan: SparkPlan): Seq[SparkPlan] = plan match {
+    case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+    case s: QueryStageExec => s +: planNodes(s.plan)
+    case o => o +: o.children.flatMap(planNodes)
   }
+
+  /** All DSv2 scan descriptions in the plan, descending through AQE. */
+  private[graft] def scanDescs(plan: SparkPlan): Seq[String] =
+    planNodes(plan).collect { case b: BatchScanExec => b.scan.description() }
+
+  /** Rows as a sorted multiset; a float compares by its bits, with
+    * −0.0 folded onto 0.0 (Spark's equality). */
+  private def rowMultiset(rows: Array[Row]): Seq[String] =
+    rows.map(_.toSeq.map {
+      case d: Double => java.lang.Double.doubleToLongBits(if (d == 0.0) 0.0 else d)
+      case f: Float => java.lang.Float.floatToIntBits(if (f == 0.0f) 0.0f else f)
+      case b: Array[Byte] => b.toSeq
+      case v => v
+    }.mkString("|")).sorted.toSeq
 
   protected def lane(spark: SparkSession, sfDir: String, outDir: String, nSeeds: Int): FuzzLane = {
     // oracle relations: grid exports + the sf corpus under one dir
@@ -67,7 +84,9 @@ object ZarrFuzzRun extends FuzzRunner("zarr-fuzz", ZarrFuzz.grammarVersion, Some
       "shard_range" -> 0, "union_agg" -> 0, "union_group_agg" -> 0,
       // grammar v4: partial aggregates and top-N folded in the scan;
       // union reads that answer filters exactly or fold
-      "scan_fold" -> 0, "union_fold" -> 0)
+      "scan_fold" -> 0, "union_fold" -> 0,
+      // seeds whose plan reads a one-partition scan on the driver
+      "driver_read" -> 0)
     new FuzzLane {
       def draw(seed: Long): FuzzCase = {
         val name = ZarrFuzz.name(seed)
@@ -75,7 +94,10 @@ object ZarrFuzzRun extends FuzzRunner("zarr-fuzz", ZarrFuzz.grammarVersion, Some
         FuzzCase(name, sql, sql, () => {
           val df = spark.sql(sql)
           df.write.mode("overwrite").parquet(s"$outDir/$name")
-          val descs = scanDescs(df.queryExecution.executedPlan)
+          // the plan as planned, before AQE re-plans it at the collect below
+          val plan = df.queryExecution.executedPlan
+          if (planNodes(plan).exists(_.isInstanceOf[ZarrDriverReadExec])) markers("driver_read") += 1
+          val descs = scanDescs(plan)
           if (descs.exists(rangePruned)) markers("coord_range") += 1
           if (descs.exists(statsTopN)) markers("topn") += 1
           // a partial aggregate or top-N folded inside the scan
@@ -96,6 +118,11 @@ object ZarrFuzzRun extends FuzzRunner("zarr-fuzz", ZarrFuzz.grammarVersion, Some
           // coordinate pushdown composed over the sharded-v3 read path
           if (sql.contains("grid_e") && descs.exists(rangePruned))
             markers("shard_range") += 1
+          val written = rowMultiset(spark.read.parquet(s"$outDir/$name").collect())
+          val collected = rowMultiset(df.collect())
+          if (collected != written)
+            throw new IllegalStateException(s"collect() returned ${collected.length} rows that differ " +
+              s"from the ${written.length} rows written to parquet")
         })
       }
 

@@ -87,12 +87,21 @@ class ZarrDataSource extends TableProvider
   private def pathOf(options: CaseInsensitiveStringMap): String =
     pathsOf(options).head
 
+  /** The metadata [[inferSchema]] read, for [[getTable]] on the same
+    * path: Spark calls both on one provider instance per `load`, so the
+    * store's metadata is read once per load, never kept across loads. */
+  private var inferred: Option[(String, ZarrStoreMeta)] = None
+
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val path = pathOf(options)
     // A missing/empty target is a pending WRITE: return an empty
     // schema so DataFrameWriter.save() reaches the V1 fallback below
     // (the table carries no SupportsWrite) instead of failing here.
-    if (isStore(path)) ZarrMeta.readStore(path).schema else new StructType()
+    if (isStore(path)) {
+      val meta = ZarrMeta.readStore(path)
+      inferred = Some(path -> meta)
+      meta.schema
+    } else new StructType()
   }
 
   override def getTable(
@@ -113,8 +122,11 @@ class ZarrDataSource extends TableProvider
       new ZarrUnionTable(metas)
     } else {
       val path = paths.head
-      if (isStore(path)) new ZarrTable(ZarrMeta.readStore(path))
-      else new ZarrPendingWriteTable(path, schema, properties.asScala.toMap)
+      inferred.collect { case (`path`, meta) => meta } match {
+        case Some(meta) => new ZarrTable(meta)
+        case None if isStore(path) => new ZarrTable(ZarrMeta.readStore(path))
+        case None => new ZarrPendingWriteTable(path, schema, properties.asScala.toMap)
+      }
     }
   }
 
@@ -857,6 +869,11 @@ class ZarrScan(
 
   private lazy val plannedPartitionCount: Int = planInputPartitions().length
 
+  /** A lone store's scan of at most one partition, not key-grouped:
+    * [[ZarrDriverRead]] reads it on the driver when collected. */
+  private[zarr] def readsOnDriver: Boolean =
+    !union && !keyGrouped && planInputPartitions().length <= 1
+
   override def outputPartitioning(): org.apache.spark.sql.connector.read.partitioning.Partitioning =
     members.head.ranges match {
       case Some(r) if keyGrouped =>
@@ -1402,6 +1419,10 @@ class ZarrAggScan(metas: Seq[ZarrStoreMeta], agg: Aggregation) extends Scan with
     else metas.flatMap(grouped).toArray
 
   override def planInputPartitions(): Array[InputPartition] = partitions
+
+  /** A lone store's answer in at most one partition: [[ZarrDriverRead]]
+    * reads it on the driver when collected. */
+  private[zarr] def readsOnDriver: Boolean = metas.length == 1 && partitions.length <= 1
 
   /** The one ungrouped row, combined over the members: counts and sums
     * add, bounds combine, AVG = Σ totals / Σ rows. */

@@ -214,6 +214,28 @@ class SqlReplSpec extends AnyFunSuite {
     assert(out(scan + 1).matches("merge: partialRows=4  mergeTime=[0-9.]+ ms"), out.mkString("\n"))
   }
 
+  test("\\analyze counts jobs and tasks: none for a one-partition slice, one job for a scan of several") {
+    import spark.implicits._
+    val store = java.nio.file.Files.createTempDirectory("repl_jobs").resolve("j.zarr").toString
+    (for (t <- 0L until 4L; x <- 0L until 5L) yield (t, x, (t * 5 + x).toFloat * 0.5f))
+      .toDF("t", "x", "v").write.format("zarr").option("coords", "t,x").option("chunkOuter", "1")
+      .mode("overwrite").save(store)
+    // read options reach the scan through a view (a table's OPTIONS do not)
+    spark.read.format("zarr").option("minRowsPerPartition", "1").option("maxRowsPerPartition", "5")
+      .load(store).createOrReplaceTempView("repl_j")
+    val out = drive(
+      "\\analyze SELECT x, v FROM repl_j WHERE t = 2;",
+      "\\analyze SELECT t, x, v FROM repl_j WHERE v > 1.0;",
+      "quit")
+    spark.catalog.dropTempView("repl_j")
+    assert(out.exists(_.matches("5 rows \\| jobs=0 tasks=0 \\| [0-9.]+ s")), out.mkString("\n"))
+    assert(out.exists(_.matches("17 rows \\| jobs=1 tasks=4 \\| [0-9.]+ s")), out.mkString("\n"))
+    // the scan's metrics come from the driver read as from a task
+    val scans = out.filter(_.startsWith("scan ZarrScan"))
+    assert(scans.length == 2 && scans.forall("zarrBytesRead=(\\d+)".r.findFirstMatchIn(_)
+      .exists(_.group(1).toLong > 0)), out.mkString("\n"))
+  }
+
   test("EXPLAIN ANALYZE / EXPLAIN VERBOSE SQL dialects work like the reference CLI") {
     val store = java.nio.file.Paths.get("src/test/resources/zarr/synthetic_v3.zarr")
       .toAbsolutePath.toString

@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -10,7 +7,7 @@ import org.apache.spark.sql.execution.aggregate.HashAggregateExec
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.ListenerDrain
+import org.apache.spark.sql.graftbridge.JobCount
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.zarr.ZarrFoldMergeExec
@@ -36,18 +33,11 @@ class ZarrFoldMergeSpec extends AnyFunSuite {
   private def shuffles(df: DataFrame) = plan(df).collect { case s: ShuffleExchangeExec => s }
 
   /** Jobs `f` runs, counted by a listener in their own job group. */
-  private def jobs(f: => Unit): Int = {
-    val group = s"fold-merge-${System.nanoTime()}"
-    val n = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) n.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "fold merge job count")
-    try { f; ListenerDrain(sc); n.get } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
-  }
+  private def jobs(f: => Unit): Int = JobCount(spark.sparkContext)(f).jobs
+
+  /** Input partitions the plan's scans planned. */
+  private def partitions(df: DataFrame): Int =
+    plan(df).collect { case b: BatchScanExec => b.inputPartitions.length }.sum
 
   private def withThreshold[A](v: String)(f: => A): A = {
     val key = "spark.sql.autoBroadcastJoinThreshold"
@@ -63,16 +53,29 @@ class ZarrFoldMergeSpec extends AnyFunSuite {
       "empty range" -> d.where(col("t") === 99L).agg(count(lit(1)), sum("v"), max("k")),
       "empty range, grouped" -> d.where(col("t") === 99L).groupBy("x").agg(sum("v")))
 
+  /** Each fold merges on the driver with the collected rows' answer,
+    * after one job for a scan of several partitions and none for a scan
+    * of at most one, which [[graft.sources.zarr.ZarrDriverRead]] reads
+    * on the driver. `plans` checks each shape's partition count. */
+  private def checkFolds(z: DataFrame)(plans: (String, Int) => Boolean): Unit =
+    for (((what, got), (_, want)) <- folds(z).zip(folds(local(z)))) {
+      assert(scanDesc(got).contains("partialAgg="), s"$what: ${scanDesc(got)}")
+      val expected = rowsOf(want)
+      val parts = partitions(got)
+      assert(plans(what, parts), s"$what: $parts partitions")
+      assert(jobs(assert(rowsOf(got) == expected, what)) == (if (parts <= 1) 0 else 1), s"$what: $parts partitions")
+      assert(merges(got).length == 1, s"$what: ${got.queryExecution.executedPlan}")
+      assert(sparkAggs(got).isEmpty && shuffles(got).isEmpty, s"$what: ${got.queryExecution.executedPlan}")
+    }
+
   for ((label, path) <- Seq("v2" -> (() => v2), "v3 sharded" -> (() => v3), "edge grid" -> (() => edge))) {
     test(s"$label: every fold merges on the driver in one job, with the collected rows' answer") {
-      val z = zarr(path())
-      for (((what, got), (_, want)) <- folds(z).zip(folds(local(z)))) {
-        assert(scanDesc(got).contains("partialAgg="), s"$what: ${scanDesc(got)}")
-        val expected = rowsOf(want)
-        assert(jobs(assert(rowsOf(got) == expected, what)) == 1, what)
-        assert(merges(got).length == 1, s"$what: ${got.queryExecution.executedPlan}")
-        assert(sparkAggs(got).isEmpty && shuffles(got).isEmpty, s"$what: ${got.queryExecution.executedPlan}")
-      }
+      // every scan but an empty range's plans two or more partitions
+      checkFolds(zarr(path()))((what, n) => if (what.startsWith("empty range")) n <= 1 else n >= 2)
+    }
+
+    test(s"$label: every fold over a one-partition scan merges with no job") {
+      checkFolds(spark.read.format("zarr").load(path()))((_, n) => n <= 1)
     }
   }
 

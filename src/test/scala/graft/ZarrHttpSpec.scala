@@ -119,6 +119,23 @@ class ZarrHttpSpec extends AnyFunSuite {
     }
   }
 
+  test("a load reads the store's metadata once; a user schema still reads") {
+    val root = consolidatedCopy()
+    val gets = new Gets
+    withServer(root, Some(gets)) { url =>
+      // readStore fetches every coordinate array; inferSchema and
+      // getTable share one read
+      val df = spark.read.format("zarr").load(url)
+      assert(gets("time/0") == 1 && gets("lat/0") == 1, (gets("time/0"), gets("lat/0")))
+      // per load, not per JVM: the next load reads it again
+      val again = spark.read.format("zarr").load(url)
+      assert(gets("time/0") == 2 && gets("lat/0") == 2, (gets("time/0"), gets("lat/0")))
+      val supplied = spark.read.format("zarr").schema(df.schema).load(url)
+      assert(supplied.schema == df.schema && gets("time/0") == 3)
+      assert(supplied.count() == 700 && again.count() == 700)
+    }
+  }
+
   test("http store without consolidated metadata fails with guidance") {
     val src = Paths.get("src/test/resources/zarr/synthetic_v2.zarr")
     withServer(src) { url =>
