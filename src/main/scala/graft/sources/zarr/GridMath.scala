@@ -118,7 +118,10 @@ object GridMath {
     *
     * @param minRowsPerPartition merge adjacent outer-chunk slices until
     *        each partition has at least this many rows (avoids
-    *        per-partition overhead dominating on small stores).
+    *        per-partition overhead dominating on small stores), as long
+    *        as the merged slice stays within `maxRowsPerPartition`.
+    * @param maxRowsPerPartition the split cap: a slice of more rows is
+    *        cut at inner-chunk boundaries.
     */
   def partitionSlices(
       ranges: Ranges,
@@ -172,12 +175,15 @@ object GridMath {
       // advance to the next outer chunk boundary at or after outer+1
       val nextBoundary = math.min(o1, ((outer / outerChunkSize) + 1) * outerChunkSize)
       var endRow = sliceStartRow + (nextBoundary - outer) * innerRows
-      // merge forward until the slice is big enough
+      // merge forward whole outer chunks until the slice is big enough,
+      // never past the cap: partition boundaries stay chunk boundaries
       var nb = nextBoundary
-      while (endRow - sliceStartRow < minRowsPerPartition && nb < o1 && endRow < total) {
+      var fits = true
+      while (fits && endRow - sliceStartRow < minRowsPerPartition && nb < o1 && endRow < total) {
         val nb2 = math.min(o1, nb + outerChunkSize)
-        endRow += (nb2 - nb) * innerRows
-        nb = nb2
+        val grown = endRow + (nb2 - nb) * innerRows
+        fits = math.min(grown, total) - sliceStartRow <= maxRowsPerPartition
+        if (fits) { endRow = grown; nb = nb2 }
       }
       val capped = math.min(endRow, total)
       if (capped - sliceStartRow > maxRowsPerPartition) {

@@ -111,9 +111,17 @@ class ZarrColumnarReader(p: ZarrInputPartition, batchSize: Int = 4096)
 
     // Row-band LRU: the odometer revisits inner-dimension units once
     // per grid row; holding one band avoids unit-extent× re-decodes
-    // (see ChunkIO.bandBudget).
+    // (see ChunkIO.bandBudget). Keyed by the unit's C-order ordinal
+    // over the array's unit grid, so a hit builds no key object.
     private val unitBytes = ChunkIO.unitBytes(unit, meta.dtype.size)
-    private val band = new ByteLru[Seq[Long], AnyRef](ChunkIO.bandBudget(unit, meta.dtype.size, p.ranges))
+    private val band = new ByteLru[Long, AnyRef](ChunkIO.bandBudget(unit, meta.dtype.size, p.ranges))
+    private val unitGrid: Array[Long] = Array.tabulate(nDims)(d => (meta.shape(d) + unit(d) - 1) / unit(d))
+    private def ordinal(key: Array[Long]): Long = {
+      var o = 0L
+      var d = 0
+      while (d < nDims) { o = o * unitGrid(d) + key(d); d += 1 }
+      o
+    }
 
     // Sharded arrays: the encoded shards the band spans (null = absent
     // shard object), so each shard is fetched at most once per
@@ -215,18 +223,19 @@ class ZarrColumnarReader(p: ZarrInputPartition, batchSize: Int = 4096)
         d += 1
       }
       if (changed) {
-        val key = chunkIdx.toSeq
-        val hit = band.get(key)
+        val ord = ordinal(chunkIdx)
+        val hit = band.get(ord)
         if (hit.isDefined) chunk = hit.get
         else {
           // bytesRead reported from inside the read (no extra sizeOf
           // round trip per chunk on remote stores)
+          val key = chunkIdx.toSeq
           chunk = fetch(key)
           chunksDecoded += 1
-          band.put(key, chunk, unitBytes)
+          band.put(ord, chunk, unitBytes)
           if (p.prefetch && pending == null) {
             val nk = nextChunkKey(key)
-            if (nk != null && band.get(nk).isEmpty) {
+            if (nk != null && band.get(ordinal(nk.toArray)).isEmpty) {
               // the pool thread must not touch this task's bytesRead
               // var; it accumulates into an atomic the consumer drains
               val sz = new java.util.concurrent.atomic.AtomicLong()
@@ -311,28 +320,28 @@ class ZarrColumnarReader(p: ZarrInputPartition, batchSize: Int = 4096)
     var k = 0
     sArr match {
       case a: Array[Float] =>
-        val (lo, hi, nan) = (r.dlo, r.dhi, r.nan)
+        val lo = r.dlo; val hi = r.dhi; val nan = r.nan
         while (k < n) {
           val i = if (all) k else sel(k); val x = a(off + i)
           if (x >= lo && x <= hi || nan && x != x) { sel(m) = i; m += 1 }
           k += 1
         }
       case a: Array[Double] =>
-        val (lo, hi, nan) = (r.dlo, r.dhi, r.nan)
+        val lo = r.dlo; val hi = r.dhi; val nan = r.nan
         while (k < n) {
           val i = if (all) k else sel(k); val x = a(off + i)
           if (x >= lo && x <= hi || nan && x != x) { sel(m) = i; m += 1 }
           k += 1
         }
       case a: Array[Long] =>
-        val (lo, hi) = (r.lo, r.hi)
+        val lo = r.lo; val hi = r.hi
         while (k < n) {
           val i = if (all) k else sel(k); val x = a(off + i)
           if (x >= lo && x <= hi) { sel(m) = i; m += 1 }
           k += 1
         }
       case a: Array[Int] =>
-        val (lo, hi) = (r.lo, r.hi)
+        val lo = r.lo; val hi = r.hi
         while (k < n) {
           val i = if (all) k else sel(k); val x = a(off + i)
           if (x >= lo && x <= hi) { sel(m) = i; m += 1 }

@@ -5,6 +5,7 @@ import java.util.OptionalLong
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -12,6 +13,7 @@ import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, 
 import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Aggregation, Avg, Count, CountStar, Max, Min, Sum}
 import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric}
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.execution.streaming.Sink
 import org.apache.spark.sql.connector.read.colstats.ColumnStatistics
 import org.apache.spark.sql.sources.{EqualNullSafe, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, IsNotNull, LessThan, LessThanOrEqual}
@@ -41,9 +43,9 @@ import ZarrDataSource.{colName, isStore, pushedCol}
   *     form of the reference's two optimizer rules
   *     (/root/reference/src/optimizer/count_optimization.rs,
   *     minmax_optimization.rs)
-  *   - one InputPartition per outer-dimension chunk slice (the
-  *     reference's single-partition scan is its main scale gap;
-  *     SURVEY.md §7 step 7)
+  *   - InputPartitions of whole outer-dimension chunk slices, sized
+  *     as Spark sizes file splits (the reference's single-partition
+  *     scan is its main scale gap; SURVEY.md §7 step 7)
   */
 class ZarrDataSource extends TableProvider
     with org.apache.spark.sql.sources.DataSourceRegister
@@ -109,6 +111,7 @@ class ZarrDataSource extends TableProvider
       partitioning: Array[Transform],
       properties: java.util.Map[String, String]): Table = {
     val paths = pathsOf(new CaseInsensitiveStringMap(properties))
+    val tableOptions = properties.asScala.toMap
     if (paths.length > 1) {
       // multi-store UNION read (year-per-store archives): every path
       // must be an existing store and all schemas must agree
@@ -119,13 +122,13 @@ class ZarrDataSource extends TableProvider
       metas.tail.foreach(m => require(m.schema == metas.head.schema,
         s"Zarr union read: schema of ${m.path} (${m.schema.simpleString}) differs " +
           s"from ${metas.head.path} (${metas.head.schema.simpleString})"))
-      new ZarrUnionTable(metas)
+      new ZarrUnionTable(metas, tableOptions)
     } else {
       val path = paths.head
       inferred.collect { case (`path`, meta) => meta } match {
-        case Some(meta) => new ZarrTable(meta)
-        case None if isStore(path) => new ZarrTable(ZarrMeta.readStore(path))
-        case None => new ZarrPendingWriteTable(path, schema, properties.asScala.toMap)
+        case Some(meta) => new ZarrTable(meta, tableOptions)
+        case None if isStore(path) => new ZarrTable(ZarrMeta.readStore(path), tableOptions)
+        case None => new ZarrPendingWriteTable(path, schema, tableOptions)
       }
     }
   }
@@ -215,6 +218,15 @@ object ZarrDataSource {
     * a column (the metadata-only aggregate scans). */
   private[zarr] def pushedCol(e: org.apache.spark.sql.connector.expressions.Expression): String =
     colName(e).getOrElse(throw new IllegalStateException(s"pushed expression $e is not a column"))
+
+  /** A scan's read options: the table's own (`getTable`'s properties:
+    * a catalog table's `OPTIONS (…)`, or the `load` options), then the
+    * query's, the query's winning. */
+  private[zarr] def scanOptions(table: Map[String, String],
+      query: CaseInsensitiveStringMap): CaseInsensitiveStringMap = {
+    def lower(m: Map[String, String]) = m.map { case (k, v) => k.toLowerCase(java.util.Locale.ROOT) -> v }
+    new CaseInsensitiveStringMap((lower(table) ++ lower(query.asScala.toMap)).asJava)
+  }
 
   /** The V1Write behind CTAS, `INSERT OVERWRITE` and `INSERT INTO`:
     * `defaults` (a table's DDL options, or an existing store's
@@ -344,7 +356,8 @@ class ZarrPendingWriteTable(path: String, writeSchema: StructType,
     ZarrDataSource.writeBuilder(path, tableProps, info)
 }
 
-class ZarrTable(meta: ZarrStoreMeta) extends Table with SupportsRead
+class ZarrTable(meta: ZarrStoreMeta, tableOptions: Map[String, String] = Map.empty)
+    extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite {
   override def name(): String = s"zarr:${meta.path}"
   override def schema(): StructType = meta.schema
@@ -370,7 +383,7 @@ class ZarrTable(meta: ZarrStoreMeta) extends Table with SupportsRead
     m
   }
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ZarrScanBuilder(Seq(meta), options)
+    new ZarrScanBuilder(Seq(meta), ZarrDataSource.scanOptions(tableOptions, options))
 }
 
 /** UNION ALL of several same-schema stores — the "archive split into
@@ -379,13 +392,14 @@ class ZarrTable(meta: ZarrStoreMeta) extends Table with SupportsRead
   * filter prunes each store's chunk ranges independently, so a member
   * with no matching coordinates plans zero partitions — store-level
   * pruning for free). */
-class ZarrUnionTable(metas: Seq[ZarrStoreMeta]) extends Table with SupportsRead {
+class ZarrUnionTable(metas: Seq[ZarrStoreMeta], tableOptions: Map[String, String] = Map.empty)
+    extends Table with SupportsRead {
   override def name(): String = s"zarr-union:${metas.map(_.path).mkString(",")}"
   override def schema(): StructType = metas.head.schema
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ZarrScanBuilder(metas, options)
+    new ZarrScanBuilder(metas, ZarrDataSource.scanOptions(tableOptions, options))
 }
 
 /** Pushdown into one store or a UNION ALL of same-schema stores: a
@@ -637,16 +651,20 @@ class ZarrScanBuilder(metas: Seq[ZarrStoreMeta], options: CaseInsensitiveStringM
     }
   }
 
-  /** The split cap of a partition: `slices` plans no partition of more
-    * rows. */
-  private val maxRowsPerPartition = options.getLong("maxRowsPerPartition", 262144L)
+  /** Explicit partition sizes in rows: the merge floor and the split
+    * cap. Unset, [[ZarrScan]] sizes partitions by the bytes they read. */
+  private val minRowsPerPartition = Option(options.get("minRowsPerPartition")).map(_.toLong)
+  private val maxRowsPerPartition = Option(options.get("maxRowsPerPartition")).map(_.toLong)
+
+  /** The most groups a partition folds: the explicit split cap, else
+    * 262,144. */
+  private val maxFoldGroups = maxRowsPerPartition.getOrElse(262144L)
 
   /** COUNT, MIN/MAX of numeric columns and SUM of float columns (AVG
     * arrives split into SUM and COUNT), grouped by numeric coordinates,
     * without DISTINCT. A partition folds into one slot per group its
-    * rows can reach, so the groups may number at most the split cap in
-    * every member: the slots then take no more room than the
-    * partition's rows. */
+    * rows can reach, so the groups may number at most
+    * [[maxFoldGroups]] in every member. */
   private def partialAgg(aggregation: Aggregation): Option[AggFold] = {
     if (fillAsNull || limit.nonEmpty || offset != 0L) return None
     def numericCol(n: String) = types.get(n).exists(CellRange.numeric)
@@ -655,7 +673,7 @@ class ZarrScanBuilder(metas: Seq[ZarrStoreMeta], options: CaseInsensitiveStringM
     val groupsOk = groups.forall(_.isDefined) && names.distinct.length == names.length &&
       names.forall(n => meta.coordNames.contains(n) && numericCol(n)) &&
       metas.forall(m => names.map(n => m.coords(m.coordNames.indexOf(n)).length.toLong)
-        .foldLeft(1L)((a, b) => math.min(a * b, maxRowsPerPartition + 1)) <= maxRowsPerPartition)
+        .foldLeft(1L)((a, b) => math.min(a * b, maxFoldGroups + 1)) <= maxFoldGroups)
     val aggs = aggregation.aggregateExpressions().toSeq.map {
       case _: CountStar => Some(FoldCount)
       case c: Count if !c.isDistinct => colName(c.column).filter(numericCol).map(_ => FoldCount)
@@ -729,7 +747,7 @@ class ZarrScanBuilder(metas: Seq[ZarrStoreMeta], options: CaseInsensitiveStringM
     case Some(agg) => new ZarrAggScan(metas, agg)
     case None =>
       new ZarrScan(metas, requiredSchema, pushdowns, fold, limit,
-        options.getLong("minRowsPerPartition", 65536),
+        minRowsPerPartition,
         fillAsNull,
         options.getInt("chunkCacheEntries", 0),
         offset,
@@ -744,7 +762,8 @@ class ZarrScanBuilder(metas: Seq[ZarrStoreMeta], options: CaseInsensitiveStringM
         keyByOuter = options.getBoolean("partitionByOuter", false),
         maxPartitions = options.getInt("maxPartitions", 32768),
         topNVar = topNVar,
-        maxSlabsPerTrigger = options.getLong("maxSlabsPerTrigger", 0L))
+        maxSlabsPerTrigger = options.getLong("maxSlabsPerTrigger", 0L),
+        session = SparkSession.active)
   }
 }
 
@@ -759,11 +778,14 @@ class ZarrScan(
     /** What every partition folds its passing cells into, if anything. */
     fold: Option[ScanFold],
     limit: Option[Long],
-    minRowsPerPartition: Long,
+    /** Explicit merge floor and split cap in rows (read options
+      * `minRowsPerPartition`/`maxRowsPerPartition`); each one unset is
+      * Spark's file split size over the scan's bytes per row. */
+    minRowsPerPartition: Option[Long],
     fillAsNull: Boolean = false,
     chunkCacheEntries: Int = 0,
     offset: Long = 0L,
-    maxRowsPerPartition: Long = 262144L,
+    maxRowsPerPartition: Option[Long] = None,
     prefetch: Boolean = false,
     startingOffsetLatest: Boolean = false,
     keyByOuter: Boolean = false,
@@ -775,7 +797,9 @@ class ZarrScan(
     /** ORDER BY <data var> [DESC] LIMIT n — `.zstats` TopN pruning. */
     topNVar: Option[(String, Boolean, Int)] = None,
     /** Streaming admission control: outer slabs per micro-batch. */
-    maxSlabsPerTrigger: Long = 0L)
+    maxSlabsPerTrigger: Long = 0L,
+    /** The session whose file-split settings size the partitions. */
+    @transient session: SparkSession)
     extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeV2Filtering
     with SupportsReportPartitioning with SupportsReportOrdering {
@@ -924,9 +948,10 @@ class ZarrScan(
     if (pushdown.exact.nonEmpty)
       throw new IllegalStateException(s"Exact filters pushed into a micro-batch scan: ${pushdown.exact}")
     new ZarrMicroBatchStream(meta.path, requiredSchema, pushdown.coordBounds,
-      minRowsPerPartition, fillAsNull, chunkCacheEntries, prefetch,
+      minRowsPerPartition.getOrElse(ZarrMicroBatchStream.minRowsPerPartition),
+      fillAsNull, chunkCacheEntries, prefetch,
       startFromLatest = startingOffsetLatest,
-      maxRowsPerPartition = maxRowsPerPartition,
+      maxRowsPerPartition = maxRowsPerPartition.getOrElse(ZarrMicroBatchStream.maxRowsPerPartition),
       maxSlabsPerTrigger = maxSlabsPerTrigger)
   }
 
@@ -955,8 +980,15 @@ class ZarrScan(
     cachedPartitions
   }
 
+  /** Partitions are sized as Spark sizes file splits
+    * (`FilePartition.maxSplitBytes`): the bytes the scan reads, over
+    * every member, spread across the session's cores
+    * (`spark.sql.files.minPartitionNum`, else the leaf-node default
+    * parallelism), at least `spark.sql.files.openCostInBytes` and at
+    * most `spark.sql.files.maxPartitionBytes` per partition. */
   private def computePartitions(): Array[InputPartition] = {
-    val parts = members.flatMap(_.partitions).toArray
+    val splitBytes = FilePartition.maxSplitBytes(session, members.map(_.selectedBytes).sum)
+    val parts = members.flatMap(_.partitions(splitBytes)).toArray
     // an ungrouped aggregate has exactly one row even over no rows:
     // Spark merges partial COUNTs with SUM, which no rows would make NULL
     if (parts.isEmpty && aggFold.exists(_.groupBy.isEmpty))
@@ -1043,9 +1075,27 @@ class ZarrScan(
         outCols = if (aggFold.isDefined) 0 else requiredSchema.length,
         rowLimit = if (cellPreds.nonEmpty) limit.getOrElse(-1L) else -1L)
 
-    def partitions: Array[InputPartition] = ranges.map(slices).getOrElse(Array.empty[InputPartition])
+    /** Decoded bytes of one row of the columns the reader reads (at
+      * least 1: a read of no column still walks its rows). */
+    private lazy val bytesPerRow: Long =
+      math.max(1L, readNames.map(n => meta.schema(n).dataType.defaultSize.toLong).sum)
 
-    private def slices(r: GridMath.Ranges): Array[InputPartition] = {
+    /** A LIMIT under a data-variable predicate counts emitted rows in
+      * each partition, so it cannot clip the row space. */
+    private def rowSpaceLimit: Option[Long] = if (cellPreds.isEmpty) limit else None
+
+    /** The rows the partitions cover before `.zstats` pruning. */
+    private def selectedRows(r: GridMath.Ranges): Long =
+      rowSpaceLimit.map(math.min(_, GridMath.totalRows(r))).getOrElse(GridMath.totalRows(r))
+
+    def selectedBytes: Long = ranges.map(selectedRows(_) * bytesPerRow).getOrElse(0L)
+
+    /** Partitions of at most `splitBytes` each, unless the read options
+      * set the rows. */
+    def partitions(splitBytes: Long): Array[InputPartition] =
+      ranges.map(slices(_, math.max(1L, splitBytes / bytesPerRow))).getOrElse(Array.empty[InputPartition])
+
+    private def slices(r: GridMath.Ranges, splitRows: Long): Array[InputPartition] = {
       val template = partition(r)
       if (keyGrouped) {
         // one partition per outer index, tagged with its coordinate
@@ -1063,25 +1113,20 @@ class ZarrScan(
             new GenericInternalRow(Array[Any](key))): InputPartition
         }.toArray
       } else {
-      // a LIMIT under a data-variable predicate counts emitted rows in
-      // each partition, so it cannot clip the row space
-      val rowSpaceLimit = if (cellPreds.isEmpty) limit else None
       // partition-count ceiling: when the selected row space divided
       // by the row cap would exceed maxPartitions, raise BOTH the
       // merge floor and the split cap to the per-partition target —
       // a 10^12-row grid plans ~maxPartitions chunk-aligned slices,
       // not millions
-      val selected = rowSpaceLimit
-        .map(math.min(_, GridMath.totalRows(r))).getOrElse(GridMath.totalRows(r))
+      val selected = selectedRows(r)
       val target =
         if (maxPartitions > 0) (selected + maxPartitions - 1) / maxPartitions else 0L
       val extents = meta.chunkExtents
       GridMath.partitionSlices(r, extents.head, rowSpaceLimit,
-        math.max(minRowsPerPartition, target), innerChunks = extents,
-        // split cap at 2× the merge floor: a merge that lands between
-        // target and 2×target stays one partition instead of
-        // re-splitting to per-outer-step slices
-        maxRowsPerPartition = math.max(maxRowsPerPartition, 2 * target))
+        math.max(minRowsPerPartition.getOrElse(splitRows), target), innerChunks = extents,
+        // split cap at 2× the raised floor: slices merge up to the
+        // target and stop short of twice it
+        maxRowsPerPartition = math.max(maxRowsPerPartition.getOrElse(splitRows), 2 * target))
         // pushed OFFSET clips the leading rows of the (deterministic,
         // row-major) row space; slices are global row-id ranges, so a
         // plain clip is exact

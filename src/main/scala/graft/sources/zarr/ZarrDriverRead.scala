@@ -25,8 +25,10 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
   * [[ZarrFoldMergeExec]], a broadcast build side) then reads the one
   * partition on its own thread instead of launching a one-task job;
   * every other parent executes the wrapped plan as before. One
-  * partition holds at most the split cap (`maxRowsPerPartition`), the
-  * work of the single task it replaces. Prior art: Spark's
+  * partition reads at most Spark's file split size
+  * (`FilePartition.maxSplitBytes`), or the explicit
+  * `maxRowsPerPartition`: the work of the single task it replaces.
+  * Prior art: Spark's
   * `LocalTableScanExec.executeCollect`, Hive's fetch-task conversion. */
 final case class ZarrDriverRead(session: SparkSession) extends SparkStrategy {
   private lazy val v2 = new DataSourceV2Strategy(session.asInstanceOf[org.apache.spark.sql.classic.SparkSession])

@@ -34,7 +34,11 @@ final case class ZarrOffset(outer: Long) extends Offset {
   * (time) dimension must see values that did not exist when the
   * stream started. Filters stay Inexact (Spark re-applies them), so
   * the re-evaluated bounding ranges only need to be a superset per
-  * batch. */
+  * batch.
+  *
+  * A micro-batch keeps a row-based split (see the companion), not the
+  * batch scan's byte-sized one: a batch covers only the slabs appended
+  * since the last trigger. */
 class ZarrMicroBatchStream(
     path: String,
     requiredSchema: StructType,
@@ -44,7 +48,7 @@ class ZarrMicroBatchStream(
     chunkCacheEntries: Int,
     prefetch: Boolean,
     startFromLatest: Boolean,
-    maxRowsPerPartition: Long = 262144L,
+    maxRowsPerPartition: Long = ZarrMicroBatchStream.maxRowsPerPartition,
     /** Admission control: at most this many outer slabs per
       * micro-batch (option `maxSlabsPerTrigger`). A new consumer
       * following a decade-deep archive must backfill in bounded
@@ -199,4 +203,12 @@ class ZarrMicroBatchStream(
 
   override def toString: String =
     s"ZarrMicroBatchStream(path=$path, preds=${coordPreds.size})"
+}
+
+object ZarrMicroBatchStream {
+  /** A micro-batch's partition sizes in rows when the read options set
+    * none: slabs merge to at least the floor, and a partition holds at
+    * most the cap. */
+  val minRowsPerPartition = 65536L
+  val maxRowsPerPartition = 262144L
 }

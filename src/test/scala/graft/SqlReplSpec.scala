@@ -220,7 +220,6 @@ class SqlReplSpec extends AnyFunSuite {
     (for (t <- 0L until 4L; x <- 0L until 5L) yield (t, x, (t * 5 + x).toFloat * 0.5f))
       .toDF("t", "x", "v").write.format("zarr").option("coords", "t,x").option("chunkOuter", "1")
       .mode("overwrite").save(store)
-    // read options reach the scan through a view (a table's OPTIONS do not)
     spark.read.format("zarr").option("minRowsPerPartition", "1").option("maxRowsPerPartition", "5")
       .load(store).createOrReplaceTempView("repl_j")
     val out = drive(

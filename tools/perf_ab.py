@@ -3,7 +3,7 @@
 working tree.
 
     python3 tools/perf_ab.py [--base REV] [--pairs 10] [--workload grid_scan ...]
-                             [--seed 5] [--seconds 15]
+                             [--seed 5] [--seconds 15] [--trace]
 
 The base commit (default: HEAD when the tree has uncommitted changes, else
 HEAD's parent) is extracted with `git archive` into the temp dir (--workdir),
@@ -14,6 +14,10 @@ workload and end-to-end metric it prints each side's median and quartiles,
 how many pairs the working tree won (by the metric's direction in
 BENCHMARK.json), and whether the medians differ by more than the base's
 interquartile range.
+
+With --trace it then runs one traced run (--trace 1) per side at --seconds 1,
+where both sides run the same op list (two whole rounds), and prints every
+per-layer metric of BENCHMARK.json for base and change.
 """
 import argparse
 import json
@@ -42,9 +46,9 @@ def extract(rev, workdir):
     return sha, dest
 
 
-def run(tree, workload, seed, seconds):
+def run(tree, workload, seed, seconds, trace=0):
     out = subprocess.run([sys.executable, "perfbench/run.py", "--workload", workload,
-                          "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
+                          "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)],
                          cwd=tree, capture_output=True, text=True)
     lines = [l for l in out.stdout.splitlines() if l.startswith("{")]
     if not lines:
@@ -68,6 +72,8 @@ def main():
     ap.add_argument("--workload", nargs="+", default=None)
     ap.add_argument("--seed", type=int, default=5)
     ap.add_argument("--seconds", type=int, default=15)
+    ap.add_argument("--trace", action="store_true",
+                    help="also print each per-layer metric of one traced run per side (--seconds 1)")
     ap.add_argument("--workdir", default=tempfile.gettempdir(),
                     help="where the base commit is extracted (default: the temp dir)")
     a = ap.parse_args()
@@ -93,7 +99,7 @@ def main():
                       + ", ".join(f"{k}={v:.4g}" for k, v in m.items()), flush=True)
         print(f"\n{w}: {a.pairs} pairs, seed {a.seed}, --seconds {a.seconds}")
         print(f"  {'metric':<20} {'base q1/med/q3':>32} {'change q1/med/q3':>32} {'wins':>6}  beyond IQR")
-        for metric, direction in better.items():
+        for metric, direction in (better.items() if a.pairs else ()):
             b = [m[metric] for m in base]
             c = [m[metric] for m in change]
             wins = sum((y < x) if direction == "lower" else (y > x) for x, y in zip(b, c))
@@ -102,6 +108,16 @@ def main():
             fmt = lambda q: "/".join(f"{v:.4g}" for v in q)
             print(f"  {metric:<20} {fmt(bq):>32} {fmt(cq):>32} {wins:>3}/{a.pairs}  {beyond}")
         print(flush=True)
+        if a.trace:
+            traced = {side: run(tree, w, a.seed, 1, trace=1)
+                      for side, tree in (("base", base_tree), ("change", ROOT))}
+            print(f"{w}: one traced run per side, seed {a.seed}, --seconds 1")
+            print(f"  {'metric':<40} {'base':>16} {'change':>16}")
+            for m in bench["per_layer"]:
+                name = m["name"]
+                vals = [traced[side].get(name) for side in ("base", "change")]
+                print(f"  {name:<40} " + " ".join(f"{'-' if v is None else f'{v:.6g}':>16}" for v in vals))
+            print(flush=True)
 
 
 if __name__ == "__main__":
