@@ -32,23 +32,21 @@ object ChunkCodec {
     * absolute offset per block) precedes the compressed blocks, and
     * each block is one or more `[int32 csize][payload]` streams where
     * `csize == uncompressed` marks a stored-raw stream. Byte-shuffle
-    * is applied per block and undone after decompression. The frame
-    * is `frame[off, off + len)`; offsets inside it are frame-relative.
+    * is applied per block and undone after decompression.
     */
-  def bloscDecompress(frame: Array[Byte], off: Int = 0, len: Int = -1): Array[Byte] = {
-    val end = if (len < 0) frame.length else off + len
-    require(end - off >= 16, s"Blosc frame too short: ${end - off}")
+  def bloscDecompress(frame: Array[Byte]): Array[Byte] = {
+    require(frame.length >= 16, s"Blosc frame too short: ${frame.length}")
     val hdr = ByteBuffer.wrap(frame).order(ByteOrder.LITTLE_ENDIAN)
-    val flags = frame(off + 2) & 0xff
-    val typesize = frame(off + 3) & 0xff
-    val nbytes = hdr.getInt(off + 4)
-    val blocksize0 = hdr.getInt(off + 8)
+    val flags = frame(2) & 0xff
+    val typesize = frame(3) & 0xff
+    val nbytes = hdr.getInt(4)
+    val blocksize0 = hdr.getInt(8)
     require((flags & FlagBitShuffle) == 0, "Blosc bit-shuffle not supported")
     val out = new Array[Byte](nbytes)
 
     if ((flags & FlagMemcpyed) != 0) {
       // stored as a plain memcpy of the (unshuffled) source
-      System.arraycopy(frame, off + 16, out, 0, nbytes)
+      System.arraycopy(frame, 16, out, 0, nbytes)
       return out
     }
     val blocksize = if (blocksize0 <= 0) nbytes else blocksize0
@@ -56,9 +54,9 @@ object ChunkCodec {
     val shuffled = (flags & FlagByteShuffle) != 0 && typesize > 1
     var j = 0
     while (j < nblocks) {
-      val bstart = off + hdr.getInt(off + 16 + 4 * j)
+      val bstart = hdr.getInt(16 + 4 * j)
       val neblock = math.min(blocksize, nbytes - j * blocksize)
-      val block = decodeBlock(frame, bstart, end, neblock, typesize)
+      val block = decodeBlock(frame, bstart, neblock, typesize)
       val decoded = if (shuffled) unshuffle(block, typesize) else block
       System.arraycopy(decoded, 0, out, j * blocksize, neblock)
       j += 1
@@ -70,9 +68,8 @@ object ChunkCodec {
     * (modern c-blosc forward-compat mode never splits LZ4); fall back
     * to `typesize` split streams (older writers split shuffled
     * blocks). */
-  private def decodeBlock(frame: Array[Byte], start: Int, end: Int, neblock: Int,
-      typesize: Int): Array[Byte] = {
-    singleStream(frame, start, end, neblock) match {
+  private def decodeBlock(frame: Array[Byte], start: Int, neblock: Int, typesize: Int): Array[Byte] = {
+    singleStream(frame, start, neblock) match {
       case Some(b) => b
       case None =>
         // c-blosc appends the `neblock % typesize` leftover bytes
@@ -100,10 +97,10 @@ object ChunkCodec {
     }
   }
 
-  private def singleStream(frame: Array[Byte], start: Int, end: Int, neblock: Int): Option[Array[Byte]] = {
+  private def singleStream(frame: Array[Byte], start: Int, neblock: Int): Option[Array[Byte]] = {
     try {
       val csize = ByteBuffer.wrap(frame, start, 4).order(ByteOrder.LITTLE_ENDIAN).getInt
-      if (csize <= 0 || start + 4 + csize > end) return None
+      if (csize <= 0 || start + 4 + csize > frame.length) return None
       val out = new Array[Byte](neblock)
       if (csize == neblock) {
         System.arraycopy(frame, start + 4, out, 0, neblock)
@@ -187,9 +184,9 @@ object ChunkCodec {
   // rewritten coordinate chunk but not yet the shape edit (chunks
   // commit before metadata); the element decoder reads only the
   // metadata extent and ignores the tail.
-  private def zlibDecompress(data: Array[Byte], start: Int, len: Int, outLen: Int): Array[Byte] = {
+  private def zlibDecompress(data: Array[Byte], outLen: Int): Array[Byte] = {
     val inf = new Inflater()
-    inf.setInput(data, start, len)
+    inf.setInput(data)
     var out = new Array[Byte](math.max(outLen, 16))
     var off = 0
     var n = 1
@@ -202,35 +199,27 @@ object ChunkCodec {
     if (off == out.length) out else java.util.Arrays.copyOf(out, off)
   }
 
-  private def gzipDecompress(data: Array[Byte], off: Int, len: Int): Array[Byte] = {
-    val in = new GZIPInputStream(new java.io.ByteArrayInputStream(data, off, len))
+  private def gzipDecompress(data: Array[Byte]): Array[Byte] = {
+    val in = new GZIPInputStream(new java.io.ByteArrayInputStream(data))
     try in.readAllBytes() finally in.close()
   }
 
-  /** Decompress a whole chunk payload (see below). */
+  /** Decompress a chunk payload according to the array's compressor.
+    * `rawLen` is the expected decoded byte length (chunk elements ×
+    * element size). */
   def decompress(data: Array[Byte], comp: ZarrCompressor, rawLen: Int): Array[Byte] =
-    decompress(data, 0, data.length, comp, rawLen)
-
-  /** Decompress a chunk payload, `data[off, off + len)`, according to
-    * the array's compressor, reading it in place (an inner chunk is
-    * decoded straight from its shard's bytes). `rawLen` is the
-    * expected decoded byte length (chunk elements × element size). */
-  def decompress(data: Array[Byte], off: Int, len: Int, comp: ZarrCompressor, rawLen: Int): Array[Byte] =
     comp.id match {
-      case "none" => if (off == 0 && len == data.length) data else java.util.Arrays.copyOfRange(data, off, off + len)
-      case "blosc" => bloscDecompress(data, off, len)
-      case "zlib" => zlibDecompress(data, off, len, rawLen)
-      case "gzip" => gzipDecompress(data, off, len)
+      case "none" => data
+      case "blosc" => bloscDecompress(data)
+      case "zlib" => zlibDecompress(data, rawLen)
+      case "gzip" => gzipDecompress(data)
       case "zstd" =>
-        import com.github.luben.zstd.{Zstd, ZstdException}
         // size the destination from the frame itself when it exceeds
         // the metadata expectation (mid-append coordinate rewrite —
         // see zlibDecompress note); short frames stay an error
-        val frame = Zstd.getFrameContentSize(data, off, len)
-        val dst = new Array[Byte](if (frame > rawLen) frame.toInt else rawLen)
-        val n = Zstd.decompressByteArray(dst, 0, dst.length, data, off, len)
-        if (Zstd.isError(n)) throw new ZstdException(n)
-        if (n == dst.length) dst else java.util.Arrays.copyOf(dst, n.toInt)
+        val frame = com.github.luben.zstd.Zstd.getFrameContentSize(data)
+        val dst = if (frame > rawLen) frame.toInt else rawLen
+        com.github.luben.zstd.Zstd.decompress(data, dst)
       case other => throw new IllegalArgumentException(s"Unsupported Zarr compressor: $other")
     }
 
@@ -570,8 +559,8 @@ object ChunkIO {
       ChunkCodec.decodeTypedBuf(ByteBuffer.wrap(shard.bytes, off.toInt, nb.toInt).slice(),
         meta.dtype, innerElems)
     else {
-      val raw = ChunkCodec.decompress(shard.bytes, off.toInt, nb.toInt, spec.innerComp,
-        innerElems * meta.dtype.size)
+      val enc = java.util.Arrays.copyOfRange(shard.bytes, off.toInt, (off + nb).toInt)
+      val raw = ChunkCodec.decompress(enc, spec.innerComp, innerElems * meta.dtype.size)
       ChunkCodec.decodeTyped(raw, meta.dtype, innerElems)
     }
   }

@@ -122,6 +122,9 @@ object GridMath {
     *        as the merged slice stays within `maxRowsPerPartition`.
     * @param maxRowsPerPartition the split cap: a slice of more rows is
     *        cut at inner-chunk boundaries.
+    * @param keep whether the rows `[start, end)` of one outer-chunk slab
+    *        may be read: a dropped slab emits no slice and ends the
+    *        merge, so slices only ever merge adjacent kept slabs.
     */
   def partitionSlices(
       ranges: Ranges,
@@ -129,7 +132,8 @@ object GridMath {
       limit: Option[Long],
       minRowsPerPartition: Long = 65536,
       innerChunks: Seq[Int] = Nil,
-      maxRowsPerPartition: Long = Long.MaxValue): Seq[(Long, Long)] = {
+      maxRowsPerPartition: Long = Long.MaxValue,
+      keep: (Long, Long) => Boolean = (_, _) => true): Seq[(Long, Long)] = {
     val total0 = totalRows(ranges)
     val total = limit.map(math.min(_, total0)).getOrElse(total0)
     if (total == 0) return Nil
@@ -175,18 +179,22 @@ object GridMath {
       // advance to the next outer chunk boundary at or after outer+1
       val nextBoundary = math.min(o1, ((outer / outerChunkSize) + 1) * outerChunkSize)
       var endRow = sliceStartRow + (nextBoundary - outer) * innerRows
-      // merge forward whole outer chunks until the slice is big enough,
-      // never past the cap: partition boundaries stay chunk boundaries
+      // merge forward whole kept outer chunks until the slice is big
+      // enough, never past the cap: partition boundaries stay chunk
+      // boundaries
       var nb = nextBoundary
-      var fits = true
+      var fits = keep(sliceStartRow, math.min(endRow, total))
+      val kept = fits
       while (fits && endRow - sliceStartRow < minRowsPerPartition && nb < o1 && endRow < total) {
         val nb2 = math.min(o1, nb + outerChunkSize)
         val grown = endRow + (nb2 - nb) * innerRows
-        fits = math.min(grown, total) - sliceStartRow <= maxRowsPerPartition
+        fits = math.min(grown, total) - sliceStartRow <= maxRowsPerPartition &&
+          keep(endRow, math.min(grown, total))
         if (fits) { endRow = grown; nb = nb2 }
       }
       val capped = math.min(endRow, total)
-      if (capped - sliceStartRow > maxRowsPerPartition) {
+      if (!kept) ()
+      else if (capped - sliceStartRow > maxRowsPerPartition) {
         // oversize slab: emit chunk-aligned sub-slices. Alignment is
         // relative to each outer index's row base so boundaries land
         // on inner-chunk starts row-major.

@@ -111,17 +111,9 @@ class ZarrColumnarReader(p: ZarrInputPartition, batchSize: Int = 4096)
 
     // Row-band LRU: the odometer revisits inner-dimension units once
     // per grid row; holding one band avoids unit-extent× re-decodes
-    // (see ChunkIO.bandBudget). Keyed by the unit's C-order ordinal
-    // over the array's unit grid, so a hit builds no key object.
+    // (see ChunkIO.bandBudget).
     private val unitBytes = ChunkIO.unitBytes(unit, meta.dtype.size)
-    private val band = new ByteLru[Long, AnyRef](ChunkIO.bandBudget(unit, meta.dtype.size, p.ranges))
-    private val unitGrid: Array[Long] = Array.tabulate(nDims)(d => (meta.shape(d) + unit(d) - 1) / unit(d))
-    private def ordinal(key: Array[Long]): Long = {
-      var o = 0L
-      var d = 0
-      while (d < nDims) { o = o * unitGrid(d) + key(d); d += 1 }
-      o
-    }
+    private val band = new ByteLru[Seq[Long], AnyRef](ChunkIO.bandBudget(unit, meta.dtype.size, p.ranges))
 
     // Sharded arrays: the encoded shards the band spans (null = absent
     // shard object), so each shard is fetched at most once per
@@ -223,19 +215,18 @@ class ZarrColumnarReader(p: ZarrInputPartition, batchSize: Int = 4096)
         d += 1
       }
       if (changed) {
-        val ord = ordinal(chunkIdx)
-        val hit = band.get(ord)
+        val key = chunkIdx.toSeq
+        val hit = band.get(key)
         if (hit.isDefined) chunk = hit.get
         else {
           // bytesRead reported from inside the read (no extra sizeOf
           // round trip per chunk on remote stores)
-          val key = chunkIdx.toSeq
           chunk = fetch(key)
           chunksDecoded += 1
-          band.put(ord, chunk, unitBytes)
+          band.put(key, chunk, unitBytes)
           if (p.prefetch && pending == null) {
             val nk = nextChunkKey(key)
-            if (nk != null && band.get(ordinal(nk.toArray)).isEmpty) {
+            if (nk != null && band.get(nk).isEmpty) {
               // the pool thread must not touch this task's bytesRead
               // var; it accumulates into an atomic the consumer drains
               val sz = new java.util.concurrent.atomic.AtomicLong()
@@ -320,28 +311,28 @@ class ZarrColumnarReader(p: ZarrInputPartition, batchSize: Int = 4096)
     var k = 0
     sArr match {
       case a: Array[Float] =>
-        val lo = r.dlo; val hi = r.dhi; val nan = r.nan
+        val (lo, hi, nan) = (r.dlo, r.dhi, r.nan)
         while (k < n) {
           val i = if (all) k else sel(k); val x = a(off + i)
           if (x >= lo && x <= hi || nan && x != x) { sel(m) = i; m += 1 }
           k += 1
         }
       case a: Array[Double] =>
-        val lo = r.dlo; val hi = r.dhi; val nan = r.nan
+        val (lo, hi, nan) = (r.dlo, r.dhi, r.nan)
         while (k < n) {
           val i = if (all) k else sel(k); val x = a(off + i)
           if (x >= lo && x <= hi || nan && x != x) { sel(m) = i; m += 1 }
           k += 1
         }
       case a: Array[Long] =>
-        val lo = r.lo; val hi = r.hi
+        val (lo, hi) = (r.lo, r.hi)
         while (k < n) {
           val i = if (all) k else sel(k); val x = a(off + i)
           if (x >= lo && x <= hi) { sel(m) = i; m += 1 }
           k += 1
         }
       case a: Array[Int] =>
-        val lo = r.lo; val hi = r.hi
+        val (lo, hi) = (r.lo, r.hi)
         while (k < n) {
           val i = if (all) k else sel(k); val x = a(off + i)
           if (x >= lo && x <= hi) { sel(m) = i; m += 1 }

@@ -1084,9 +1084,18 @@ class ZarrScan(
       * each partition, so it cannot clip the row space. */
     private def rowSpaceLimit: Option[Long] = if (cellPreds.isEmpty) limit else None
 
-    /** The rows the partitions cover before `.zstats` pruning. */
+    /** Whether the outer-chunk slab of rows `[s, e)` may hold wanted
+      * rows: not wholly before the pushed OFFSET, and not pruned by its
+      * chunks' `.zstats`. Pruning is decided slab by slab, before slabs
+      * merge into partitions. */
+    private def slabWanted(r: GridMath.Ranges)(s: Long, e: Long): Boolean =
+      e > offset && sliceMayMatch(s, e, r) && sliceMayReachTopN(s, e, r)
+
+    /** The rows the partitions can cover: the row space after range,
+      * limit, offset and `.zstats` pruning. */
     private def selectedRows(r: GridMath.Ranges): Long =
-      rowSpaceLimit.map(math.min(_, GridMath.totalRows(r))).getOrElse(GridMath.totalRows(r))
+      GridMath.partitionSlices(r, meta.chunkExtents.head, rowSpaceLimit, 0L, keep = slabWanted(r))
+        .map { case (s, e) => e - math.max(s, offset) }.sum
 
     def selectedBytes: Long = ranges.map(selectedRows(_) * bytesPerRow).getOrElse(0L)
 
@@ -1126,7 +1135,8 @@ class ZarrScan(
         math.max(minRowsPerPartition.getOrElse(splitRows), target), innerChunks = extents,
         // split cap at 2× the raised floor: slices merge up to the
         // target and stop short of twice it
-        maxRowsPerPartition = math.max(maxRowsPerPartition.getOrElse(splitRows), 2 * target))
+        maxRowsPerPartition = math.max(maxRowsPerPartition.getOrElse(splitRows), 2 * target),
+        keep = slabWanted(r))
         // pushed OFFSET clips the leading rows of the (deterministic,
         // row-major) row space; slices are global row-id ranges, so a
         // plain clip is exact
@@ -1134,8 +1144,6 @@ class ZarrScan(
           val s1 = math.max(s0, offset)
           if (s1 < e0) Some((s1, e0)) else None
         }
-        .filter(s => sliceMayMatch(s._1, s._2, r))
-        .filter(s => sliceMayReachTopN(s._1, s._2, r))
         .map(s => template.copy(rowStart = s._1, rowEnd = s._2): InputPartition)
         .toArray
       }

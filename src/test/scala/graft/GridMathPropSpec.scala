@@ -107,6 +107,33 @@ class GridMathPropSpec extends AnyFunSuite {
     })
   }
 
+  test("partitionSlices with a slab filter tiles exactly the kept slabs, merging only adjacent ones") {
+    val gen = for {
+      ranges <- genRanges
+      chunk <- Gen.choose(1, 8)
+      minRows <- Gen.choose(1L, 50L)
+      maxRows <- Gen.choose(1L, 100L)
+      innerChunks <- Gen.listOfN(4, Gen.choose(1, 5))
+      limit <- Gen.option(Gen.choose(0L, 200L))
+      dropped <- Gen.containerOf[Set, Int](Gen.choose(0, 20))
+    } yield (ranges, chunk, minRows, maxRows, innerChunks, limit, dropped)
+    check(Prop.forAll(gen) { case (ranges, chunk, minRows, maxRows0, innerChunks, limit, dropped) =>
+      val maxRows = math.max(maxRows0, minRows)
+      val innerRows = ranges.drop(1).foldLeft(1L) { case (a, (s, e)) => a * (e - s) }
+      // the outer chunk a row lies in
+      def slab(row: Long): Int = (ranges.head._1 + (row / innerRows).toInt) / chunk
+      val slabs = GridMath.partitionSlices(ranges, chunk, limit, 0L)
+      val kept = slabs.filterNot(s => dropped(slab(s._1)))
+      val slices = GridMath.partitionSlices(ranges, chunk, limit, minRows, innerChunks, maxRows,
+        keep = (s, _) => !dropped(slab(s)))
+      def rows(ss: Seq[(Long, Long)]) = ss.flatMap { case (s, e) => s until e }
+      val exact = rows(slices) == rows(kept)
+      // a slice spans only kept slabs, so it never reads a dropped one
+      val clean = slices.forall { case (s, e) => (s until e).forall(r => !dropped(slab(r))) }
+      Prop(exact && clean) :| s"slices=$slices kept=$kept"
+    })
+  }
+
   test("maxRows splitting on the ERA5 shape: 3 outer slabs become a full cluster's worth") {
     // ERA5 local fixture shape from the reference: 3(time) x 2 x 721 x 1440,
     // chunks (1, 2, 721, 1440) => innerRows per outer index = 2,076,480.

@@ -178,6 +178,35 @@ class ZarrSplitSizingSpec extends AnyFunSuite {
     }
   }
 
+  /** 8 one-step slabs of 64 × 64 cells whose values lie in
+    * [1000·t, 1000·t + 97): each slab's `.zstats` range is its own. */
+  private lazy val stepped = write(id => Row((id / 4096).toLong, (id / 64 % 64).toLong, (id % 64).toLong,
+    (id / 4096 * 1000 + id % 97).toFloat), 8L * 4096, "t,y,x", "chunkOuter" -> "1")
+
+  test(".zstats prune slabs before they merge: a selective default scan reads one slab at any core count") {
+    val slab7 = Files.list(java.nio.file.Paths.get(stepped, "v")).iterator().asScala
+      .filter(_.getFileName.toString.startsWith("7.")).map(Files.size).sum
+    def read(q: DataFrame): (Int, Long, Seq[Row]) = {
+      val rows = q.collect().toSeq
+      (partitions(q), scanBytesRead(q), rows)
+    }
+    val df = spark.read.format("zarr").load(stepped)
+    for (conf <- Seq(Seq(cores(1)), Seq(cores(8)))) withConf(conf: _*) {
+      val (parts, bytes, rows) = read(df.where(col("v") >= 7000.0f).agg(count(lit(1)), min("t")))
+      assert(parts == 1 && bytes == slab7, s"$conf: $parts partitions, $bytes of $slab7 bytes")
+      assert(rows == Seq(Row(4096L, 7L)), conf)
+      val (topParts, topBytes, top) = read(df.orderBy(col("v").desc).limit(3).select("t", "v"))
+      assert(topParts == 1 && topBytes == slab7, s"$conf: $topParts partitions, $topBytes of $slab7 bytes")
+      assert(top == Seq(Row(7L, 7096.0f), Row(7L, 7096.0f), Row(7L, 7096.0f)), conf)
+    }
+    // the pruned slabs count no bytes toward the split: the survivor's
+    // 16 KiB spread over eight cores (the whole store's 128 KiB would
+    // have made one 16 KiB split)
+    withConf(cores(8), openCost -> "1024") {
+      assert(partitions(df.where(col("v") >= 7000.0f).select("v")) == 8)
+    }
+  }
+
   test("a catalog table's OPTIONS reach its scan, and the query's options win") {
     spark.sql(s"CREATE TABLE split_t USING zarr OPTIONS (path '$store', maxRowsPerPartition '8192')")
     try withConf(cores(1)) {
