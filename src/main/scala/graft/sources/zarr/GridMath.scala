@@ -193,7 +193,7 @@ object GridMath {
         if (fits) { endRow = grown; nb = nb2 }
       }
       val capped = math.min(endRow, total)
-      if (!kept) ()
+      if (!kept) () // a dropped slab emits no slice
       else if (capped - sliceStartRow > maxRowsPerPartition) {
         // oversize slab: emit chunk-aligned sub-slices. Alignment is
         // relative to each outer index's row base so boundaries land
