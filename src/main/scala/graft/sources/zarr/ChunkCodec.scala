@@ -214,14 +214,24 @@ object ChunkCodec {
       case "zlib" => zlibDecompress(data, rawLen)
       case "gzip" => gzipDecompress(data)
       case "zstd" =>
-        // size the destination from the frame itself when it exceeds
-        // the metadata expectation (mid-append coordinate rewrite —
-        // see zlibDecompress note); short frames stay an error
-        val frame = com.github.luben.zstd.Zstd.getFrameContentSize(data)
-        val dst = if (frame > rawLen) frame.toInt else rawLen
-        com.github.luben.zstd.Zstd.decompress(data, dst)
+        val raw = zstdDecompress(data, 0, data.length, rawLen)
+        if (raw.limit() == raw.capacity()) raw.array() else java.util.Arrays.copyOf(raw.array(), raw.limit())
       case other => throw new IllegalArgumentException(s"Unsupported Zarr compressor: $other")
     }
+
+  /** Decompress the zstd frame at `src[off, off + len)` straight from
+    * `src`, with no copy of the encoded bytes: a sharded array's inner
+    * chunk is decoded in place from the shard's bytes. The destination
+    * is sized from the frame itself when it exceeds the metadata
+    * expectation `rawLen` (mid-append coordinate rewrite — see
+    * zlibDecompress note); short frames stay an error, as the returned
+    * buffer holds exactly the decoded bytes. */
+  def zstdDecompress(src: Array[Byte], off: Int, len: Int, rawLen: Int): ByteBuffer = {
+    val frame = com.github.luben.zstd.Zstd.getFrameContentSize(src, off, len)
+    val dst = new Array[Byte](if (frame > rawLen) frame.toInt else rawLen)
+    val n = com.github.luben.zstd.Zstd.decompressByteArray(dst, 0, dst.length, src, off, len)
+    ByteBuffer.wrap(dst, 0, n.toInt)
+  }
 
   /** IEEE 754 half-precision → float (JDK 17 has no Float.float16). */
   def halfToFloat(h: Short): Float = {
@@ -244,33 +254,41 @@ object ChunkCodec {
     * hands the page-cache-backed buffer here directly, skipping the
     * heap copy (reference roadmap "zero-copy reads with memory-mapped
     * I/O"; one copy remains — raw cells → the typed column array —
-    * because Spark rows/vectors consume JVM arrays). */
+    * because Spark rows/vectors consume JVM arrays).
+    *
+    * Each fixed-width numeric dtype decodes with one bulk copy through
+    * a typed view of the buffer in the dtype's byte order
+    * (`asFloatBuffer().get(a)` and the like), bit for bit (NaN payloads
+    * and −0.0 kept), not a `getX()` call per cell. Unsigned integers
+    * widen to the next signed type, half floats to float and
+    * datetime64 to epoch micros in one loop over that copy. A buffer
+    * holding fewer than `n` cells fails with `BufferUnderflowException`. */
   def decodeTypedBuf(raw: ByteBuffer, dtype: ZarrDType, n: Int): AnyRef = {
     val buf = raw
       .order(if (dtype.littleEndian) ByteOrder.LITTLE_ENDIAN else ByteOrder.BIG_ENDIAN)
+    def bytes() = { val a = new Array[Byte](n); buf.get(a); a }
+    def shorts() = { val a = new Array[Short](n); buf.asShortBuffer().get(a); a }
+    def ints() = { val a = new Array[Int](n); buf.asIntBuffer().get(a); a }
+    def longs() = { val a = new Array[Long](n); buf.asLongBuffer().get(a); a }
     (dtype.kind, dtype.size) match {
-      case ('i', 1) => val a = new Array[Byte](n); buf.get(a); a
-      case ('i', 2) => val a = new Array[Short](n); var i = 0; while (i < n) { a(i) = buf.getShort(); i += 1 }; a
-      case ('i', 4) => val a = new Array[Int](n); var i = 0; while (i < n) { a(i) = buf.getInt(); i += 1 }; a
-      case ('i', 8) => val a = new Array[Long](n); var i = 0; while (i < n) { a(i) = buf.getLong(); i += 1 }; a
-      case ('u', 1) => val a = new Array[Short](n); var i = 0; while (i < n) { a(i) = (buf.get() & 0xff).toShort; i += 1 }; a
-      case ('u', 2) => val a = new Array[Int](n); var i = 0; while (i < n) { a(i) = buf.getShort() & 0xffff; i += 1 }; a
-      case ('u', 4) => val a = new Array[Long](n); var i = 0; while (i < n) { a(i) = buf.getInt() & 0xffffffffL; i += 1 }; a
-      case ('u', 8) => val a = new Array[Long](n); var i = 0; while (i < n) { a(i) = buf.getLong(); i += 1 }; a
-      case ('f', 2) => val a = new Array[Float](n); var i = 0; while (i < n) { a(i) = halfToFloat(buf.getShort()); i += 1 }; a
-      case ('f', 4) => val a = new Array[Float](n); var i = 0; while (i < n) { a(i) = buf.getFloat(); i += 1 }; a
-      case ('f', 8) => val a = new Array[Double](n); var i = 0; while (i < n) { a(i) = buf.getDouble(); i += 1 }; a
-      case ('b', _) => val a = new Array[Boolean](n); var i = 0; while (i < n) { a(i) = buf.get() != 0; i += 1 }; a
+      case ('i', 1) => bytes()
+      case ('i', 2) => shorts()
+      case ('i', 4) => ints()
+      case ('i', 8) | ('u', 8) => longs()
+      case ('u', 1) => val b = bytes(); val a = new Array[Short](n); var i = 0; while (i < n) { a(i) = (b(i) & 0xff).toShort; i += 1 }; a
+      case ('u', 2) => val b = shorts(); val a = new Array[Int](n); var i = 0; while (i < n) { a(i) = b(i) & 0xffff; i += 1 }; a
+      case ('u', 4) => val b = ints(); val a = new Array[Long](n); var i = 0; while (i < n) { a(i) = b(i) & 0xffffffffL; i += 1 }; a
+      case ('f', 2) => val b = shorts(); val a = new Array[Float](n); var i = 0; while (i < n) { a(i) = halfToFloat(b(i)); i += 1 }; a
+      case ('f', 4) => val a = new Array[Float](n); buf.asFloatBuffer().get(a); a
+      case ('f', 8) => val a = new Array[Double](n); buf.asDoubleBuffer().get(a); a
+      case ('b', _) => val b = bytes(); val a = new Array[Boolean](n); var i = 0; while (i < n) { a(i) = b(i) != 0; i += 1 }; a
       case ('M', _) =>
         // datetime64 → epoch micros (Spark's internal TimestampType).
         // floorDiv matches numpy/Spark floor semantics for pre-epoch
         // ns values; multiplyExact fails loudly instead of silently
         // wrapping for out-of-range coarse-unit (h/D) values.
-        val a = new Array[Long](n); var i = 0
-        while (i < n) {
-          a(i) = Math.floorDiv(Math.multiplyExact(buf.getLong(), dtype.tsMulUs), dtype.tsDivUs)
-          i += 1
-        }
+        val a = longs(); var i = 0
+        while (i < n) { a(i) = Math.floorDiv(Math.multiplyExact(a(i), dtype.tsMulUs), dtype.tsDivUs); i += 1 }
         a
       case ('S', w) =>
         val a = new Array[String](n); val cell = new Array[Byte](w)
@@ -558,7 +576,12 @@ object ChunkIO {
     if (spec.innerComp.id == "none")
       ChunkCodec.decodeTypedBuf(ByteBuffer.wrap(shard.bytes, off.toInt, nb.toInt).slice(),
         meta.dtype, innerElems)
+    else if (spec.innerComp.id == "zstd")
+      ChunkCodec.decodeTypedBuf(ChunkCodec.zstdDecompress(shard.bytes, off.toInt, nb.toInt,
+        innerElems * meta.dtype.size), meta.dtype, innerElems)
     else {
+      // a blosc frame's block offsets are checked only against the end
+      // of the buffer it is given: it gets a copy of the inner chunk
       val enc = java.util.Arrays.copyOfRange(shard.bytes, off.toInt, (off + nb).toInt)
       val raw = ChunkCodec.decompress(enc, spec.innerComp, innerElems * meta.dtype.size)
       ChunkCodec.decodeTyped(raw, meta.dtype, innerElems)

@@ -125,6 +125,11 @@ object GridMath {
     * @param keep whether the rows `[start, end)` of one outer-chunk slab
     *        may be read: a dropped slab emits no slice and ends the
     *        merge, so slices only ever merge adjacent kept slabs.
+    * @param hardCap whether `maxRowsPerPartition` binds inside a slab
+    *        (an explicit read option). A cap derived from the scan's
+    *        bytes is not: an oversize slab is then cut only at units no
+    *        chunk straddles ([[exclusiveUnit]]), and kept whole when
+    *        none exists, so no chunk is decoded by two partitions.
     */
   def partitionSlices(
       ranges: Ranges,
@@ -133,7 +138,8 @@ object GridMath {
       minRowsPerPartition: Long = 65536,
       innerChunks: Seq[Int] = Nil,
       maxRowsPerPartition: Long = Long.MaxValue,
-      keep: (Long, Long) => Boolean = (_, _) => true): Seq[(Long, Long)] = {
+      keep: (Long, Long) => Boolean = (_, _) => true,
+      hardCap: Boolean = true): Seq[(Long, Long)] = {
     val total0 = totalRows(ranges)
     val total = limit.map(math.min(_, total0)).getOrElse(total0)
     if (total == 0) return Nil
@@ -145,12 +151,14 @@ object GridMath {
     // maxRowsPerPartition. A store with few outer steps but a huge
     // inner grid (the reference's ERA5 fixture: 3 × 2 × 721 × 1440)
     // otherwise caps scan parallelism at the outer extent — the
-    // opposite of what a 1000-executor cluster needs. Splitting at
-    // inner chunk boundaries keeps chunk ownership exclusive: no two
-    // partitions decode the same chunk (for full-range dims; filtered
-    // dims may straddle one boundary chunk, same cost as a limit clip).
+    // opposite of what a 1000-executor cluster needs. Under a hard cap
+    // the unit is aligned only in its own dim, so partitions may share
+    // a chunk of the dims above it (the ERA5 case reads each
+    // 2×721×1440 chunk about 7 times); a derived cap takes
+    // [[exclusiveUnit]] instead, so no two partitions decode one chunk.
     val subUnit: Long =
       if (maxRowsPerPartition == Long.MaxValue || innerRows <= maxRowsPerPartition) innerRows
+      else if (!hardCap) exclusiveUnit(ranges, innerChunks)
       else {
         // Walk from the deepest dim up, keeping the largest
         // chunk-aligned unit that still fits; stop once a full
@@ -194,6 +202,8 @@ object GridMath {
       }
       val capped = math.min(endRow, total)
       if (!kept) () // a dropped slab emits no slice
+      else if (!hardCap && outerChunkSize > 1 && capped - sliceStartRow > innerRows)
+        slices += ((sliceStartRow, capped)) // every chunk spans the slab's outer indices
       else if (capped - sliceStartRow > maxRowsPerPartition) {
         // oversize slab: emit chunk-aligned sub-slices. Alignment is
         // relative to each outer index's row base so boundaries land
@@ -213,5 +223,26 @@ object GridMath {
       outer = nb
     }
     slices.toSeq
+  }
+
+  /** The smallest row unit inside one outer index at whose multiples
+    * (counted from the outer index's first row) a slice may end with no
+    * chunk lying on both sides. A unit spans `min(c, len)` indices of
+    * some dim `k ≥ 1` and the whole range of every deeper dim; it is
+    * exclusive when each dim between the outer one and `k` gives each
+    * of its indices a chunk of its own (chunk 1, or one index), and dim
+    * `k` either is one unit or is tiled exactly by chunk-aligned units.
+    * With none, the whole outer index. `innerChunks(d)` missing or 0
+    * reads as one chunk over the dim. */
+  def exclusiveUnit(ranges: Ranges, innerChunks: Seq[Int]): Long = {
+    val len = ranges.map { case (s, e) => e - s }
+    def chunk(d: Int): Int = if (d < innerChunks.length && innerChunks(d) > 0) innerChunks(d) else len(d)
+    def tiles(k: Int): Boolean = chunk(k) >= len(k) ||
+      ranges(k)._1 % chunk(k) == 0 && len(k) % chunk(k) == 0
+    def ownChunks(j: Int): Boolean = chunk(j) == 1 || len(j) == 1
+    (ranges.length - 1 to 1 by -1).find(k => tiles(k) && (1 until k).forall(ownChunks)) match {
+      case Some(k) => math.min(chunk(k), len(k)).toLong * len.drop(k + 1).foldLeft(1L)(_ * _)
+      case None => len.drop(1).foldLeft(1L)(_ * _)
+    }
   }
 }

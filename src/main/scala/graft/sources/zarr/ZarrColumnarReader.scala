@@ -204,40 +204,39 @@ class ZarrColumnarReader(p: ZarrInputPartition, batchSize: Int = 4096)
       if (prefetchBytes != null) { bytesRead += prefetchBytes.get(); prefetchBytes = null }
     }
 
+    /** The current grid row's decode units, at `chunkIdx(last) −
+      * chunkLo(last)` over this partition's own ranges, cleared
+      * whenever the unit index of an outer dimension changes: a run
+      * that enters a unit the row already located takes it from here,
+      * with no key allocation and no band lookup. `null` (band lookups
+      * only) when a row's units exceed the band budget; otherwise the
+      * band holds every unit of the row too, and stays the owner of the
+      * budget. */
+    private val rowUnits: Array[AnyRef] =
+      if (nDims == 0) null
+      else {
+        val n = chunkHi(last) - chunkLo(last) + 1L
+        if (n * unitBytes <= band.budget) new Array[AnyRef](n.toInt) else null
+      }
+
     /** Point [[chunk]] and [[offset]] at the odometer's cell and return
       * how many cells remain in this decode unit along the last dimension. */
     def locate(): Int = {
-      var changed = !valid
+      var outer = !valid
       var d = 0
-      while (d < nDims) {
+      while (d < last) {
         val c = idx(d) / unit(d)
-        if (c != chunkIdx(d)) { chunkIdx(d) = c; changed = true }
+        if (c != chunkIdx(d)) { chunkIdx(d) = c; outer = true }
         d += 1
       }
-      if (changed) {
-        val key = chunkIdx.toSeq
-        val hit = band.get(key)
-        if (hit.isDefined) chunk = hit.get
+      if (outer || nDims > 0 && idx(last) / unit(last) != chunkIdx(last)) {
+        if (nDims > 0) chunkIdx(last) = idx(last) / unit(last)
+        if (rowUnits == null) chunk = bandUnit()
         else {
-          // bytesRead reported from inside the read (no extra sizeOf
-          // round trip per chunk on remote stores)
-          chunk = fetch(key)
-          chunksDecoded += 1
-          band.put(key, chunk, unitBytes)
-          if (p.prefetch && pending == null) {
-            val nk = nextChunkKey(key)
-            if (nk != null && band.get(nk).isEmpty) {
-              // the pool thread must not touch this task's bytesRead
-              // var; it accumulates into an atomic the consumer drains
-              val sz = new java.util.concurrent.atomic.AtomicLong()
-              prefetchBytes = sz
-              pending = (nk, ChunkIO.prefetchPool.submit(
-                new java.util.concurrent.Callable[AnyRef] {
-                  override def call(): AnyRef =
-                    ChunkIO.cached(store, meta, nk, p.chunkCacheEntries)(load(nk, sz.addAndGet(_)))
-                }))
-            }
-          }
+          if (outer) java.util.Arrays.fill(rowUnits, null)
+          val j = (chunkIdx(last) - chunkLo(last)).toInt
+          if (rowUnits(j) == null) rowUnits(j) = bandUnit()
+          chunk = rowUnits(j)
         }
         valid = true
       }
@@ -246,6 +245,34 @@ class ZarrColumnarReader(p: ZarrInputPartition, batchSize: Int = 4096)
       while (d < nDims) { off = off * unit(d) + idx(d) % unit(d); d += 1 }
       offset = off
       if (nDims == 0) Int.MaxValue else unit(last) - idx(last) % unit(last)
+    }
+
+    /** The unit at [[chunkIdx]] from the band, else fetched (and the
+      * next one prefetched) and put in the band. */
+    private def bandUnit(): AnyRef = {
+      val key = chunkIdx.toSeq
+      val hit = band.get(key)
+      if (hit.isDefined) return hit.get
+      // bytesRead reported from inside the read (no extra sizeOf
+      // round trip per chunk on remote stores)
+      val u = fetch(key)
+      chunksDecoded += 1
+      band.put(key, u, unitBytes)
+      if (p.prefetch && pending == null) {
+        val nk = nextChunkKey(key)
+        if (nk != null && band.get(nk).isEmpty) {
+          // the pool thread must not touch this task's bytesRead
+          // var; it accumulates into an atomic the consumer drains
+          val sz = new java.util.concurrent.atomic.AtomicLong()
+          prefetchBytes = sz
+          pending = (nk, ChunkIO.prefetchPool.submit(
+            new java.util.concurrent.Callable[AnyRef] {
+              override def call(): AnyRef =
+                ChunkIO.cached(store, meta, nk, p.chunkCacheEntries)(load(nk, sz.addAndGet(_)))
+            }))
+        }
+      }
+      u
     }
   }
 
@@ -673,24 +700,30 @@ class ZarrColumnarReader(p: ZarrInputPartition, batchSize: Int = 4096)
     private def worse(a: Int, b: Int): Boolean =
       ranks(a) < ranks(b) || ranks(a) == ranks(b) && seqs(a) > seqs(b)
 
+    /** One loop per key type: the bound source's type is matched once
+      * per run, not once per cell. */
     override def add(): Unit = {
       bind(key)
       val n = nSel
       var k = 0
-      while (k < n) {
-        val i = sOff + cell(k) * sStep
-        val r = rank(sArr match {
-          case a: Array[Float] => floatKey(a(i))
-          case a: Array[Double] => floatKey(a(i))
-          case a: Array[Long] => a(i)
-          case a: Array[Int] => a(i).toLong
-          case a: Array[Short] => a(i).toLong
-          case a: Array[Byte] => a(i).toLong
-          case other => throw new IllegalStateException(s"Unsupported top-N key ${other.getClass}")
-        })
-        if (size < cap || r > ranks(0)) keep(r, cell(k))
-        k += 1
+      sArr match {
+        case a: Array[Float] => while (k < n) { offer(floatKey(a(at(k))), k); k += 1 }
+        case a: Array[Double] => while (k < n) { offer(floatKey(a(at(k))), k); k += 1 }
+        case a: Array[Long] => while (k < n) { offer(a(at(k)), k); k += 1 }
+        case a: Array[Int] => while (k < n) { offer(a(at(k)).toLong, k); k += 1 }
+        case a: Array[Short] => while (k < n) { offer(a(at(k)).toLong, k); k += 1 }
+        case a: Array[Byte] => while (k < n) { offer(a(at(k)).toLong, k); k += 1 }
+        case other => throw new IllegalStateException(s"Unsupported top-N key ${other.getClass}")
       }
+    }
+
+    /** The bound source's index of selected cell `k`. */
+    @inline private def at(k: Int): Int = sOff + cell(k) * sStep
+
+    /** Keep selected cell `k`, of key `key`, if it ranks among the best. */
+    @inline private def offer(key: Long, k: Int): Unit = {
+      val r = rank(key)
+      if (size < cap || r > ranks(0)) keep(r, cell(k))
     }
 
     private def floatKey(x: Double): Long = {

@@ -15,12 +15,13 @@ import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.execution.streaming.Sink
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.connector.read.colstats.ColumnStatistics
 import org.apache.spark.sql.sources.{EqualNullSafe, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, IsNotNull, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import ZarrDataSource.{colName, isStore, pushedCol}
+import ZarrDataSource.{colName, colRef, isStore, pushedCol}
 
 /** Spark DataSource V2 connector for Zarr v2/v3 stores — the rebuild
   * of the reference's `ZarrTable`/`ZarrExec` surface
@@ -213,6 +214,12 @@ object ZarrDataSource {
     case r: NamedReference if r.fieldNames().length == 1 => Some(r.fieldNames().head)
     case _ => None
   }
+
+  /** The one-part V2 reference to the column `name`, [[colName]]'s
+    * inverse. Spark's `Expressions.column` would parse the name as SQL,
+    * so a dotted coordinate name such as `lat.deg` became a two-part
+    * reference to a field `deg` of a column `lat`. */
+  private[zarr] def colRef(name: String): NamedReference = ColumnBridge.reference(name)
 
   /** [[colName]] of an expression the scan builder already accepted as
     * a column (the metadata-only aggregate scans). */
@@ -838,7 +845,7 @@ class ZarrScan(
     if (offset > 0L || keyGrouped || fold.nonEmpty) Array.empty
     else meta.coords.filter(c => c.meta.dtype.kind != 'S')
       .map(_.meta.name).filter(requiredSchema.fieldNames.contains)
-      .map(Expressions.column).toArray
+      .map(colRef).toArray
 
   override def filter(predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate]): Unit = {
     val coordIdx = meta.coordNames.zipWithIndex.toMap
@@ -902,7 +909,7 @@ class ZarrScan(
     members.head.ranges match {
       case Some(r) if keyGrouped =>
         new org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning(
-          Array(Expressions.identity(meta.coordNames.head)), r.head._2 - r.head._1)
+          Array(ColumnBridge.identity(meta.coordNames.head)), r.head._2 - r.head._1)
       case _ => new org.apache.spark.sql.connector.read.partitioning.UnknownPartitioning(
         plannedPartitionCount)
     }
@@ -925,7 +932,7 @@ class ZarrScan(
       val strict = m.coords.takeWhile(eligible(_, strict = true)).length
       if (strict < m.coords.length && eligible(m.coords(strict), strict = false)) strict + 1 else strict
     }.min
-    meta.coordNames.take(keys).map(n => Expressions.sort(Expressions.column(n),
+    meta.coordNames.take(keys).map(n => Expressions.sort(colRef(n),
       org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING)).toArray
   }
 
@@ -973,7 +980,7 @@ class ZarrScan(
     * [[filter]] invalidates the cache. */
   @transient private var cachedPartitions: Array[InputPartition] = _
 
-  private[zarr] def invalidatePlannedPartitions(): Unit = cachedPartitions = null
+  private[zarr] def invalidatePlannedPartitions(): Unit = { cachedPartitions = null; cachedStats = null }
 
   override def planInputPartitions(): Array[InputPartition] = {
     if (cachedPartitions == null) cachedPartitions = computePartitions()
@@ -1136,7 +1143,10 @@ class ZarrScan(
         // split cap at 2× the raised floor: slices merge up to the
         // target and stop short of twice it
         maxRowsPerPartition = math.max(maxRowsPerPartition.getOrElse(splitRows), 2 * target),
-        keep = slabWanted(r))
+        keep = slabWanted(r),
+        // a split derived from bytes never cuts a chunk in two; the
+        // explicit option is a hard cap
+        hardCap = maxRowsPerPartition.isDefined)
         // pushed OFFSET clips the leading rows of the (deterministic,
         // row-major) row space; slices are global row-id ranges, so a
         // plain clip is exact
@@ -1232,6 +1242,15 @@ class ZarrScan(
     * (/root/reference/src/datasource/zarr.rs:191-254): filtered row
     * count; per-coordinate min/max/distinct/nullCount of a lone store. */
   override def estimateStatistics(): Statistics = {
+    if (cachedStats == null) cachedStats = computeStatistics()
+    cachedStats
+  }
+
+  /** The statistics of the planned partitions: computed once, as both
+    * Spark and [[ZarrFoldMerge]] ask, and again after [[filter]]. */
+  @transient private var cachedStats: Statistics = _
+
+  private def computeStatistics(): Statistics = {
     val rowWidth = math.max(8,
       readSchema().fields.map(_.dataType.defaultSize).sum)
     val scanned = members.map(m => math.max(0L,
@@ -1248,7 +1267,7 @@ class ZarrScan(
     val colStats = new java.util.HashMap[NamedReference, ColumnStatistics]()
     if (!union) meta.coords.foreach { c =>
       if (requiredSchema.fieldNames.contains(c.meta.name) && c.meta.dtype.kind != 'S') {
-        colStats.put(Expressions.column(c.meta.name), new ZarrColumnStats(c))
+        colStats.put(colRef(c.meta.name), new ZarrColumnStats(c))
       }
     }
     new Statistics {

@@ -1,20 +1,21 @@
 package graft.sources.zarr
 
-import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeSet, DynamicPruning, Expression, NamedExpression, Predicate, SubqueryExpression, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeSet, DynamicPruning, Expression, IntegerLiteral, NamedExpression, Predicate, SortOrder, SubqueryExpression, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
 import org.apache.spark.sql.catalyst.planning.PhysicalOperation
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.catalyst.plans.physical.Partitioning
-import org.apache.spark.sql.catalyst.expressions.SortOrder
+import org.apache.spark.sql.catalyst.plans.logical.{Limit, LogicalPlan, Project, ReturnAnswer, Sort}
+import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, SinglePartition}
 import org.apache.spark.sql.connector.read.PartitionReader
-import org.apache.spark.sql.execution.{SQLExecution, SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.{SQLExecution, SparkPlan, SparkStrategy, TakeOrderedAndProjectExec, UnaryExecNode}
 import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, DataSourceV2ScanRelation, DataSourceV2Strategy}
 import org.apache.spark.sql.execution.metric.SQLMetrics
-import org.apache.spark.sql.graftbridge.DriverCollect
+import org.apache.spark.sql.graftbridge.{DriverCollect, TakeOrdered}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.vectorized.ColumnarBatch
 
 /** Plans a batch Zarr scan that plans at most one input partition — a
@@ -28,19 +29,40 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
   * partition reads at most Spark's file split size
   * (`FilePartition.maxSplitBytes`), or the explicit
   * `maxRowsPerPartition`: the work of the single task it replaces.
-  * Prior art: Spark's
+  *
+  * A root ORDER BY … LIMIT n over such a read — the two shapes Spark's
+  * `SpecialLimits` plans as `TakeOrderedAndProjectExec`, with or
+  * without a `Project` between the `Limit` and the `Sort`, `n` below
+  * `spark.sql.execution.topKSortFallbackThreshold` and no OFFSET — is
+  * planned as one [[ZarrDriverTopNExec]] over it. Prior art: Spark's
   * `LocalTableScanExec.executeCollect`, Hive's fetch-task conversion. */
 final case class ZarrDriverRead(session: SparkSession) extends SparkStrategy {
   private lazy val v2 = new DataSourceV2Strategy(session.asInstanceOf[org.apache.spark.sql.classic.SparkSession])
 
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case PhysicalOperation(project, filters, r: DataSourceV2ScanRelation)
-        if onePartition(r) && !(project ++ filters).exists(_.exists {
-          case _: SubqueryExpression | _: DynamicPruning => true
-          case _ => false
-        }) =>
-      v2(plan).map(ZarrDriverReadExec(project, filters, r.output, _))
+    case ReturnAnswer(Limit(IntegerLiteral(n), Sort(order, true, child @ OnDriver(_, _, _), _)))
+        if n < SQLConf.get.topKSortFallbackThreshold =>
+      ZarrDriverTopNExec(n, order, child.output, planLater(child)) :: Nil
+    case ReturnAnswer(Limit(IntegerLiteral(n), Project(list, Sort(order, true, child @ OnDriver(_, _, _), _))))
+        if n < SQLConf.get.topKSortFallbackThreshold =>
+      ZarrDriverTopNExec(n, order, list, planLater(child)) :: Nil
+    case OnDriver(project, filters, r) => v2(plan).map(ZarrDriverReadExec(project, filters, r.output, _))
     case _ => Nil
+  }
+
+  /** A scan, under its filters and projection, that reads on the
+    * driver: one partition at most, and no subquery or dynamic-pruning
+    * filter. */
+  private object OnDriver {
+    def unapply(plan: LogicalPlan): Option[(Seq[NamedExpression], Seq[Expression], DataSourceV2ScanRelation)] =
+      plan match {
+        case PhysicalOperation(project, filters, r: DataSourceV2ScanRelation)
+            if onePartition(r) && !(project ++ filters).exists(_.exists {
+              case _: SubqueryExpression | _: DynamicPruning => true
+              case _ => false
+            }) => Some((project, filters, r))
+        case _ => None
+      }
   }
 
   private def onePartition(r: DataSourceV2ScanRelation): Boolean = r.scan match {
@@ -75,40 +97,110 @@ final case class ZarrDriverReadExec(
   /** The same rows as the child, wherever they are read. */
   override protected def doCanonicalize(): SparkPlan = child.canonicalized
 
-  override def executeCollect(): Array[InternalRow] = read(Int.MaxValue)
+  override def executeCollect(): Array[InternalRow] = withRows(_.map(_.copy()).toArray)
   override def executeTake(n: Int): Array[InternalRow] =
-    if (n <= 0) Array.empty else read(n)
+    if (n <= 0) Array.empty else withRows(_.take(n).map(_.copy()).toArray)
 
-  /** Up to `n` result rows of the scan's (at most one) partition. */
-  private def read(n: Int): Array[InternalRow] = executeQuery {
+  /** `f` over the result rows of the scan's (at most one) partition,
+    * read on the calling thread as `f` pulls them: the reader reads no
+    * batch past the last row `f` takes. The rows are reused buffers,
+    * to be copied if kept. The reader's metrics are posted when `f`
+    * returns. */
+  private[zarr] def withRows[A](f: Iterator[InternalRow] => A): A = executeQuery {
     val scan = child.collectFirst { case b: BatchScanExec => b }.get
     val keep = filters.reduceOption(And).map(Predicate.create(_, scanOutput))
     val proj = UnsafeProjection.create(project, scanOutput)
     keep.foreach(_.initialize(0))
     proj.initialize(0)
-    val out = ArrayBuffer.empty[InternalRow]
-    def emit(r: InternalRow): Unit = if (keep.forall(_.eval(r))) out += proj(r).copy()
     val metrics = scan.metrics
     val factory = scan.readerFactory
-    scan.inputPartitions.foreach { p =>
-      val reader: PartitionReader[_] =
-        if (factory.supportColumnarReads(p)) factory.createColumnarReader(p) else factory.createReader(p)
-      try while (out.length < n && reader.next()) reader.get() match {
-        case batch: ColumnarBatch =>
-          metrics("numOutputRows") += batch.numRows()
-          val it = batch.rowIterator()
-          while (out.length < n && it.hasNext) emit(it.next())
-        case row: InternalRow =>
-          metrics("numOutputRows") += 1
-          emit(row)
-      } finally reader.close()
-      reader.currentMetricsValues().foreach(m => metrics.get(m.name()).foreach(_ += m.value()))
+    val partitions = scan.inputPartitions.iterator
+    var reader: PartitionReader[_] = null
+    def close(): Unit = if (reader != null) {
+      val r = reader
+      reader = null
+      r.close()
+      r.currentMetricsValues().foreach(m => metrics.get(m.name()).foreach(_ += m.value()))
     }
-    SQLMetrics.postDriverMetricUpdates(sparkContext,
-      sparkContext.getLocalProperty(SQLExecution.EXECUTION_ID_KEY), metrics.values.toSeq)
-    out.toArray
+    val scanned = new Iterator[InternalRow] {
+      private var rows: Iterator[InternalRow] = Iterator.empty
+      override def hasNext: Boolean = {
+        while (!rows.hasNext) {
+          if (reader == null) {
+            if (!partitions.hasNext) return false
+            val p = partitions.next()
+            reader = if (factory.supportColumnarReads(p)) factory.createColumnarReader(p) else factory.createReader(p)
+          }
+          if (reader.next()) rows = reader.get() match {
+            case batch: ColumnarBatch =>
+              metrics("numOutputRows") += batch.numRows()
+              batch.rowIterator().asScala
+            case row: InternalRow =>
+              metrics("numOutputRows") += 1
+              Iterator.single(row)
+          } else close()
+        }
+        true
+      }
+      override def next(): InternalRow = if (hasNext) rows.next() else Iterator.empty.next()
+    }
+    try f(keep.fold[Iterator[InternalRow]](scanned)(k => scanned.filter(k.eval)).map(proj))
+    finally {
+      close()
+      SQLMetrics.postDriverMetricUpdates(sparkContext,
+        sparkContext.getLocalProperty(SQLExecution.EXECUTION_ID_KEY), metrics.values.toSeq)
+    }
   }
 
   override protected def withNewChildInternal(newChild: SparkPlan): ZarrDriverReadExec =
+    copy(child = newChild)
+}
+
+/** Spark's `TakeOrderedAndProjectExec(limit, sortOrder, projectList,
+  * child)` over a [[ZarrDriverReadExec]], answered on the driver: its
+  * `executeCollect` streams the partition through the child's one read
+  * loop (which posts the scan's metrics) into the one-partition path of
+  * Spark's own `RDD.takeOrdered` ([[TakeOrdered]]), so it holds O(limit)
+  * rows whether or not the scan folded the top-N, and ties come out as
+  * on the task path. `doExecute` is `TakeOrderedAndProjectExec` over
+  * the same child. */
+final case class ZarrDriverTopNExec(
+    limit: Int,
+    sortOrder: Seq[SortOrder],
+    projectList: Seq[NamedExpression],
+    child: SparkPlan) extends UnaryExecNode {
+
+  private lazy val onTasks = TakeOrderedAndProjectExec(limit, sortOrder, projectList, child)
+
+  override def output: Seq[Attribute] = projectList.map(_.toAttribute)
+  override def outputPartitioning: Partitioning = SinglePartition
+  override def outputOrdering: Seq[SortOrder] = onTasks.outputOrdering
+  override def simpleString(maxFields: Int): String =
+    s"ZarrDriverTopN(limit=$limit, orderBy=${sortOrder.mkString("[", ",", "]")}, " +
+      s"output=${output.mkString("[", ",", "]")})"
+
+  override protected def doExecute(): RDD[InternalRow] = onTasks.execute()
+
+  override def executeCollect(): Array[InternalRow] = child match {
+    case read: ZarrDriverReadExec => executeQuery {
+      val ord = new LazilyGeneratedOrdering(sortOrder, child.output)
+      // as TakeOrderedAndProjectExec: a child already in the sort order
+      // needs only its first `limit` rows
+      val inOrder = SortOrder.orderingSatisfies(child.outputOrdering, sortOrder)
+      val top = read.withRows { rows =>
+        val copied = rows.map(_.copy())
+        TakeOrdered(if (inOrder) copied.take(limit) else copied, limit, ord).toArray
+      }
+      if (projectList == child.output) top
+      else {
+        val proj = UnsafeProjection.create(projectList, child.output)
+        proj.initialize(0)
+        top.map(proj(_).copy())
+      }
+    }
+    case _ => onTasks.executeCollect()
+  }
+
+  override protected def withNewChildInternal(newChild: SparkPlan): ZarrDriverTopNExec =
     copy(child = newChild)
 }

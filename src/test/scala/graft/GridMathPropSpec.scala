@@ -134,6 +134,37 @@ class GridMathPropSpec extends AnyFunSuite {
     })
   }
 
+  test("partitionSlices at a derived cap tiles exactly and no decode unit lies in two slices") {
+    val gen = for {
+      ranges <- genRanges
+      chunks <- Gen.listOfN(4, Gen.choose(1, 5))
+      minRows <- Gen.choose(1L, 50L)
+      maxRows <- Gen.choose(1L, 100L)
+      limit <- Gen.option(Gen.choose(0L, 200L))
+    } yield (ranges, chunks, minRows, maxRows, limit)
+    check(Prop.forAll(gen) { case (ranges, chunks, minRows, maxRows0, limit) =>
+      val maxRows = math.max(maxRows0, minRows)
+      val total = GridMath.totalRows(ranges)
+      val want = limit.map(math.min(_, total)).getOrElse(total)
+      val slices = GridMath.partitionSlices(ranges, chunks.head, limit, minRows, chunks, maxRows,
+        hardCap = false)
+      val contiguous = slices.isEmpty ||
+        (slices.head._1 == 0 && slices.last._2 == want &&
+          slices.zip(slices.tail).forall { case (x, y) => x._2 == y._1 })
+      // the chunk grid position of every row each slice reads
+      val idx = new Array[Int](ranges.length)
+      val owner = scala.collection.mutable.Map.empty[Seq[Int], Int]
+      val exclusive = slices.zipWithIndex.forall { case ((s, e), i) =>
+        (s until e).forall { r =>
+          GridMath.rowToIndices(r, ranges, idx)
+          owner.getOrElseUpdate(idx.toSeq.zipWithIndex.map { case (x, d) => x / chunks(d) }, i) == i
+        }
+      }
+      Prop(if (want == 0) slices.isEmpty else contiguous && exclusive) :|
+        s"slices=$slices want=$want maxRows=$maxRows owner=$owner"
+    })
+  }
+
   test("maxRows splitting on the ERA5 shape: 3 outer slabs become a full cluster's worth") {
     // ERA5 local fixture shape from the reference: 3(time) x 2 x 721 x 1440,
     // chunks (1, 2, 721, 1440) => innerRows per outer index = 2,076,480.

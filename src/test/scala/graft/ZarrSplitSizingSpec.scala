@@ -199,11 +199,44 @@ class ZarrSplitSizingSpec extends AnyFunSuite {
       assert(topParts == 1 && topBytes == slab7, s"$conf: $topParts partitions, $topBytes of $slab7 bytes")
       assert(top == Seq(Row(7L, 7096.0f), Row(7L, 7096.0f), Row(7L, 7096.0f)), conf)
     }
-    // the pruned slabs count no bytes toward the split: the survivor's
-    // 16 KiB spread over eight cores (the whole store's 128 KiB would
-    // have made one 16 KiB split)
+    // the survivor's 16 KiB over eight cores is a 2 KiB split, but a
+    // split derived from bytes never cuts a chunk: slab 7's one
+    // 16,384-byte chunk is one partition that reads it once (cut at
+    // 2 KiB, eight partitions each read the whole chunk: 131,072 bytes)
     withConf(cores(8), openCost -> "1024") {
-      assert(partitions(df.where(col("v") >= 7000.0f).select("v")) == 8)
+      val (parts, bytes, rows) = read(df.where(col("v") >= 7000.0f).select("v"))
+      assert(slab7 == 16384)
+      assert(parts == 1 && bytes == 16384, s"$parts partitions, $bytes bytes")
+      assert(rows.length == 4096)
+    }
+  }
+
+  /** The stepped store with each slab in eight chunks of 8 × 64 cells. */
+  private lazy val steppedBands = write(id => Row((id / 4096).toLong, (id / 64 % 64).toLong, (id % 64).toLong,
+    (id / 4096 * 1000 + id % 97).toFloat), 8L * 4096, "t,y,x", "chunkShape" -> "1,8,64")
+
+  test("pruned slabs count no bytes toward the split, and a derived split ends on chunk boundaries") {
+    val slab7 = Files.list(java.nio.file.Paths.get(steppedBands, "v")).iterator().asScala
+      .filter(_.getFileName.toString.startsWith("7.")).map(Files.size).toSeq
+    assert(slab7.length == 8)
+    val df = spark.read.format("zarr").load(steppedBands)
+    val q = df.where(col("v") >= 7000.0f).select("v")
+    // the survivor's 16 KiB over eight cores: eight 2 KiB partitions of
+    // one chunk each (the whole store's 128 KiB would have made one
+    // 16 KiB split), together reading each chunk once
+    withConf(cores(8), openCost -> "1024") {
+      val rows = q.collect()
+      assert(partitions(q) == 8)
+      assert(scanBytesRead(q) == slab7.sum)
+      assert(rows.length == 4096)
+    }
+    // an explicit cap of 256 rows cuts each chunk in two, as asked
+    withConf(cores(8), openCost -> "1024") {
+      val cut = spark.read.format("zarr").option("maxRowsPerPartition", "256").load(steppedBands)
+        .where(col("v") >= 7000.0f).select("v")
+      cut.collect()
+      assert(partitions(cut) == 16)
+      assert(scanBytesRead(cut) == 2 * slab7.sum)
     }
   }
 

@@ -13,7 +13,10 @@ odd ones, so a drift of the shared host hits both sides alike. For each
 workload and end-to-end metric it prints each side's median and quartiles,
 how many pairs the working tree won (by the metric's direction in
 BENCHMARK.json), and whether the medians differ by more than the base's
-interquartile range.
+interquartile range. It then prints each side's median per query kind: each
+run's `ms.<kind>` latencies from its result.json, their median scaled by that
+run's median host-speed loop (as op_ms is scaled), and the median of those
+over the pairs, so a gain can be attributed to the kinds it came from.
 
 With --trace it then runs one traced run (--trace 1) per side at --seconds 1,
 where both sides run the same op list (two whole rounds), and prints every
@@ -60,6 +63,17 @@ def run(tree, workload, seed, seconds, trace=0):
     return {k: v["value"] for k, v in res["metrics"].items()}
 
 
+def kind_ms(tree, workload, seed):
+    """Per-kind median latency of the last untraced run, in ms at the
+    reference host speed: the run's median host-speed loop scales it."""
+    path = os.path.join(tree, "perfbench", "out", f"{workload}-seed{seed}-trace0", "result.json")
+    with open(path) as fh:
+        detail = json.load(fh)["detail"]
+    scale = detail["host_loop_ref_ms"] / detail["host_loop_ms_median"]
+    return {k[len("ms."):]: statistics.median(v) * scale
+            for k, v in detail.items() if k.startswith("ms.") and v}
+
+
 def quartiles(xs):
     q = statistics.quantiles(xs, n=4, method="inclusive") if len(xs) > 1 else [xs[0]] * 3
     return q[0], statistics.median(xs), q[2]
@@ -88,6 +102,7 @@ def main():
 
     for w in workloads:
         base, change = [], []
+        kinds = {"base": [], "change": []}
         for i in range(a.pairs):
             order = [("base", base_tree), ("change", ROOT)]
             if i % 2:
@@ -95,6 +110,7 @@ def main():
             for side, tree in order:
                 m = run(tree, w, a.seed, a.seconds)
                 (base if side == "base" else change).append(m)
+                kinds[side].append(kind_ms(tree, w, a.seed))
                 print(f"  {w} pair {i + 1}/{a.pairs} {side}: "
                       + ", ".join(f"{k}={v:.4g}" for k, v in m.items()), flush=True)
         print(f"\n{w}: {a.pairs} pairs, seed {a.seed}, --seconds {a.seconds}")
@@ -107,6 +123,13 @@ def main():
             beyond = abs(cq[1] - bq[1]) > (bq[2] - bq[0])
             fmt = lambda q: "/".join(f"{v:.4g}" for v in q)
             print(f"  {metric:<20} {fmt(bq):>32} {fmt(cq):>32} {wins:>3}/{a.pairs}  {beyond}")
+        if a.pairs:
+            print(f"  {'kind (ms, scaled)':<20} {'base median':>14} {'change median':>14} {'change/base':>12}")
+            for kind in sorted(set().union(*kinds["base"], *kinds["change"])):
+                b, c = ([k[kind] for k in kinds[side] if kind in k] for side in ("base", "change"))
+                if b and c:
+                    mb, mc = statistics.median(b), statistics.median(c)
+                    print(f"  {kind:<20} {mb:>14.4g} {mc:>14.4g} {mc / mb:>12.3f}")
         print(flush=True)
         if a.trace:
             traced = {side: run(tree, w, a.seed, 1, trace=1)
